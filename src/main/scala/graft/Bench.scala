@@ -1,6 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  private def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** `{"name":seconds,...}`, names escaped ([[Json.str]]). */
+  private[graft] def secondsJson(kvs: Seq[(String, Double)]): String =
+    kvs.map { case (k, v) => Json.str(k) + ":" + f(v) }.mkString("{", ",", "}")
+
+  /** The `"sf":"<dir>"` field that ends each result line. The artifact
+    * overwrite guard matches an existing file against it too, so any
+    * SF path round-trips. */
+  private[graft] def sfJson(sfDir: String): String = "\"sf\":" + Json.str(sfDir)
+
   def main(args: Array[String]): Unit = {
     val t0Run = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -10,81 +21,16 @@ object Bench {
     // disk — the library's auto routing is a deployment posture, not
     // a bench condition
     Tables.pinPlainLayoutDefault()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // The session (production profile, master, per-query width rule)
+    // is every entry point's: Sessions.harness, evidence in its scaladoc.
+    val cpus = Sessions.harnessCpus
     // Host-state capture (round-10 judge item 5): artifacts must
     // self-describe whether the run was clean — round 10's 98.3s vs
     // 87.0s confusion was host drift that only an out-of-band re-run
     // could prove. loadavg before warmup ≈ pre-existing host load.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadStart = osBean.getSystemLoadAverage
-    // The session profile (nanosAsLong, AQE, heap-aware widths,
-    // storageFraction, periodicGC) comes from graft.Sessions.production
-    // — ONE source of truth shared with library users; Bench layers
-    // only the harness-local master/UI/env-override on top. The
-    // round-by-round evidence for each conf lives in Sessions' scaladoc
-    // and the annotations kept below.
-    // SPARK_GRAFT_MASTER: topology override (e.g.
-    // local-cluster[2,16,8192] for the executor-JVM smoke); executors
-    // there need the app classpath propagated explicitly.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = Sessions.production(SparkSession.builder(), cpus.toInt)
-      .master(master)
-      .config("spark.ui.enabled", "false")
-    // local-cluster[n,c,m] sizes the WORKER's capacity only; request
-    // the worker's full share for executors too, or they run at the
-    // 1 GiB spark.executor.memory default (Sessions scaladoc has the
-    // round-15 OOM evidence).
-    val spark = (if (master.startsWith("local-cluster")) {
-      val b = builder0.config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      // None (unparseable spec) genuinely keeps Spark's default —
-      // no .config call at all (the old getOrElse("1g") pinned 1g,
-      // correct only while that stays the default; ADVICE r15)
-      Sessions.localClusterExecutorMemory(master)
-        .fold(b)(b.config("spark.executor.memory", _))
-    } else builder0)
-      // Shuffles START at 64 partitions and AQE coalesces DOWN per
-      // runtime stats — at sf0.1 that lands back near the core count,
-      // at sf10 it keeps per-task sort/agg working sets 2× smaller
-      // than the core count would. Without it, every shuffle is born
-      // at shuffle.partitions=32 and the sf10 span/tfidf SMJ chains
-      // starve the 8g unified pool (32 concurrent fat tasks over
-      // ~2.4g of evictable execution memory once the session caches
-      // pin their storageFraction share): round-11's first sf10
-      // certification attempt died exactly there
-      // (UNABLE_TO_ACQUIRE_MEMORY in the span-pair build, then heap
-      // exhaustion in the rerun phase). Measured A/B/C at sf10: 256
-      // completes but pays ~96s across the shuffle-heavy tail (the
-      // wider writer passes the bypass-merge threshold and adds
-      // scheduling waves); 64 keeps ~4/5 of the 32-partition speed
-      // (tfidf 39.5s vs 35.3s vs 49.1s at 256) AND survived the exact
-      // crash scenario (span memo pinned + the seven heaviest queries
-      // solo). This is also the cluster-real setting: start wider
-      // than the core count and let AQE size it, not a hand-tuned
-      // per-SF constant.
-      // HEAP-AWARE width (round 12): on a constrained heap (under the
-      // same 384 MB/core floor Caches.memoLevel uses) shuffles start at
-      // 256 instead — the r11-measured-safe 8 GiB shape. The execution-
-      // side OOM mode at 8g/32thr/P=64 is N concurrent SMJ sort tasks
-      // whose pointer arrays outgrow what the unified pool can grant
-      // (DISK_ONLY memo caches alone did not remove it — round-12 run-1
-      // died in the span SMJ chain); quartering the per-task partition
-      // size is the lever that actually bounds the concurrent working
-      // set, at a measured ~8% cost on the shuffle-heavy tail that a
-      // provisioned heap does not pay.
-      // PER-FAMILY width (round 13, verdict item 5): only the SMJ-heavy
-      // span/pair families hit that OOM mode, but the blanket 256 taxed
-      // EVERY query 35-50% on the shuffle-heavy tail at 8 GiB. The
-      // Sessions.production default is the SAFE wide value for a
-      // constrained heap; the per-query conf.set below narrows untagged
-      // queries back to 64 (initialPartitionNum is a runtime SQL conf —
-      // each query plans under its own width). Env override is
-      // harness-only, layered over the profile.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
-          Sessions.defaultInitialPartitions(
-            Runtime.getRuntime.maxMemory, cpus.toInt)))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.harness()
     // Warm the session so per-query timings measure the query, not JVM
     // startup: scan/agg codegen + parquet footers (q1_agg), BLAS +
     // spark.ml init (q_pca_scores), KMeans path (q_ann_ivf_topk).
@@ -95,13 +41,6 @@ object Bench {
     // column and discards rows at the sink — honest per-query cost.
     def consume(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    // Per-query width rule lives in Sessions (WideFamilies +
-    // initialPartitionsFor) — evidence in its scaladoc.
-    val envWidth = sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS")
-    def setWidthFor(name: String): Unit = spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      envWidth.getOrElse(Sessions.initialPartitionsFor(
-        name, Runtime.getRuntime.maxMemory, cpus.toInt)))
     // The serving queries also go through warmup: their first touch
     // builds the partitioned ANN index (a one-time layout cost, 18s-class
     // at sf0.1 — reported separately in BENCH_NOTES), so timing them cold
@@ -179,7 +118,7 @@ object Bench {
     warmupSelected.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
         mark("warmup", name)
-        setWidthFor(name) // cache builds plan under the query's width
+        Sessions.useWidthFor(spark, name) // cache builds plan under the query's width
         // a swallowed warmup failure is how the sf10 crash cascaded:
         // the span memo build OOMed silently here, so the first timed
         // pass paid the full build and died — at least say it happened
@@ -214,7 +153,7 @@ object Bench {
     // "min of post-contention trials" took them).
     def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       mark("timed", name)
-      setWidthFor(name)
+      Sessions.useWidthFor(spark, name)
       // SPARK_GRAFT_PREQUERY_GC=1: GC before each query so the
       // ContextCleaner reaps the previous queries' dead shuffle files
       // before this one spills — the sf100 disk-exhaustion recipe
@@ -294,12 +233,11 @@ object Bench {
     val transientFailures = firstPass.collect {
       case (n, t) if t.isNaN && !resultByName(n).isNaN => n
     }.sorted
-    def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val okResults = results.filterNot(_._2.isNaN)
     val total = okResults.map(_._2).sum
     val rawTotal = firstPass.map(_._2).filterNot(_.isNaN).sum
-    val contendedJson = contended.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val failedJson = failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val contendedJson = Json.strs(contended)
+    val failedJson = Json.strs(failedQueries)
     // `clean` = the run's own evidence of an undisturbed host: zero
     // in-run contention retries AND a pre-run loadavg under the core
     // count (an oversubscribed host inflates every sample, which the
@@ -314,15 +252,14 @@ object Bench {
     // integer division recorded heap_gb:7 and identically-configured
     // runs could disagree with the banked 8g/16g labels
     val heapGb = math.round(Runtime.getRuntime.maxMemory / (1L << 30).toDouble)
-    val transientJson = transientFailures.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val warmupJson = warmupFailuresSorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val transientJson = Json.strs(transientFailures)
+    val warmupJson = Json.strs(warmupFailuresSorted)
     val hostJson = s""""failed":$failedJson,"transient_failures":$transientJson,"warmup_failures":$warmupJson,"floor_per_query":${f(floor)},"loadavg_start":${f(loadStart)},"loadavg_end":${f(loadEnd)},"heap_gb":$heapGb,"cpus":$cpus,"clean":$clean"""
     // Full per-query map for humans/the repo; the stdout line keeps the
     // slowest 40 + an "_other" rollup so the whole JSON object fits well
     // inside the driver's 2000-char output tail (rounds 1-2 overflowed
     // it and the driver recorded parsed=null).
-    val full = okResults.map { case (k, v) => s"\"" + k + "\":" + f(v) }
-      .mkString("{", ",", "}")
+    val full = secondsJson(okResults)
     val dataBound = math.max(0.0, total - floor * okResults.size)
     try {
       // Per-SF artifact name: the gate SF keeps the driver-era
@@ -348,7 +285,7 @@ object Bench {
       val target = java.nio.file.Paths.get(s"$base.json")
       val existingIsCleanSameSf = java.nio.file.Files.exists(target) && {
         val first = java.nio.file.Files.readAllLines(target).get(0)
-        first.contains("\"clean\":true") && first.contains(s""""sf":"$sfDir"""")
+        first.contains("\"clean\":true") && first.contains(sfJson(sfDir))
       }
       // a FILTERED local run (query-name args) covers a subset of the
       // registry — its totals are incomparable with committed artifacts
@@ -358,17 +295,19 @@ object Bench {
       else if (existingIsCleanSameSf && !clean)
         java.nio.file.Paths.get(s"$base.dirty.json") else target
       java.nio.file.Files.write(p, java.util.Arrays.asList(
-        s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$full,"contended":$contendedJson,"raw_total":${f(rawTotal)},$hostJson,"sf":"$sfDir"}""",
-        s"""{"metric":"data_bound","value":${f(dataBound)},"unit":"sec","floor_per_query":${f(floor)},"n_queries":${okResults.size},"sf":"$sfDir"}"""))
-    } catch { case _: Throwable => }
+        s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$full,"contended":$contendedJson,"raw_total":${f(rawTotal)},$hostJson,${sfJson(sfDir)}}""",
+        s"""{"metric":"data_bound","value":${f(dataBound)},"unit":"sec","floor_per_query":${f(floor)},"n_queries":${okResults.size},${sfJson(sfDir)}}"""))
+    } catch {
+      // the stdout line below still prints; say why no artifact landed
+      case e: Throwable => System.err.println(s"[bench] artifact write failed: $e")
+    }
     val top = okResults.sortBy(-_._2).take(40).sortBy(_._1)
     val other = total - top.map(_._2).sum
-    val qs = (top.map { case (k, v) => s"\"" + k + "\":" + f(v) } :+
-      (s"\"_other\":" + f(other))).mkString("{", ",", "}")
+    val qs = secondsJson(top :+ ("_other" -> other))
     spark.stop()
     // `data_bound` rides the driver-parsed line so a contended window
     // (round-11's BENCH_r11, loadavg 6.6 at start) can be floor-
     // normalized instead of masquerading as a plan regression
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","data_bound":${f(dataBound)},"queries":$qs,"contended":$contendedJson,$hostJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","data_bound":${f(dataBound)},"queries":$qs,"contended":$contendedJson,$hostJson,${sfJson(sfDir)}}""")
   }
 }

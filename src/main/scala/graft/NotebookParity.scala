@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.io.MaxQuant
 import graft.ops.{Design, Filters, Normalize, Reshape}
@@ -42,17 +42,7 @@ import graft.ops.{Design, Filters, Normalize, Reshape}
 object NotebookParity {
   def main(args: Array[String]): Unit = {
     val Array(s1Fixture, s1Design, s2Fixture, s2Design, mspFixture, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // invariant 4: every session carries the nanos fallback so a
-      // future stage reading events parquet doesn't throw on the
-      // TIMESTAMP(NANOS) testdata generation
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.harness("ERROR")
 
     def dump(df: DataFrame, name: String): Unit =
       df.coalesce(1).write.mode("overwrite").option("header", "true")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.io.MaxQuant
 import graft.ops.{Filters, Normalize, Reshape}
@@ -13,13 +12,7 @@ import graft.ops.{Filters, Normalize, Reshape}
 object ParityDump {
   def main(args: Array[String]): Unit = {
     val Array(fixture, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.harness("ERROR")
 
     val raw = MaxQuant.readMaxQuant(spark, fixture)
 

@@ -1,21 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     // committed plan evidence documents the PLAIN layout unless
     // explicitly opted in — independent of layouts left on disk
     Tables.pinPlainLayoutDefault()
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror the production profile's join planning (Sessions) so
-      // audited plans match what Bench/library sessions execute
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // audited plans are the ones Bench/Verify/library sessions execute
+    val spark = Sessions.harness("ERROR")
     val d = "/root/testdata/sf0.001"
     if (args.headOption.contains("--skew-check")) {
       // AQE skew-split evidence for the banded self-joins (round-6

@@ -19,8 +19,8 @@ object PlanChecks {
     * shuffle partition. At cluster scale the engine assumes Spark's
     * AQE skew split handles exactly this regime:
     *
-    *   spark.sql.adaptive.enabled=true            (set in every entry
-    *     point session: Bench/Verify/PlanAudit/RecallAudit)
+    *   spark.sql.adaptive.enabled=true            (Sessions.production,
+    *     every entry point's session via Sessions.harness)
     *   spark.sql.adaptive.skewJoin.enabled=true   (Spark default)
     *   skewedPartitionFactor / skewedPartitionThresholdInBytes /
     *   advisoryPartitionSizeInBytes at their defaults (5× median /

@@ -4,16 +4,17 @@ import org.apache.spark.sql.SparkSession
 
 /** The production session profile — the heap-aware tuning the
   * benchmark harness certified at sf10/sf100, packaged so LIBRARY
-  * users get the same session shape instead of it living only in
-  * `graft.Bench`'s builder (round-13 verdict item 8).
+  * users get the same session shape as every entry point's
+  * [[harness]] session (round-13 verdict item 8).
   *
-  * What the profile encodes (evidence in Bench.scala's round-11..13
-  * annotations and BENCH_NOTES):
+  * What the profile encodes (evidence in BENCH_NOTES rounds 11-13):
   *  - `nanosAsLong`: driver testdata has shipped TIMESTAMP(NANOS)
   *    parquet (INVARIANTS.md §4) — every session must read it.
   *  - AQE on + shuffles BORN WIDE (64, or 256 on constrained heaps)
   *    and coalesced down by runtime stats: bounds concurrent SMJ sort
-  *    working sets; the 8 GiB OOM modes died exactly here.
+  *    working sets; the 8 GiB OOM modes died exactly here (BENCH_NOTES
+  *    "Round-11 sf10 certification", "Round-12: the 8 GiB cliff
+  *    closed", "Round-13: per-family shuffle width at 8 GiB").
   *  - `storageFraction 0.3`: the library's session-lifetime memo
   *    caches (span histograms, minhash triples, ANN layouts) are
   *    MEMORY_AND_DISK — protecting the default 50% of unified memory
@@ -49,7 +50,14 @@ object Sessions {
       org.apache.spark.storage.StorageLevel.DISK_ONLY
 
   /** Session-default initial shuffle width (AQE coalesces DOWN from
-    * here): the SAFE wide value on a constrained heap, 64 otherwise. */
+    * here): the SAFE wide value on a constrained heap, 64 otherwise.
+    * Round-11 A/B/C at sf10 (32 threads, 8g): born at the core count,
+    * the span/tfidf SMJ chains starved the unified pool
+    * (UNABLE_TO_ACQUIRE_MEMORY); 256 completed but paid ~96 s over the
+    * shuffle-heavy tail; 64 kept ~4/5 of the 32-partition speed
+    * (q_tfidf_topk 39.5 s vs 35.3 s, 49.1 s at 256) and survived the
+    * crash scenario. Round 12: on a constrained heap only 256 bounded
+    * the concurrent SMJ sort working sets, at ~8% on that tail. */
   def defaultInitialPartitions(maxHeapBytes: Long, cores: Int): String =
     if (constrainedHeap(maxHeapBytes, cores)) "256" else "64"
 
@@ -93,14 +101,53 @@ object Sessions {
     * executors still ask for the `spark.executor.memory` default
     * (1 GiB) unless the session requests more — the round-15 sf10
     * topology run OOMed exactly there (8192 MB workers, 1 GiB
-    * executor heaps, the span-memo build dead at exit 52). Harnesses
-    * that honor `SPARK_GRAFT_MASTER` pass this alongside
-    * `spark.executor.extraClassPath`. None for non-local-cluster
-    * masters or an unparseable spec (caller keeps Spark's default). */
+    * executor heaps, the span-memo build dead at exit 52). [[harness]]
+    * passes this alongside `spark.executor.extraClassPath`. None for
+    * non-local-cluster masters or an unparseable spec (caller keeps
+    * Spark's default). */
   def localClusterExecutorMemory(master: String): Option[String] =
     if (!master.startsWith("local-cluster")) None
     else master.replaceAll("[^0-9,]", "").split(',').lift(2)
       .filter(_.nonEmpty).map(_ + "m")
+
+  private val InitialPartitionNum =
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+  /** `SPARK_GRAFT_CPUS` (default 4): the per-executor core count every
+    * entry point's session is sized for. */
+  def harnessCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The one session every `main` in this package runs under (Bench,
+    * Verify, PlanAudit, EntrySmoke, ParityDump, NotebookParity), so the
+    * oracle certifies the plans Bench times and library users run: the
+    * [[production]] profile on `SPARK_GRAFT_MASTER` (default
+    * `local[SPARK_GRAFT_CPUS]`), UI off. `local-cluster` executors get
+    * the app classpath, which they do not inherit, and the worker's
+    * memory share ([[localClusterExecutorMemory]]; None keeps Spark's
+    * default). `SPARK_GRAFT_INITIAL_PARTITIONS` overrides the session
+    * default width (the sf100 recipes pin it). */
+  def harness(logLevel: String = "WARN"): SparkSession = {
+    val cpus = harnessCpus
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    val builder = production(SparkSession.builder(), cpus)
+      .master(master)
+      .config("spark.ui.enabled", "false")
+    if (master.startsWith("local-cluster")) {
+      builder.config("spark.executor.extraClassPath", sys.props("java.class.path"))
+      localClusterExecutorMemory(master).foreach(builder.config("spark.executor.memory", _))
+    }
+    sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS").foreach(builder.config(InitialPartitionNum, _))
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
+  /** Plan the next query on a [[harness]] session under its own width:
+    * [[initialPartitionsFor]], or `SPARK_GRAFT_INITIAL_PARTITIONS` when
+    * set. A runtime SQL conf, so set it before building each query. */
+  def useWidthFor(spark: SparkSession, queryName: String): Unit =
+    spark.conf.set(InitialPartitionNum, sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS",
+      initialPartitionsFor(queryName, Runtime.getRuntime.maxMemory, harnessCpus)))
 
   /** Apply the production profile to a builder. Master, UI, and any
     * deployment-specific confs stay the caller's: cluster users set

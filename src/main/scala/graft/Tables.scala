@@ -50,8 +50,9 @@ object Tables {
   // keyed by l_suppkey in EVERY stage — tie groupBys, the rank window,
   // the stitch join — so on a key-clustered layout all of them reuse
   // the storage partitioning instead of re-shuffling the fact table
-  // per query (LayoutBench measured the identical chain at 2.9x /
-  // 11→5 exchanges at sf10; at 100 TB a per-key family without
+  // per query (the identical chain measured 2.9x / 11→5 exchanges at
+  // sf10, BENCH_NOTES "Round-14 (cont.): the kruskal layout lever,
+  // measured"; at 100 TB a per-key family without
   // key-clustered layout re-shuffles the full table per query).
   // Plain parquet stays the default: the driver's testdata is
   // unbucketed, and the clustered view costs a ONE-TIME bucketed

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -20,39 +19,9 @@ object Verify {
     // opted in (SPARK_GRAFT_BUCKETED / SPARK_GRAFT_LAYOUT): results
     // must not depend on layouts a previous run left on disk
     Tables.pinPlainLayoutDefault()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — the
-    // topology smoke runs the whole gate under
-    // local-cluster[2,16,8192] (real executor JVMs, shuffle over
-    // loopback) to exercise executor-mode code paths local[N] never
-    // does. local-cluster executors do not inherit the app classpath
-    // automatically; propagate it.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-    if (master.startsWith("local-cluster")) {
-      // local-cluster[n,c,m] sizes the WORKER only; executors run at
-      // the 1 GiB default unless the session requests the worker's
-      // share (Sessions.localClusterExecutorMemory has the evidence).
-      // None (unparseable spec) keeps Spark's default — no config call.
-      val b = builder.config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      Sessions.localClusterExecutorMemory(master)
-        .foreach(b.config("spark.executor.memory", _))
-    }
-    val spark = builder
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects;
-      // read as nanos-since-epoch longs (queries convert explicitly).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror the production profile's join planning (Sessions): the
-      // oracle gate then certifies results under the same shuffled-
-      // hash-join-enabled plans Bench and library sessions execute
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session and per-query width (Sessions.harness /
+    // useWidthFor): the oracle certifies the plans Bench times
+    val spark = Sessions.harness()
     // Tell queries with driver-recorded oracle literals (q_volcano's p
     // column) to capture them during this run; Bench never sets this,
     // so it never pays the extra recording action.
@@ -72,19 +41,12 @@ object Verify {
     // the filtered form to refresh result dirs.
     val strict = args.drop(2).contains("--lint-strict")
     val only = args.drop(2).filterNot(_.startsWith("--")).toSet
-    // hidden self-test hook: -Dgraft.lint.selftest=1 injects a
-    // deliberately DECIMAL-typed scratch query so the strict gate's
-    // end-to-end exit path stays demonstrable against a live run
-    val selftest: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      if (sys.props.contains("graft.lint.selftest"))
-        Map("_lint_selftest" ->
-          ((s, _) => s.sql("SELECT CAST(1.5 AS DECIMAL(10,2)) AS bad")))
-      else Map.empty
     val lintHits = scala.collection.mutable.ArrayBuffer.empty[String]
-    (SparkEntry.queries ++ selftest)
+    SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
         try {
+          Sessions.useWidthFor(spark, name)
           val df = fn(spark, sfDir)
           // Output-type lint (round-9 incident): a DECIMAL/array/struct
           // output hash-mismatches the driver gate even when values are
@@ -98,29 +60,13 @@ object Verify {
               s"type(s): ${bad.mkString(", ")} — expect a driver hash mismatch " +
               "(see Moments.sumExactScale4 scaladoc)")
           }
-          // the lint self-test query exists only to exercise the schema
-          // lint above — writing its parquet would leave a stray result
-          // dir with no oracle entry among the driver compare inputs
-          if (name != "_lint_selftest")
-            df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     val code = lintExitCode(lintHits.toSeq, strict)

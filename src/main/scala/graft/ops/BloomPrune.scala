@@ -50,7 +50,8 @@ object BloomPrune {
 
   /** Dim-key count past which [[semiJoin]]'s AUTO hint forces
     * `shuffle_hash` on the false-positive-removal join's dim side.
-    * Measured regime (BloomDimBench, sf100's 4M filtered dim keys,
+    * Measured regime (BENCH_NOTES "Bloom semi-join dim-side regime
+    * A/B", sf100's 4M filtered dim keys,
     * content-checksum-equal, 3 interleaved samples): shuffle_hash
     * 18.3 s vs planner-default SMJ 21.5 s vs merge 19.9 s — the SMJ
     * sorts the pruned fact stream for no benefit once the dim has
@@ -196,8 +197,8 @@ object BloomPrune {
     * pruned fact stream pays one hash probe per row. The DEFAULT
     * ([[AutoDimHint]]) resolves adaptively from the built filter's
     * own cardinality estimate — `shuffle_hash` past
-    * [[ShuffleHashDimKeys]] (the measured-fastest regime,
-    * graft.BloomDimBench), no hint below it (the planner's broadcast
+    * [[ShuffleHashDimKeys]] (the measured-fastest regime, evidence in
+    * its scaladoc), no hint below it (the planner's broadcast
     * is already right there). Pass None to force Catalyst's choice at
     * every scale, or Some(hint) to force a strategy. */
   def semiJoin(

@@ -32,9 +32,9 @@ import org.apache.spark.sql.functions._
   * the unchunked plan (spec-asserted). Cost: ceil(nq/chunk) scans per
   * method instead of one; still zero driver-side per-query work.
   *
-  * TextSimSpec asserts per-config floors at the default knobs;
-  * `graft.RecallAudit` prints the matrix for any SF dir (recorded in
-  * BENCH_NOTES.md per round).
+  * TextSimSpec asserts per-config floors at the default knobs; the
+  * measured matrix per SF is in BENCH_NOTES.md ("Round-5: measured ANN
+  * recall@20" and its round-6/8/12/13 follow-ups).
   */
 object AnnRecall {
 

@@ -7,8 +7,8 @@ import graft.pipeline.TrainingData
 /** The production wiring of [[CompactionScheduler]] onto a
   * [[DocStream.curateStream]] sink — the opt-in compact-when-
   * `shouldCompact` hook for the ingest loop (round-12 verdict item 6;
-  * previously only graft.StreamBench's slice loop drove the trigger
-  * inline).
+  * the measured cycle is BENCH_NOTES "Round-12: adaptive compaction
+  * trigger measured").
   *
   * Usage: the ingest loop (per arrival wave / micro-batch drain /
   * AvailableNow cycle) calls [[maybeCompact]]; the driver probes the
@@ -24,8 +24,7 @@ import graft.pipeline.TrainingData
   * One compaction at a time per driver: `maybeCompact` is
   * synchronized, so a listener thread and an ingest loop sharing a
   * driver can't double-fire. The sink probe tolerates a data-file-less
-  * sink (a fully-gated first micro-batch writes none — the
-  * StreamBench guard, hoisted here for every user).
+  * sink (a fully-gated first micro-batch writes none).
   *
   * `nanoTime` is injectable so cadence decisions are deterministic
   * under test (IoStreamingSpec drives the 3-cycle restart test through

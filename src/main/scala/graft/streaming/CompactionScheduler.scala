@@ -2,7 +2,8 @@ package graft.streaming
 
 /** Adaptive cadence for the periodic batch near-dup compaction in the
   * streaming-ingest + batch-dedup split (DocStream scaladoc; measured
-  * cycle: graft.StreamBench).
+  * cycle: BENCH_NOTES "Round-9: streaming ingest→compaction cycle
+  * measured at sf1").
   *
   * The sustainability condition (BENCH_NOTES round-9 cadence math) is
   * `W(corpus) < P`: a compaction whose wall W exceeds its period P
@@ -20,7 +21,7 @@ package graft.streaming
   *
   * Pure driver-side decision logic: deterministic given the recorded
   * history, no Spark dependency — unit-tested in IoStreamingSpec, wired
-  * live by StreamBench's slice loop.
+  * live by [[CompactionDriver]].
   */
 final class CompactionScheduler(
     val targetUtilization: Double = 0.5,

@@ -155,13 +155,11 @@ class PlanSpec extends SparkSpec {
 
   test("Verify --lint-strict exit policy: fatal on any hit, silent without the flag") {
     // the strict gate's decision function (Verify.lintExitCode) — the
-    // main() wiring feeds it the per-query nonPortableOutputColumns
-    // hits; -Dgraft.lint.selftest=1 injects a DECIMAL scratch query to
-    // drive the whole path end-to-end against a live run
-    assert(Verify.lintExitCode(Seq("_lint_selftest: bad:decimal(10,2)"), strict = true) == 2)
+    // main() wiring feeds it the per-query nonPortableOutputColumns hits
+    assert(Verify.lintExitCode(Seq("q: bad:decimal(10,2)"), strict = true) == 2)
     assert(Verify.lintExitCode(Nil, strict = true) == 0)
     assert(Verify.lintExitCode(Seq("q: bad:decimal(10,2)"), strict = false) == 0)
-    // and the injected selftest query would be caught by the detector
+    // and a DECIMAL output is a hit for the detector
     val selfDf = spark.sql("SELECT CAST(1.5 AS DECIMAL(10,2)) AS bad")
     assert(PlanChecks.nonPortableOutputColumns(selfDf.schema).nonEmpty)
   }

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -64,6 +66,23 @@ class SessionsSpec extends AnyFunSuite {
     }
     assert(applied.keySet == expected.keySet,
       s"builder applied extra confs: ${applied.keySet.diff(expected.keySet)}")
+  }
+
+  test("Sessions is the only file in src/main that builds a SparkSession") {
+    // every entry point runs under Sessions.harness, so the oracle
+    // certifies the plans Bench times; a main that builds its own
+    // session drifts from that profile. Comments may name the builder.
+    val root = Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val builderCall = """SparkSession\s*\.\s*builder\b""".r
+    val hits = files.filter { f =>
+      val code = Files.readString(f)
+        .replaceAll("(?s)/\\*.*?\\*/", "")
+        .replaceAll("//[^\n]*", "")
+      builderCall.findFirstIn(code).nonEmpty
+    }.map(root.relativize(_).toString).sorted
+    assert(hits == Seq("graft/Sessions.scala"), s"SparkSession.builder() outside Sessions: $hits")
   }
 
   test("local-cluster executor-memory request parses the worker share") {

@@ -218,8 +218,8 @@ class IoStreamingSpec extends SparkSpec {
     // HDFS-backed on-heap maps): the provider must load, the stateful
     // operators must produce the SAME rows as the default provider,
     // and the progress must prove RocksDB actually held the state
-    // (provider-specific custom metrics present). EventStreamBench
-    // measures the cost/memory side at sf scale.
+    // (provider-specific custom metrics present). The cost/memory side
+    // at sf1 is BENCH_NOTES "Round-14: streaming state at scale".
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
@@ -490,7 +490,8 @@ class IoStreamingSpec extends SparkSpec {
 
   test("streaming curation sustains a sane ingest rate and bounds dedup state to gated fingerprints") {
     // the rate assertion behind the BENCH_NOTES cycle measurement
-    // (graft.StreamBench: ~3.2k docs/s at sf1 on a contended host).
+    // (~3.2k docs/s at sf1 on a contended host, BENCH_NOTES "Round-9:
+    // streaming ingest→compaction cycle measured at sf1").
     // The floor here is deliberately 100× under that — it exists to
     // catch a regression to per-batch quadratic work or per-row
     // driver round-trips, not to benchmark the CI host.

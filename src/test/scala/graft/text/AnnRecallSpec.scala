@@ -8,8 +8,9 @@ import graft.sim.AnnRecall.AnnConfig
   * (20 tight clusters of 25 points) — the regime ANN serves: a query's
   * exact top-k is its cluster, and the index must retrieve it. On
   * near-uniform data (the synthetic embeddings table) recall is
-  * structurally low for ANY sublinear index — RecallAudit records
-  * those numbers per round in BENCH_NOTES.md; floors here are asserted
+  * structurally low for ANY sublinear index — BENCH_NOTES.md records
+  * those numbers per round ("Round-5: measured ANN recall@20" and its
+  * follow-ups); floors here are asserted
   * where they are meaningful.
   */
 class AnnRecallSpec extends SparkSpec {
