@@ -94,12 +94,54 @@ object Tables {
       sys.props("graft.layout") = "plain"
 
   /** Whether a completed clustered build for this (source, key) is
-    * already on disk — the `_SUCCESS`-marker reuse that makes `auto`
-    * routing deterministic (a partial/failed build is never routed). */
+    * on disk AND still whole: its [[LayoutManifest]] verifies against
+    * the directory (a partial/failed build, or one a tmp reaper has
+    * thinned, is never routed). */
   def clusteredBuildExists(sfDir: String, name: String, key: String,
       numBuckets: Int = ClusterBuckets): Boolean = {
     val (_, path, mtime) = layoutAddress(sfDir, name, key, numBuckets)
-    mtime != 0L && new java.io.File(s"$path/_SUCCESS").exists()
+    LayoutManifest.verifies(path, mtime)
+  }
+
+  /** Completion record of a clustered build, written beside `_SUCCESS`
+    * once the bucketed write has committed: the part-file count, their
+    * total bytes, the rows read back from them, and the source mtime
+    * the build was made from. `_SUCCESS` alone is not enough: a tmp
+    * reaper can delete part files and leave the marker behind, and
+    * every keyed query would then silently lose rows. Verification is
+    * a directory listing (no Spark job): the source mtime, the part
+    * count and the byte total must all match — a deleted or truncated
+    * part file changes the count or the bytes. A mismatch, a missing
+    * manifest, or a source mtime of 0 (source not visible: never a
+    * valid cache key) means "not built". */
+  private[graft] object LayoutManifest {
+    private val FileName = "_graft_manifest"
+
+    private def parts(path: String): Seq[java.io.File] =
+      Option(new java.io.File(path).listFiles()).toSeq.flatten
+        .filter(f => f.isFile && f.getName.startsWith("part-"))
+
+    private def render(files: Int, bytes: Long, rows: Long, mtime: Long): String =
+      s"files=$files\nbytes=$bytes\nrows=$rows\nsource_mtime=$mtime\n"
+
+    def write(spark: SparkSession, path: String, mtime: Long): Unit = {
+      val ps = parts(path)
+      val rows = spark.read.parquet(path).count()
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(path, FileName),
+        render(ps.size, ps.map(_.length).sum, rows, mtime))
+    }
+
+    def verifies(path: String, mtime: Long): Boolean = mtime != 0L && {
+      val f = java.nio.file.Paths.get(path, FileName)
+      java.nio.file.Files.isRegularFile(f) && {
+        val kv = java.nio.file.Files.readString(f).linesIterator
+          .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
+        val ps = parts(path)
+        kv.get("source_mtime").contains(mtime.toString) &&
+          kv.get("files").contains(ps.size.toString) &&
+          kv.get("bytes").contains(ps.map(_.length).sum.toString)
+      }
+    }
   }
 
   /** Deterministic (catalog table, scratch path, source mtime) address
@@ -142,7 +184,7 @@ object Tables {
   /** Pure routing decision (unit-testable without prop flips):
     * `clustered` always routes (building if needed), `plain` never,
     * `auto` routes iff the one-time build has already been paid. */
-  private[graft] def routeClustered(mode: String, buildExists: Boolean): Boolean =
+  private[graft] def routeClustered(mode: String, buildExists: => Boolean): Boolean =
     mode match {
       case "clustered" => true
       case "plain"     => false
@@ -158,28 +200,32 @@ object Tables {
   /** Bucketed+sorted catalog view of `sfDir/name.parquet` clustered by
     * `key`. Built ONCE per (source mtime, key, bucket count) into a
     * deterministic scratch path (the ANN-index ensure pattern:
-    * completed builds are reused across sessions via the parquet
-    * `_SUCCESS` marker; a catalog-only miss re-registers the existing
-    * files with the same bucket DDL instead of rewriting). Spark reads
-    * bucket metadata from the catalog, so later equi-joins/groupBys on
-    * `key` skip their shuffles entirely. */
+    * completed builds are reused across sessions; a catalog-only miss
+    * re-registers the existing files with the same bucket DDL instead
+    * of rewriting). Every call first verifies the build's
+    * [[LayoutManifest]]; a build that fails it (absent, partial, or
+    * thinned on disk since) is dropped from the catalog and rewritten.
+    * Spark reads bucket metadata from the catalog, so later
+    * equi-joins/groupBys on `key` skip their shuffles entirely. */
   def clustered(
       spark: SparkSession, sfDir: String, name: String,
       key: String, numBuckets: Int): DataFrame = synchronized {
     val (tbl, path, mtime) = layoutAddress(sfDir, name, key, numBuckets)
+    val whole = LayoutManifest.verifies(path, mtime)
+    if (!whole) spark.sql(s"DROP TABLE IF EXISTS $tbl") // external: drops the entry only
     if (!spark.catalog.tableExists(tbl)) {
       val src = table(spark, sfDir, name)
-      // mtime == 0 means the source was not visible — never a valid
-      // cache key; rebuild unconditionally (same rule as ensureIndex)
-      if (mtime != 0L && new java.io.File(s"$path/_SUCCESS").exists())
+      if (whole)
         spark.sql(
           s"CREATE TABLE $tbl (${src.schema.toDDL}) USING PARQUET " +
           s"CLUSTERED BY ($key) SORTED BY ($key) INTO $numBuckets BUCKETS " +
           s"LOCATION '$path'")
-      else
+      else {
         src.write.mode("overwrite")
           .bucketBy(numBuckets, key).sortBy(key)
           .option("path", path).format("parquet").saveAsTable(tbl)
+        LayoutManifest.write(spark, path, mtime)
+      }
     }
     spark.table(tbl)
   }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Row filters and regex column selection.
@@ -170,12 +171,24 @@ object Filters {
     * keep features (`idCols`) having >= `n` non-null `valueCol`
     * observations in AT LEAST ONE group (`groupCols`).
     *
-    * Plan shape: partial-aggregated `groupBy(id, group).count` →
-    * `groupBy(id).max` → left-semi join back on the feature key. Both
-    * aggregations map-side combine; the semi-join shuffles only the
-    * (small) key set. At 100 TB the alternative — a window over
-    * (id, group) — would shuffle the full fact table twice; this
-    * formulation shuffles counts only.
+    * Plan shape: one pass over the input. `count(value)` over an
+    * id-partitioned window ordered by the group columns with a
+    * `RANGE CURRENT ROW` peer frame is the per-(id, group) count; a
+    * second window over the same id partition takes its max, and the
+    * row filter keeps the features whose max reaches `n`. Both windows
+    * share one exchange (`hashpartitioning(id)`) and one sort, and the
+    * caller's lineage is referenced once — a count-then-semi-join
+    * formulation re-executes everything upstream for its key side.
+    * Rows with a NULL in any id column are dropped: a NULL key names no
+    * feature (the SQL `IN (subquery)` image of this filter drops them
+    * the same way).
+    *
+    * At scale: one full-data shuffle plus a sort by (id, group),
+    * instead of a second full read of the upstream plus a key-sized
+    * semi-join. On input already clustered by the id (a bucketed
+    * layout) the exchange disappears and the filter needs no shuffle
+    * at all; downstream aggregations keyed by the id (or a superset)
+    * reuse the same partitioning.
     */
   def minimumValidValuesInAnyGroup(
       df: DataFrame,
@@ -183,13 +196,13 @@ object Filters {
       groupCols: Seq[String],
       valueCol: String,
       n: Long): DataFrame = {
-    val keep = df
-      .groupBy((idCols ++ groupCols).map(col): _*)
-      .agg(count(col(valueCol)).as("_valid"))
-      .groupBy(idCols.map(col): _*)
-      .agg(max(col("_valid")).as("_max_valid"))
+    val byId = Window.partitionBy(idCols.map(col): _*)
+    val groupPeers = byId.orderBy(groupCols.map(col): _*)
+      .rangeBetween(Window.currentRow, Window.currentRow)
+    df.filter(idCols.map(col(_).isNotNull).reduce(_ && _))
+      .withColumn("_valid", count(col(valueCol)).over(groupPeers))
+      .withColumn("_max_valid", max(col("_valid")).over(byId))
       .filter(col("_max_valid") >= n)
-      .select(idCols.map(col): _*)
-    df.join(keep, idCols, "left_semi")
+      .drop("_valid", "_max_valid")
   }
 }

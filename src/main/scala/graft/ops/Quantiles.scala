@@ -32,6 +32,17 @@ import org.apache.spark.sql.functions._
   * rank is invariant to the order among equal values, so tie-break
   * columns are not needed for the OUTPUT even though the old full
   * stitch ranked with them.
+  *
+  * `numBuckets` — on [[exactGroupQuantiles]], [[medianByGroup]] and
+  * [[fiveNumberByGroup]] alike — is the number of buckets PER LN-UNIT
+  * of |value| ([[fixedBucket]]'s K), not a total over the group's
+  * range: before round 17 it was the total bucket count spread
+  * uniformly over the group's (min, max). Results do not depend on it
+  * (value-at-rank is bucketing-invariant); only the work split does.
+  * A value tuned for the old meaning gives a very different
+  * granularity, and the degenerate case moved with it: a group whose
+  * values sit inside one ~1/K relative window now lands in one bucket
+  * and its target ranks are sorted in one window task.
   */
 object Quantiles {
 

@@ -25,44 +25,48 @@ object Reshape {
     * replicating unsuffixed columns, adding a `Multiplicity` column and
     * remapping `id -> id___k` (ref process.py:272).
     *
-    * Spark-first: one `Expand` (unpivot) per suffixed base column group
-    * is wrong (k scans); instead build k projection branches and
-    * `unionByName` — exactly one narrow pass per multiplicity, no
-    * shuffle, mirrors the reference's structure with lazy evaluation.
+    * Plan shape: ONE projection over the input. Each multiplicity is a
+    * struct of (remapped id, value bases…, Multiplicity) and
+    * `inline(array(struct…))` emits the k rows — a Catalyst `Generate`
+    * node, so the source is scanned once and nothing upstream re-runs
+    * per multiplicity (a union of k projections would scan k times).
+    * The unsuffixed columns pass through the generator unchanged.
+    * Output columns: base…, value bases…, `Multiplicity`.
     */
   def expandSideTable(df: DataFrame, suffixes: Seq[String] = Seq("___1", "___2", "___3"),
       idCol: String = "id"): DataFrame = {
     val suffixed = df.columns.filter(c => suffixes.exists(c.endsWith))
+    // value base of each suffixed column, in first-seen order
+    val valueBases = suffixed.map(c =>
+      suffixes.find(c.endsWith).map(c.stripSuffix).getOrElse(c)).distinct
     // a plain column whose name equals a suffix-stripped expression
     // column (e.g. `Intensity X` next to `Intensity X___1`) would
     // collide with the ripped column — the reference drops it from the
     // replicated side (process.py:252-254); mirrored here
-    val stripped = suffixed.map(c =>
-      suffixes.find(c.endsWith).map(c.stripSuffix).getOrElse(c)).toSet
     val base = df.columns.filterNot(suffixed.contains)
-      .filterNot(c => c != idCol && stripped.contains(c))
-    // every requested multiplicity gets a branch, like the reference
+      .filterNot(c => c != idCol && valueBases.contains(c))
+    val mult = "Multiplicity"
+    // every requested multiplicity gets a row, like the reference
     // (process.py:247-268 always emits ___1/___2/___3): a suffix with
-    // no matching columns contributes all-null expression cells
+    // no matching columns contributes typed all-null expression cells
     // (verified against padua itself by tools/parity.py)
-    val valueBases = suffixed.map(c =>
-      suffixes.find(c.endsWith).map(c.stripSuffix).getOrElse(c)).distinct
     def typeOf(baseName: String) =
-      df.schema(df.columns.find(c =>
-        suffixes.exists(s => c == baseName + s)).get).dataType
-    val branches = suffixes.map { sfx =>
-      val renamed = valueBases.map { b =>
+      df.schema(suffixes.map(baseName + _).find(df.columns.contains).get).dataType
+    val remapId = base.contains(idCol)
+    val rows = suffixes.map { sfx =>
+      val id = if (remapId) Seq(concat(col(idCol).cast("string"), lit(sfx)).as(idCol)) else Nil
+      val cells = valueBases.map { b =>
         if (df.columns.contains(b + sfx)) col(b + sfx).as(b)
         else lit(null).cast(typeOf(b)).as(b)
       }
-      val baseCols = base.map {
-        case c if c == idCol => concat(col(idCol).cast("string"), lit(sfx)).as(idCol)
-        case c               => col(c)
-      }
-      df.select(baseCols.toIndexedSeq ++ renamed: _*)
-        .withColumn("Multiplicity", lit(sfx.stripPrefix("___").toInt))
+      struct(id ++ cells :+ lit(sfx.stripPrefix("___").toInt).as(mult): _*)
     }
-    branches.reduce(_ unionByName _)
+    // an input `Multiplicity` column keeps its position but takes the
+    // generated value
+    val passThrough = base.filterNot(c => c == idCol || c == mult)
+    val order = base ++ valueBases ++ (if (base.contains(mult)) Nil else Seq(mult))
+    df.select(passThrough.map(col).toIndexedSeq :+ inline(array(rows: _*)): _*)
+      .select(order.map(col).toIndexedSeq: _*)
   }
 
   /** Apply a Column transformer to expression columns with the

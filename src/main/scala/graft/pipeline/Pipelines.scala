@@ -7,9 +7,14 @@ import graft.ops.{Caches, Design, Filters, Normalize, Reshape}
 import graft.stats.{Moments, StatTests, Summaries, Volcano}
 
 /** The reference's canonical end-to-end workflows (SURVEY §3) as
-  * composable lazy stages. One Catalyst lineage end-to-end: scan →
-  * narrow filters/projections → unpivot → broadcast design join →
-  * keyed aggregations — shuffles only at the design-keyed aggs.
+  * composable lazy stages. One Catalyst lineage end-to-end. For
+  * [[phosphoLfq]]: scan → narrow filters/projections → side-table
+  * expand (one `Generate`) → unpivot (`Expand`) → per-sample median
+  * centering (the quantile engine, which references its input three
+  * times) → broadcast design join → min-valid windows → replicate
+  * collapse → volcano aggregate. The min-valid windows pay the one
+  * full-data exchange, `hashpartitioning(id)`; the collapse and
+  * volcano aggregates are keyed by the id and reuse it.
   */
 object Pipelines {
 

@@ -90,7 +90,7 @@ object CoreQueries extends QueryProvider {
       WHERE COALESCE(CAST(text AS VARCHAR) LIKE '%data%', FALSE)
          OR COALESCE(CAST(source AS VARCHAR) LIKE '%data%', FALSE)"""))
 
-  // ---- §2.3 minimum_valid_values_in_any_group (count + semi-join) ----
+  // ---- §2.3 minimum_valid_values_in_any_group (one id-partitioned window pass) ----
   private val qMinValid = Q(
     "q_min_valid_in_any_group",
     (s, d) => Filters.minimumValidValuesInAnyGroup(

@@ -20,7 +20,12 @@ object Summaries {
     * whole operator is TWO full-data passes (histogram + target-rank)
     * instead of the old four (moments, stats, full shuffle+rank).
     * `tieCols` kept for source compatibility; quantile values are
-    * tie-order-invariant (see Quantiles.exactGroupQuantiles). */
+    * tie-order-invariant (see Quantiles.exactGroupQuantiles).
+    *
+    * A NULL group gets its own row, as SQL `GROUP BY` (and the oracle
+    * mirrors) give it. Before round 17 the moments-to-quantiles inner
+    * join dropped that row silently; callers with a nullable group
+    * column now see it. */
   def describe(
       df: DataFrame,
       groupCol: String,

@@ -1,7 +1,13 @@
 package graft
 
+import graft.ops.Filters
 import graft.queries.Registry
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Plan-shape regression tests: the properties that make these
   * operators survive a 100 TB cluster — filter/projection pushdown
@@ -17,6 +23,21 @@ class PlanSpec extends SparkSpec {
     val df = Registry.queries(name)(spark, sf)
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }
+
+  /** Children of a physical node, descending through adaptive query
+    * stages (a reused exchange is a leaf: it re-reads, never re-runs). */
+  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec        => Seq(q.plan)
+    case o                        => o.children
+  }
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+  /** Nodes from `p` down to the first node matching `target`, inclusive. */
+  private def pathTo(p: SparkPlan, target: SparkPlan => Boolean): Option[List[SparkPlan]] =
+    if (target(p)) Some(List(p))
+    else kids(p).iterator.map(pathTo(_, target)).collectFirst { case Some(path) => p :: path }
+  private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] =
+    nodes(df.queryExecution.executedPlan).collect { case e: ShuffleExchangeExec => e }
 
   test("filter queries push predicates into the parquet scan") {
     val p = plan("q_filter_threshold")
@@ -41,10 +62,66 @@ class PlanSpec extends SparkSpec {
     assert("HashAggregate".r.findAllIn(p).size >= 2, p)
   }
 
-  test("min-valid filter uses left-semi join, not a window") {
-    val p = plan("q_min_valid_in_any_group")
-    assert(p.contains("LeftSemi"), p)
-    assert(!p.contains("Window"), p)
+  test("min-valid filter is one id-keyed window pass: one scan, no semi-join") {
+    val df = Registry.queries("q_min_valid_in_any_group")(spark, sf)
+    val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val physical = nodes(df.queryExecution.executedPlan)
+    // the input is referenced once: no key side re-reading lineitem
+    assert(physical.count(_.isInstanceOf[FileSourceScanExec]) == 1, p)
+    assert(!p.contains("LeftSemi"), p)
+    assert(physical.exists(_.isInstanceOf[WindowExec]), p)
+    // plain layout: the count and max windows share ONE full-data
+    // exchange, keyed by the feature id alone
+    val ex = shuffles(df)
+    assert(ex.size <= 1, p)
+    assert(ex.forall(_.outputPartitioning.toString.startsWith("hashpartitioning(l_partkey#")), p)
+    // id-bucketed layout: the storage partitioning satisfies the
+    // windows, so no full-data exchange at all
+    val clustered = Filters.minimumValidValuesInAnyGroup(
+      Tables.lineitemClustered(spark, sf, Tables.PartClusterKey),
+      Seq("l_partkey"), Seq("l_returnflag"), "l_quantity", 3L)
+    assert(shuffles(clustered).isEmpty,
+      clustered.queryExecution.explainString(ExplainMode.fromString("formatted")))
+  }
+
+  test("phosphoLfq: at most 3 site-table scans, no exchange from min-valid to volcano") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-sites").toString + "/sites"
+    // 40 sites × 3 multiplicities × 6 samples, two groups of three
+    val samples = for (g <- Seq("A", "B"); r <- 1 to 3) yield s"$g$r"
+    val valueCols = for (m <- 1 to 3; s <- samples) yield s"Intensity ${s}___$m"
+    val rows = (1 to 40).map { i =>
+      (i, s"P$i", 0.9, valueCols.indices.map(j => 100.0 + ((i * 31 + j * 17) % 97)))
+    }
+    rows.map { case (i, prot, prob, vs) => (i, prot, prob, "", "", vs) }
+      .toDF("id", "Proteins", "Localization prob", "Reverse", "Potential contaminant", "vs")
+      .select(($"id" +: $"Proteins" +: $"Localization prob" +: $"Reverse" +:
+        $"Potential contaminant" +: valueCols.indices.map(j => $"vs"(j).as(valueCols(j)))): _*)
+      .coalesce(1).write.option("sep", "\t").option("header", "true").csv(dir)
+    val design = samples.map(s => (s, if (s.startsWith("A")) "Control" else "Treat", s.last - '0', 1))
+      .toDF("Label", "Group", "Replicate", "Technical")
+    val out = graft.pipeline.Pipelines.phosphoLfq(
+      graft.io.MaxQuant.readMaxQuant(spark, dir), design)
+    assert(out.count() > 0)
+    val root = out.queryExecution.executedPlan
+    val p = root.toString
+    // the median engine references the expanded long frame three times
+    // (histogram, target-bucket ranks, the centering join); every other
+    // operator in the chain rides one of those references. The
+    // per-multiplicity union expand and the semi-join min-valid read
+    // the site table 12 times in this final plan.
+    assert(nodes(root).count(_.isInstanceOf[FileSourceScanExec]) <= 3, p)
+    // from the volcano aggregate down to the min-valid count window:
+    // no exchange — both windows, the replicate collapse and the
+    // volcano aggregate reuse the windows' hashpartitioning(id)
+    val isCountWindow: SparkPlan => Boolean = {
+      case w: WindowExec => w.windowExpression.exists(_.name == "_valid")
+      case _             => false
+    }
+    val path = pathTo(root, isCountWindow).getOrElse(fail("no min-valid window in:\n" + p))
+    assert(!path.exists(_.isInstanceOf[Exchange]), p)
+    assert(path.count(_.isInstanceOf[WindowExec]) == 2, p)
+    assert(path.count(_.isInstanceOf[BaseAggregateExec]) >= 2, p)
   }
 
   test("q-values avoid a global single-partition window (bucketed ranks)") {

@@ -1,0 +1,192 @@
+package graft.ops
+
+import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+
+/** Reference formulations of operators whose production plans were
+  * rewritten for fewer input references. They live only here, as the
+  * specification the rewrites must reproduce row for row. */
+object ReferenceFormulations {
+
+  /** Min-valid as count per (id, group) → max per id → left-semi join
+    * back on the id. */
+  def minimumValidValuesSemiJoin(
+      df: DataFrame, idCols: Seq[String], groupCols: Seq[String],
+      valueCol: String, n: Long): DataFrame = {
+    val keep = df
+      .groupBy((idCols ++ groupCols).map(col): _*)
+      .agg(count(col(valueCol)).as("_valid"))
+      .groupBy(idCols.map(col): _*)
+      .agg(max(col("_valid")).as("_max_valid"))
+      .filter(col("_max_valid") >= n)
+      .select(idCols.map(col): _*)
+    df.join(keep, idCols, "left_semi")
+  }
+
+  /** Side-table expand as one projection per multiplicity, unioned. */
+  def expandSideTableUnion(df: DataFrame, suffixes: Seq[String] = Seq("___1", "___2", "___3"),
+      idCol: String = "id"): DataFrame = {
+    val suffixed = df.columns.filter(c => suffixes.exists(c.endsWith))
+    val stripped = suffixed.map(c =>
+      suffixes.find(c.endsWith).map(c.stripSuffix).getOrElse(c)).toSet
+    val base = df.columns.filterNot(suffixed.contains)
+      .filterNot(c => c != idCol && stripped.contains(c))
+    val valueBases = suffixed.map(c =>
+      suffixes.find(c.endsWith).map(c.stripSuffix).getOrElse(c)).distinct
+    def typeOf(baseName: String) =
+      df.schema(df.columns.find(c =>
+        suffixes.exists(s => c == baseName + s)).get).dataType
+    val branches = suffixes.map { sfx =>
+      val renamed = valueBases.map { b =>
+        if (df.columns.contains(b + sfx)) col(b + sfx).as(b)
+        else lit(null).cast(typeOf(b)).as(b)
+      }
+      val baseCols = base.map {
+        case c if c == idCol => concat(col(idCol).cast("string"), lit(sfx)).as(idCol)
+        case c               => col(c)
+      }
+      df.select(baseCols.toIndexedSeq ++ renamed: _*)
+        .withColumn("Multiplicity", lit(sfx.stripPrefix("___").toInt))
+    }
+    branches.reduce(_ unionByName _)
+  }
+}
+
+class RewriteEquivalenceSpec extends SparkSpec {
+  import spark.implicits._
+  import ReferenceFormulations._
+
+  private def samples[A](gen: Gen[A], n: Int, seed: Long): Seq[A] =
+    (0 until n).map(i => gen.pureApply(Gen.Parameters.default, Seed(seed + i)))
+
+  /** Row multiset with a bit-exact rendering of every cell: `-0.0` and
+    * `0.0` stay distinct, NaN renders as itself, NULL as "null". */
+  private def multiset(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(r => r.toSeq.map(String.valueOf).mkString("\u0001")).sorted
+
+  private def schemaOf(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+
+  private def assertSameRows(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(multiset(got) == multiset(want))
+  }
+
+  // ---- minimumValidValuesInAnyGroup ----
+
+  private val nullableValue: Gen[Option[Double]] =
+    Gen.frequency(3 -> Gen.some(Gen.choose(-5.0, 5.0)), 2 -> Gen.const(None))
+
+  private def longRows[I](ids: Gen[I]): Gen[List[(I, Option[String], Option[Double])]] =
+    Gen.choose(0, 40).flatMap(k => Gen.listOfN(k, for {
+      id <- ids
+      g <- Gen.frequency(5 -> Gen.some(Gen.oneOf("Control", "Treat", "Other")), 1 -> Gen.const(None))
+      v <- nullableValue
+    } yield (id, g, v)))
+
+  private def checkMinValid(df: DataFrame, idCols: Seq[String], groupCols: Seq[String]): Unit =
+    (0L to 3L).foreach { n =>
+      assertSameRows(
+        Filters.minimumValidValuesInAnyGroup(df, idCols, groupCols, "value", n),
+        minimumValidValuesSemiJoin(df, idCols, groupCols, "value", n))
+    }
+
+  test("min-valid matches count + semi-join: string ids with NULL ids, NULL groups, n = 0..3") {
+    val ids = Gen.frequency(6 -> Gen.some(Gen.oneOf("f1", "f2", "f3", "f4", "f5")), 1 -> Gen.const(None))
+    samples(longRows(ids), 8, 300L).foreach { rows =>
+      checkMinValid(rows.toDF("id", "Group", "value"), Seq("id"), Seq("Group"))
+    }
+  }
+
+  test("min-valid matches count + semi-join: double ids with NaN, -0.0, 0.0 and NULL") {
+    val ids = Gen.oneOf(Some(Double.NaN), Some(-0.0), Some(0.0), Some(1.5), Some(-2.0), None)
+    samples(longRows(ids), 8, 400L).foreach { rows =>
+      checkMinValid(rows.toDF("id", "Group", "value"), Seq("id"), Seq("Group"))
+    }
+  }
+
+  test("min-valid matches count + semi-join: multi-column id (id, Group) as silacRatio calls it") {
+    val ids = Gen.frequency(6 -> Gen.some(Gen.choose(1, 4)), 1 -> Gen.const(None))
+    samples(longRows(ids), 8, 500L).foreach { rows =>
+      checkMinValid(rows.toDF("id", "Group", "value"), Seq("id", "Group"), Seq("Group"))
+    }
+  }
+
+  test("min-valid matches count + semi-join: two group columns, all-null values, empty input") {
+    val rows = Seq(
+      (Option(1), Option("a"), Option(1), Option.empty[Double]),
+      (Option(1), Option("a"), Option(2), Option.empty[Double]),
+      (Option(2), Option.empty[String], Option(1), Option.empty[Double]),
+      (Option.empty[Int], Option("b"), Option(1), Option.empty[Double]))
+    val allNull = rows.toDF("id", "Group", "Replicate", "value")
+    checkMinValid(allNull, Seq("id"), Seq("Group", "Replicate"))
+    checkMinValid(allNull.limit(0), Seq("id"), Seq("Group", "Replicate"))
+    val mixed = samples(longRows(Gen.some(Gen.choose(1, 3))), 4, 600L).flatten
+      .zipWithIndex.map { case ((id, g, v), i) => (id, g, Option(i % 2), v) }
+      .toDF("id", "Group", "Replicate", "value")
+    checkMinValid(mixed, Seq("id"), Seq("Group", "Replicate"))
+  }
+
+  // ---- expandSideTable ----
+
+  private val cell: Gen[Option[Double]] =
+    Gen.frequency(3 -> Gen.some(Gen.choose(0.0, 1e6)), 1 -> Gen.const(None))
+
+  /** A MaxQuant-shaped wide frame: `id`, a plain protein column, a
+    * plain summary column whose name collides with a value base when
+    * `collide`, and two value bases (`Intensity A`, `Mass error [ppm]`)
+    * present under a random subset of the three suffixes. */
+  private def wideFrame(rows: Int, present: Seq[String], withId: Boolean,
+      collide: Boolean, seed: Long): DataFrame = {
+    val bases = Seq("Intensity A", "Mass error [ppm]")
+    val valueCols = for (b <- bases; s <- present) yield s"$b$s"
+    val plain = Seq("Proteins") ++ (if (collide) Seq("Intensity A") else Nil) ++ Seq("Intensity")
+    val names = (if (withId) Seq("id") else Nil) ++ plain ++ valueCols
+    val gen = Gen.listOfN(rows, Gen.listOfN(plain.size + valueCols.size, cell))
+    val data = gen.pureApply(Gen.Parameters.default, Seed(seed)).zipWithIndex.map { case (cs, i) =>
+      val plainCells = cs.take(plain.size).zipWithIndex.map {
+        case (_, 0) => s"P$i"
+        case (c, _) => c.map(Double.box).orNull
+      }
+      Row.fromSeq((if (withId) Seq(i.toLong) else Nil) ++ plainCells ++
+        cs.drop(plain.size).map(_.map(Double.box).orNull))
+    }
+    val schema = StructType(names.map { n =>
+      val t = n match {
+        case "id"       => LongType
+        case "Proteins" => StringType
+        case _          => DoubleType
+      }
+      StructField(n, t, nullable = true)
+    })
+    spark.createDataFrame(spark.sparkContext.parallelize(data, 2), schema)
+  }
+
+  private def checkExpand(df: DataFrame): Unit = {
+    val got = Reshape.expandSideTable(df)
+    val want = expandSideTableUnion(df)
+    assert(schemaOf(got) == schemaOf(want), s"${got.schema} vs ${want.schema}")
+    assertSameRows(got, want)
+  }
+
+  test("expandSideTable matches per-multiplicity union: schema (names, order, types) and rows") {
+    val suffixSets = Seq(
+      Seq("___1", "___2", "___3"),
+      Seq("___1", "___3"), // ___2 absent: typed all-null cells
+      Seq("___2"))
+    for {
+      (present, i) <- suffixSets.zipWithIndex
+      withId <- Seq(true, false)
+      collide <- Seq(false, true)
+    } checkExpand(wideFrame(6, present, withId, collide, 700L + i))
+  }
+
+  test("expandSideTable matches per-multiplicity union: no suffixed columns, empty input, Multiplicity input column") {
+    checkExpand(Seq((1L, "P1", 2.0)).toDF("id", "Proteins", "Intensity"))
+    checkExpand(wideFrame(0, Seq("___1", "___2", "___3"), withId = true, collide = true, 800L))
+    checkExpand(Seq((1L, 7, 2.0, 3.0)).toDF("id", "Multiplicity", "Intensity A___1", "Intensity A___3"))
+  }
+}

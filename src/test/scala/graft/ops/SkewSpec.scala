@@ -123,6 +123,43 @@ class SkewSpec extends SparkSpec {
     // the test JVM pins plain (TestSpark), so the registry's keyed
     // views stay on plain parquet here even though the build exists
     assert(graft.Tables.layoutMode == "plain")
+    // a build counts as completed only while its manifest verifies: a
+    // part file reaped under a surviving _SUCCESS is detected, and the
+    // next keyed read rebuilds instead of silently losing rows
+    val key = graft.Tables.PartClusterKey
+    def minValid() = graft.queries.Registry.queries("q_min_valid_in_any_group")(spark, sfDir)
+      .collect().map(_.toString).sorted.toSeq
+    def withLayout[A](mode: String)(body: => A): A = {
+      val prev = sys.props.get("graft.layout")
+      sys.props("graft.layout") = mode
+      try body finally prev match {
+        case Some(v) => sys.props("graft.layout") = v
+        case None    => sys.props.remove("graft.layout")
+      }
+    }
+    val expected = minValid() // plain parquet (the test JVM's pin)
+    val built = graft.Tables.lineitemClustered(spark, sfDir, key)
+    assert(graft.Tables.clusteredBuildExists(sfDir, "lineitem", key))
+    val victim = new java.io.File(new java.net.URI(built.inputFiles.head))
+    assert(victim.delete())
+    assert(new java.io.File(victim.getParentFile, "_SUCCESS").exists()) // the marker survives
+    assert(!graft.Tables.clusteredBuildExists(sfDir, "lineitem", key))
+    // auto no longer routes the thinned layout: plain parquet, every row
+    assert(withLayout("auto")(minValid()) == expected)
+    // a keyed read that routes the layout rebuilds it first
+    assert(withLayout("clustered")(minValid()) == expected)
+    assert(graft.Tables.clusteredBuildExists(sfDir, "lineitem", key))
+    assert(withLayout("auto")(minValid()) == expected)
+    // cold catalog: re-registration verifies the files too
+    val layoutDir = new java.io.File(new java.net.URI(
+      graft.Tables.lineitemClustered(spark, sfDir, key).inputFiles.head)).getParentFile
+    val tblName = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith(s"graft_lineitem_by_${key}_")).head
+    spark.sql(s"DROP TABLE $tblName") // external: files survive
+    assert(layoutDir.listFiles().filter(_.getName.startsWith("part-")).head.delete())
+    assert(graft.Tables.lineitemClustered(spark, sfDir, key).count() ==
+      graft.Tables.lineitem(spark, sfDir).count())
+    assert(graft.Tables.clusteredBuildExists(sfDir, "lineitem", key))
   }
 
   test("partkey-clustered layout: volcano chain layout-invariant, fewer exchanges") {

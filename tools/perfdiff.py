@@ -1,0 +1,147 @@
+#!/usr/bin/env python3
+"""Parent-vs-change comparison of perfbench artifacts.
+
+    python3 tools/perfdiff.py PARENT_DIR CHANGE_DIR [--benchmark BENCHMARK.json]
+
+Each directory holds `.bench_build/results/*.json` artifacts written by
+`perfbench/run.py`, one per (workload, seed, trace) run. Runs with the
+same workload, seed and trace setting on both sides form a pair. For
+every workload and every metric (end-to-end metrics from untraced runs,
+per-layer metrics from traced runs) the tool prints one Markdown row:
+
+- each side's median and quartiles over its runs;
+- the change's median relative to the parent's;
+- the change's wins over pairs (ties count for neither side);
+- a verdict by the paired rule: `gain` when there are at least ten
+  pairs, the change wins at least nine tenths of them and the medians
+  differ, in the better direction, by more than the parent's
+  interquartile range; `worse`
+  when the change's median is worse than the parent's by more than the
+  metric's bound from BENCHMARK.json (end-to-end metrics only);
+  `unresolved` when that bound is smaller than the parent's own spread
+  (IQR / median) and the change is not better on every run; otherwise
+  `-` (no claimable change, within bound).
+
+The direction of each metric ("better": "lower" or "higher") comes from
+BENCHMARK.json.
+"""
+import argparse
+import glob
+import json
+import os
+import statistics
+import sys
+
+MIN_PAIRS = 10
+
+
+def load_runs(directory):
+    """{(workload, seed, traced): artifact} for every artifact in a directory."""
+    runs = {}
+    for path in sorted(glob.glob(os.path.join(directory, "*.json"))):
+        with open(path) as f:
+            art = json.load(f)
+        runs[(art["workload"], art["seed"], bool(art["trace"]))] = art
+    return runs
+
+
+def quartiles(values):
+    """(q1, median, q3) with inclusive interpolation; one value is its own quartiles."""
+    if len(values) == 1:
+        return values[0], values[0], values[0]
+    q1, med, q3 = statistics.quantiles(values, n=4, method="inclusive")
+    return q1, med, q3
+
+
+def metric_directions(benchmark):
+    """{metric: (better, bound or None, section)} from BENCHMARK.json."""
+    out = {}
+    for m in benchmark["end_to_end"]:
+        out[m["name"]] = (m["better"], m.get("bound"), "end_to_end")
+    for m in benchmark["per_layer"]:
+        out[m["name"]] = (m["better"], None, "per_layer")
+    return out
+
+
+def compare(parent_runs, change_runs, directions):
+    """One dict per (workload, metric) with both sides' statistics and the verdict."""
+    rows = []
+    pairs = sorted(set(parent_runs) & set(change_runs))
+    workloads = sorted({w for w, _, _ in pairs})
+    for workload in workloads:
+        for metric, (better, bound, section) in directions.items():
+            traced = section == "per_layer"
+            keys = [k for k in pairs if k[0] == workload and k[2] == traced]
+            pv, cv = [], []
+            for k in keys:
+                p = parent_runs[k][section].get(metric)
+                c = change_runs[k][section].get(metric)
+                if p is None or c is None or p.get("value") is None or c.get("value") is None:
+                    continue
+                pv.append(float(p["value"]))
+                cv.append(float(c["value"]))
+            if not pv:
+                continue
+            sign = 1.0 if better == "lower" else -1.0
+            wins = sum(1 for p, c in zip(pv, cv) if sign * (p - c) > 0)
+            pq1, pmed, pq3 = quartiles(pv)
+            cq1, cmed, cq3 = quartiles(cv)
+            iqr = pq3 - pq1
+            gain = sign * (pmed - cmed)  # > 0: the change is better
+            rel = (cmed - pmed) / pmed if pmed > 0 else None
+            if len(pv) >= MIN_PAIRS and wins >= 0.9 * len(pv) and gain > iqr:
+                verdict = "gain"
+            elif bound is not None and rel is not None and sign * rel > bound:
+                verdict = "worse"
+            elif (bound is not None and pmed > 0 and iqr / pmed > bound
+                  and not all(sign * (p - c) > 0 for p in pv for c in cv)):
+                verdict = "unresolved"
+            else:
+                verdict = "-"
+            rows.append({
+                "workload": workload, "metric": metric, "section": section,
+                "pairs": len(pv), "wins": wins,
+                "parent": (pq1, pmed, pq3), "change": (cq1, cmed, cq3),
+                "rel": rel, "verdict": verdict,
+            })
+    return rows
+
+
+def fmt(x):
+    return f"{x:.4g}"
+
+
+def render(rows):
+    lines = ["| workload | metric | pairs | parent median [q1, q3] | change median [q1, q3] "
+             "| change / parent | change wins | verdict |",
+             "|---|---|---|---|---|---|---|---|"]
+    for r in rows:
+        p, c = r["parent"], r["change"]
+        rel = "n/a" if r["rel"] is None else f"{r['rel'] * 100:+.1f}%"
+        lines.append(
+            f"| {r['workload']} | {r['metric']} | {r['pairs']} "
+            f"| {fmt(p[1])} [{fmt(p[0])}, {fmt(p[2])}] "
+            f"| {fmt(c[1])} [{fmt(c[0])}, {fmt(c[2])}] "
+            f"| {rel} | {r['wins']}/{r['pairs']} | {r['verdict']} |")
+    return "\n".join(lines)
+
+
+def main(argv=None):
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("parent_dir")
+    ap.add_argument("change_dir")
+    ap.add_argument("--benchmark", default=os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCHMARK.json"))
+    args = ap.parse_args(argv)
+    with open(args.benchmark) as f:
+        directions = metric_directions(json.load(f))
+    rows = compare(load_runs(args.parent_dir), load_runs(args.change_dir), directions)
+    if not rows:
+        print("perfdiff: no (workload, seed, trace) run present on both sides", file=sys.stderr)
+        return 1
+    print(render(rows))
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

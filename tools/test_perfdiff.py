@@ -1,0 +1,107 @@
+#!/usr/bin/env python3
+"""Unit tests for tools/perfdiff.py on synthetic artifacts.
+
+    python3 -m unittest tools/test_perfdiff.py
+"""
+import json
+import os
+import sys
+import tempfile
+import unittest
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+import perfdiff  # noqa: E402
+
+BENCHMARK = {
+    "end_to_end": [
+        {"name": "pass_s", "unit": "s", "better": "lower", "bound": 0.25},
+        {"name": "items_per_s", "unit": "1/s", "better": "higher", "bound": 0.25},
+        {"name": "alloc_mb", "unit": "MB", "better": "lower", "bound": 0.15},
+        {"name": "cpu_s", "unit": "s", "better": "lower", "bound": 0.25},
+    ],
+    "per_layer": [
+        {"name": "spark.jobs", "unit": "count", "better": "lower"},
+    ],
+}
+
+
+def write(directory, workload, seed, trace, end_to_end, per_layer=None):
+    art = {
+        "workload": workload, "seed": seed, "trace": trace,
+        "end_to_end": {k: {"value": v, "unit": "s"} for k, v in end_to_end.items()},
+        "per_layer": {k: {"value": v, "unit": "count"} for k, v in (per_layer or {}).items()},
+    }
+    name = f"{workload}-seed{seed}-trace{int(trace)}.json"
+    with open(os.path.join(directory, name), "w") as f:
+        json.dump(art, f)
+
+
+class PerfDiffTest(unittest.TestCase):
+
+    def setUp(self):
+        self.tmp = tempfile.TemporaryDirectory()
+        self.parent = os.path.join(self.tmp.name, "parent")
+        self.change = os.path.join(self.tmp.name, "change")
+        os.makedirs(self.parent)
+        os.makedirs(self.change)
+        for i, seed in enumerate(range(1, 11)):
+            jitter = 0.01 * (i % 3)
+            write(self.parent, "lfq", seed, False, {
+                "pass_s": 4.0 + jitter, "items_per_s": 100.0 + i,
+                "alloc_mb": 1000.0, "cpu_s": 10.0 + (i % 2)})
+            write(self.change, "lfq", seed, False, {
+                # a clear gain; throughput up on every pair
+                "pass_s": 2.5 + jitter, "items_per_s": 160.0 + i,
+                # 30 % more memory against a 0.15 bound
+                "alloc_mb": 1300.0,
+                # a coin flip
+                "cpu_s": 10.0 + ((i + 1) % 2)})
+        write(self.parent, "lfq", 99, True, {"pass_s": 5.0}, {"spark.jobs": 15})
+        write(self.change, "lfq", 99, True, {"pass_s": 3.0}, {"spark.jobs": 11})
+        # present on one side only: never paired
+        write(self.change, "lfq", 50, False, {"pass_s": 0.1, "items_per_s": 1.0,
+                                              "alloc_mb": 1.0, "cpu_s": 0.1})
+        directions = perfdiff.metric_directions(BENCHMARK)
+        self.rows = {r["metric"]: r for r in perfdiff.compare(
+            perfdiff.load_runs(self.parent), perfdiff.load_runs(self.change), directions)}
+
+    def tearDown(self):
+        self.tmp.cleanup()
+
+    def test_quartiles_and_pairs(self):
+        r = self.rows["pass_s"]
+        self.assertEqual(r["pairs"], 10)
+        self.assertAlmostEqual(r["parent"][1], 4.01)
+        self.assertAlmostEqual(r["change"][1], 2.51)
+        self.assertLessEqual(r["parent"][0], r["parent"][1])
+        self.assertLessEqual(r["parent"][1], r["parent"][2])
+
+    def test_gain_needs_nine_tenths_of_pairs_and_a_median_gap_beyond_the_parent_iqr(self):
+        self.assertEqual(self.rows["pass_s"]["wins"], 10)
+        self.assertEqual(self.rows["pass_s"]["verdict"], "gain")
+        # "higher is better" is honoured
+        self.assertEqual(self.rows["items_per_s"]["verdict"], "gain")
+        # 5 wins, 5 losses: nothing to claim
+        self.assertEqual(self.rows["cpu_s"]["wins"], 5)
+        self.assertEqual(self.rows["cpu_s"]["verdict"], "-")
+
+    def test_worse_beyond_bound(self):
+        self.assertEqual(self.rows["alloc_mb"]["wins"], 0)
+        self.assertEqual(self.rows["alloc_mb"]["verdict"], "worse")
+
+    def test_per_layer_metrics_come_from_traced_runs(self):
+        r = self.rows["spark.jobs"]
+        self.assertEqual((r["pairs"], r["wins"]), (1, 1))
+        self.assertEqual((r["parent"][1], r["change"][1]), (15.0, 11.0))
+        # one pair wins, but a gain needs ten pairs
+        self.assertEqual(r["verdict"], "-")
+
+    def test_render_has_one_row_per_metric(self):
+        table = perfdiff.render(list(self.rows.values()))
+        self.assertEqual(len(table.splitlines()), 2 + len(self.rows))
+        self.assertIn("| lfq | pass_s | 10 |", table)
+
+
+if __name__ == "__main__":
+    unittest.main()
