@@ -135,8 +135,8 @@ object Padua {
     val base =
       if (summary)
         go.groupBy(col("GO"), col("Name")).agg(
-          Moments.meanOf(Moments.sumExact(col("P")), count(col("P"))).as("P"),
-          Moments.meanOf(Moments.sumExact(col("FDR")), count(col("FDR"))).as("FDR"))
+          Moments.meanOf(Moments.sumAt(col("P"), 6), count(col("P"))).as("P"),
+          Moments.meanOf(Moments.sumAt(col("FDR"), 6), count(col("FDR"))).as("FDR"))
       else go
     val gated = if (fdr > 0) base.filter(col("P") < fdr) else base
     gated.orderBy(col("P").asc)

@@ -167,8 +167,9 @@ object PlanChecks {
     * registry queries emitted int32 columns through every green
     * driver round (both sides canonicalize to the same integer).
     * Every registered query's schema must pass this lint (PlanSpec
-    * gate + Verify warning) — route exact sums through a
-    * Moments.sumExact* double image instead (INVARIANTS.md §2). */
+    * gate + Verify warning) — route exact sums through
+    * Moments.sumAt / sumWide / sumWideSplit, which return double
+    * (INVARIANTS.md §2). */
   def nonPortableOutputColumns(schema: org.apache.spark.sql.types.StructType): List[String] = {
     import org.apache.spark.sql.types._
     schema.fields.toList.collect {

@@ -58,7 +58,7 @@ object Verify {
             lintHits += s"$name: ${bad.mkString(", ")}"
             System.err.println(s"[verify] LINT $name emits non-portable output " +
               s"type(s): ${bad.mkString(", ")} — expect a driver hash mismatch " +
-              "(see Moments.sumExactScale4 scaladoc)")
+              "(sum through Moments.sumAt/sumWide, which return double)")
           }
           df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } catch { case e: Throwable =>

@@ -64,16 +64,16 @@ object Pca {
     // (m1's join, mu2's global sum) each re-ran this corpus-scale
     // aggregation; one row per feature, unpersisted before fit returns.
     val featMeans = df.groupBy(col(idCol))
-      .agg((graft.stats.Moments.sumExactFine(v) / nSamples).as("_fmu"))
+      .agg((graft.stats.Moments.sumWide(v, 12) / nSamples).as("_fmu"))
       .persist(graft.ops.Caches.memoLevel(df.sparkSession))
 
     // m1[a] = Σ_f μ_f·x_fa ; mu2 = Σ_f μ_f²
     val m1 = df.join(featMeans, idCol)
       .groupBy(col(sampleCol))
-      .agg(graft.stats.Moments.sumProdExact(v, col("_fmu")).as("m1"))
+      .agg(graft.stats.Moments.sumWide(v * col("_fmu"), 10).as("m1"))
       .collect().map(r => r.get(0).toString -> r.getDouble(1)).toMap
     val mu2 = featMeans
-      .agg(graft.stats.Moments.sumProdExact(col("_fmu"), col("_fmu")))
+      .agg(graft.stats.Moments.sumWide(col("_fmu") * col("_fmu"), 10))
       .head().getDouble(0)
     featMeans.unpersist()
 
@@ -85,7 +85,7 @@ object Pca {
     // one run stay valid for any partitioning
     val cross = StatTests.pairObservations(df, Seq(idCol), sampleCol, valueCol)
       .groupBy(col("s1"), col("s2"))
-      .agg(graft.stats.Moments.sumProdExact(col("x"), col("y")).as("sxy"))
+      .agg(graft.stats.Moments.sumWide(col("x") * col("y"), 10).as("sxy"))
       .collect()
     val sN = samples.length
     val g = Array.ofDim[Double](sN, sN)
@@ -143,14 +143,14 @@ object Pca {
     val weights = featureWeightsRaw(df, model, idCol, sampleCol, valueCol)
       .persist(graft.ops.Caches.memoLevel(spark))
     val kAggs = model.eigenvalues.indices.map(c =>
-      graft.stats.Moments.sumProdExact(col("_fmu"), col(s"w_$c")).as(s"k_$c"))
+      graft.stats.Moments.sumWide(col("_fmu") * col(s"w_$c"), 10).as(s"k_$c"))
     // weights carries _fmu per feature, so K needs no extra join
     val kRow = weights.agg(kAggs.head, kAggs.tail: _*).head()
     val aggs = model.eigenvalues.zipWithIndex.map { case (lam, c) =>
       // empty/all-null weights aggregate to null K: substitute 0.0 so
       // the projection yields an empty frame instead of NPE-ing here
       val kc = if (kRow.isNullAt(c)) 0.0 else kRow.getDouble(c)
-      ((graft.stats.Moments.sumProdExact(v, col(s"w_$c")) -
+      ((graft.stats.Moments.sumWide(v * col(s"w_$c"), 10) -
         lit(kc)) / math.sqrt(lam)).as(s"pc_$c")
     }.toIndexedSeq
     df.join(weights, idCol)
@@ -164,7 +164,7 @@ object Pca {
       df: DataFrame, model: PcaModel, idCol: String, valueCol: String): DataFrame = {
     val v = coalesce(col(valueCol), lit(0.0))
     df.groupBy(col(idCol))
-      .agg((graft.stats.Moments.sumExactFine(v) /
+      .agg((graft.stats.Moments.sumWide(v, 12) /
         model.nSamples.toDouble).as("_fmu"))
   }
 
@@ -184,7 +184,7 @@ object Pca {
     val aggs = model.components.zipWithIndex.map { case (comp, c) =>
       val compMap = map(model.sampleOrder.zip(comp)
         .flatMap { case (sm, w) => Seq(lit(sm), lit(w)) }: _*)
-      graft.stats.Moments.sumProdExact(v, element_at(compMap, col(sampleCol)))
+      graft.stats.Moments.sumWide(v * element_at(compMap, col(sampleCol)), 10)
         .as(s"_raw_$c")
     } :+ max(col("_fmu")).as("_fmu") // constant within the feature group
     val g = df.join(featMeans(df, model, idCol, valueCol), idCol)

@@ -65,10 +65,10 @@ object Pls {
     // convention): the model — and the scores the registry query
     // hash-checks against DuckDB — must not depend on partition
     // accumulation order
-    import graft.stats.Moments.{meanOf, sumExactFine, sumProdExact}
+    import graft.stats.Moments.{meanOf, sumWide}
     val raw = df.select(col(idCol), col(sampleCol), coalesce(col(valueCol), lit(0.0)).as("_x"))
     val featureMeans = raw.filter(col(sampleCol).isin(labeled: _*))
-      .groupBy(col(idCol)).agg(meanOf(sumExactFine(col("_x")), count(col("_x"))).as("_fmu"))
+      .groupBy(col(idCol)).agg(meanOf(sumWide(col("_x"), 12), count(col("_x"))).as("_fmu"))
     var x = raw.join(featureMeans, idCol)
       .select(col(idCol), col(sampleCol), (col("_x") - col("_fmu")).as("_x"))
       .localCheckpoint()
@@ -83,14 +83,14 @@ object Pls {
       // w's own checkpoint. Now wNorm aggregates the materialized
       // blocks and w stays a lazy row-local projection over them.
       val w0 = x.groupBy(col(idCol))
-        .agg(sumProdExact(col("_x"), element_at(yMap, col(sampleCol))).as("_w"))
+        .agg(sumWide(col("_x") * element_at(yMap, col(sampleCol)), 10).as("_w"))
         .localCheckpoint()
       val wNorm = math.sqrt(
-        w0.agg(sumProdExact(col("_w"), col("_w"))).head().getDouble(0))
+        w0.agg(sumWide(col("_w") * col("_w"), 10)).head().getDouble(0))
       val w = w0.select(col(idCol), (col("_w") / wNorm).as("w"))
       // t = X^T w  (per sample, tiny — covers ALL samples)
       val tRows = x.join(w, idCol)
-        .groupBy(col(sampleCol)).agg(sumProdExact(col("_x"), col("w")).as("t"))
+        .groupBy(col(sampleCol)).agg(sumWide(col("_x") * col("w"), 10).as("t"))
         .collect().map(r => r.get(0).toString -> r.getDouble(1)).toMap
       // fit-side scalars use labeled scores only
       val tt = labeled.map { s => val t = tRows.getOrElse(s, 0.0); t * t }.sum
@@ -99,7 +99,7 @@ object Pls {
       // p = X_fit t / t^T t  (distributed over features; labeled-only map)
       val tMapFit = typedLit(tRows.view.filterKeys(y.contains).toMap)
       val p = x.groupBy(col(idCol))
-        .agg((sumProdExact(col("_x"), element_at(tMapFit, col(sampleCol))) / tt).as("p"))
+        .agg((sumWide(col("_x") * element_at(tMapFit, col(sampleCol)), 10) / tt).as("p"))
       // deflate EVERY sample: X ← X - t p^T ; y ← y - q t
       val tMapAll = typedLit(tRows)
       val xPrev = x

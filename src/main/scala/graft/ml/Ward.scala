@@ -31,7 +31,7 @@ object Ward {
       // exact-decimal sum of squared diffs: distances (hence linkage,
       // hence recorded cluster assignments and any oracle built on
       // them) do not depend on partition accumulation order
-      .agg(graft.stats.Moments.sumSqExact(col("x") - col("y")).as("sqdist"))
+      .agg(graft.stats.Moments.sumWide((col("x") - col("y")) * (col("x") - col("y")), 10).as("sqdist"))
 
   final case class Merge(a: Int, b: Int, dist: Double, size: Int)
 

@@ -47,7 +47,7 @@ object Impute {
     val stats = df
       .filter(v.isNotNull)
       .groupBy(col(sampleCol))
-      .agg(Moments.sumExact(v).as("_s1"), Moments.sumSqExact(v).as("_s2"),
+      .agg(Moments.sumAt(v, 6).as("_s1"), Moments.sumWide(v * v, 10).as("_s2"),
         count(v).as("_n"))
       .select(col(sampleCol),
         Moments.meanOf(col("_s1"), col("_n")).as("_mu"),
@@ -142,7 +142,7 @@ object Impute {
     // feature, three consumers (semi, anti, mean join).
     val featStats = base.groupBy(col("_id"))
       .agg(count(col("_v")).as("_n"),
-        graft.stats.Moments.sumExact(col("_v")).as("_s1"))
+        graft.stats.Moments.sumAt(col("_v"), 6).as("_s1"))
       .persist(Caches.memoLevel(spark))
     val completeIds = featStats.filter(col("_n") === nS).select(col("_id"))
     val complete = base.join(completeIds, Seq("_id"), "left_semi")
@@ -164,7 +164,7 @@ object Impute {
     // partition accumulation order
     graft.stats.StatTests.pairObservations(centered, Seq("_id"), "_s", "_v")
       .groupBy(col("s1"), col("s2"))
-      .agg(graft.stats.Moments.sumProdExact(col("x"), col("y")).as("k"))
+      .agg(graft.stats.Moments.sumWide(col("x") * col("y"), 10).as("k"))
       .collect().foreach { r =>
         val a = sIdx(r.getString(0)); val b = sIdx(r.getString(1))
         val v = r.getDouble(2)

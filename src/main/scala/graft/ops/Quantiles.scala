@@ -92,19 +92,15 @@ object Quantiles {
   /** One row per group with a column per requested quantile
     * (`p50`, `p95`, … named from `(q*100).round`).
     *
-    * `tieCols` is retained for source compatibility but no longer
-    * participates: the quantile is the VALUE at rank ceil(q·n) under
-    * any (value, …) ordering, and that value is invariant to the
-    * order among equal values — so the selection engine (which ranks
-    * by value only) returns bitwise-identical output to the old full
-    * (value, tieCols) rank stitch while never shuffling more than the
-    * histogram and the target buckets. */
+    * The quantile is the VALUE at rank ceil(q·n) under any (value, …)
+    * ordering, and that value is invariant to the order among equal
+    * values — so the selection engine ranks by value only and never
+    * shuffles more than the histogram and the target buckets. */
   def exactGroupQuantiles(
       df: DataFrame,
       groupCol: String,
       valueCol: String,
       qs: Seq[Double],
-      tieCols: Seq[String],
       numBuckets: Int = 1024): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0), "qs in (0, 1]")
     val ranked = selectedGroupRanks(df, Seq(groupCol), valueCol,
@@ -374,8 +370,7 @@ object Quantiles {
     * — kept adjacent so the trees stay structurally identical. */
   def oracleSql(
       table: String, groupCol: String, valueCol: String,
-      qs: Seq[Double], tieCols: Seq[String]): String = {
-    val order = (valueCol +: tieCols).mkString(", ")
+      qs: Seq[Double]): String = {
     val aggs = qs.map { q =>
       val name = s"p${math.round(q * 100)}"
       // CAST('..' AS DOUBLE) on BOTH factors: a bare 0.95 is DECIMAL in
@@ -387,7 +382,7 @@ object Quantiles {
     s"""
       WITH r AS (
         SELECT $groupCol, $valueCol,
-          ROW_NUMBER() OVER (PARTITION BY $groupCol ORDER BY $order) AS rn,
+          ROW_NUMBER() OVER (PARTITION BY $groupCol ORDER BY $valueCol) AS rn,
           COUNT(*) OVER (PARTITION BY $groupCol) AS n
         FROM $table WHERE $valueCol IS NOT NULL)
       SELECT $groupCol,

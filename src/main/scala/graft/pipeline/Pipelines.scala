@@ -133,12 +133,12 @@ object Pipelines {
     val inputBytes = long.queryExecution.optimizedPlan.stats.sizeInBytes
     val profPersisted = inputBytes >= PersistInputBytesFloor
     val prof0 = long.groupBy(col(idCol), col(timeCol))
-      .agg(Moments.meanOf(Moments.sumExact(col(valueCol)), count(col(valueCol))).as("_v"))
+      .agg(Moments.meanOf(Moments.sumAt(col(valueCol), 6), count(col(valueCol))).as("_v"))
     val prof = if (profPersisted) prof0.persist(Caches.memoLevel(long.sparkSession)) else prof0
     val m = prof.groupBy(col(idCol))
       .agg(
-        Moments.sumExact(col("_v")).as("_s1"),
-        Moments.sumSqExact(col("_v")).as("_s2"),
+        Moments.sumAt(col("_v"), 6).as("_s1"),
+        Moments.sumWide(col("_v") * col("_v"), 10).as("_s2"),
         count(col("_v")).as("_n"))
       .select(col(idCol),
         Moments.meanOf(col("_s1"), col("_n")).as("_mu"),
@@ -151,7 +151,7 @@ object Pipelines {
     val means = z.join(broadcast(assign), Seq(idCol))
       .groupBy(col("cluster"), col(timeCol))
       .agg(
-        Moments.meanOf(Moments.sumExact(col("z")), count(col("z"))).as("mean_z"),
+        Moments.meanOf(Moments.sumAt(col("z"), 6), count(col("z"))).as("mean_z"),
         count(col("z")).cast("bigint").as("n_sites"))
     Timecourse(assign, means, () => { prof.unpersist(); z.unpersist(); () })
   }

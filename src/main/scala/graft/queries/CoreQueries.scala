@@ -3,8 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.ops.{Filters, Reshape, Normalize}
-import graft.stats.Moments
+import graft.ops.{Filters, Normalize, Quantiles, Reshape}
+import graft.stats.{Moments, Summaries}
 import graft.stats.Moments.{Sql => MS}
 
 /** Scan / filter / projection / join / reshape / aggregation operators
@@ -20,34 +20,31 @@ object CoreQueries extends QueryProvider {
       val li = Tables.lineitem(s, d)
       li.filter(col("l_shipdate") <= lit("1998-09-01").cast("timestamp"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
-        // int/money/scale-4 images, not dec(15,6) doubles: at sf10
-        // these fact sums reach ~2.7e11 and the scale-6 mantissa
-        // passes 2^53, where the engines' decimal->double
-        // double-rounding diverges by 1 ulp (caught by the round-9
-        // sf10 parity run — Moments.sumExact scaladoc). Quantities
-        // are integers, prices cent-valued, and the discount product
-        // is exact at 4 decimals (2dp × 2dp), so each coarse image is
-        // exact and its double conversion correctly rounded far past
-        // sf10. (sumExactScale4 replaced a DECIMAL(38,6) output here:
-        // DECIMAL outputs hash-mismatch the driver gate even when
-        // bit-identical — Verify output-type lint.) The disc-price
-        // sum takes the WIDE split conversion: at sf100 the largest
-        // group's revenue ≈ 1.4e12 exceeds plain sumExactScale4's
-        // 9e11 conversion bound (MomentsSpec routing check); the
-        // floor-split image stays engine-exact to ~9e15.
+        // scale-0/2/4 images, not scale 6: at sf10 these fact sums
+        // reach ~2.7e11 and the scale-6 mantissa passes 2^53, where
+        // the engines' decimal->double double-rounding diverges by
+        // 1 ulp (caught by the round-9 sf10 parity run — Moments
+        // bound table). Quantities are integers, prices cent-valued,
+        // and the discount product is exact at 4 decimals (2dp × 2dp),
+        // so each coarse image is exact and its double conversion
+        // correctly rounded far past sf10. The disc-price sum takes
+        // the split conversion: at sf100 the largest group's revenue
+        // ≈ 1.4e12 exceeds plain scale 4's 9e11 conversion bound
+        // (MomentsSpec routing check); the floor split stays
+        // engine-exact to ~9e15.
         .agg(
-          Moments.sumExactInt(col("l_quantity")).as("sum_qty"),
-          Moments.sumExactMoney(col("l_extendedprice")).as("sum_base_price"),
-          Moments.sumExactScale4Wide(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc_price"),
-          (Moments.sumExactInt(col("l_quantity")) / count(lit(1)).cast("double")).as("avg_qty"),
+          Moments.sumAt(col("l_quantity"), 0).as("sum_qty"),
+          Moments.sumAt(col("l_extendedprice"), 2).as("sum_base_price"),
+          Moments.sumWideSplit(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("sum_disc_price"),
+          (Moments.sumAt(col("l_quantity"), 0) / count(lit(1)).cast("double")).as("avg_qty"),
           count(lit(1)).as("count_order"))
     },
     Some(s"""
       SELECT l_returnflag, l_linestatus,
-        ${MS.sumExactInt("l_quantity")} AS sum_qty,
-        ${MS.sumExactMoney("l_extendedprice")} AS sum_base_price,
-        ${MS.sumExactScale4Wide("l_extendedprice * (1.0 - l_discount)")} AS sum_disc_price,
-        ${MS.sumExactInt("l_quantity")} / CAST(COUNT(1) AS DOUBLE) AS avg_qty,
+        ${MS.sumAt("l_quantity", 0)} AS sum_qty,
+        ${MS.sumAt("l_extendedprice", 2)} AS sum_base_price,
+        ${MS.sumWideSplit("l_extendedprice * (1.0 - l_discount)", 4)} AS sum_disc_price,
+        ${MS.sumAt("l_quantity", 0)} / CAST(COUNT(1) AS DOUBLE) AS avg_qty,
         CAST(COUNT(1) AS BIGINT) AS count_order
       FROM lineitem
       WHERE l_shipdate <= TIMESTAMP '1998-09-01'
@@ -118,16 +115,16 @@ object CoreQueries extends QueryProvider {
         .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(
-          // scale-4 image: the sf10 revenue sum passes sumExact's
+          // scale-4 image: the sf10 revenue sum passes scale 6's
           // 2^53 double-conversion bound; the 2dp×2dp product is
           // exact at scale 4, which pushes the bound to ~9e11
-          // (round-9 parity catch — see Moments.sumExactScale4)
-          Moments.sumExactScale4(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
+          // (round-9 parity catch — Moments bound table)
+          Moments.sumAt(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("revenue"),
           count(lit(1)).as("n_items"))
     },
     Some(s"""
       SELECT n_name,
-        ${MS.sumExactScale4("l_extendedprice * (1.0 - l_discount)")} AS revenue,
+        ${MS.sumAt("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue,
         CAST(COUNT(1) AS BIGINT) AS n_items
       FROM lineitem
       JOIN supplier ON l_suppkey = s_suppkey
@@ -155,15 +152,15 @@ object CoreQueries extends QueryProvider {
     (s, d) => Tables.lineitem(s, d)
       .groupBy(col("l_linestatus"))
       .agg(
-        // integer images (round-9: sumExact's 2^53 conversion bound)
-        Moments.sumExactInt(when(col("l_returnflag") === "A", col("l_quantity"))).as("qty_a"),
-        Moments.sumExactInt(when(col("l_returnflag") === "N", col("l_quantity"))).as("qty_n"),
-        Moments.sumExactInt(when(col("l_returnflag") === "R", col("l_quantity"))).as("qty_r")),
+        // integer images (round-9: scale 6's 2^53 conversion bound)
+        Moments.sumAt(when(col("l_returnflag") === "A", col("l_quantity")), 0).as("qty_a"),
+        Moments.sumAt(when(col("l_returnflag") === "N", col("l_quantity")), 0).as("qty_n"),
+        Moments.sumAt(when(col("l_returnflag") === "R", col("l_quantity")), 0).as("qty_r")),
     Some(s"""
       SELECT l_linestatus,
-        CAST(SUM(CASE WHEN l_returnflag = 'A' THEN CAST(l_quantity AS DECIMAL(27,0)) END) AS DOUBLE) AS qty_a,
-        CAST(SUM(CASE WHEN l_returnflag = 'N' THEN CAST(l_quantity AS DECIMAL(27,0)) END) AS DOUBLE) AS qty_n,
-        CAST(SUM(CASE WHEN l_returnflag = 'R' THEN CAST(l_quantity AS DECIMAL(27,0)) END) AS DOUBLE) AS qty_r
+        ${MS.sumAt("CASE WHEN l_returnflag = 'A' THEN l_quantity END", 0)} AS qty_a,
+        ${MS.sumAt("CASE WHEN l_returnflag = 'N' THEN l_quantity END", 0)} AS qty_n,
+        ${MS.sumAt("CASE WHEN l_returnflag = 'R' THEN l_quantity END", 0)} AS qty_r
       FROM lineitem GROUP BY l_linestatus"""))
 
   // ---- §2.5 subtract_column_median (exact median, group + rejoin) ----
@@ -179,24 +176,10 @@ object CoreQueries extends QueryProvider {
     // the median mirrors Quantiles.medianByGroup's two-rank
     // interpolating tree (NOT DuckDB's MEDIAN(), whose interpolation
     // expression is not guaranteed to be the same (lo+hi)/2 IEEE tree)
-    Some("""
+    Some(s"""
       WITH t AS (SELECT l_orderkey, l_linenumber, l_returnflag AS sample,
                         l_extendedprice AS value FROM lineitem),
-      mb AS (SELECT sample, value,
-              ROW_NUMBER() OVER (PARTITION BY sample ORDER BY value) AS rn,
-              COUNT(*) OVER (PARTITION BY sample) AS n
-            FROM t WHERE value IS NOT NULL),
-      mg AS (SELECT sample, MAX(n) AS n,
-              MAX(CASE WHEN rn = FLOOR((CAST(n AS DOUBLE) + 1) / 2)
-                    THEN CAST(value AS DOUBLE) END) AS l,
-              MAX(CASE WHEN rn = CEIL((CAST(n AS DOUBLE) + 1) / 2)
-                    THEN CAST(value AS DOUBLE) END) AS h
-            FROM mb GROUP BY sample),
-      m AS (SELECT sample,
-              CASE WHEN FLOOR((CAST(n AS DOUBLE) + 1) / 2)
-                      = CEIL((CAST(n AS DOUBLE) + 1) / 2)
-                   THEN l ELSE (l + h) / 2 END AS med
-            FROM mg)
+      m AS (${Quantiles.medianOracleSql("t", "sample", "value", "med")})
       SELECT l_orderkey, l_linenumber, sample, value - med AS value
       FROM t JOIN m USING (sample)"""))
 
@@ -329,8 +312,8 @@ object CoreQueries extends QueryProvider {
       val li = Tables.lineitem(s, d)
       val stats = li.groupBy(col("l_returnflag"))
         .agg(
-          Moments.sumExact(col("l_quantity")).as("_s1"),
-          Moments.sumSqExact(col("l_quantity")).as("_s2"),
+          Moments.sumAt(col("l_quantity"), 6).as("_s1"),
+          Moments.sumWide(col("l_quantity") * col("l_quantity"), 10).as("_s2"),
           count(col("l_quantity")).as("_n"))
         .withColumn("_mu", Moments.meanOf(col("_s1"), col("_n")))
         .withColumn("_sd", sqrt(Moments.varOf(col("_s1"), col("_s2"), col("_n"))))
@@ -344,8 +327,8 @@ object CoreQueries extends QueryProvider {
       FROM lineitem
       JOIN (
         SELECT l_returnflag,
-          ${MS.meanOf(MS.sumExact("l_quantity"), "COUNT(l_quantity)")} AS _mu,
-          SQRT(${MS.varOf(MS.sumExact("l_quantity"), MS.sumSqExact("l_quantity"), "COUNT(l_quantity)")}) AS _sd
+          ${MS.meanOf(MS.sumAt("l_quantity", 6), "COUNT(l_quantity)")} AS _mu,
+          SQRT(${MS.varOf(MS.sumAt("l_quantity", 6), MS.sumWide("l_quantity * l_quantity", 10), "COUNT(l_quantity)")}) AS _sd
         FROM lineitem GROUP BY l_returnflag) st USING (l_returnflag)"""))
 
   // ---- §2.8 transform_expression_columns: log2 with inf→null ----
@@ -366,47 +349,28 @@ object CoreQueries extends QueryProvider {
   // ---- §2.5 enrichment_from_evidence: flag + grouped sum + ratio ----
   private val qEnrichment = Q(
     "q_enrichment",
-    (s, d) => {
-      val ev = Tables.events(s, d)
-      val flagged = ev.withColumn("_mod", coalesce(col("props").contains("a"), lit(false)))
-      flagged.groupBy(col("event_type"))
-        .agg(
-          Moments.sumExact(when(col("_mod"), col("value"))).as("modified"),
-          Moments.sumExact(col("value")).as("total"))
-        .withColumn("enrichment", Moments.div(col("modified"), col("total")))
-    },
+    (s, d) => Summaries.enrichmentFromEvidence(Tables.events(s, d), "props", "event_type", "value", "a"),
     Some(s"""
       SELECT event_type,
-        CAST(SUM(CASE WHEN COALESCE(props LIKE '%a%', FALSE) THEN ${MS.dec("value")} END) AS DOUBLE) AS modified,
-        ${MS.sumExact("value")} AS total,
-        CAST(SUM(CASE WHEN COALESCE(props LIKE '%a%', FALSE) THEN ${MS.dec("value")} END) AS DOUBLE)
-          / ${MS.sumExact("value")} AS enrichment
+        ${MS.sumAt("CASE WHEN COALESCE(props LIKE '%a%', FALSE) THEN value END", 6)} AS modified,
+        ${MS.sumAt("value", 6)} AS total,
+        ${MS.sumAt("CASE WHEN COALESCE(props LIKE '%a%', FALSE) THEN value END", 6)}
+          / ${MS.sumAt("value", 6)} AS enrichment
       FROM events GROUP BY event_type"""))
 
   // ---- §2.5 enrichment_from_msp (ref analysis.py:263-287): the
   //      evidence twin PLUS the MSP-specific zero→missing rule — a 0
   //      intensity means "not quantified" and must leave BOTH sums,
-  //      not dilute the denominator. Same exact-decimal conditional
-  //      aggregation (INVARIANTS.md §1) as q_enrichment. ----
+  //      not dilute the denominator. ----
   private val qEnrichmentMsp = Q(
     "q_enrichment_msp",
-    (s, d) => {
-      val ev = Tables.events(s, d)
-      val isMod = coalesce(col("props").contains("b"), lit(false))
-      val v = when(col("value") =!= 0, col("value")) // 0 == not quantified
-      ev.groupBy(col("event_type"))
-        .agg(
-          Moments.sumExact(when(isMod, v)).as("modified"),
-          Moments.sumExact(v).as("total"))
-        .withColumn("enrichment", Moments.div(col("modified"), col("total")))
-    },
+    (s, d) => Summaries.enrichmentFromMsp(Tables.events(s, d), "props", "event_type", "value", "b"),
     Some(s"""
       SELECT event_type, modified, total, modified / total AS enrichment
       FROM (
         SELECT event_type,
-          CAST(SUM(CASE WHEN COALESCE(props LIKE '%b%', FALSE)
-                        THEN ${MS.dec("CASE WHEN value <> 0 THEN value END")} END) AS DOUBLE) AS modified,
-          CAST(SUM(${MS.dec("CASE WHEN value <> 0 THEN value END")}) AS DOUBLE) AS total
+          ${MS.sumAt("CASE WHEN COALESCE(props LIKE '%b%', FALSE) THEN CASE WHEN value <> 0 THEN value END END", 6)} AS modified,
+          ${MS.sumAt("CASE WHEN value <> 0 THEN value END", 6)} AS total
         FROM events GROUP BY event_type) t"""))
 
   def all: Seq[Q] = Seq(

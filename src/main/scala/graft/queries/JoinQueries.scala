@@ -80,15 +80,15 @@ object JoinQueries extends QueryProvider {
       .agg(
         grouping(col("l_returnflag")).cast("bigint").as("g_flag"),
         grouping(col("l_linestatus")).cast("bigint").as("g_status"),
-        // integer image: headroom past sumExact's 2^53 conversion
+        // integer image: headroom past scale 6's 2^53 conversion
         // bound (round-9 sf10 parity catch on the sibling cube)
-        Moments.sumExactInt(col("l_quantity")).as("sum_qty"),
+        Moments.sumAt(col("l_quantity"), 0).as("sum_qty"),
         count(lit(1)).as("n")),
     Some(s"""
       SELECT l_returnflag, l_linestatus,
         CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
         CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status,
-        ${MS.sumExactInt("l_quantity")} AS sum_qty,
+        ${MS.sumAt("l_quantity", 0)} AS sum_qty,
         CAST(COUNT(1) AS BIGINT) AS n
       FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"""))
 
@@ -100,15 +100,15 @@ object JoinQueries extends QueryProvider {
       .agg(
         grouping(col("l_returnflag")).cast("bigint").as("g_flag"),
         grouping(col("l_linestatus")).cast("bigint").as("g_status"),
-        // money image: the sf10 price sum passes sumExact's 2^53
+        // money image: the sf10 price sum passes scale 6's 2^53
         // conversion bound (round-9 parity catch)
-        Moments.sumExactMoney(col("l_extendedprice")).as("sum_price"),
+        Moments.sumAt(col("l_extendedprice"), 2).as("sum_price"),
         count(lit(1)).as("n")),
     Some(s"""
       SELECT l_returnflag, l_linestatus,
         CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
         CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status,
-        ${MS.sumExactMoney("l_extendedprice")} AS sum_price,
+        ${MS.sumAt("l_extendedprice", 2)} AS sum_price,
         CAST(COUNT(1) AS BIGINT) AS n
       FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)"""))
 
@@ -136,14 +136,14 @@ object JoinQueries extends QueryProvider {
         Tables.lineitem(s, d), "l_partkey", dim, "p_partkey", nBits)
         .groupBy(col("l_returnflag"))
         .agg(
-          Moments.sumExactInt(col("l_quantity")).as("sum_qty"),
-          Moments.sumExactMoney(col("l_extendedprice")).as("revenue"),
+          Moments.sumAt(col("l_quantity"), 0).as("sum_qty"),
+          Moments.sumAt(col("l_extendedprice"), 2).as("revenue"),
           count(lit(1)).as("n"))
     },
     Some(s"""
       SELECT l_returnflag,
-        ${MS.sumExactInt("l_quantity")} AS sum_qty,
-        ${MS.sumExactMoney("l_extendedprice")} AS revenue,
+        ${MS.sumAt("l_quantity", 0)} AS sum_qty,
+        ${MS.sumAt("l_extendedprice", 2)} AS revenue,
         CAST(COUNT(1) AS BIGINT) AS n
       FROM lineitem
       WHERE l_partkey IS NOT NULL

@@ -138,8 +138,8 @@ object MiscQueries extends QueryProvider {
         FROM part),
       s AS (
         SELECT "GO", "Name",
-          ${MS.meanOf(MS.sumExact("p"), "COUNT(p)")} AS "P",
-          ${MS.meanOf(MS.sumExact("f"), "COUNT(f)")} AS "FDR"
+          ${MS.meanOf(MS.sumAt("p", 6), "COUNT(p)")} AS "P",
+          ${MS.meanOf(MS.sumAt("f", 6), "COUNT(f)")} AS "FDR"
         FROM go GROUP BY 1, 2)
       SELECT * FROM s WHERE "P" < 0.016"""))
 
@@ -169,11 +169,9 @@ object MiscQueries extends QueryProvider {
         org.apache.spark.sql.functions.col("l_quantity"),
         org.apache.spark.sql.functions.col("l_orderkey"),
         org.apache.spark.sql.functions.col("l_linenumber")),
-      "l_returnflag", "l_quantity", Seq(0.5, 0.95, 0.99),
-      tieCols = Seq("l_orderkey", "l_linenumber")),
+      "l_returnflag", "l_quantity", Seq(0.5, 0.95, 0.99)),
     Some(graft.ops.Quantiles.oracleSql(
-      "lineitem", "l_returnflag", "l_quantity", Seq(0.5, 0.95, 0.99),
-      Seq("l_orderkey", "l_linenumber"))))
+      "lineitem", "l_returnflag", "l_quantity", Seq(0.5, 0.95, 0.99))))
 
   // ---- write_phosphopath_ratio's ratio frame (ref io.py:129-185):
   //      per-feature control-mean / comparison-mean, one frame per
@@ -183,7 +181,7 @@ object MiscQueries extends QueryProvider {
   //      means are exact-decimal re-expressions of the operator's
   //      avg(when(...)) (INVARIANTS.md §1: library avg is not
   //      bitwise-portable). Group sums stay ≤ ~1e6 even at sf100
-  //      (30k feature groups), inside dec(15,6)'s 1e9 bound. ----
+  //      (30k feature groups), inside scale 6's 1e12 bound. ----
   private val qPhosphoRatio = Q(
     "q_phosphopath_ratio",
     (s, d) => {
@@ -200,9 +198,9 @@ object MiscQueries extends QueryProvider {
         li.filter(col("grp") === "ctrl" || (col("grp") === grp && col("timepoint") === tp))
           .groupBy(col("protein"), col("rsite"), col("multiplicity"))
           .agg(
-            Moments.sumExact(when(col("grp") === "ctrl", col("v"))).as("_sa"),
+            Moments.sumAt(when(col("grp") === "ctrl", col("v")), 6).as("_sa"),
             count(when(col("grp") === "ctrl", col("v"))).as("_na"),
-            Moments.sumExact(when(col("grp") === grp, col("v"))).as("_sc"),
+            Moments.sumAt(when(col("grp") === grp, col("v")), 6).as("_sc"),
             count(when(col("grp") === grp, col("v"))).as("_nc"))
           .select(
             concat_ws("-", col("protein"), col("rsite").cast("string"),
@@ -217,9 +215,9 @@ object MiscQueries extends QueryProvider {
       def frame(grp: String, tp: Int, ord: String) = s"""
         SELECT CONCAT_WS('-', protein, CAST(rsite AS VARCHAR),
                  CAST(multiplicity AS VARCHAR), '$ord') AS "ID",
-          (${MS.sumExact(s"CASE WHEN grp = 'ctrl' THEN v END")}
+          (${MS.sumAt(s"CASE WHEN grp = 'ctrl' THEN v END", 6)}
              / CAST(COUNT(CASE WHEN grp = 'ctrl' THEN v END) AS DOUBLE))
-          / (${MS.sumExact(s"CASE WHEN grp = '$grp' THEN v END")}
+          / (${MS.sumAt(s"CASE WHEN grp = '$grp' THEN v END", 6)}
              / CAST(COUNT(CASE WHEN grp = '$grp' THEN v END) AS DOUBLE)) AS "Ratio"
         FROM longf WHERE grp = 'ctrl' OR (grp = '$grp' AND timepoint = $tp)
         GROUP BY protein, rsite, multiplicity"""
@@ -242,7 +240,7 @@ object MiscQueries extends QueryProvider {
   //      60-113): exact decimal cross-moments → sample covariance →
   //      closed-form 2×2 eigen → (center, width, height, angle). The
   //      single transcendental (atan2 degrees) is rounded at 9 digits
-  //      on both sides (INVARIANTS.md §1); sums ride decFine(28,12)
+  //      on both sides (INVARIANTS.md §1); sums ride wide scale 12
   //      (|Σ| ≤ ~3e10 at sf100, bound 1e16). ----
   private val qCovEllipse = Q(
     "q_cov_ellipse",
@@ -251,9 +249,9 @@ object MiscQueries extends QueryProvider {
       .withColumn("angle_deg", round(col("angle_deg"), 9)),
     Some(s"""
       WITH m AS (
-        SELECT ${MS.sumExactFine("l_quantity")} AS sx, ${MS.sumExactFine("l_discount")} AS sy,
-               ${MS.sumSqExact("l_quantity")} AS sxx, ${MS.sumSqExact("l_discount")} AS syy,
-               ${MS.sumProdExact("l_quantity", "l_discount")} AS sxy,
+        SELECT ${MS.sumWide("l_quantity", 12)} AS sx, ${MS.sumWide("l_discount", 12)} AS sy,
+               ${MS.sumWide("l_quantity * l_quantity", 10)} AS sxx, ${MS.sumWide("l_discount * l_discount", 10)} AS syy,
+               ${MS.sumWide("l_quantity * l_discount", 10)} AS sxy,
                COUNT(l_quantity) AS n
         FROM lineitem),
       c AS (

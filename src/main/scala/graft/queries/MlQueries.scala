@@ -76,21 +76,21 @@ object MlQueries extends QueryProvider {
       // PRESENT rows plus the absent-cell constants (μ_f·S_c per
       // feature, K_c per component) — see Pca.scala scaladoc
       val wCols = m.components.zipWithIndex.map { case (comp, c) =>
-        s"${MS.sumProdExact("l.value", caseMap("l.sample", m.sampleOrder.zip(comp.toSeq)))}" +
+        s"${MS.sumWide(s"(l.value) * (${caseMap("l.sample", m.sampleOrder.zip(comp.toSeq))})", 10)}" +
           s" - MAX(fm.fmu) * ${dlit(comp.sum)} AS w_$c"
       }.mkString(",\n          ")
       val kCols = m.eigenvalues.indices.map { c =>
-        s"${MS.sumProdExact("fm.fmu", s"w.w_$c")} AS k_$c"
+        s"${MS.sumWide(s"(fm.fmu) * (w.w_$c)", 10)} AS k_$c"
       }.mkString(",\n          ")
       val scoreCols = m.eigenvalues.zipWithIndex.map { case (lam, c) =>
-        s"(${MS.sumProdExact("l.value", s"w.w_$c")} - MAX(k.k_$c))" +
+        s"(${MS.sumWide(s"(l.value) * (w.w_$c)", 10)} - MAX(k.k_$c))" +
           s" / ${dlit(math.sqrt(lam))} AS pc_$c"
       }.mkString(",\n          ")
       s"""
       WITH long AS (
         $longSql),
       fm AS (SELECT vec_id,
-          ${MS.sumExactFine("value")} / CAST('${m.nSamples.toDouble}' AS DOUBLE) AS fmu
+          ${MS.sumWide("value", 12)} / CAST('${m.nSamples.toDouble}' AS DOUBLE) AS fmu
         FROM long GROUP BY vec_id),
       w AS (SELECT l.vec_id AS vec_id,
           $wCols
@@ -141,23 +141,23 @@ object MlQueries extends QueryProvider {
       WITH long AS (
         $longSql),
       raw AS (SELECT vec_id, sample, COALESCE(value, 0.0) AS x FROM long),
-      fm AS (SELECT vec_id, ${MS.meanOf(MS.sumExactFine("x"), "COUNT(x)")} AS fmu
+      fm AS (SELECT vec_id, ${MS.meanOf(MS.sumWide("x", 12), "COUNT(x)")} AS fmu
         FROM raw WHERE sample IN ($inList) GROUP BY vec_id),
       x0 AS (SELECT r.vec_id, r.sample, r.x - f.fmu AS x
         FROM raw r JOIN fm f ON f.vec_id = r.vec_id),
-      w0r AS (SELECT vec_id, ${MS.sumProdExact("x", ycMap(c0))} AS wr
+      w0r AS (SELECT vec_id, ${MS.sumWide(s"(x) * (${ycMap(c0)})", 10)} AS wr
         FROM x0 GROUP BY vec_id),
       w0 AS (SELECT vec_id, wr / ${dlit(c0.wNorm)} AS w FROM w0r),
-      t0 AS (SELECT x0.sample, ${MS.sumProdExact("x0.x", "w0.w")} AS t
+      t0 AS (SELECT x0.sample, ${MS.sumWide("x0.x * w0.w", 10)} AS t
         FROM x0 JOIN w0 ON w0.vec_id = x0.vec_id GROUP BY x0.sample),
-      p0 AS (SELECT vec_id, ${MS.sumProdExact("x", tMapFit(c0))} / ${dlit(c0.tt)} AS p
+      p0 AS (SELECT vec_id, ${MS.sumWide(s"(x) * (${tMapFit(c0)})", 10)} / ${dlit(c0.tt)} AS p
         FROM x0 GROUP BY vec_id),
       x1 AS (SELECT x0.vec_id, x0.sample, x0.x - ${tMapAll(c0)} * p0.p AS x
         FROM x0 JOIN p0 ON p0.vec_id = x0.vec_id),
-      w1r AS (SELECT vec_id, ${MS.sumProdExact("x", ycMap(c1))} AS wr
+      w1r AS (SELECT vec_id, ${MS.sumWide(s"(x) * (${ycMap(c1)})", 10)} AS wr
         FROM x1 GROUP BY vec_id),
       w1 AS (SELECT vec_id, wr / ${dlit(c1.wNorm)} AS w FROM w1r),
-      t1 AS (SELECT x1.sample, ${MS.sumProdExact("x1.x", "w1.w")} AS t
+      t1 AS (SELECT x1.sample, ${MS.sumWide("x1.x * w1.w", 10)} AS t
         FROM x1 JOIN w1 ON w1.vec_id = x1.vec_id GROUP BY x1.sample)
       SELECT t0.sample AS sample, t0.t AS lv_1, t1.t AS lv_2
       FROM t0 JOIN t1 ON t1.sample = t0.sample"""
@@ -188,7 +188,7 @@ object MlQueries extends QueryProvider {
         .filter(col("cluster") === col("_cb"))
         .groupBy(col("cluster"))
         .agg(count(lit(1)).as("n_pairs"),
-          Moments.sumExactFine(col("sqdist")).as("sum_sqdist"))
+          Moments.sumWide(col("sqdist"), 12).as("sum_sqdist"))
       // both sides are k-row aggregates — broadcast beats the default
       // sort-merge exchange pair
       members.join(broadcast(within), Seq("cluster"), "left")
@@ -201,7 +201,7 @@ object MlQueries extends QueryProvider {
         $longSql),
       pairs AS (
         SELECT a.sample AS sa, b.sample AS sb,
-          ${MS.sumSqExact("(a.value - b.value)")} AS sqdist
+          ${MS.sumWide("(a.value - b.value) * (a.value - b.value)", 10)} AS sqdist
         FROM long a JOIN long b ON b.vec_id = a.vec_id AND a.sample < b.sample
         GROUP BY 1, 2),
       assign(sample, cluster) AS (SELECT * FROM (VALUES $values) v(sample, cluster)),
@@ -209,7 +209,7 @@ object MlQueries extends QueryProvider {
         FROM assign GROUP BY 1),
       within AS (
         SELECT x.cluster, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-          ${MS.sumExactFine("p.sqdist")} AS sum_sqdist
+          ${MS.sumWide("p.sqdist", 12)} AS sum_sqdist
         FROM pairs p
         JOIN assign x ON x.sample = p.sa
         JOIN assign y ON y.sample = p.sb
@@ -246,19 +246,19 @@ object MlQueries extends QueryProvider {
       s"""
       WITH prof AS (
         SELECT CAST(l_suppkey % 40 AS VARCHAR) AS site, l_linenumber AS timepoint,
-               ${MS.meanOf(MS.sumExact("l_quantity"), "COUNT(l_quantity)")} AS v
+               ${MS.meanOf(MS.sumAt("l_quantity", 6), "COUNT(l_quantity)")} AS v
         FROM lineitem GROUP BY 1, 2),
       m AS (
         SELECT site,
-          ${MS.meanOf(MS.sumExact("v"), "COUNT(v)")} AS mu,
-          SQRT(${MS.varOf(MS.sumExact("v"), MS.sumSqExact("v"), "COUNT(v)")}) AS sd
+          ${MS.meanOf(MS.sumAt("v", 6), "COUNT(v)")} AS mu,
+          SQRT(${MS.varOf(MS.sumAt("v", 6), MS.sumWide("v * v", 10), "COUNT(v)")}) AS sd
         FROM prof GROUP BY site),
       z AS (
         SELECT p.site, p.timepoint, (p.v - m.mu) / m.sd AS z
         FROM prof p JOIN m ON m.site = p.site),
       assign(site, cluster) AS (SELECT * FROM (VALUES $values) v(site, cluster))
       SELECT a.cluster, z.timepoint,
-        ${MS.meanOf(MS.sumExact("z.z"), "COUNT(z.z)")} AS mean_z,
+        ${MS.meanOf(MS.sumAt("z.z", 6), "COUNT(z.z)")} AS mean_z,
         CAST(COUNT(z.z) AS BIGINT) AS n_sites
       FROM z JOIN assign a ON a.site = z.site
       GROUP BY 1, 2"""
@@ -294,8 +294,8 @@ object MlQueries extends QueryProvider {
       st AS (
         SELECT sample, ${MS.meanOf("s1", "n")} AS mu,
           SQRT(${MS.varOf("s1", "s2", "n")}) AS sd
-        FROM (SELECT sample, ${MS.sumExact("value")} AS s1,
-                ${MS.sumSqExact("value")} AS s2, COUNT(value) AS n
+        FROM (SELECT sample, ${MS.sumAt("value", 6)} AS s1,
+                ${MS.sumWide("value * value", 10)} AS s2, COUNT(value) AS n
               FROM base WHERE value IS NOT NULL GROUP BY sample) t)
       SELECT b.l_orderkey, b.l_linenumber, b.sample,
         CASE WHEN b.value IS NOT NULL THEN b.value
@@ -322,7 +322,7 @@ object MlQueries extends QueryProvider {
     (s, d) => {
       val prof = Tables.lineitemKeyed(s, d)
         .groupBy(col("l_suppkey").as("id"), col("l_returnflag").as("sample"))
-        .agg(Moments.meanOf(Moments.sumExact(col("l_quantity")),
+        .agg(Moments.meanOf(Moments.sumAt(col("l_quantity"), 6),
           count(col("l_quantity"))).as("value"))
         .withColumn("value",
           when(col("id") % 10 === 0 && col("sample") === "N", lit(null))
@@ -346,7 +346,7 @@ object MlQueries extends QueryProvider {
       // yMean); an empty aggregate here returns NULL sums, which would
       // NULL every downstream column instead
       val gramCols = (for (i <- 0 until 3; j <- i until 3)
-        yield s"COALESCE(${MS.sumProdExact(s"c$i", s"c$j")}, 0.0) AS g$i$j").mkString(", ")
+        yield s"COALESCE(${MS.sumWide(s"(c$i) * (c$j)", 10)}, 0.0) AS g$i$j").mkString(", ")
       val k1Cols = (for (i <- 0 until 3; j <- 0 until 3) yield
         s"${g(i, j)} - t$i * kt$j / tt - kt$i * t$j / tt + t$i * t$j * tkt / (tt * tt) AS k$i$j")
         .mkString(",\n          ")
@@ -358,7 +358,7 @@ object MlQueries extends QueryProvider {
       s"""
       WITH prof AS (
         SELECT l_suppkey AS id0, l_returnflag AS sample,
-          ${MS.meanOf(MS.sumExact("l_quantity"), "COUNT(l_quantity)")} AS v0
+          ${MS.meanOf(MS.sumAt("l_quantity", 6), "COUNT(l_quantity)")} AS v0
         FROM lineitem GROUP BY 1, 2),
       base AS (
         SELECT CAST(id0 AS VARCHAR) AS id, sample,
@@ -367,7 +367,7 @@ object MlQueries extends QueryProvider {
       cnt AS (SELECT id, COUNT(v) AS c FROM base GROUP BY id),
       cmpl AS (SELECT b.id, b.sample, b.v FROM base b JOIN cnt ON cnt.id = b.id WHERE cnt.c = 3),
       incp AS (SELECT b.id, b.sample, b.v FROM base b JOIN cnt ON cnt.id = b.id WHERE cnt.c < 3),
-      mu AS (SELECT id, ${MS.meanOf(MS.sumExact("v"), "COUNT(v)")} AS mu FROM cmpl GROUP BY id),
+      mu AS (SELECT id, ${MS.meanOf(MS.sumAt("v", 6), "COUNT(v)")} AS mu FROM cmpl GROUP BY id),
       cent AS (SELECT c.id, c.sample, c.v - m.mu AS cv FROM cmpl c JOIN mu m ON m.id = c.id),
       centp AS (SELECT id, $pivC FROM cent GROUP BY id),
       gram AS (SELECT $gramCols FROM centp),

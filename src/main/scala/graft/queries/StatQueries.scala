@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.Reshape
@@ -18,13 +19,15 @@ import graft.stats.Moments.{Sql => MS}
   */
 object StatQueries extends QueryProvider {
 
-  // NARROW keyed-family images (round-17): l_quantity is 2-decimal-
-  // exact with |x| < 100 and the suppkey grouping has SF-invariant
-  // rows per key, so the decimal(8,6)/(8,4) images are value-identical
-  // to dec/decProd while keeping the sum buffers long-backed — the
-  // measured 2× on the partial-agg-bound tier (Moments.decKeyed).
-  private val decQty = MS.decKeyed("l_quantity")
-  private val decProdQty = MS.decProdKeyed("l_quantity", "l_quantity")
+  // Keyed-family squares: l_quantity is 2-decimal-exact with
+  // |x| < 100, so q·q is exact at 4 decimals and its scale-4 image
+  // equals the scale-10 product image while the sum stays on the
+  // BIGINT carrier (the measured 2× on the partial-agg-bound tier).
+  // Rows per suppkey are SF-invariant, far inside the 1e14 bound.
+  private val keyedSumSq: Column => Column = v => Moments.sumAt(v * v, 4)
+  private def sumQty(f: String) = MS.sumAt(s"CASE WHEN l_returnflag = '$f' THEN l_quantity END", 6)
+  private def sumSqQty(f: String) =
+    MS.sumAt(s"CASE WHEN l_returnflag = '$f' THEN l_quantity * l_quantity END", 4)
 
   // ---- §2.10 ttest_ind: per-feature two-sample t between groups ----
   private val qTtest = Q(
@@ -32,17 +35,17 @@ object StatQueries extends QueryProvider {
     (s, d) => StatTests.tTestInd(
         Tables.lineitemKeyed(s, d).select(col("l_suppkey"), col("l_returnflag"), col("l_quantity")),
         Seq("l_suppkey"), "l_returnflag", "l_quantity", a = "A", b = "R",
-        decImage = Moments.decKeyed, decProdImage = Moments.decProdKeyed)
+        sumSq = keyedSumSq)
       .filter(col("n_a") >= 2 && col("n_b") >= 2)
       .drop("p"),
     Some(s"""
       WITH g AS (
         SELECT l_suppkey,
-          CAST(SUM(CASE WHEN l_returnflag = 'A' THEN $decQty END) AS DOUBLE) AS s1a,
-          CAST(SUM(CASE WHEN l_returnflag = 'A' THEN $decProdQty END) AS DOUBLE) AS s2a,
+          ${sumQty("A")} AS s1a,
+          ${sumSqQty("A")} AS s2a,
           CAST(COUNT(CASE WHEN l_returnflag = 'A' THEN l_quantity END) AS BIGINT) AS n_a,
-          CAST(SUM(CASE WHEN l_returnflag = 'R' THEN $decQty END) AS DOUBLE) AS s1b,
-          CAST(SUM(CASE WHEN l_returnflag = 'R' THEN $decProdQty END) AS DOUBLE) AS s2b,
+          ${sumQty("R")} AS s1b,
+          ${sumSqQty("R")} AS s2b,
           CAST(COUNT(CASE WHEN l_returnflag = 'R' THEN l_quantity END) AS BIGINT) AS n_b
         FROM lineitem
         WHERE l_returnflag = 'A' OR l_returnflag = 'R'
@@ -68,7 +71,7 @@ object StatQueries extends QueryProvider {
     (s, d) => StatTests.tTestWelch(
         Tables.lineitemKeyed(s, d).select(col("l_suppkey"), col("l_returnflag"), col("l_quantity")),
         Seq("l_suppkey"), "l_returnflag", "l_quantity", a = "A", b = "R",
-        decImage = Moments.decKeyed, decProdImage = Moments.decProdKeyed)
+        sumSq = keyedSumSq)
       .filter(col("n_a") >= 2 && col("n_b") >= 2)
       .drop("p"),
     Some {
@@ -82,11 +85,11 @@ object StatQueries extends QueryProvider {
       s"""
       WITH g AS (
         SELECT l_suppkey,
-          CAST(SUM(CASE WHEN l_returnflag = 'A' THEN $decQty END) AS DOUBLE) AS s1a,
-          CAST(SUM(CASE WHEN l_returnflag = 'A' THEN $decProdQty END) AS DOUBLE) AS s2a,
+          ${sumQty("A")} AS s1a,
+          ${sumSqQty("A")} AS s2a,
           CAST(COUNT(CASE WHEN l_returnflag = 'A' THEN l_quantity END) AS BIGINT) AS n_a,
-          CAST(SUM(CASE WHEN l_returnflag = 'R' THEN $decQty END) AS DOUBLE) AS s1b,
-          CAST(SUM(CASE WHEN l_returnflag = 'R' THEN $decProdQty END) AS DOUBLE) AS s2b,
+          ${sumQty("R")} AS s1b,
+          ${sumSqQty("R")} AS s2b,
           CAST(COUNT(CASE WHEN l_returnflag = 'R' THEN l_quantity END) AS BIGINT) AS n_b
         FROM lineitem
         WHERE l_returnflag = 'A' OR l_returnflag = 'R'
@@ -241,11 +244,10 @@ object StatQueries extends QueryProvider {
   private val qDescribe = Q(
     "q_describe",
     (s, d) => graft.stats.Summaries.describe(
-      Tables.lineitem(s, d), "l_returnflag", "l_quantity",
-      tieCols = Seq("l_orderkey", "l_linenumber")),
+      Tables.lineitem(s, d), "l_returnflag", "l_quantity"),
     Some {
-      val s1 = MS.sumExact("l_quantity")
-      val s2 = MS.sumSqExact("l_quantity")
+      val s1 = MS.sumAt("l_quantity", 6)
+      val s2 = MS.sumWide("l_quantity * l_quantity", 10)
       s"""
       WITH m AS (
         SELECT l_returnflag, CAST(COUNT(l_quantity) AS BIGINT) AS n,
@@ -253,8 +255,7 @@ object StatQueries extends QueryProvider {
           MIN(l_quantity) AS min, MAX(l_quantity) AS max
         FROM lineitem WHERE l_quantity IS NOT NULL GROUP BY l_returnflag),
       q AS (${graft.ops.Quantiles.oracleSql(
-        "lineitem", "l_returnflag", "l_quantity", Seq(0.25, 0.5, 0.75),
-        Seq("l_orderkey", "l_linenumber"))})
+        "lineitem", "l_returnflag", "l_quantity", Seq(0.25, 0.5, 0.75))})
       SELECT m.l_returnflag, n, min, max,
         s1 / CAST(n AS DOUBLE) AS mean,
         SQRT(${MS.varOf("s1", "s2", "n")}) AS std,
@@ -264,28 +265,29 @@ object StatQueries extends QueryProvider {
 
   // ---- §2.10 anova_1way: F across the three return flags ----
   // Fixed-group pivoted formulation: all cross-group arithmetic is a
-  // fixed expression tree over exact decimal moments → deterministic
-  // (a fold over per-group doubles would be order-dependent).
+  // fixed expression tree over exact moments → deterministic (a fold
+  // over per-group doubles would be order-dependent). The cross-group
+  // totals are their own exact sums over the three flags — the exact
+  // sum of the per-flag sums, converted to double once.
   private def anovaBuild = Q(
     "q_anova_f",
     (s, d) => {
       val li = Tables.lineitemKeyed(s, d)
-      val dq = Moments.decKeyed(col("l_quantity"))
-      val dq2 = Moments.decProdKeyed(col("l_quantity"), col("l_quantity"))
+      val q = col("l_quantity")
       val flags = Seq("A" -> "a", "N" -> "n", "R" -> "r")
+      val inFlags = when(col("l_returnflag").isin(flags.map(_._1): _*), q)
       val aggs = flags.flatMap { case (f, sfx) =>
+        val qf = when(col("l_returnflag") === f, q)
         Seq(
-          sum(when(col("l_returnflag") === f, dq)).as(s"_s1$sfx"),
-          sum(when(col("l_returnflag") === f, dq2)).as(s"_s2$sfx"),
-          count(when(col("l_returnflag") === f, col("l_quantity"))).as(s"n_$sfx"))
-      }
+          Moments.sumAt(qf, 6).as(s"_s1$sfx"),
+          keyedSumSq(qf).as(s"_s2$sfx"),
+          count(qf).as(s"n_$sfx"))
+      } ++ Seq(Moments.sumAt(inFlags, 6).as("_ts1"), keyedSumSq(inFlags).as("_ts2"))
       val g = li.groupBy(col("l_suppkey")).agg(aggs.head, aggs.tail: _*)
-      def d1(c: String) = col(c).cast("double")
-      val ts1 = (col("_s1a") + col("_s1n") + col("_s1r")).cast("double")
-      val ts2 = (col("_s2a") + col("_s2n") + col("_s2r")).cast("double")
+      val (ts1, ts2) = (col("_ts1"), col("_ts2"))
       val nTot = (col("n_a") + col("n_n") + col("n_r")).cast("double")
-      def ssw1(sfx: String) =
-        d1(s"_s2$sfx") - Moments.div(d1(s"_s1$sfx") * d1(s"_s1$sfx"), d1(s"n_$sfx"))
+      def ssw1(sfx: String) = col(s"_s2$sfx") -
+        Moments.div(col(s"_s1$sfx") * col(s"_s1$sfx"), col(s"n_$sfx").cast("double"))
       val ssw = ssw1("a") + ssw1("n") + ssw1("r")
       val sst = ts2 - Moments.div(ts1 * ts1, nTot)
       val ssb = sst - ssw
@@ -298,25 +300,22 @@ object StatQueries extends QueryProvider {
         .select(col("l_suppkey"), col("n_a"), col("n_n"), col("n_r"), col("f"), col("df2"))
     },
     Some {
-      val dq = decQty
-      def sd1(f: String) = s"SUM(CASE WHEN l_returnflag = '$f' THEN $dq END)"
-      def sd2(f: String) = s"SUM(CASE WHEN l_returnflag = '$f' THEN $decProdQty END)"
       def n(f: String) = s"CAST(COUNT(CASE WHEN l_returnflag = '$f' THEN l_quantity END) AS BIGINT)"
+      def inFlags(e: String) = s"CASE WHEN l_returnflag IN ('A', 'N', 'R') THEN $e END"
+      def ssw1(sfx: String) = s"(s2$sfx - s1$sfx * s1$sfx / CAST(n_$sfx AS DOUBLE))"
       s"""
       WITH g AS (
         SELECT l_suppkey,
-          ${sd1("A")} AS ds1a, ${sd2("A")} AS ds2a, ${n("A")} AS n_a,
-          ${sd1("N")} AS ds1n, ${sd2("N")} AS ds2n, ${n("N")} AS n_n,
-          ${sd1("R")} AS ds1r, ${sd2("R")} AS ds2r, ${n("R")} AS n_r
+          ${sumQty("A")} AS s1a, ${sumSqQty("A")} AS s2a, ${n("A")} AS n_a,
+          ${sumQty("N")} AS s1n, ${sumSqQty("N")} AS s2n, ${n("N")} AS n_n,
+          ${sumQty("R")} AS s1r, ${sumSqQty("R")} AS s2r, ${n("R")} AS n_r,
+          ${MS.sumAt(inFlags("l_quantity"), 6)} AS ts1,
+          ${MS.sumAt(inFlags("l_quantity * l_quantity"), 4)} AS ts2
         FROM lineitem GROUP BY l_suppkey),
       h AS (
-        SELECT l_suppkey, n_a, n_n, n_r,
-          CAST(ds1a + ds1n + ds1r AS DOUBLE) AS ts1,
-          CAST(ds2a + ds2n + ds2r AS DOUBLE) AS ts2,
+        SELECT l_suppkey, n_a, n_n, n_r, ts1, ts2,
           CAST(n_a + n_n + n_r AS DOUBLE) AS ntot,
-          (CAST(ds2a AS DOUBLE) - CAST(ds1a AS DOUBLE) * CAST(ds1a AS DOUBLE) / CAST(n_a AS DOUBLE))
-          + (CAST(ds2n AS DOUBLE) - CAST(ds1n AS DOUBLE) * CAST(ds1n AS DOUBLE) / CAST(n_n AS DOUBLE))
-          + (CAST(ds2r AS DOUBLE) - CAST(ds1r AS DOUBLE) * CAST(ds1r AS DOUBLE) / CAST(n_r AS DOUBLE)) AS ssw
+          ${ssw1("a")} + ${ssw1("n")} + ${ssw1("r")} AS ssw
         FROM g WHERE n_a >= 2 AND n_n >= 2 AND n_r >= 2)
       SELECT l_suppkey, n_a, n_n, n_r,
         (((ts2 - ts1 * ts1 / ntot) - ssw) / 2.0) / (ssw / (ntot - 3.0)) AS f,
@@ -352,8 +351,8 @@ object StatQueries extends QueryProvider {
         b <- names.drop(i)
       } yield {
         val r = MS.corrOf("COUNT(1)",
-          MS.sumExact(a), MS.sumExact(b), MS.sumSqExact(a), MS.sumSqExact(b),
-          MS.sumProdExact(a, b))
+          MS.sumAt(a, 6), MS.sumAt(b, 6), MS.sumWide(s"($a) * ($a)", 10), MS.sumWide(s"($b) * ($b)", 10),
+          MS.sumWide(s"($a) * ($b)", 10))
         s"""SELECT '$a' AS s1, '$b' AS s2, CAST(COUNT(1) AS BIGINT) AS n, $r AS r
             FROM w"""
       }
@@ -389,11 +388,11 @@ object StatQueries extends QueryProvider {
     (s, d) => Tables.events(s, d)
       .withColumn("hour_bucket", expr("ts DIV 3600000000000")) // 1h of nanos
       .groupBy(col("hour_bucket"), col("event_type"))
-      .agg(count(lit(1)).as("n"), Moments.sumExact(col("value")).as("sum_value")),
+      .agg(count(lit(1)).as("n"), Moments.sumAt(col("value"), 6).as("sum_value")),
     Some(s"""
       SELECT epoch_ns(ts) // 3600000000000 AS hour_bucket, event_type,
         CAST(COUNT(1) AS BIGINT) AS n,
-        ${MS.sumExact("value")} AS sum_value
+        ${MS.sumAt("value", 6)} AS sum_value
       FROM events GROUP BY 1, 2"""))
 
   // gap-based sessionization (30 min): lag + running sum windows
@@ -434,7 +433,7 @@ object StatQueries extends QueryProvider {
   //      evaluation. p math itself is locked by StatTestsSpec goldens
   //      against scipy-derived constants. Input is rounded at 6
   //      digits like the surface twin (see its note: 6-digit rounding
-  //      makes the dec(15,6) cast exact on both engines). ----
+  //      makes the scale-6 image exact on both engines). ----
   private val lastVolcanoP = new java.util.concurrent.atomic.AtomicReference[
     Seq[(Long, Option[Double], Option[Boolean])]]()
 
@@ -472,7 +471,7 @@ object StatQueries extends QueryProvider {
 
   // ---- the volcano chain MINUS the p-dependent columns, fully
   //      DuckDB-recomputed (no recorded literals): log2 transform
-  //      (rounded at SIX digits, not 9: the values feed dec(15,6)
+  //      (rounded at SIX digits, not 9: the values feed scale-6
   //      sums, and a 9-digit-rounded value can sit exactly on a
   //      6-decimal half-boundary where the two engines' double→decimal
   //      casts disagree — at 6 digits the decimal cast is exact, no
@@ -480,16 +479,17 @@ object StatQueries extends QueryProvider {
   //      with q_volcano's oracle as volcanoSurfaceSql. ----
   private val volcanoSurfaceSql: String = {
     val v = "ROUND(LOG2(l_extendedprice), 6)"
-    val dv = MS.dec(v); val dpv = MS.decProd(v, v)
+    def s1(f: String) = MS.sumAt(s"CASE WHEN l_returnflag = '$f' THEN $v END", 6)
+    def s2(f: String) = MS.sumWide(s"CASE WHEN l_returnflag = '$f' THEN ($v) * ($v) END", 10)
     def mean(s1: String, n: String) = s"$s1 / CAST($n AS DOUBLE)"
     s"""
       WITH g AS (
         SELECT l_partkey AS id,
-          CAST(SUM(CASE WHEN l_returnflag = 'A' THEN $dv END) AS DOUBLE) AS s1a,
-          CAST(SUM(CASE WHEN l_returnflag = 'A' THEN $dpv END) AS DOUBLE) AS s2a,
+          ${s1("A")} AS s1a,
+          ${s2("A")} AS s2a,
           CAST(COUNT(CASE WHEN l_returnflag = 'A' THEN l_extendedprice END) AS BIGINT) AS n_a,
-          CAST(SUM(CASE WHEN l_returnflag = 'R' THEN $dv END) AS DOUBLE) AS s1b,
-          CAST(SUM(CASE WHEN l_returnflag = 'R' THEN $dpv END) AS DOUBLE) AS s2b,
+          ${s1("R")} AS s1b,
+          ${s2("R")} AS s2b,
           CAST(COUNT(CASE WHEN l_returnflag = 'R' THEN l_extendedprice END) AS BIGINT) AS n_b
         FROM lineitem
         WHERE l_returnflag = 'A' OR l_returnflag = 'R'
@@ -529,13 +529,12 @@ object StatQueries extends QueryProvider {
     (s, d) => StatTests.tTest1Samp(
         Tables.lineitemKeyed(s, d)
           .select(col("l_suppkey").as("id"), (col("l_discount") - 0.05).as("value")),
-        Seq("id"), "value",
-        sumImage = Moments.sumExactKeyed, sumSqImage = Moments.sumSqExactKeyed)
+        Seq("id"), "value", sumSq = keyedSumSq)
       .filter(col("n") >= 2)
       .drop("p"),
     Some {
       val v = "(l_discount - 0.05)"
-      val s1 = MS.sumExactKeyed(v); val s2 = MS.sumSqExactKeyed(v)
+      val s1 = MS.sumAt(v, 6); val s2 = MS.sumAt(s"($v) * ($v)", 4)
       s"""
       WITH g AS (
         SELECT l_suppkey AS id, $s1 AS s1, $s2 AS s2,
@@ -579,12 +578,9 @@ object StatQueries extends QueryProvider {
   // ---- §2.5 _non_zero_sum ----
   private val qNonZeroSum = Q(
     "q_nonzero_sum",
-    (s, d) => Tables.events(s, d)
-      .filter(col("value") > 0)
-      .groupBy(col("event_type"))
-      .agg(Moments.sumExact(col("value")).as("sum_value")),
+    (s, d) => graft.stats.Summaries.nonZeroSum(Tables.events(s, d), Seq("event_type"), "value"),
     Some(s"""
-      SELECT event_type, ${MS.sumExact("value")} AS sum_value
+      SELECT event_type, ${MS.sumAt("value", 6)} AS sum_value
       FROM events WHERE value > 0 GROUP BY event_type"""))
 
   // ---- §2.6 qvalues with Storey spline pi0. pi0 is a driver-side

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.text.{Dedup, TextAnalysis}
 import graft.sim.Similarity
+import graft.stats.Moments.{Sql => MS}
 
 /** Training-data pipeline operators (dedup, similarity search, text
   * analysis) over the documents/embeddings tables.
@@ -1305,7 +1306,7 @@ object TextQueries extends QueryProvider {
     })
 
   // ---- corpus-trained bigram LM quality score: train (counts →
-  //      conditional MLE logp, 6-digit round so the dec(15,6) sums
+  //      conditional MLE logp, 6-digit round so the scale-6 sums
   //      are exact) and score (broadcast model join, exact-decimal
   //      mean with OOV penalty) in one query; the oracle replays the
   //      identical chain with DuckDB list slicing. ----
@@ -1316,7 +1317,7 @@ object TextQueries extends QueryProvider {
       TextAnalysis.bigramLmScores(docs, "doc_id", "text",
         TextAnalysis.bigramLmModel(docs, "text", minCount = 2L, maxVocab = 1000000))
     },
-    Some("""
+    Some(s"""
       WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
       g0 AS (SELECT doc_id, words, unnest(generate_series(1, len(words) - 1)) AS i FROM w),
       g AS (SELECT doc_id, array_to_string(words[i:i+1], ' ') AS g FROM g0),
@@ -1329,7 +1330,7 @@ object TextQueries extends QueryProvider {
       scored AS (SELECT g.doc_id, COALESCE(m.logp, CAST('-20.0' AS DOUBLE)) AS lp
                  FROM g LEFT JOIN model m ON m.g = g.g)
       SELECT doc_id, CAST(COUNT(1) AS BIGINT) AS n_bigrams,
-             CAST(SUM(CAST(lp AS DECIMAL(15,6))) AS DOUBLE) / CAST(COUNT(1) AS DOUBLE) AS lm_score
+             ${MS.meanOf(MS.sumAt("lp", 6), "COUNT(1)")} AS lm_score
       FROM scored GROUP BY doc_id"""))
 
   // ---- near-dup clusters: connected components over the simhash

@@ -67,11 +67,6 @@ object Similarity {
       (h.toDouble / Long.MaxValue.toDouble) / 2.0 // [-0.5, 0.5]
     }
 
-  /** Sign-LSH bucket id: pack the signs of `numPlanes` hyperplane
-    * projections into a long. */
-  def signLshBucket(vec: Column, dim: Int, numPlanes: Int = 12): Column =
-    signLshTableBucket(vec, dim, numPlanes, table = 0)
-
   /** LSH-pruned cosine top-k: score only vectors whose bucket matches
     * the query's bucket in at least one of `numTables` independent
     * tables (union of bucket probes). Recall/probe tradeoff via

@@ -1,161 +1,113 @@
 package graft.stats
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{MakeDecimal, UnscaledValue}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.DecimalType
 
-/** Exact (decimal-backed) moment aggregates.
+/** Exact moment aggregates.
   *
   * Rationale: double `sum()` is order-dependent — a partial-aggregated
   * Spark sum and a sequential single-node sum differ in final ulps, so
   * derived statistics would not hash-match an external oracle. Summing
-  * an exact DECIMAL image of each value instead makes every moment
+  * an exact fixed-point image of each value instead makes every moment
   * exact and order-independent; the closed-form statistic is then
   * computed in double from identical inputs with identical IEEE
   * operation trees (+,-,*,/,sqrt are correctly rounded) → bitwise
-  * reproducible on any cluster size, any partitioning. This is also the
-  * right 100 TB answer: decimal sums partial-aggregate (map-side
-  * combine) exactly like double sums.
+  * reproducible on any cluster size, any partitioning. Fixed-point
+  * sums partial-aggregate (map-side combine) exactly like double sums.
   *
-  * decimal(15,6) carries values |x| < 1e9 at 1e-6 resolution — wide
-  * enough for the testdata money/quantity columns; products fit
-  * decimal(31,12); sums of products fit decimal(38,12) up to ~1e26.
+  * Each row is rounded to `scale` decimals (the cast rounds the same
+  * whatever its target precision; only its overflow check depends on
+  * the precision), the rounded images are summed exactly, and the ONE
+  * per-group sum is converted to double. The policy — scale, carrier,
+  * bounds — lives only here:
+  *
+  * {{{
+  *  primitive            carrier                 per-row |x| <  overflow |Σ| ≥  2⁵³ bound |Σ| <
+  *  sumAt(c, 0)          BIGINT (DECIMAL(18,0))  1e18           1e18            9.0e15
+  *  sumAt(c, 2)          BIGINT (DECIMAL(18,2))  1e16           1e16            9.0e13
+  *  sumAt(c, 4)          BIGINT (DECIMAL(18,4))  1e14           1e14            9.0e11
+  *  sumAt(c, 6)          BIGINT (DECIMAL(18,6))  1e12           1e12            9.0e9
+  *  sumWide(c, 10)       DECIMAL(38,10)          1e18           1e28            9.0e5
+  *  sumWide(c, 12)       DECIMAL(38,12)          1e16           1e26            9.0e3
+  *  sumWideSplit(c, 4)   DECIMAL(38,4)           1e24           1e34            9.0e15 (integer part)
+  * }}}
+  *
+  *  - per-row range: the row cast's overflow bound (ANSI error);
+  *  - overflow: the carrier's bound — at or past it the query fails
+  *    with an ANSI overflow error, it never returns a wrong value;
+  *  - 2⁵³ bound: the final decimal→double conversion is correctly
+  *    rounded in BOTH engines only while |Σ|·10ˢ < 2⁵³. Past it,
+  *    DuckDB rounds double(mantissa) before the ÷10ˢ and the engines
+  *    can differ by 1 ulp (the round-9 sf10 parity failure: lineitem
+  *    price sums ≈ 2.7·10¹¹ at scale 6). Big fact sums pick the
+  *    coarsest scale their values are exact at; [[sumWideSplit]]
+  *    pushes the bound to the integer part's 2⁵³.
+  *
+  * Scale choice: a value EXACT at scale s (integers, cent prices,
+  * 2dp×2dp products) survives its double carrier — it sits within
+  * ulps of the s-decimal value, never near a half-boundary — so the
+  * cast recovers it on both engines. ARBITRARY doubles (ratios, R²/n)
+  * are not portable this way: Spark casts via the shortest repr,
+  * DuckDB via the exact binary value (INVARIANTS.md §1).
+  *
+  * [[sumAt]] is the rewrite Spark's own `DecimalAggregates` rule
+  * applies to DECIMAL(p ≤ 8) sums, at every scale: the sum buffer is
+  * a fixed-width long (no BigDecimal regions), and `Decimal.toDouble`
+  * is `BigDecimal.doubleValue` for both carriers, so an in-range sum
+  * converts bit-identically to the DECIMAL(38) sum DuckDB keeps.
+  * Products and fine-scale images of arbitrary doubles overflow a long
+  * at realistic magnitudes and ride [[sumWide]]'s DECIMAL(38).
   */
 object Moments {
-  /** Exact decimal image of a double value column. (No double is an
-    * exact midpoint at 6 decimal digits, so round-to-nearest casts are
-    * engine-independent.) */
-  def dec(c: Column): Column = c.cast("decimal(15,6)")
+  /** Digits of the BIGINT carrier (the widest long-backed decimal). */
+  private val LongDigits = 18
+  /** Row precision of the wide carrier; its sums are DECIMAL(38, s). */
+  private val WideDigits = 28
 
-  /** Decimal image of a double PRODUCT. The product is computed in
-    * double (IEEE-identical everywhere) then rounded to a decimal at
-    * scale 10 — deterministic in both engines, and avoids decimal×
-    * decimal, whose int64 physical storage overflows in DuckDB for
-    * values ≥ ~1e4 (e.g. extendedprice²). */
-  def decProd(x: Column, y: Column): Column = (x * y).cast("decimal(28,10)")
+  /** The scaled-BIGINT image of each row: `c` rounded to `scale`
+    * decimals, as its unscaled long. */
+  private[stats] def unscaledAt(c: Column, scale: Int): Column =
+    Bridge.column(UnscaledValue(Bridge.expression(c.cast(DecimalType(LongDigits, scale)))))
 
-  /** Exact sum as double (deterministic).
+  /** A BIGINT sum of [[unscaledAt]] images, back to double. */
+  private[stats] def fromUnscaled(s: Column, scale: Int): Column =
+    Bridge.column(MakeDecimal(Bridge.expression(s), LongDigits, scale)).cast("double")
+
+  /** The DECIMAL(28, scale) row image the wide carrier sums. */
+  private[stats] def wideAt(c: Column, scale: Int): Column = c.cast(DecimalType(WideDigits, scale))
+
+  /** Exact sum of `c` rounded to `scale` decimals, on the BIGINT
+    * carrier, as double (bounds in the table above). */
+  def sumAt(c: Column, scale: Int): Column = fromUnscaled(sum(unscaledAt(c, scale)), scale)
+
+  /** Exact sum of `c` rounded to `scale` decimals, on the DECIMAL(38)
+    * carrier, as double: products of arbitrary doubles (`x*y` at
+    * scale 10 — computed in double, IEEE-identical everywhere, then
+    * rounded) and unit-scale values at scale 12. */
+  def sumWide(c: Column, scale: Int): Column = sum(wideAt(c, scale)).cast("double")
+
+  /** [[sumWide]] with the decimal→double conversion SPLIT into integer
+    * and fractional parts, pushing the engine-agreement bound from
+    * |Σ|·10ˢ < 2⁵³ out to |Σ| < 2⁵³.
     *
-    * SCALE BOUND: the final decimal→double conversion is correctly
-    * rounded in both engines ONLY while the sum's integer mantissa
-    * (|sum|·10⁶) stays under 2⁵³ ≈ 9·10¹⁵, i.e. |sum| ≲ 9·10⁹. Beyond
-    * that, double(m) itself rounds before the 10⁻ˢ scaling and the
-    * engines' double-rounding paths diverge by 1 ulp (found by the
-    * sf10 parity run: lineitem price sums ≈ 2.7·10¹¹). Money-scale
-    * aggregates over big fact tables must use [[sumExactMoney]] /
-    * [[sumExactInt]], whose coarser exact-at-scale images push the
-    * bound out by 10⁴–10⁶×. */
-  def sumExact(c: Column): Column = sum(dec(c)).cast("double")
-
-  /** Exact sum of MONEY-SCALE data: inputs EXACT at 2 decimals only
-    * (cent-valued prices). The double carrier sits within ulps of the
-    * true 2-dp value — never near a scale-2 half-boundary — so the
-    * round-to-nearest cast recovers the exact cents identically in
-    * both engines. NOT safe for arbitrary doubles (ratios, products
-    * of >2-dp factors): Spark casts via shortest-repr and DuckDB via
-    * the exact binary value, and those diverge with no midpoint
-    * involved (INVARIANTS.md §1). The scale-2 image keeps the sum's
-    * mantissa under 2⁵³ up to |sum| ≈ 9·10¹³ — three orders past
-    * [[sumExact]]'s bound — so the double conversion stays correctly
-    * rounded in both engines far beyond any bench SF. */
-  def sumExactMoney(c: Column): Column = sum(c.cast("decimal(27,2)")).cast("double")
-
-  /** Exact sum of INTEGER-VALUED data (counts, TPC-H quantities): the
-    * scale-0 image is exact and the double conversion correctly
-    * rounded up to |sum| ≈ 9·10¹⁵. */
-  def sumExactInt(c: Column): Column = sum(c.cast("decimal(27,0)")).cast("double")
-
-  /** Exact sum of data exact at FOUR decimals (2-dp × 2-dp products,
-    * e.g. price·(1−discount)). The double product sits within ulps of
-    * the true 4-decimal value — never near a scale-4 half-boundary —
-    * so the round-to-nearest cast recovers the exact product
-    * identically in both engines (same non-midpoint argument as
-    * [[sumExactMoney]]), and the final decimal→double conversion is
-    * correctly rounded while |sum|·10⁴ < 2⁵³, i.e. |sum| ≲ 9·10¹¹ —
-    * past the sf10 global revenue sum of 2.7·10¹¹ and far past any
-    * per-group sum.
-    *
-    * This replaced a DECIMAL(38,6)-typed output (round-9 incident):
-    * a DECIMAL output column hash-mismatched the driver gate even
-    * with bit-identical values on both engines — query outputs must
-    * be double/bigint/string/boolean/timestamp, enforced by the
-    * Verify output-type lint. */
-  def sumExactScale4(c: Column): Column = sum(c.cast("decimal(27,4)")).cast("double")
-
-  /** [[sumExactScale4]] with the decimal→double conversion SPLIT into
-    * integer and fractional parts, pushing the engine-agreement bound
-    * from |sum| ≲ 9·10¹¹ out to ≈ 9·10¹⁵ (past sf1000 per-group fact
-    * sums; MomentsSpec walks the boundary).
-    *
-    * Why the naive cast caps at 9·10¹¹: converting m·10⁻⁴ when
-    * m > 2⁵³ double-rounds (double(m) first, ÷10⁴ second) and the
-    * engines' paths diverge by 1 ulp (measured: DuckDB's cast of
+    * Why the plain cast caps lower: converting m·10⁻ˢ when m > 2⁵³
+    * double-rounds (double(m) first, ÷10ˢ second) and the engines'
+    * paths diverge by 1 ulp (measured at scale 4: DuckDB's cast of
     * 1352468013579.2467 gives …2468, the correctly rounded value is
     * …2466). The split tree keeps every step exact-or-correctly-
     * rounded in BOTH engines: floor(s) is an exact DECIMAL(·,0) in
-    * Spark and DuckDB (verified: DuckDB floor(DECIMAL(27,4)) →
-    * DECIMAL(27,0)); its double conversion is exact while
-    * |intpart| < 2⁵³ ≈ 9·10¹⁵; the fractional remainder is exact at
-    * 4 decimals in [0,1) so its conversion is correctly rounded
-    * (mantissa < 10⁴); the final double add is a single IEEE op.
-    * Structurally identical trees on both sides → bitwise parity. */
-  def sumExactScale4Wide(c: Column): Column = {
-    val s = sum(c.cast("decimal(27,4)"))
+    * Spark and DuckDB; its double conversion is exact while
+    * |intpart| < 2⁵³; the fractional remainder is exact at s decimals
+    * in [0,1), so its conversion is correctly rounded; the final
+    * double add is a single IEEE op. Structurally identical trees on
+    * both sides → bitwise parity. */
+  def sumWideSplit(c: Column, scale: Int): Column = {
+    val s = sum(wideAt(c, scale))
     floor(s).cast("double") + (s - floor(s)).cast("double")
   }
-
-  /** Narrow image for KEYED-FAMILY values (round-17): |x| < 100 at 6
-    * decimals — decimal(8,6), whose SUM type decimal(18,6) stays
-    * inside Spark's long-backed decimal fast path (precision ≤ 18 is
-    * a fixed-width mutable UnsafeRow aggregation field; wider sums
-    * buffer through BigDecimal byte regions — the sf10 per-suppkey
-    * partial agg measured 2× faster narrow, value-identical: the
-    * 6-decimal rounding is the same, only the carrier range shrinks).
-    * BOUND: the decimal(18,6) sum overflows (ANSI error, never a
-    * wrong value) at |sum| ≥ 1e12 — safe for the PER-KEY stat
-    * families where rows per key is SF-invariant (TPC-H ~600 lineitem
-    * rows per suppkey at every SF; |sum| ≤ 600·100 = 6e4, and even
-    * same-key-scaled decade fixtures at sf1e5 stay orders under the
-    * bound). NOT for global or low-cardinality groupings whose sums
-    * grow with the corpus (describe's per-flag quantity sums pass
-    * 1e12 near sf10⁵·corpus shapes — those keep [[dec]]). */
-  def decKeyed(c: Column): Column = c.cast("decimal(8,6)")
-
-  /** Exact keyed-family sum as double — see [[decKeyed]]. */
-  def sumExactKeyed(c: Column): Column = sum(decKeyed(c)).cast("double")
-
-  /** Product image for keyed-family values EXACT at ≤2 decimals with
-    * |x| < 100 (quantities, discounts): x·y is then exact at ≤4
-    * decimals and < 1e4, so the scale-4 rounding of the double
-    * product recovers exactly the same number the scale-10
-    * [[decProd]] image does (the product sits within ~1e-18 of its
-    * exact ≤4-decimal value — never near a rounding boundary at
-    * either scale, and no double is an exact midpoint at any
-    * factor-of-5 scale) while the sum type decimal(18,4) stays
-    * long-backed. NOT for values with more than 2 decimals (volcano's
-    * 6-decimal log2 values: their squares are not 4-decimal-exact and
-    * the narrower rounding would CHANGE the sum). */
-  def decProdKeyed(x: Column, y: Column): Column = (x * y).cast("decimal(8,4)")
-
-  /** Deterministic keyed-family sum of squares — see [[decProdKeyed]]. */
-  def sumSqExactKeyed(c: Column): Column = sum(decProdKeyed(c, c)).cast("double")
-
-  /** Fine decimal image for unit-scale data (embeddings, z-scores):
-    * |x| < 1e16 at 1e-12 resolution. dec(15,6) would quantize a ~0.5
-    * embedding coordinate to 1e-6 — visible next to a 1e-6 golden
-    * tolerance; 1e-12 is far below any spec while still an exact,
-    * order-independent decimal sum. (Midpoint argument as `dec`:
-    * k·10⁻¹² + 5·10⁻¹³ is never a dyadic rational, so round-to-nearest
-    * casts agree across engines.) */
-  def decFine(c: Column): Column = c.cast("decimal(28,12)")
-
-  /** Exact sum of unit-scale values as double (deterministic). */
-  def sumExactFine(c: Column): Column = sum(decFine(c)).cast("double")
-
-  /** Deterministic sum of squares as double. */
-  def sumSqExact(c: Column): Column = sum(decProd(c, c)).cast("double")
-
-  /** Deterministic sum of products as double. */
-  def sumProdExact(x: Column, y: Column): Column = sum(decProd(x, y)).cast("double")
 
   /** Division used by every derived statistic: `try_divide`, because
     * (a) Spark 4 ANSI mode ERRORS on double division by zero — a
@@ -190,32 +142,19 @@ object Moments {
 
   /** The same formulas as DuckDB SQL fragments, for oracle strings.
     * Kept adjacent to the Column forms so the expression trees stay
-    * structurally identical (bitwise parity depends on it). */
+    * structurally identical (bitwise parity depends on it). DuckDB
+    * sums every DECIMAL as DECIMAL(38, s), so both Spark carriers
+    * meet the same DuckDB value. Product images pass the product
+    * parenthesized: `sumWide(s"($x) * ($y)", 10)`. */
   object Sql {
-    def dec(c: String): String = s"CAST($c AS DECIMAL(15,6))"
-    def decKeyed(c: String): String = s"CAST($c AS DECIMAL(8,6))"
-    def decProdKeyed(x: String, y: String): String =
-      s"CAST(($x) * ($y) AS DECIMAL(8,4))"
-    def sumExactKeyed(c: String): String = s"CAST(SUM(${decKeyed(c)}) AS DOUBLE)"
-    def sumSqExactKeyed(c: String): String =
-      s"CAST(SUM(${decProdKeyed(c, c)}) AS DOUBLE)"
-    def decFine(c: String): String = s"CAST($c AS DECIMAL(28,12))"
-    def sumExactFine(c: String): String = s"CAST(SUM(${decFine(c)}) AS DOUBLE)"
-    def decProd(x: String, y: String): String = s"CAST(($x) * ($y) AS DECIMAL(28,10))"
-    def sumExact(c: String): String = s"CAST(SUM(${dec(c)}) AS DOUBLE)"
-    def sumExactMoney(c: String): String =
-      s"CAST(SUM(CAST($c AS DECIMAL(27,2))) AS DOUBLE)"
-    def sumExactInt(c: String): String =
-      s"CAST(SUM(CAST($c AS DECIMAL(27,0))) AS DOUBLE)"
-    def sumExactScale4(c: String): String =
-      s"CAST(SUM(CAST($c AS DECIMAL(27,4))) AS DOUBLE)"
-    def sumExactScale4Wide(c: String): String = {
-      val s = s"SUM(CAST($c AS DECIMAL(27,4)))"
+    def sumAt(c: String, scale: Int): String =
+      s"CAST(SUM(CAST($c AS DECIMAL($LongDigits,$scale))) AS DOUBLE)"
+    def sumWide(c: String, scale: Int): String =
+      s"CAST(SUM(CAST($c AS DECIMAL($WideDigits,$scale))) AS DOUBLE)"
+    def sumWideSplit(c: String, scale: Int): String = {
+      val s = s"SUM(CAST($c AS DECIMAL($WideDigits,$scale)))"
       s"(CAST(FLOOR($s) AS DOUBLE) + CAST($s - FLOOR($s) AS DOUBLE))"
     }
-    def sumSqExact(c: String): String = s"CAST(SUM(${decProd(c, c)}) AS DOUBLE)"
-    def sumProdExact(x: String, y: String): String =
-      s"CAST(SUM(${decProd(x, y)}) AS DOUBLE)"
     def meanOf(s1: String, n: String): String = s"$s1 / CAST($n AS DOUBLE)"
     def varOf(s1: String, s2: String, n: String): String =
       s"($s2 - $s1 * $s1 / CAST($n AS DOUBLE)) / (CAST($n AS DOUBLE) - 1.0)"

@@ -12,6 +12,13 @@ import Moments._
   */
 object StatTests {
 
+  /** Default `sumSq` of the t-tests: the exact sum of squares of a
+    * group's values on the wide scale-10 product image. Callers whose
+    * values are exact at 2 decimals and small (keyed quantities) pass
+    * `v => Moments.sumAt(v * v, 4)`, the same value on the BIGINT
+    * carrier. The linear sums are always `sumAt(v, 6)`. */
+  private val wideSumSq: Column => Column = v => sumWide(v * v, 10)
+
   /** Two-sample equal-variance t-test per feature between groups `a`
     * and `b` (ref analysis.py:467-498 `ttest_ind`, scipy mstats
     * semantics: NaN-masked = null-skipped here).
@@ -24,18 +31,17 @@ object StatTests {
       valueCol: String,
       a: String,
       b: String,
-      decImage: Column => Column = dec,
-      decProdImage: (Column, Column) => Column = decProd): DataFrame = {
+      sumSq: Column => Column = wideSumSq): DataFrame = {
     val inAB = df.filter(col(groupCol) === a || col(groupCol) === b)
     val v = col(valueCol)
     val g = inAB
       .groupBy(idCols.map(col): _*)
       .agg(
-        sum(when(col(groupCol) === a, decImage(v))).cast("double").as("_s1a"),
-        sum(when(col(groupCol) === a, decProdImage(v, v))).cast("double").as("_s2a"),
+        sumAt(when(col(groupCol) === a, v), 6).as("_s1a"),
+        sumSq(when(col(groupCol) === a, v)).as("_s2a"),
         count(when(col(groupCol) === a, v)).as("n_a"),
-        sum(when(col(groupCol) === b, decImage(v))).cast("double").as("_s1b"),
-        sum(when(col(groupCol) === b, decProdImage(v, v))).cast("double").as("_s2b"),
+        sumAt(when(col(groupCol) === b, v), 6).as("_s1b"),
+        sumSq(when(col(groupCol) === b, v)).as("_s2b"),
         count(when(col(groupCol) === b, v)).as("n_b"))
     val na = col("n_a").cast("double")
     val nb = col("n_b").cast("double")
@@ -69,18 +75,17 @@ object StatTests {
       valueCol: String,
       a: String,
       b: String,
-      decImage: Column => Column = dec,
-      decProdImage: (Column, Column) => Column = decProd): DataFrame = {
+      sumSq: Column => Column = wideSumSq): DataFrame = {
     val inAB = df.filter(col(groupCol) === a || col(groupCol) === b)
     val v = col(valueCol)
     val g = inAB
       .groupBy(idCols.map(col): _*)
       .agg(
-        sum(when(col(groupCol) === a, decImage(v))).cast("double").as("_s1a"),
-        sum(when(col(groupCol) === a, decProdImage(v, v))).cast("double").as("_s2a"),
+        sumAt(when(col(groupCol) === a, v), 6).as("_s1a"),
+        sumSq(when(col(groupCol) === a, v)).as("_s2a"),
         count(when(col(groupCol) === a, v)).as("n_a"),
-        sum(when(col(groupCol) === b, decImage(v))).cast("double").as("_s1b"),
-        sum(when(col(groupCol) === b, decProdImage(v, v))).cast("double").as("_s2b"),
+        sumAt(when(col(groupCol) === b, v), 6).as("_s1b"),
+        sumSq(when(col(groupCol) === b, v)).as("_s2b"),
         count(when(col(groupCol) === b, v)).as("n_b"))
     val na = col("n_a").cast("double")
     val nb = col("n_b").cast("double")
@@ -108,12 +113,11 @@ object StatTests {
       idCols: Seq[String],
       valueCol: String,
       popMean: Double = 0.0,
-      sumImage: Column => Column = sumExact,
-      sumSqImage: Column => Column = sumSqExact): DataFrame = {
+      sumSq: Column => Column = wideSumSq): DataFrame = {
     val v = col(valueCol)
     val g = df
       .groupBy(idCols.map(col): _*)
-      .agg(sumImage(v).as("_s1"), sumSqImage(v).as("_s2"), count(v).as("n"))
+      .agg(sumAt(v, 6).as("_s1"), sumSq(v).as("_s2"), count(v).as("n"))
     val nd = col("n").cast("double")
     val m = meanOf(col("_s1"), col("n"))
     val variance = varOf(col("_s1"), col("_s2"), col("n"))
@@ -139,7 +143,7 @@ object StatTests {
     val perGroup = df
       .filter(v.isNotNull)
       .groupBy((idCols :+ groupCol).map(col): _*)
-      .agg(sumExact(v).as("_s1"), sumSqExact(v).as("_s2"), count(v).as("_n"))
+      .agg(sumAt(v, 6).as("_s1"), sumWide(v * v, 10).as("_s2"), count(v).as("_n"))
     val g = perGroup
       .groupBy(idCols.map(col): _*)
       .agg(
@@ -335,7 +339,7 @@ object StatTests {
           .drop("_lst")
       else
         joined.agg(
-          Moments.sumExactFine(term).as("_s"),
+          Moments.sumWide(term, 12).as("_s"),
           sum(col("_o")).as("n"),
           countDistinct(col(aCol)).as("r_levels"),
           countDistinct(col(bCol)).as("c_levels"))
@@ -394,9 +398,9 @@ object StatTests {
       .groupBy(col("s1"), col("s2"))
       .agg(
         count(lit(1)).as("n"),
-        sumExact(col("x")).as("_sx"), sumExact(col("y")).as("_sy"),
-        sumSqExact(col("x")).as("_sxx"), sumSqExact(col("y")).as("_syy"),
-        sumProdExact(col("x"), col("y")).as("_sxy"))
+        sumAt(col("x"), 6).as("_sx"), sumAt(col("y"), 6).as("_sy"),
+        sumWide(col("x") * col("x"), 10).as("_sxx"), sumWide(col("y") * col("y"), 10).as("_syy"),
+        sumWide(col("x") * col("y"), 10).as("_sxy"))
       .withColumn("r", corrOf(col("n"), col("_sx"), col("_sy"), col("_sxx"), col("_syy"), col("_sxy")))
       .drop("_sx", "_sy", "_sxx", "_syy", "_sxy")
 }

@@ -7,20 +7,28 @@ import org.apache.spark.sql.functions._
   * the covariance-ellipse helper from `visualize.py`. */
 object Summaries {
 
+  /** The exact, order-independent sum the intensity summaries use
+    * (INVARIANTS.md §1): each value rounded at 6 decimals, summed on
+    * the DECIMAL(38) carrier. Raw MaxQuant intensities (1e6–1e10 per
+    * row) summed per sample pass the BIGINT carrier's 1e12 bound at
+    * scale 6; the wide carrier rounds identically with 1e32 headroom,
+    * so the value equals a `Moments.sumAt(_, 6)` wherever that fits. */
+  private def intensitySum(c: Column): Column = Moments.sumWide(c, 6)
+
   /** Exact per-group `describe` — the pandas `df.describe()` contract
     * (count, mean, std, min, exact quartiles, max) that reference
     * users run constantly. Percentiles are the EXACT rank-selected
     * values via the skew-safe two-pass selection engine
     * (ops.Quantiles), not approx_percentile's non-reproducible
-    * sketch; moments are exact decimal sums FUSED into the engine's
-    * histogram pass (round-17): the per-(group, bucket) partial
-    * decimal sums re-aggregate per group on the tiny histogram frame
-    * — exact decimal addition is associative, so the two-level split
-    * is value-identical to the old dedicated moment pass, and the
-    * whole operator is TWO full-data passes (histogram + target-rank)
-    * instead of the old four (moments, stats, full shuffle+rank).
-    * `tieCols` kept for source compatibility; quantile values are
-    * tie-order-invariant (see Quantiles.exactGroupQuantiles).
+    * sketch; moments are exact sums (Moments) FUSED into the engine's
+    * histogram pass (round-17): the per-(group, bucket) partial sums
+    * — scale-6 BIGINT images for the linear sum, the wide scale-10
+    * carrier for the squares — re-aggregate per group on the tiny
+    * histogram frame and convert to double once. Exact addition is
+    * associative, so the two-level split is value-identical to a
+    * direct `sumAt`/`sumWide`, and the whole operator is TWO
+    * full-data passes (histogram + target-rank) instead of the old
+    * four (moments, stats, full shuffle+rank).
     *
     * A NULL group gets its own row, as SQL `GROUP BY` (and the oracle
     * mirrors) give it. Before round 17 the moments-to-quantiles inner
@@ -30,7 +38,6 @@ object Summaries {
       df: DataFrame,
       groupCol: String,
       valueCol: String,
-      tieCols: Seq[String],
       qs: Seq[Double] = Seq(0.25, 0.5, 0.75)): DataFrame = {
     import Moments._
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0), "qs in (0, 1]")
@@ -38,12 +45,12 @@ object Summaries {
       df, Seq(groupCol), valueCol,
       rankFns = qs.map(q => (n: Column) => ceil(lit(q) * n)),
       numBuckets = 1024,
-      // per-bucket exact decimal partials (NOT cast to double — the
-      // cast happens once, after the per-group re-sum, exactly where
-      // sumExact/sumSqExact place it)
+      // per-bucket exact partials (NOT converted to double — that
+      // happens once, after the per-group re-sum, exactly where
+      // sumAt/sumWide place it)
       bucketAggs = Seq(
-        sum(dec(col(valueCol))).as("_bs1"),
-        sum(decProd(col(valueCol), col(valueCol))).as("_bs2")),
+        sum(unscaledAt(col(valueCol), 6)).as("_bs1"),
+        sum(wideAt(col(valueCol) * col(valueCol), 10)).as("_bs2")),
       // per-group totals + raw-typed min/max carried onto every
       // ranked row — a per-group constant the final agg picks with
       // max(), so the whole operator is histogram + rank + ONE
@@ -61,18 +68,18 @@ object Summaries {
       max(col("_n")).as("n"),
       max(col("_mnv")).as("min"),
       max(col("_mxv")).as("max"),
-      max(col("_ds1")).as("_s1"),
-      max(col("_ds2")).as("_s2")) ++ qAggs
+      fromUnscaled(max(col("_ds1")), 6).as("_s1"),
+      max(col("_ds2")).cast("double").as("_s2")) ++ qAggs
     ranked.groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
-      .withColumn("mean", meanOf(col("_s1").cast("double"), col("n")))
-      .withColumn("std", sqrt(varOf(col("_s1").cast("double"),
-        col("_s2").cast("double"), col("n"))))
+      .withColumn("mean", meanOf(col("_s1"), col("n")))
+      .withColumn("std", sqrt(varOf(col("_s1"), col("_s2"), col("n"))))
       .drop("_s1", "_s2")
   }
 
   /** `enrichment_from_msp` (ref analysis.py:263-287): zero → missing,
     * per-(sample, modified-flag) intensity sums, modified/total ratio
-    * per sample. One pass: conditional sums after the flag projection. */
+    * per sample. One pass: conditional exact sums after the flag
+    * projection (see [[intensitySum]]). */
   def enrichmentFromMsp(
       df: DataFrame,
       modificationsCol: String,
@@ -83,17 +90,17 @@ object Summaries {
     val v = when(col(valueCol) =!= 0, col(valueCol)) // 0 == not quantified
     df.groupBy(col(sampleCol))
       .agg(
-        sum(when(isMod, v)).as("modified"),
-        sum(v).as("total"))
-      .withColumn("enrichment", try_divide(col("modified"), col("total")))
+        intensitySum(when(isMod, v)).as("modified"),
+        intensitySum(v).as("total"))
+      .withColumn("enrichment", Moments.div(col("modified"), col("total")))
   }
 
   /** `_non_zero_sum` (ref analysis.py:221-229): per-key sum of
-    * positive values only. */
+    * positive values only (exact sum, see [[intensitySum]]). */
   def nonZeroSum(df: DataFrame, keyCols: Seq[String], valueCol: String): DataFrame =
     df.filter(col(valueCol) > 0)
       .groupBy(keyCols.map(col): _*)
-      .agg(sum(col(valueCol)).as("sum_value"))
+      .agg(intensitySum(col(valueCol)).as("sum_value"))
 
   /** Technical-replicate collapse (S-1 notebook:
     * `df.median(axis=1, level=[0,1,2])`): exact median per
@@ -138,7 +145,7 @@ object Summaries {
   /** `enrichment_from_evidence` (ref analysis.py:232-258): flag rows by
     * substring in the Modifications column, sum values per experiment
     * and flag, modified/total ratio per experiment — one conditional
-    * aggregation pass. */
+    * aggregation pass of exact sums (see [[intensitySum]]). */
   def enrichmentFromEvidence(
       df: DataFrame,
       modificationsCol: String,
@@ -148,9 +155,9 @@ object Summaries {
     val isMod = coalesce(col(modificationsCol).contains(modification), lit(false))
     df.groupBy(col(experimentCol))
       .agg(
-        sum(when(isMod, col(valueCol))).as("modified"),
-        sum(col(valueCol)).as("total"))
-      .withColumn("enrichment", try_divide(col("modified"), col("total")))
+        intensitySum(when(isMod, col(valueCol))).as("modified"),
+        intensitySum(col(valueCol)).as("total"))
+      .withColumn("enrichment", Moments.div(col("modified"), col("total")))
   }
 
   /** `modificationlocalization` (ref visualize.py:751-795): Class
@@ -251,21 +258,20 @@ object Summaries {
   final case class Ellipse(cx: Double, cy: Double, width: Double, height: Double, angleDeg: Double)
 
   /** Distributed single-row form of [[covarianceEllipse]]: ONE exact
-    * decimal-moments aggregation (graft.stats.Moments — INVARIANTS.md
-    * §1; portable when x·y is exact at the decProd scale), then the
+    * moments aggregation (graft.stats.Moments — INVARIANTS.md §1;
+    * portable when x·y is exact at the wide scale 10), then the
     * closed-form 2×2 symmetric eigen as a Column tree. Output columns
     * (cx, cy, width, height, angle_deg); the atan2 angle is the one
     * transcendental — oracled callers round it on both sides. */
   def covarianceEllipseDf(
       df: DataFrame, xCol: String, yCol: String, nstd: Double = 2.0): DataFrame = {
-    import graft.stats.Moments
     val (x, y) = (col(xCol), col(yCol))
     df.agg(
-        // decFine(28,12) linear sums: |Σ| bound 1e16 (a 600M-row sf100
-        // quantity sum is ~3e10); squares/products ride decProd(28,10)
-        Moments.sumExactFine(x).as("_sx"), Moments.sumExactFine(y).as("_sy"),
-        Moments.sumSqExact(x).as("_sxx"), Moments.sumSqExact(y).as("_syy"),
-        Moments.sumProdExact(x, y).as("_sxy"),
+        // wide scale-12 linear sums: |Σ| bound 1e26 (a 600M-row sf100
+        // quantity sum is ~3e10); squares/products ride wide scale 10
+        Moments.sumWide(x, 12).as("_sx"), Moments.sumWide(y, 12).as("_sy"),
+        Moments.sumWide(x * x, 10).as("_sxx"), Moments.sumWide(y * y, 10).as("_syy"),
+        Moments.sumWide(x * y, 10).as("_sxy"),
         count(x).as("_n"))
       .withColumn("cx", Moments.meanOf(col("_sx"), col("_n")))
       .withColumn("cy", Moments.meanOf(col("_sy"), col("_n")))

@@ -33,8 +33,6 @@ object TextAnalysis {
     TextHashExpressions.charClassCount(text, ".,;:!?")
   def digitCount(text: Column): Column =
     TextHashExpressions.charClassCount(text, "0123456789")
-  def upperCount(text: Column): Column =
-    TextHashExpressions.charClassCount(text, ('A' to 'Z').mkString)
 
   /** Heuristic quality score in [0,1]: penalize extreme length, high
     * punct/digit density, low word diversity. Weights are fixed
@@ -151,7 +149,7 @@ object TextAnalysis {
     * `maxVocab` caps the model via a deterministic (count desc, gram)
     * top-V — TakeOrderedAndProject, and the bound is what makes the
     * scoring-side broadcast join safe at 100 TB. logp is rounded at
-    * SIX digits so its dec(15,6) image is exact on any engine
+    * SIX digits so its scale-6 image (Moments.sumAt) is exact on any engine
     * (invariant 1). */
   def bigramLmModel(
       docs: DataFrame, textCol: String,
@@ -188,7 +186,7 @@ object TextAnalysis {
       .agg(
         count(lit(1)).as("n_bigrams"),
         Moments.meanOf(
-          Moments.sumExact(coalesce(col("logp"), lit(oovLogProb))),
+          Moments.sumAt(coalesce(col("logp"), lit(oovLogProb)), 6),
           count(lit(1))).as("lm_score"))
   }
 

@@ -209,13 +209,45 @@ class PlanSpec extends SparkSpec {
     // round-9 incident: q1_agg / q_design_join_agg emitted DECIMAL(38,6)
     // and the driver gate hash-mismatched them despite bit-identical
     // values. Query outputs must be double/bigint/string/boolean/
-    // timestamp ONLY (INVARIANTS.md §2; Moments.sumExactScale4).
+    // timestamp ONLY (INVARIANTS.md §2; Moments sums return double).
     for (name <- Registry.queries.keys.toSeq.sorted) {
       val schema = Registry.queries(name)(spark, sf).schema
       val bad = PlanChecks.nonPortableOutputColumns(schema)
       assert(bad.isEmpty,
         s"$name emits non-portable output column(s): ${bad.mkString(", ")} — " +
           "driver gate hashes only double/bigint/string/boolean/timestamp (round-9 DECIMAL incident)")
+    }
+  }
+
+  test("exact sums ride the BIGINT carrier: every sumAt buffer is a long, only sumWide stays DECIMAL(38)") {
+    import org.apache.spark.sql.catalyst.expressions.UnscaledValue
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    import org.apache.spark.sql.types.{DecimalType, LongType}
+    // query -> (distinct sumAt sums, distinct sumWide sums) in its plan
+    val expected = Map(
+      "q1_agg" -> ((2, 1)),      // qty, base price | the split disc price
+      "q_describe" -> ((1, 1)),  // per-bucket linear partial | squares
+      "q_ttest_ind" -> ((4, 0)), // keyed: linear and squares both BIGINT
+      "q_anova_f" -> ((8, 0)),
+      "q_volcano" -> ((2, 2)))   // 6-decimal log2 squares stay wide
+    for ((name, (longSums, wideSums)) <- expected) {
+      val df = Registry.queries(name)(spark, sf)
+      df.collect()
+      val sums = nodes(df.queryExecution.executedPlan)
+        .collect { case a: BaseAggregateExec => a }
+        .flatMap(_.aggregateExpressions.map(_.aggregateFunction))
+        .collect { case s: Sum => s }
+      val carrier = sums.filter(_.child.exists(_.isInstanceOf[UnscaledValue]))
+      assert(carrier.forall(_.dataType == LongType), s"$name: $carrier")
+      val wide = sums.filter(_.dataType.isInstanceOf[DecimalType])
+      assert(wide.forall(s => s.dataType.asInstanceOf[DecimalType].precision == 38 &&
+        s.child.dataType.asInstanceOf[DecimalType].precision == 28),
+        s"$name: a DECIMAL sum other than the wide carrier: ${wide.map(_.dataType)}")
+      // nothing else: no double or narrow-decimal sums
+      assert(sums.forall(s => s.dataType == LongType || s.dataType.isInstanceOf[DecimalType]),
+        s"$name: ${sums.map(_.dataType)}")
+      assert(carrier.map(_.child.canonicalized).distinct.size == longSums, s"$name: $carrier")
+      assert(wide.map(_.child.canonicalized).distinct.size == wideSums, s"$name: $wide")
     }
   }
 

@@ -213,7 +213,7 @@ class PropertySpec extends SparkSpec {
         .toDF("g", "v", "k")
       // tiny numBuckets forces multi-row buckets AND cross-bucket
       // stitching in the same case
-      val out = Quantiles.exactGroupQuantiles(df, "g", "v", qs, Seq("k"), numBuckets = 5)
+      val out = Quantiles.exactGroupQuantiles(df, "g", "v", qs, numBuckets = 5)
         .collect().map(r => r.getString(0) ->
           qs.indices.map(i => r.getDouble(i + 1)).toList).toMap
       val ref = rows.zipWithIndex.map { case ((g, v), i) => (g, v, i.toLong) }

@@ -104,7 +104,7 @@ class OpsSpec extends SparkSpec {
       ("b", 10.0, 6L), ("b", 20.0, 7L), ("b", 20.0, 8L)
     ).toDF("g", "v", "k")
       .unionByName(Seq(("b", Option.empty[Double], 9L)).toDF("g", "v", "k"))
-    val out = Quantiles.exactGroupQuantiles(df, "g", "v", Seq(0.5, 0.95), Seq("k"))
+    val out = Quantiles.exactGroupQuantiles(df, "g", "v", Seq(0.5, 0.95))
       .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     // a: n=5 → p50 rank ceil(2.5)=3 → 3.0; p95 rank ceil(4.75)=5 → 5.0
     assert(out("a") == ((3.0, 5.0)))
@@ -204,7 +204,7 @@ class OpsSpec extends SparkSpec {
     val rows = (1 to 9900).map(i => ("big", i.toDouble, i.toLong)) ++
       (1 to 100).map(i => ("small", i.toDouble, (10000 + i).toLong))
     val df = rows.toDF("g", "v", "k")
-    val out = Quantiles.exactGroupQuantiles(df, "g", "v", Seq(0.25, 0.5, 0.99), Seq("k"),
+    val out = Quantiles.exactGroupQuantiles(df, "g", "v", Seq(0.25, 0.5, 0.99),
         numBuckets = 7)
       .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
     // values 1..n: rank ceil(q*n) selects exactly ceil(q*n)
@@ -223,7 +223,7 @@ class OpsSpec extends SparkSpec {
       ("g", Double.PositiveInfinity, 9L), ("g", Double.NaN, 10L),
       ("h", Double.NegativeInfinity, 11L), ("h", 1.0, 12L), ("h", 2.0, 13L), ("h", 3.0, 14L)
     ).toDF("g", "v", "k")
-    val out = Quantiles.exactGroupQuantiles(rows, "g", "v", Seq(0.25, 0.5, 0.95), Seq("k"))
+    val out = Quantiles.exactGroupQuantiles(rows, "g", "v", Seq(0.25, 0.5, 0.95))
       .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
     // g: n=10 → ranks 3, 5, ceil(9.5)=10 → 3.0, 5.0, NaN (sorted last)
     assert(out("g")._1 == 3.0 && out("g")._2 == 5.0 && out("g")._3.isNaN)
@@ -271,18 +271,18 @@ class OpsSpec extends SparkSpec {
       .toDF("g", "v")
       .unionByName(Seq(("a", Option.empty[Double])).toDF("g", "v"))
     // the OLD dedicated moment pass, verbatim — the fused two-level
-    // decimal sums must reproduce it bit-for-bit
+    // exact sums must reproduce it bit-for-bit
     val ref = df.filter(col("v").isNotNull).groupBy(col("g")).agg(
       count(col("v")).as("n"),
-      Moments.sumExact(col("v")).as("s1"),
-      Moments.sumSqExact(col("v")).as("s2"),
+      Moments.sumAt(col("v"), 6).as("s1"),
+      Moments.sumWide(col("v") * col("v"), 10).as("s2"),
       smin(col("v")).as("min"), smax(col("v")).as("max"))
       .select(col("g"), col("n"), col("min"), col("max"),
         Moments.meanOf(col("s1"), col("n")).as("mean"),
         sqrt(Moments.varOf(col("s1"), col("s2"), col("n"))).as("std"))
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))).toMap
-    val out = Summaries.describe(df, "g", "v", tieCols = Nil)
+    val out = Summaries.describe(df, "g", "v")
       .select(col("g"), col("n"), col("min"), col("max"), col("mean"), col("std"),
         col("p25"), col("p50"), col("p75"))
       .collect().map(r => r.getString(0) ->

@@ -88,7 +88,7 @@ class StatTestsSpec extends SparkSpec {
 
   test("describe: exact moments and rank-selected quartiles per group") {
     val df = (1 to 11).map(i => ("g", i.toDouble, i.toLong)).toDF("grp", "v", "k")
-    val r = graft.stats.Summaries.describe(df, "grp", "v", Seq("k")).head()
+    val r = graft.stats.Summaries.describe(df, "grp", "v").head()
     assert(r.getAs[Long]("n") == 11L)
     assert(approx(r.getAs[Double]("mean"), 6.0, 1e-12))
     assert(approx(r.getAs[Double]("std"), math.sqrt(11.0), 1e-12)) // var of 1..11 = 11
