@@ -22,6 +22,18 @@ import org.apache.spark.sql.SparkSession
   *  - `periodicGC 2min`: completed queries' shuffle files are only
   *    reclaimed after a driver GC; the 30 min default outlives whole
   *    runs and accumulated >20 GB of dead shuffle scratch at sf100.
+  *  - `codegen.cache.maxEntries 1024`: Janino compiles a generated
+  *    class only on a miss in Spark's codegen cache, a Guava LRU cache
+  *    split into 4 segments that each evict on their own, so a working
+  *    set fits only with ~4× headroom. Classes compiled by one cold
+  *    pass (4-core host, cap 1024): perfbench lfq_workflow 89,
+  *    corpus_ingest 146-150, and at most 145 for one query of a cold
+  *    `Verify` at sf0.01 (q_jaccard_pairs). At the default 100 (25 a
+  *    segment) every warm lfq pass recompiled 24 classes and every
+  *    corpus pass 132-133; at 1024, 0 and 6-10 (AQE numbers codegen
+  *    stages in the order it creates them, and the number is in the
+  *    class name). 1024 is the smallest power of two ≥ 4 × 150. A
+  *    static conf: the cache is sized when the JVM first generates code.
   *
   * "Constrained heap" = under [[graft.ops.Caches.MinHeapPerCoreMb]]
   * per core — the same floor that degrades memo caches to DISK_ONLY.
@@ -93,7 +105,8 @@ object Sessions {
     // sorts): q_min_valid_in_any_group 113.3 -> 58.6 s and
     // q_median_collapse 108.3 -> 81.6 s, same window, clean:true,
     // oracle-checked results; q_volcano solo-flat (49.3 vs 48.8).
-    "spark.sql.join.preferSortMergeJoin" -> "false")
+    "spark.sql.join.preferSortMergeJoin" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "1024")
 
   /** Executor memory to REQUEST under a `local-cluster[n,c,m]` master.
     *

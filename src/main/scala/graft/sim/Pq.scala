@@ -207,16 +207,6 @@ object Pq {
       .orderBy(col(distCol).asc, col(idCol).asc)
       .limit(k)
 
-  /** [[ivfPqTopK]] with the codegen'd LUT kernel. */
-  def ivfPqTopKNative(
-      encodedAssigned: DataFrame, idCol: String, model: PqModel,
-      query: Array[Double], probes: Array[Int], k: Int,
-      cellCol: String = "_cell", codeCol: String = "pq_code",
-      distCol: String = "adc_dist"): DataFrame =
-    adcTopKNative(
-      encodedAssigned.filter(col(cellCol).isin(probes.map(Int.box).toIndexedSeq: _*)),
-      idCol, model, query, k, codeCol, distCol)
-
   /** ADC + EXACT RE-RANK — the standard production shape for
     * quantized indexes (faiss's refine stage, Jégou et al. §V.C):
     * ADC selects a `poolK`-candidate pool from the m-byte codes, then
@@ -247,13 +237,4 @@ object Pq {
       .orderBy(col("dist2"), col(idCol))
       .limit(k)
   }
-
-  /** [[adcTopKRefined]] over the IVF-probed cells (IVF-PQ + refine). */
-  def ivfPqTopKRefined(
-      encodedAssigned: DataFrame, raw: DataFrame, idCol: String, vecCol: String,
-      model: PqModel, query: Array[Double], probes: Array[Int], k: Int,
-      poolK: Int, cellCol: String = "_cell", codeCol: String = "pq_code"): DataFrame =
-    adcTopKRefined(
-      encodedAssigned.filter(col(cellCol).isin(probes.map(Int.box).toIndexedSeq: _*)),
-      raw, idCol, vecCol, model, query, k, poolK, codeCol)
 }

@@ -132,6 +132,12 @@ object StatTests {
   /** One-way ANOVA per feature across all groups present (ref
     * analysis.py:387-432 `anova_1way`, masked semantics). The
     * reference loops rows in Python; here it is two hash aggregations.
+    * The per-group sums stay exact partials (the BIGINT unscaled sum,
+    * the DECIMAL(38) sum of squares) and are re-summed per feature on
+    * the same carriers, so the feature totals are `sumAt(v, 6)` and
+    * `sumWide(v * v, 10)` over the raw values; the within-group sum of
+    * squares sums on the wide carrier. F is then the same bits
+    * whatever order the partial aggregates meet in (INVARIANTS §1).
     * Output: idCols..., k, n, f, df1, df2, p.
     */
   def anova1Way(
@@ -143,16 +149,19 @@ object StatTests {
     val perGroup = df
       .filter(v.isNotNull)
       .groupBy((idCols :+ groupCol).map(col): _*)
-      .agg(sumAt(v, 6).as("_s1"), sumWide(v * v, 10).as("_s2"), count(v).as("_n"))
+      .agg(sum(unscaledAt(v, 6)).as("_u1"), sum(wideAt(v * v, 10)).as("_w2"),
+        count(v).as("_n"))
+    val s1 = fromUnscaled(col("_u1"), 6)
+    val s2 = col("_w2").cast("double")
     val g = perGroup
       .groupBy(idCols.map(col): _*)
       .agg(
-        sum(col("_s1")).as("_ts1"),
-        sum(col("_s2")).as("_ts2"),
+        fromUnscaled(sum(col("_u1")), 6).as("_ts1"),
+        sum(col("_w2")).cast("double").as("_ts2"),
         sum(col("_n")).as("n"),
         count(lit(1)).as("k"),
         // within-group sum of squares: Σ_g (s2_g - s1_g²/n_g)
-        sum(col("_s2") - div(col("_s1") * col("_s1"), col("_n").cast("double"))).as("_ssw"))
+        sumWide(s2 - div(s1 * s1, col("_n").cast("double")), 10).as("_ssw"))
     val nd = col("n").cast("double")
     val kd = col("k").cast("double")
     val sst = col("_ts2") - div(col("_ts1") * col("_ts1"), nd)

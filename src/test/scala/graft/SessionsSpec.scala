@@ -22,6 +22,7 @@ class SessionsSpec extends AnyFunSuite {
     assert(provisioned("spark.memory.storageFraction") == "0.3")
     assert(provisioned("spark.cleaner.periodicGC.interval") == "2min")
     assert(provisioned("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "64")
+    assert(provisioned("spark.sql.codegen.cache.maxEntries") == "1024")
     // 8 GiB / 32 cores = 256 MB/core < the 384 MB/core floor → wide
     val constrained = Sessions.productionConfs(32, 8 * gb).toMap
     assert(constrained("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "256")
@@ -66,6 +67,11 @@ class SessionsSpec extends AnyFunSuite {
     }
     assert(applied.keySet == expected.keySet,
       s"builder applied extra confs: ${applied.keySet.diff(expected.keySet)}")
+  }
+
+  test("the test session carries the profile's codegen cache size") {
+    val key = TestSpark.CodegenCacheKey
+    assert(TestSpark.spark.conf.get(key) == Sessions.productionConfs(4).toMap.apply(key))
   }
 
   test("Sessions is the only file in src/main that builds a SparkSession") {

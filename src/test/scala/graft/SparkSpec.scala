@@ -11,6 +11,10 @@ object TestSpark {
   // (Tables.layoutMode is `auto` by default); layout suites opt in
   // explicitly via Tables.lineitemClustered or a scoped prop flip.
   Tables.pinPlainLayoutDefault()
+  /** The production profile's codegen cache size, read by key: Spark
+    * sizes that cache once per JVM, so suites that re-run a chain meet
+    * the same eviction behaviour as every entry point. */
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
@@ -18,6 +22,7 @@ object TestSpark {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config(CodegenCacheKey, Sessions.productionConfs(4).toMap.apply(CodegenCacheKey))
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
     .withExtensions(new GraftExtensions)

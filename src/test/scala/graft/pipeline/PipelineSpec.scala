@@ -4,6 +4,8 @@ import graft.SparkSpec
 import graft.stats.Summaries
 import graft.ops.Filters
 import graft.functions.ScalarFuncs
+import graft.text.DedupIndex
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSpec {
@@ -202,5 +204,39 @@ class PipelineSpec extends SparkSpec {
       ScalarFuncs.combinedLabelFmt("%s [%s]", col("p"), col("aa")).as("f"))
       .as[(String, String)].head()
     assert(r == ("P1 STY", "P1 [STY]"))
+  }
+
+  test("a warm re-run compiles no new code: phosphoLfq, then a DedupIndex.newDocs probe") {
+    // Janino compiles a generated class only on a codegen-cache miss.
+    // One round (the LFQ chain, then an index probe) holds more classes
+    // than Spark's default cache keeps per LRU segment (100 entries in
+    // 4 segments), so at that size the second round recompiles what the
+    // first evicted; the Sessions cache size holds the whole round.
+    // AQE numbers whole-stage codegen stages in the order it creates
+    // them, which can differ between runs, and the number is part of
+    // the class name: with the name suffix off, a miss means eviction.
+    val path = java.nio.file.Files.createTempDirectory("warmrerun").toString + "/idx"
+    val base = "the quick brown fox jumps over the lazy dog and runs far away today"
+    DedupIndex.write(Seq((1L, base),
+      (3L, "completely different content about spark query engines and shuffles everywhere"))
+      .toDF("doc_id", "text"), "doc_id", "text", path)
+    val batch = Seq((11L, base.replace("today", "tonight")),
+      (15L, "fresh unseen material with many novel words inside it")).toDF("doc_id", "text")
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def round(): (Long, Long) = {
+      val c0 = compiles
+      Pipelines.phosphoLfq(sites, design, control = "Control", comparison = "Treat").collect()
+      val c1 = compiles
+      DedupIndex.newDocs(spark, path, batch, "doc_id", "text", threshold = 0.5).collect()
+      (c1 - c0, compiles - c1)
+    }
+    val idInName = "spark.sql.codegen.useIdInClassName"
+    val saved = spark.conf.getOption(idInName)
+    spark.conf.set(idInName, "false")
+    val (first, (lfq, probe)) =
+      try (round(), round())
+      finally saved.fold(spark.conf.unset(idInName))(spark.conf.set(idInName, _))
+    assert(lfq == 0 && probe == 0, s"the second round compiled phosphoLfq $lfq and " +
+      s"newDocs $probe new classes (first round: $first)")
   }
 }

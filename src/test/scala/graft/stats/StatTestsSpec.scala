@@ -119,6 +119,31 @@ class StatTestsSpec extends SparkSpec {
     assert(r.getAs[Long]("k") == 3L)
   }
 
+  test("anova1Way is bit-identical at 1/7/32 partitions (INVARIANTS §1)") {
+    // 30 features × 24 groups, values over six magnitudes: a double
+    // fold of per-group moments changes its last bits with the order
+    // the partial aggregates meet in
+    val rnd = new scala.util.Random(61)
+    val rows = for {
+      f <- 0 until 30; g <- 0 until 24; _ <- 0 until 3
+    } yield (s"f$f", s"g$g", rnd.nextGaussian() * math.pow(10, rnd.nextInt(6)) + g)
+    val df = rows.toDF("id", "group", "value")
+    def bits(d: Any) = Option(d).map(x => java.lang.Double.doubleToRawLongBits(x.asInstanceOf[Double]))
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    val runs = try Seq(1, 7, 32).map { p =>
+      spark.conf.set(keys(0), p.toString)
+      spark.conf.set(keys(1), "false")
+      StatTests.anova1Way(df.repartition(p), Seq("id"), "group", "value")
+        .collect().map(r => r.getString(0) -> Seq("f", "p").map(c => bits(r.getAs[Any](c)))).toMap
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(runs.head.size == 30)
+    assert(runs.distinct.size == 1, "partitioning changed the bits of F or p")
+  }
+
   test("correlationMatrix uses pairwise-complete (masked) semantics") {
     // np.ma.corrcoef golden: x=[1,2,NaN,4,5], y=[2,NaN,6,8,11] → pairs at idx 0,3,4
     val rows = Seq(
