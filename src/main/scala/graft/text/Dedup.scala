@@ -149,28 +149,17 @@ object Dedup {
       .filter(col("_bn") > maxBucketRows)
       .select(col("band_idx"), col("band_hash"), col("_bn").as("n_members"))
 
-  /** The MEMBERS of the oversized buckets (one row per (bucket, id)) —
-    * the input to the exact-dedup-on-band-hash fallback: members of one
-    * bucket share `numHashes/bands` consecutive minhashes, so beyond
-    * the cap they are treated as one duplicate cluster (keep the min
-    * id per bucket) instead of being pair-enumerated. */
-  def oversizedBucketMembers(
-      signatures: DataFrame, idCol: String,
-      numHashes: Int = 32, bands: Int = 8,
-      maxBucketRows: Long = 100000L): DataFrame = {
-    val banded = bandedTriples(signatures, idCol, numHashes, bands)
-    val oversized = bucketCounts(banded)
-      .filter(col("_bn") > maxBucketRows)
-      .select(col("band_idx"), col("band_hash"))
-    banded.join(oversized, Seq("band_idx", "band_hash"), "left_semi")
+  /** The LSH band keys of a signature row, one per band: band b is the
+    * xxhash64 of minhash slots [b·rows, (b+1)·rows). */
+  private[graft] def bandHashes(numHashes: Int, bands: Int): Seq[Column] = {
+    val rows = numHashes / bands
+    (0 until bands).map(b => xxhash64((b * rows until (b + 1) * rows).map(i => col(s"mh_$i")): _*))
   }
 
   private[graft] def bandedTriples(
       signatures: DataFrame, idCol: String, numHashes: Int, bands: Int): DataFrame = {
-    val rows = numHashes / bands
-    val bandCols = (0 until bands).map { b =>
-      val cols = (b * rows until (b + 1) * rows).map(i => col(s"mh_$i"))
-      struct(lit(b).as("band_idx"), xxhash64(cols: _*).as("band_hash"))
+    val bandCols = bandHashes(numHashes, bands).zipWithIndex.map { case (h, b) =>
+      struct(lit(b).as("band_idx"), h.as("band_hash"))
     }
     signatures
       .select(col(idCol), explode(array(bandCols: _*)).as("band"))

@@ -1,7 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Incremental near-dup deduplication: a PERSISTED MinHash-LSH
   * signature index over the corpus, probed by each new ingest batch —
@@ -21,23 +24,31 @@ import org.apache.spark.sql.functions._
   *
   * Probe scale contract (the asymmetry is the point — `batch` is the
   * small side, the corpus is unbounded):
-  *  - the corpus never shuffles in the NORMAL regime: the candidate
-  *    join broadcasts the batch's banded triples against one scan of
-  *    `bands/`, and the signature joins broadcast the candidates
-  *    against one scan of `sigs/` (same shape as
+  *  - the batch side is materialised ONCE, on the driver: one job
+  *    computes the batch's signatures and band keys and collects them,
+  *    about |batch| × (numHashes + 1) longs (+ `bands` band keys per
+  *    document). Every batch-side frame of the probe is a local
+  *    relation built from that collect; the batch text is never
+  *    re-shingled per reference;
+  *  - the corpus never shuffles in the NORMAL regime: one
+  *    aggregate-only histogram pass over `bands/`, restricted to the
+  *    probed buckets, is collected (at most one row per batch triple);
+  *    the candidate join broadcasts the batch's capped triples against
+  *    one scan of `bands/`, and the signature joins broadcast the
+  *    candidates against one scan of `sigs/` (same shape as
   *    [[Dedup.contaminationScores]]'s broadcast probe). Worst case the
   *    bucket cap alone permits is |batchTriples| × maxBucketRows
-  *    candidates — NOT batch-sized — so the probe gates the broadcast
-  *    plan on an exact candidate-count bound and falls back to shuffle
-  *    joins above [[DefaultMaxBroadcastCandidates]] (identical pairs,
-  *    degraded cost, never an OOM);
+  *    candidates — NOT batch-sized — so the driver computes the exact
+  *    candidate-count bound from the two collects and falls back to
+  *    shuffle joins above [[DefaultMaxBroadcastCandidates]] (identical
+  *    pairs, degraded cost, never an OOM);
   *  - skew: a batch band-hash that hits an oversized corpus bucket
   *    (boilerplate clusters — the LSH mega-bucket mode) is dropped by
-  *    the `maxBucketRows` cap BEFORE the join fans out, from one
-  *    aggregate-only histogram pass over `bands/`; the dropped buckets
-  *    are the standard [[Dedup.minHashOversizedBuckets]] playbook
-  *    (their members are near-identical — route to exact dedup on the
-  *    band hash).
+  *    the `maxBucketRows` cap BEFORE the join fans out, decided on the
+  *    driver from the collected histogram; the dropped buckets are the
+  *    standard [[Dedup.minHashOversizedBuckets]] playbook (their
+  *    members are near-identical — route to exact dedup on the band
+  *    hash).
   */
 object DedupIndex {
 
@@ -52,12 +63,13 @@ object DedupIndex {
     * — a dup-heavy batch whose every band lands in a near-cap corpus
     * bucket can legitimately produce candidate sets far beyond
     * "batch-sized", and broadcasting those would OOM the driver, not
-    * degrade gracefully. probePairs therefore pre-computes the exact
-    * pre-distinct candidate count from the bucket histogram it already
-    * builds (aggregate-only — never the membership rows) and, above
-    * this ceiling, drops the broadcast hints: the SAME pairs via
-    * shuffle joins (results identical; the corpus pays one shuffle —
-    * the documented degraded mode, still never a rescan of the text).
+    * degrade gracefully. probePairs therefore computes the exact
+    * pre-distinct candidate count on the driver, from the bucket
+    * histogram it collects (aggregate-only — never the membership
+    * rows) and the batch's own band keys, and above this ceiling
+    * drops the broadcast hints: the SAME pairs via shuffle joins
+    * (results identical; the corpus pays one shuffle — the documented
+    * degraded mode, still never a rescan of the text).
     * 2M pairs ≈ tens of MB broadcast at typical id widths. */
   val DefaultMaxBroadcastCandidates: Long = 2000000L
 
@@ -219,7 +231,10 @@ object DedupIndex {
     * fraction of agreeing minhash slots ([[Dedup.minHashJaccard]]);
     * filter it against the caller's threshold. Within-batch pairs are
     * NOT included — run the batch through the standard
-    * [[Dedup.minHashCandidatePairsBounded]] self-join for those. */
+    * [[Dedup.minHashCandidatePairsBounded]] self-join for those. The
+    * batch side and the bucket histogram are collected when the probe
+    * is built (two jobs); the candidate and signature scans run when
+    * the returned frame is acted on. */
   def probePairs(
       spark: SparkSession,
       path: String,
@@ -230,47 +245,49 @@ object DedupIndex {
       bands: Int = 8,
       maxBucketRows: Long = DefaultMaxBucketRows,
       maxBroadcastCandidates: Long = DefaultMaxBroadcastCandidates): DataFrame = {
-    val batchSigs = Dedup.minHashSignatures(batch, idCol, textCol, numHashes)
+    // the batch side in one job: signatures and band keys together, to
+    // the driver (every batch-side frame below is broadcast anyway), so
+    // the plans below read local relations instead of recomputing them
+    val batchSide = Dedup.minHashSignatures(batch, idCol, textCol, numHashes)
       .filter(col("mh_0").isNotNull)
-    val batchBanded = Dedup.bandedTriples(batchSigs, idCol, numHashes, bands)
-      .withColumnRenamed(idCol, "batch_id")
+      .withColumn("_bh", array(Dedup.bandHashes(numHashes, bands): _*))
+    val batchRows = batchSide.collect()
+    val triples = batchRows.toSeq.flatMap(r =>
+      r.getSeq[Long](numHashes + 1).zipWithIndex.map { case (h, b) => (r.get(0), b, h) })
+    val batchPerBucket = triples.groupMapReduce(t => (t._2, t._3))(_ => 1L)(_ + _)
+    def local(rows: Seq[Row], fields: StructField*) =
+      spark.createDataFrame(rows.asJava, StructType(fields))
+    val bandIdx = StructField("band_idx", IntegerType, nullable = false)
+    val bandHash = StructField("band_hash", LongType, nullable = false)
     val corpusBands = spark.read.parquet(s"$path/bands")
 
     // hot-bucket cap: one aggregate-only histogram over the index
     // (map-side partials — one row per bucket per task, never the
-    // membership rows), restricted to the probed buckets, drives a
-    // left_semi prune of the batch triples. Everything broadcast here
-    // is batch-sized.
-    val probed = corpusBands
-      .join(broadcast(batchBanded.select(col("band_idx"), col("band_hash")).distinct()),
-        Seq("band_idx", "band_hash"), "left_semi")
+    // membership rows), restricted to the probed buckets, so at most
+    // one row per batch triple reaches the driver
+    val probed = local(batchPerBucket.keys.map { case (b, h) => Row(b, h) }.toSeq, bandIdx, bandHash)
+    val okBuckets = corpusBands
+      .join(broadcast(probed), Seq("band_idx", "band_hash"), "left_semi")
       .groupBy(col("band_idx"), col("band_hash"))
       .agg(count(lit(1)).as("_bn"))
-    val okBuckets = probed.filter(col("_bn") <= maxBucketRows)
-      .select(col("band_idx"), col("band_hash"))
-    val batchOk = batchBanded
-      .join(broadcast(okBuckets), Seq("band_idx", "band_hash"), "left_semi")
+      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+      .filter(_._2 <= maxBucketRows)
 
     // broadcast-safety gate: the bucket cap bounds candidates only to
-    // |batchTriples| × maxBucketRows, so before building the join pick
-    // the plan from the EXACT pre-distinct candidate count — Σ over
-    // capped probed buckets of corpusRows × batchRows. One extra
-    // aggregate-only pass over bands/ (semi-pruned to the probed
-    // buckets), same shape as the histogram above; the membership rows
-    // still never reach the driver.
-    val batchPerBucket = batchBanded
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("_bb"))
-    val candUpperBound = probed
-      .filter(col("_bn") <= maxBucketRows)
-      .join(broadcast(batchPerBucket), Seq("band_idx", "band_hash"))
-      .agg(coalesce(sum(col("_bn") * col("_bb")), lit(0L)))
-      .head().getLong(0)
+    // |batchTriples| × maxBucketRows, so pick the plan from the EXACT
+    // pre-distinct candidate count — Σ over capped probed buckets of
+    // corpusRows × batchRows
+    val candUpperBound = okBuckets.foldLeft(0L) { case (acc, (k, n)) =>
+      Math.addExact(acc, Math.multiplyExact(n, batchPerBucket(k)))
+    }
     // above the ceiling the SAME joins run unhinted (shuffle): results
     // identical, the corpus pays a bands/+sigs/ shuffle instead of an
     // impossible broadcast
     val bcast: DataFrame => DataFrame =
       if (candUpperBound <= maxBroadcastCandidates) broadcast else identity
+    val batchOk = local(
+      triples.collect { case (id, b, h) if okBuckets.contains((b, h)) => Row(id, b, h) },
+      batchSide.schema(idCol).copy(name = "batch_id"), bandIdx, bandHash)
 
     // candidate join: ONE scan of bands/, batch side broadcast — the
     // corpus membership rows never shuffle (broadcast regime)
@@ -283,6 +300,7 @@ object DedupIndex {
     val sigsRaw = spark.read.parquet(s"$path/sigs")
     val corpusSigs = sigsRaw.toDF(sigsRaw.columns.map(c =>
       if (c == idCol) "corpus_id" else s"a_$c").toIndexedSeq: _*)
+    val batchSigs = spark.createDataFrame(batchRows.toSeq.asJava, batchSide.schema).drop("_bh")
     val bSigs = batchSigs.toDF(batchSigs.columns.map(c =>
       if (c == idCol) "batch_id" else s"b_$c").toIndexedSeq: _*)
     val agree = (0 until numHashes)

@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.{DataFrame, Row}
+import graft.text.{Dedup, DedupIndex}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.scalacheck.Gen
@@ -53,6 +54,63 @@ object ReferenceFormulations {
         .withColumn("Multiplicity", lit(sfx.stripPrefix("___").toInt))
     }
     branches.reduce(_ unionByName _)
+  }
+
+  /** Near-dup index probe as Spark-side batch frames: the batch's
+    * signatures and banded triples stay unmaterialised (each reference
+    * recomputes them), the broadcast gate is a `head()` over a second
+    * histogram pass, and the bucket cap is a semi-join. */
+  def dedupIndexProbePairs(
+      spark: SparkSession,
+      path: String,
+      batch: DataFrame,
+      idCol: String,
+      textCol: String,
+      numHashes: Int = 32,
+      bands: Int = 8,
+      maxBucketRows: Long = DedupIndex.DefaultMaxBucketRows,
+      maxBroadcastCandidates: Long = DedupIndex.DefaultMaxBroadcastCandidates): DataFrame = {
+    val batchSigs = Dedup.minHashSignatures(batch, idCol, textCol, numHashes)
+      .filter(col("mh_0").isNotNull)
+    val batchBanded = Dedup.bandedTriples(batchSigs, idCol, numHashes, bands)
+      .withColumnRenamed(idCol, "batch_id")
+    val corpusBands = spark.read.parquet(s"$path/bands")
+    val probed = corpusBands
+      .join(broadcast(batchBanded.select(col("band_idx"), col("band_hash")).distinct()),
+        Seq("band_idx", "band_hash"), "left_semi")
+      .groupBy(col("band_idx"), col("band_hash"))
+      .agg(count(lit(1)).as("_bn"))
+    val okBuckets = probed.filter(col("_bn") <= maxBucketRows)
+      .select(col("band_idx"), col("band_hash"))
+    val batchOk = batchBanded
+      .join(broadcast(okBuckets), Seq("band_idx", "band_hash"), "left_semi")
+    val batchPerBucket = batchBanded
+      .groupBy(col("band_idx"), col("band_hash"))
+      .agg(count(lit(1)).as("_bb"))
+    val candUpperBound = probed
+      .filter(col("_bn") <= maxBucketRows)
+      .join(broadcast(batchPerBucket), Seq("band_idx", "band_hash"))
+      .agg(coalesce(sum(col("_bn") * col("_bb")), lit(0L)))
+      .head().getLong(0)
+    val bcast: DataFrame => DataFrame =
+      if (candUpperBound <= maxBroadcastCandidates) broadcast else identity
+    val cand = corpusBands
+      .join(bcast(batchOk), Seq("band_idx", "band_hash"))
+      .select(col(idCol).as("corpus_id"), col("batch_id"))
+      .distinct()
+    val sigsRaw = spark.read.parquet(s"$path/sigs")
+    val corpusSigs = sigsRaw.toDF(sigsRaw.columns.map(c =>
+      if (c == idCol) "corpus_id" else s"a_$c").toIndexedSeq: _*)
+    val bSigs = batchSigs.toDF(batchSigs.columns.map(c =>
+      if (c == idCol) "batch_id" else s"b_$c").toIndexedSeq: _*)
+    val agree = (0 until numHashes)
+      .map(i => when(col(s"a_mh_$i") === col(s"b_mh_$i"), 1).otherwise(0))
+      .reduce(_ + _)
+    corpusSigs
+      .join(bcast(cand), Seq("corpus_id"))
+      .join(broadcast(bSigs), Seq("batch_id"))
+      .select(col("corpus_id"), col("batch_id"),
+        (agree.cast("double") / numHashes).as("est_jaccard"))
   }
 }
 

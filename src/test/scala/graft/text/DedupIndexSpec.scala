@@ -1,8 +1,12 @@
 package graft.text
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.ops.ReferenceFormulations
 
 class DedupIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -175,5 +179,117 @@ class DedupIndexSpec extends SparkSpec {
         .linesIterator.count(_.contains("ResolvedHint"))
     assert(hints(fallback) == hints(bcast) - 2,
       s"fallback ${hints(fallback)} vs bcast ${hints(bcast)}")
+  }
+
+  // ---- the probe against its reference formulation ----
+
+  private val vocab = (0 until 80).map(i => s"w$i")
+
+  /** A seeded corpus of 30 root texts, each a near-dup cluster of 1-6
+    * members (alternating exact copies and one-word edits), ids 1.. in
+    * order; also returns a fresh one-word edit of each root. */
+  private def seededCorpus(seed: Long): (Seq[String], DataFrame) = {
+    val rnd = new scala.util.Random(seed)
+    def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    def edit(t: String) = {
+      val w = t.split(" ")
+      w(rnd.nextInt(w.length)) = vocab(rnd.nextInt(vocab.size))
+      w.mkString(" ")
+    }
+    val roots = Seq.fill(30)(words(10 + rnd.nextInt(10)).mkString(" "))
+    val texts = roots.zipWithIndex.flatMap { case (r, i) =>
+      r +: (1 to i % 6).map(m => if (m % 2 == 0) r else edit(r))
+    }
+    val df = texts.zipWithIndex.map { case (t, i) => (i + 1L, t) }.toDF("doc_id", "text")
+    (roots.map(edit), df)
+  }
+
+  private def withPartitions[A](p: Int)(body: => A): A = {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), p.toString)
+    spark.conf.set(keys(1), "false")
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def tripleSet(df: DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  test("probePairs equals the reference formulation across regimes, edge batches and partitions") {
+    val (edited, corpusDf) = seededCorpus(7L)
+    val path = tmp("refeq")
+    DedupIndex.write(corpusDf, "doc_id", "text", path)
+    val mixed = (edited.take(12).zipWithIndex.map { case (t, i) => (1000L + i, t) } ++
+      Seq((1100L, "fresh unseen material with many novel words inside it"),
+        (1101L, "w1 w2"), (1102L, "xy"))).toDF("doc_id", "text")
+    val batches = Seq(
+      "mixed" -> mixed,
+      "empty" -> mixed.limit(0),
+      "no signatures" -> Seq((2001L, "w1 w2"), (2002L, "xy")).toDF("doc_id", "text"),
+      "ids in the index" -> corpusDf.filter($"doc_id" <= 20L))
+    val regimes: Seq[(String, Long, Long)] = Seq(
+      ("default", DedupIndex.DefaultMaxBucketRows, DedupIndex.DefaultMaxBroadcastCandidates),
+      ("maxBucketRows = 1", 1L, DedupIndex.DefaultMaxBroadcastCandidates),
+      ("maxBucketRows = 3", 3L, DedupIndex.DefaultMaxBroadcastCandidates),
+      ("maxBroadcastCandidates = 0", DedupIndex.DefaultMaxBucketRows, 0L))
+    val results = for {
+      p <- Seq(1, 7); (bName, b) <- batches; (rName, cap, ceiling) <- regimes
+    } yield withPartitions(p) {
+      val got = tripleSet(DedupIndex.probePairs(spark, path, b, "doc_id", "text",
+        maxBucketRows = cap, maxBroadcastCandidates = ceiling))
+      val want = tripleSet(ReferenceFormulations.dedupIndexProbePairs(spark, path, b, "doc_id", "text",
+        maxBucketRows = cap, maxBroadcastCandidates = ceiling))
+      assert(got == want, s"$bName, $rName, $p partitions")
+      (p, bName, rName) -> got
+    }
+    val byCase = results.toMap
+    // the fixture exercises each regime: the cap of 3 drops some probed
+    // buckets but not all, and the self-id batch finds itself
+    val open = byCase((1, "mixed", "default"))
+    val capped = byCase((1, "mixed", "maxBucketRows = 3"))
+    assert(capped.nonEmpty && capped.size < open.size, s"capped ${capped.size} of ${open.size}")
+    assert(byCase((1, "mixed", "maxBucketRows = 1")).subsetOf(capped) && capped.subsetOf(open))
+    assert(byCase((1, "empty", "default")).isEmpty && byCase((1, "no signatures", "default")).isEmpty)
+    val self = byCase((1, "ids in the index", "default"))
+    assert((1L to 20L).forall(i => self.contains((i, i, 1.0))))
+    // newDocs drops exactly the docs with a near-dup other than themselves
+    val selfBatch = corpusDf.filter($"doc_id" <= 20L)
+    val kept = DedupIndex.newDocs(spark, path, selfBatch, "doc_id", "text", threshold = 0.5)
+      .collect().map(_.getLong(0)).toSet
+    val dropped = self.collect { case (c, b, est) if c != b && est >= 0.5 => b }
+    assert(kept == (1L to 20L).toSet -- dropped && dropped.nonEmpty && kept.nonEmpty)
+  }
+
+  test("one newDocs probe runs 12 Spark jobs") {
+    // the batch side is collected once (a local fixture batch needs no
+    // job for that) and the bucket histogram once; the 12 are two
+    // parquet schema reads, the histogram (probed-key broadcast, bands/
+    // map stage, result) and the caller's collect (two batch-side
+    // broadcasts, bands/ and sigs/ map stages each with the result
+    // stage that broadcasts it, the final stage).
+    val path = tmp("jobs")
+    DedupIndex.write(corpus, "doc_id", "text", path)
+    val group = "dedupindex-probe-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "newDocs probe")
+    try DedupIndex.newDocs(spark, path, batch, "doc_id", "text", threshold = 0.5).collect()
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 12, s"${jobs.get} jobs")
   }
 }

@@ -6,7 +6,9 @@ The reference ships `File S-1.zip` / `File S-2.zip` containing the
 Data Processing notebooks and the REAL design.csv files (the raw
 MaxQuant inputs are not shipped). This harness:
 
-  gen DIR    — extracts both design.csv files from the zips and
+  gen DIR    — extracts both design.csv files from the zips (a
+               s1_design.csv / s2_design.csv already in DIR stands in
+               for an absent zip) and
                generates synthetic MaxQuant fixtures SHAPED BY THEM
                (S-1: one Intensity ___1/2/3 column triple per design
                label, plus the quirk-exercising columns — bare
@@ -62,14 +64,26 @@ def load(name):
 
 
 def extract_designs(outdir):
+    """Write both design.csv files into OUTDIR from the shipped zips.
+
+    A design already in OUTDIR stands in for an absent zip; with
+    neither, exit 2 naming the zip and the stand-in path.
+    """
     for z, member, dst in [
         (ZIP1, "File S-1/design.csv", "s1_design.csv"),
         (ZIP2, "File S-2/design.csv", "s2_design.csv"),
     ]:
+        path = os.path.join(outdir, dst)
+        if not os.path.exists(z):
+            if os.path.isfile(path):
+                continue
+            print(f"notebook_parity: {z} is absent; put its {member} at {path} "
+                  "to stand in for it", file=sys.stderr)
+            sys.exit(2)
         with zipfile.ZipFile(z) as zf:
             with zf.open(member) as f:
                 data = f.read()
-        with open(os.path.join(outdir, dst), "wb") as out:
+        with open(path, "wb") as out:
             out.write(data)
 
 
