@@ -35,7 +35,17 @@ import org.apache.spark.sql.functions._
   * distinct bucket size), not on the buckets. Distinct sizes are
   * bounded by the largest bucket's size and in practice by a few
   * thousand even at 10¹¹ rows (heavy-tail sizes are sparse), so the
-  * driver collect is a metadata-sized aggregate of an aggregate.
+  * driver collect is a metadata-sized aggregate of an aggregate, and
+  * the driver sorts it.
+  *
+  * The same collect also yields the LARGEST bucket, so the decision
+  * is made once, on the driver: the cap prune and the representative
+  * clusters are planned only when some bucket exceeds the effective
+  * cap (min of the caller's skew cap and t). Otherwise the prune
+  * would remove nothing and the representatives would be empty, so
+  * [[PairBudget.bounded]] plans the pair join unpruned and returns
+  * an empty cluster frame that the optimizer folds into an empty
+  * local relation (no job, no plan).
   */
 /** Result of a budgeted pair-enumeration operator.
   *
@@ -110,40 +120,67 @@ object PairBudget {
         sizes.filter(col(nCol) <= cap).select(keys.map(col): _*),
         keys, "left_semi")
 
-  /** The budget-derived bucket-size cap `t` (see object doc).
+  /** One budget decision: the budget-derived cap `t` and the largest
+    * bucket size, both from one histogram collect.
+    *
+    * @param cap     largest t with Σ_{size ≤ t} pairs ≤ maxPairs; 1 when
+    *                even the size-2 buckets alone blow the budget (no
+    *                pairs at all); Long.MaxValue when nothing binds (so
+    *                callers can `min(maxBucketRows, cap)`
+    *                unconditionally)
+    * @param largest the largest bucket size (0 with no buckets)
+    */
+  final case class Decision(cap: Long, largest: Long) {
+    /** The cap [[BoundedPairs.sizeCap]] records: the caller's skew
+      * cap or the budget cap, whichever is smaller. */
+    def effectiveCap(skewCap: Long): Long = math.min(skewCap, cap)
+    /** Whether any bucket exceeds the effective cap — only then does
+      * the prune drop anything or a representative exist. */
+    def binds(skewCap: Long): Boolean = largest > effectiveCap(skewCap)
+  }
+
+  /** The budget decision for a bucket-size frame (see object doc).
     *
     * @param bucketSizes one row per bucket, with the member count in
     *                    `nCol` (any other columns are ignored)
     * @param maxPairs    aggregate candidate-pair budget, > 0
-    * @return largest t with Σ_{size ≤ t} pairs ≤ maxPairs; 1 when even
-    *         the size-2 buckets alone blow the budget (no pairs at
-    *         all); Long.MaxValue when nothing binds (so callers can
-    *         `min(maxBucketRows, t)` unconditionally)
     */
-  def sizeCap(bucketSizes: DataFrame, nCol: String, maxPairs: Long): Long = {
+  def sizeCap(bucketSizes: DataFrame, nCol: String, maxPairs: Long): Decision = {
     require(maxPairs > 0, s"maxPairs must be positive ($maxPairs)")
-    // histogram: (bucket size, total pairs contributed by that size)
+    // histogram: (bucket size, total pairs contributed by that size),
+    // sorted on the driver — it is metadata-sized. Singletons stay in
+    // (they contribute 0 pairs) so `largest` covers every bucket.
     val hist = bucketSizes
-      .filter(col(nCol) > 1)
       .groupBy(col(nCol).as("_size"))
       .agg(sum(pairsOf(col(nCol))).as("_pairs"))
-      .orderBy(col("_size"))
       .collect()
-    var spent = BigInt(0)
-    var cap = Long.MaxValue
-    val budget = BigInt(maxPairs)
-    var i = 0
-    var bound = false
-    while (i < hist.length && !bound) {
-      val size = hist(i).getLong(0)
-      val p = BigInt(hist(i).getDecimal(1).toBigInteger)
-      if (spent + p > budget) {
-        cap = size - 1
-        bound = true
-      } else spent += p
-      i += 1
-    }
-    if (bound) math.max(cap, 1L) else Long.MaxValue
+      .map(r => (r.getLong(0), BigInt(r.getDecimal(1).toBigInteger)))
+      .sortBy(_._1)
+    val over = hist.map(_._2).scanLeft(BigInt(0))(_ + _).tail
+      .indexWhere(_ > BigInt(maxPairs))
+    Decision(
+      if (over < 0) Long.MaxValue else math.max(hist(over)._1 - 1, 1L),
+      hist.lastOption.fold(0L)(_._1))
+  }
+
+  /** A bounded operator's output from its one budget decision. When
+    * the decision binds, `pairJoin` prunes at the effective cap and
+    * `clusters` builds the representatives; otherwise `pairJoin` runs
+    * with `Long.MaxValue` ([[capPrune]]'s no-prune branch) and the
+    * clusters are an empty (id, rep_id) frame over `members` —
+    * result-identical, since no bucket is over the cap.
+    *
+    * @param members  bucket-membership rows carrying `idCol`
+    * @param skewCap  the caller's per-bucket cap (`maxBucketRows`)
+    */
+  def bounded(
+      members: DataFrame, idCol: String, decision: Decision, skewCap: Long,
+      pairJoin: Long => DataFrame, clusters: Long => DataFrame,
+      cleanup: () => Unit = () => ()): BoundedPairs = {
+    val cap = decision.effectiveCap(skewCap)
+    if (decision.binds(skewCap)) BoundedPairs(pairJoin(cap), clusters(cap), cap, cleanup)
+    else BoundedPairs(pairJoin(Long.MaxValue),
+      members.select(col(idCol), col(idCol).as("rep_id")).where(lit(false)), cap, cleanup)
   }
 
   /** Representative clusters for the buckets a cap excludes from pair

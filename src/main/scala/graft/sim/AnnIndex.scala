@@ -724,7 +724,7 @@ object AnnIndex {
   //      partition — and a mergeable bounded top-k per qid
   //      (TopKPriorityAgg, priority DESC / id ASC == the single-query
   //      orderBy) replaces nq separate jobs. Entry arrays chunk at
-  //      [[AnnRecall.DefaultChunkSize]] per pass (Janino method-size
+  //      [[AnnRecall.chunkSize]] per pass (Janino method-size
   //      bound); chunk qids are disjoint so the union of chunk outputs
   //      is the batch answer. Scores are the single-query expression
   //      trees verbatim — per-query results are row-identical to the
@@ -762,7 +762,7 @@ object AnnIndex {
       queries: Seq[Array[Double]], k: Int, nProbe: Int): DataFrame = {
     require(queries.nonEmpty, "empty query batch")
     val v = col(vecCol)
-    queries.zipWithIndex.grouped(AnnRecall.chunkSize).map { chunk =>
+    queries.zipWithIndex.grouped(AnnRecall.chunkSize(nProbe)).map { chunk =>
       val probesByQ = chunk.map { case (q, qid) =>
         (qid, q, Similarity.probeCells(centroids, q, nProbe)) }
       val entries = probesByQ.map { case (qid, q, probes) =>
@@ -792,7 +792,7 @@ object AnnIndex {
       numPlanes: Int = 8, numTables: Int = 4): DataFrame = {
     require(queries.nonEmpty, "empty query batch")
     val v = col(vecCol)
-    queries.zipWithIndex.grouped(AnnRecall.chunkSize).map { chunk =>
+    queries.zipWithIndex.grouped(AnnRecall.chunkSize(2 * numTables)).map { chunk =>
       val entries = chunk.map { case (q, qid) =>
         val inc = (0 until numTables).map { t =>
           col("_t") === lit(t) &&

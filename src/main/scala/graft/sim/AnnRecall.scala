@@ -23,11 +23,12 @@ import org.apache.spark.sql.functions._
   * ran ~6 jobs PER query vector, serialized on the driver (62 s at
   * sf10 for 1 query; hours at a 10k-query eval set).
   *
-  * The per-row entry array is CHUNKED at [[DefaultChunkSize]] queries
-  * per pass (round 13): one projection of 10k struct literals would
-  * blow Janino's 64KB-per-method codegen limit long before the driver
-  * or the cluster noticed, and the ungated truth scans would explode
-  * nq entries per corpus row. Chunks have disjoint qids, so the merged
+  * The per-row entry array is CHUNKED at [[chunkSize]] queries per
+  * pass (round 13): the whole array is built inside one generated
+  * method, so one projection of 10k struct literals would blow
+  * Janino's 64KB-per-method codegen limit long before the driver or
+  * the cluster noticed, and the ungated truth scans would explode nq
+  * entries per corpus row. Chunks have disjoint qids, so the merged
   * result is literally the union of per-chunk maps — bit-identical to
   * the unchunked plan (spec-asserted). Cost: ceil(nq/chunk) scans per
   * method instead of one; still zero driver-side per-query work.
@@ -52,16 +53,21 @@ object AnnRecall {
       pqSampleN: Int = 4096, pqIters: Int = 5,
       refineK: Int = 0)
 
-  /** Queries per batched pass. 256 structs × ~4 fields is ~1-2 KB of
-    * generated code per entry — comfortably inside Janino's 64 KB
-    * method ceiling with headroom for the score expressions.
-    * `-Dgraft.ann.recallChunk=N` overrides (tests force tiny chunks to
-    * assert chunking is invisible in the results). */
-  val DefaultChunkSize = 256
-
-  private[sim] def chunkSize: Int = sys.props.get("graft.ann.recallChunk")
+  /** Queries per batched pass when each entry carries `comparisons`
+    * candidacy comparisons (LSH tables or IVF probes). The entries of
+    * one chunk are generated into a single method that Janino caps at
+    * 64 KB; the vector dimension does not count (the query literal
+    * arrays fold into constants). Measured with codegen fallback off,
+    * dim 16 and 64, one table or probe per entry up to 8 tables or 16
+    * probes: the largest chunk that compiled was ~833 / (5.4 + c) for
+    * c tables (133 at 1, 94 at 4, 63 at 8) and higher for probes (99 at
+    * 4, 77 at 16). This budget keeps ~30% below the table curve; the
+    * former fixed 256 failed to compile at every setting and ran
+    * interpreted. `-Dgraft.ann.recallChunk=N` overrides (tests force
+    * tiny chunks to assert chunking is invisible in the results). */
+  private[sim] def chunkSize(comparisons: Int): Int = sys.props.get("graft.ann.recallChunk")
     .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0)
-    .getOrElse(DefaultChunkSize)
+    .getOrElse(math.max(1, 640 / (6 + comparisons)))
 
   /** Exact L2 top-k (the PQ-family baseline): ‖v‖² − 2·v·q + ‖q‖²
     * with the same fold discipline as assignCells. */
@@ -103,7 +109,8 @@ object AnnRecall {
     val encodedIvf = Pq.encodeNative(assigned, vecCol, pqModel)
       .persist(graft.ops.Caches.memoLevel(emb.sparkSession))
 
-    // One job per ≤chunkSize queries: explode each row into its
+    val perChunk = chunkSize(math.max(cfg.numTables, cfg.nProbe))
+    // One job per ≤perChunk queries: explode each row into its
     // candidate (qid, priority) entries (score gated behind the
     // candidacy predicate via when, so pruned methods never compute
     // pruned scores), bounded top-k per qid, collect the tiny (nq × k)
@@ -113,7 +120,7 @@ object AnnRecall {
         base: DataFrame,
         entry: (Long, Array[Double]) => (Column, Column),
         kk: Int = k): Map[Long, Set[Long]] =
-      queries.grouped(chunkSize).foldLeft(Map.empty[Long, Set[Long]]) { (acc, chunk) =>
+      queries.grouped(perChunk).foldLeft(Map.empty[Long, Set[Long]]) { (acc, chunk) =>
         val arr = array(chunk.map { case (qid, q) =>
           val (inc, pri) = entry(qid, q)
           struct(lit(qid).as("qid"), inc.as("inc"), when(inc, pri).as("pri"))

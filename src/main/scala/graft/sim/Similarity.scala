@@ -333,7 +333,7 @@ object Similarity {
     * one dot product, so the O(pairs) verify stage does one array fold
     * instead of three. Callers persist when the frame feeds multiple
     * passes. */
-  private def unitVecsOf(
+  private[graft] def unitVecsOf(
       embeddings: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val v = col(vecCol)
     embeddings
@@ -345,7 +345,7 @@ object Similarity {
     * bucket membership (PairBudget.capPrune picks the anti-broadcast/
     * semi shape by regime), self-join ids within each bucket. The
     * wide vector column never rides this quadratic stage. */
-  private def bucketCandidates(
+  private[graft] def bucketCandidates(
       members: DataFrame, keys: Seq[String], idCol: String,
       sizes: DataFrame, nCol: String, cap: Long): DataFrame = {
     val pruned = graft.ops.PairBudget.capPrune(members, sizes, nCol, keys, cap)
@@ -359,7 +359,7 @@ object Similarity {
     * keep pairs at exact cosine ≥ threshold — a change here changes
     * all four near-dup pair operators together (the bounded/unbounded
     * "under-budget ≡" contract cannot drift one-sided). */
-  private def cosineVerify(
+  private[graft] def cosineVerify(
       candidates: DataFrame, unitVecs: DataFrame, idCol: String,
       threshold: Double): DataFrame =
     candidates
@@ -448,7 +448,7 @@ object Similarity {
   /** Narrow (id, table, bucket) triples of the multi-table sign-LSH —
     * signs are scale-invariant, so bucketing the unit vector equals
     * bucketing the raw vector. */
-  private def signLshTriples(
+  private[graft] def signLshTriples(
       unitVecs: DataFrame, idCol: String,
       dim: Int, numPlanes: Int, numTables: Int): DataFrame = {
     val tableBuckets = (0 until numTables).map { t =>
@@ -467,9 +467,11 @@ object Similarity {
     * clusters (candidate-level — members share an LSH bucket but
     * skipped the exact cosine verify). Under-budget ⇒ pairs equal
     * [[cosineNearDupPairs]] with the same `maxBucketRows`, clusters
-    * empty. Returns the effective cap for oracle replay; the cleanup
-    * hook unpersists the unit-vector working set (call only after
-    * BOTH output frames are materialized). */
+    * empty — the prune and the representatives run only when the
+    * budget decision binds ([[graft.ops.PairBudget.bounded]]). Returns
+    * the effective cap for oracle replay; the cleanup hook unpersists
+    * the unit-vector working set (call only after BOTH output frames
+    * are materialized). */
   def cosineNearDupPairsBounded(
       embeddings: DataFrame, idCol: String, vecCol: String,
       dim: Int, threshold: Double,
@@ -485,21 +487,19 @@ object Similarity {
       .persist(graft.ops.Caches.memoLevel(embeddings.sparkSession))
     // persist the narrow (table, bucket, id) triples: the budget
     // histogram is a separate job before the pair plan, and the
-    // triples feed three passes (histogram, pair join,
-    // representatives) — without the cache each re-pays numPlanes
-    // dot products per row per table
+    // triples feed the histogram, the pair join and, when the decision
+    // binds, the representatives — without the cache each re-pays
+    // numPlanes dot products per row per table
     val banded = signLshTriples(unitVecs, idCol, dim, numPlanes, numTables)
       .persist(graft.ops.Caches.memoLevel(embeddings.sparkSession))
     val sizes = banded.groupBy(col("_t"), col("_b")).agg(count(lit(1)).as("_bn"))
-    val cap = math.min(maxBucketRows,
-      graft.ops.PairBudget.sizeCap(sizes, "_bn", maxPairs))
-    val pairs = cosineVerify(
-      bucketCandidates(banded, Seq("_t", "_b"), idCol, sizes, "_bn", cap).distinct(),
-      unitVecs, idCol, threshold)
-    val clusters = graft.ops.PairBudget.representatives(
-      banded, Seq("_t", "_b"), idCol, cap)
-    (graft.ops.BoundedPairs(pairs, clusters, cap),
-      () => { banded.unpersist(); unitVecs.unpersist(); () })
+    val bounded = graft.ops.PairBudget.bounded(banded, idCol,
+      graft.ops.PairBudget.sizeCap(sizes, "_bn", maxPairs), maxBucketRows,
+      cap => cosineVerify(
+        bucketCandidates(banded, Seq("_t", "_b"), idCol, sizes, "_bn", cap).distinct(),
+        unitVecs, idCol, threshold),
+      graft.ops.PairBudget.representatives(banded, Seq("_t", "_b"), idCol, _))
+    (bounded, () => { banded.unpersist(); unitVecs.unpersist(); () })
   }
 
   /** [[semanticNearDupPairs]] under a global candidate-pair budget:
@@ -509,8 +509,10 @@ object Similarity {
     * the cosine verify — SemDeDup's own "keep one per tight cluster"
     * degenerate case). Under-budget ⇒ pairs equal
     * [[semanticNearDupPairs]] with the same `maxCellRows`, clusters
-    * empty. The cleanup hook unpersists the (id, cell) assignment
-    * (call only after both output frames are materialized). */
+    * empty — the prune and the representatives run only when the
+    * budget decision binds ([[graft.ops.PairBudget.bounded]]). The
+    * cleanup hook unpersists the (id, cell) assignment (call only
+    * after both output frames are materialized). */
   def semanticNearDupPairsBounded(
       embeddings: DataFrame, idCol: String, vecCol: String,
       threshold: Double, centroids: Array[Array[Double]],
@@ -521,13 +523,12 @@ object Similarity {
       .select(col(idCol), col("_cell"))
       .persist(graft.ops.Caches.memoLevel(embeddings.sparkSession))
     val sizes = cells.groupBy(col("_cell")).agg(count(lit(1)).as("_cn"))
-    val cap = math.min(maxCellRows,
-      graft.ops.PairBudget.sizeCap(sizes, "_cn", maxPairs))
-    val pairs = cosineVerify(
-      bucketCandidates(cells, Seq("_cell"), idCol, sizes, "_cn", cap),
-      unitVecsOf(embeddings, idCol, vecCol), idCol, threshold)
-    val clusters = graft.ops.PairBudget.representatives(
-      cells, Seq("_cell"), idCol, cap)
-    (graft.ops.BoundedPairs(pairs, clusters, cap), () => { cells.unpersist(); () })
+    val bounded = graft.ops.PairBudget.bounded(cells, idCol,
+      graft.ops.PairBudget.sizeCap(sizes, "_cn", maxPairs), maxCellRows,
+      cap => cosineVerify(
+        bucketCandidates(cells, Seq("_cell"), idCol, sizes, "_cn", cap),
+        unitVecsOf(embeddings, idCol, vecCol), idCol, threshold),
+      graft.ops.PairBudget.representatives(cells, Seq("_cell"), idCol, _))
+    (bounded, () => { cells.unpersist(); () })
   }
 }

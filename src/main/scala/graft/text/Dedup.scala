@@ -91,7 +91,10 @@ object Dedup {
     * representative clusters (min id per bucket — the
     * [[minHashOversizedBuckets]] playbook applied as output). On an
     * under-budget corpus this is EXACTLY [[minHashCandidatePairs]]
-    * with empty clusters. */
+    * with empty clusters. The prune and the representatives run only
+    * when the one budget decision binds ([[PairBudget.bounded]]): with
+    * every bucket within the effective cap the band join is unpruned
+    * and the clusters frame is empty by plan, not by execution. */
   def minHashCandidatePairsBounded(
       signatures: DataFrame, idCol: String,
       numHashes: Int = 32, bands: Int = 8,
@@ -100,25 +103,24 @@ object Dedup {
     // persist the narrow (band, hash, id) triples: the budget decision
     // is a SEPARATE driver job (histogram collect) before the pair
     // plan, so without the cache the signature computation would run
-    // once for the histogram and again for the join + representatives
-    // (AQE reuses exchanges within one plan, not across jobs). ~24 B/
-    // (doc·band), MEMORY_AND_DISK, session-lifetime LRU — the same
-    // policy as the curate pipeline's signature cache.
+    // once for the histogram and again for the join (and, when the
+    // decision binds, the representatives; AQE reuses exchanges within
+    // one plan, not across jobs). ~24 B/(doc·band), MEMORY_AND_DISK,
+    // session-lifetime LRU — the same policy as the curate pipeline's
+    // signature cache.
     val banded = bandedTriples(signatures, idCol, numHashes, bands)
       .persist(graft.ops.Caches.memoLevel(signatures.sparkSession))
-    val cap = math.min(maxBucketRows,
-      PairBudget.sizeCap(bucketCounts(banded), "_bn", maxPairs))
-    BoundedPairs(
-      bandPairJoin(banded, idCol, cap),
-      PairBudget.representatives(banded, Seq("band_idx", "band_hash"), idCol, cap),
-      cap,
+    PairBudget.bounded(banded, idCol,
+      PairBudget.sizeCap(bucketCounts(banded), "_bn", maxPairs), maxBucketRows,
+      bandPairJoin(banded, idCol, _),
+      PairBudget.representatives(banded, Seq("band_idx", "band_hash"), idCol, _),
       () => { banded.unpersist(); () })
   }
 
   /** Bucket-capped candidate self-join over (band_idx, band_hash)
     * membership triples — the shared tail of the capped and budgeted
     * forms. */
-  private def bandPairJoin(
+  private[graft] def bandPairJoin(
       banded: DataFrame, idCol: String, maxBucketRows: Long): DataFrame = {
     // hot-bucket guard: cap group size before the quadratic self-join
     // (PairBudget.capPrune picks anti-broadcast vs semi by regime —
@@ -166,7 +168,7 @@ object Dedup {
       .select(col(idCol), col("band.band_idx"), col("band.band_hash"))
   }
 
-  private def bucketCounts(banded: DataFrame): DataFrame =
+  private[graft] def bucketCounts(banded: DataFrame): DataFrame =
     banded.groupBy(col("band_idx"), col("band_hash"))
       .agg(count(lit(1)).as("_bn"))
 
@@ -226,7 +228,8 @@ object Dedup {
     * over-cap blocks emit (id, rep_id) representative clusters —
     * candidate-level, i.e. members share a simhash bit-block but
     * skipped the exact popcount verify. Under-budget ⇒ pairs equal the
-    * unbounded form, clusters empty. */
+    * unbounded form, clusters empty; as there, the prune and the
+    * representatives run only when the budget decision binds. */
   def simHashNearDupPairsBounded(
       sims: DataFrame, idCol: String, simhashCol: String,
       maxHamming: Int = 3, blocks: Int = 4,
@@ -236,22 +239,21 @@ object Dedup {
       s"pigeonhole needs maxHamming < blocks ($maxHamming >= $blocks)")
     // persist: see minHashCandidatePairsBounded — the histogram job
     // precedes the pair plan, and the cached triples also serve the
-    // representatives pass
+    // representatives pass when the decision binds
     val blocked = simHashBlocked(sims, idCol, simhashCol, blocks)
       .persist(graft.ops.Caches.memoLevel(sims.sparkSession))
     val sizes = blocked.groupBy(col("block_idx"), col("block_val"))
       .agg(count(lit(1)).as("_bn"))
-    val cap = math.min(maxBucketRows, PairBudget.sizeCap(sizes, "_bn", maxPairs))
-    BoundedPairs(
-      simHashPairJoin(blocked, idCol, simhashCol, maxHamming, cap),
-      PairBudget.representatives(blocked, Seq("block_idx", "block_val"), idCol, cap),
-      cap,
+    PairBudget.bounded(blocked, idCol,
+      PairBudget.sizeCap(sizes, "_bn", maxPairs), maxBucketRows,
+      simHashPairJoin(blocked, idCol, simhashCol, maxHamming, _),
+      PairBudget.representatives(blocked, Seq("block_idx", "block_val"), idCol, _),
       () => { blocked.unpersist(); () })
   }
 
   /** (id, simhash, block_idx, block_val) membership rows — one per
     * bit-block per doc. */
-  private def simHashBlocked(
+  private[graft] def simHashBlocked(
       sims: DataFrame, idCol: String, simhashCol: String, blocks: Int): DataFrame = {
     val blockBits = 60 / blocks // 60-bit simhash (md5Top60 base)
     val mask = (1L << blockBits) - 1
@@ -264,7 +266,7 @@ object Dedup {
         col("_blk.block_idx").as("block_idx"), col("_blk.block_val").as("block_val"))
   }
 
-  private def simHashPairJoin(
+  private[graft] def simHashPairJoin(
       blocked: DataFrame, idCol: String, simhashCol: String,
       maxHamming: Int, maxBucketRows: Long): DataFrame = {
     val pruned = PairBudget.capPrune(
@@ -571,7 +573,11 @@ object Dedup {
     * representative clusters (linear), and grams over maxDocFreq stay
     * DROPPED (stop-grams are boilerplate noise, not duplicate
     * evidence — same semantics as the unbounded form). Under-budget ≡
-    * unbounded; sizeCap is deterministic and oracle-replayable. */
+    * unbounded; sizeCap is deterministic and oracle-replayable. The
+    * histogram holds only the df ≤ maxDocFreq grams, so the budget
+    * decision binds only when the budget itself does; otherwise the
+    * pair join reads the df-capped grams unpruned and the clusters are
+    * empty by plan ([[graft.ops.PairBudget.bounded]]). */
   def sharedSpanPairsBounded(
       df: DataFrame,
       idCol: String,
@@ -590,32 +596,31 @@ object Dedup {
     // most expensive node in the family (a ~corpus-sized exchange of
     // gram keys — 83 s at sf10 vs 11 s for the selection scan itself)
     // and every downstream consumer re-derives it (the budget collect,
-    // the informative semi-join, capPrune inside the pair join, the
-    // representatives job — and q_shared_span_pairs' own plan, which
-    // Spark's CacheManager substitutes from this cache because the
-    // analyzed fragment is identical). Before this persist the
-    // histogram was recomputed 1-2x PER QUERY at full price; the
-    // budget collect below materializes both caches once, inside the
-    // one-time build the warmup policy already accounts for.
+    // the informative semi-join, and when the decision binds capPrune
+    // inside the pair join and the representatives job — and
+    // q_shared_span_pairs' own plan, which Spark's CacheManager
+    // substitutes from this cache because the analyzed fragment is
+    // identical). Before this persist the histogram was recomputed
+    // 1-2x PER QUERY at full price; the budget collect below
+    // materializes both caches once, inside the one-time build the
+    // warmup policy already accounts for.
     val sizes = gramDocFreq(sel)
       .persist(graft.ops.Caches.memoLevel(df.sparkSession))
     val informative = sel.join(
       sizes.filter(col("_df") <= maxDocFreq).select(col("_gram")),
       Seq("_gram"), "left_semi")
-    val cap = math.min(maxDocFreq,
+    graft.ops.PairBudget.bounded(informative, idCol,
       graft.ops.PairBudget.sizeCap(
-        sizes.filter(col("_df") <= maxDocFreq), "_df", maxPairs))
-    graft.ops.BoundedPairs(
-      spanPairJoin(informative, sizes, cap, minShared),
+        sizes.filter(col("_df") <= maxDocFreq), "_df", maxPairs), maxDocFreq,
+      spanPairJoin(informative, sizes, _, minShared),
       // the persisted histogram already knows the over-cap gram set
       // (`informative` holds exactly the df ≤ maxDocFreq grams, so
       // over-cap within it = cap < df ≤ maxDocFreq) — pass it instead
       // of letting the generic form re-aggregate the corpus-scale
       // membership stream (sf100 disk-exhaustion fix)
-      graft.ops.PairBudget.representativesWith(informative, Seq("_gram"), idCol,
+      cap => graft.ops.PairBudget.representativesWith(informative, Seq("_gram"), idCol,
         sizes.filter(col("_df") <= maxDocFreq && col("_df") > cap)
           .select(col("_gram"))),
-      cap,
       () => { sizes.unpersist(); sel.unpersist(); () })
   }
 
@@ -636,7 +641,7 @@ object Dedup {
     * floor of any dedup decision. Everything downstream (df cap,
     * budget histogram, pair join, representatives) is agnostic to
     * the key's type. */
-  private def selectedGrams(
+  private[graft] def selectedGrams(
       df: DataFrame, idCol: String, textCol: String, k: Int, w: Int,
       rollingHash: Boolean): DataFrame =
     if (rollingHash)
@@ -650,13 +655,13 @@ object Dedup {
         explode(graft.functions.TextHashExpressions.winnowingGrams(
           col(textCol), k, w)).as("_gram"))
 
-  private def gramDocFreq(sel: DataFrame): DataFrame =
+  private[graft] def gramDocFreq(sel: DataFrame): DataFrame =
     sel.groupBy(col("_gram")).agg(count(lit(1)).as("_df"))
 
   /** Shared tail of the capped and budgeted span-pair forms: df-cap
     * prune (PairBudget.capPrune picks anti-broadcast vs semi by
     * regime), equi-self-join on the gram string, shared-gram count. */
-  private def spanPairJoin(
+  private[graft] def spanPairJoin(
       sel: DataFrame, sizes: DataFrame, cap: Long, minShared: Long): DataFrame = {
     val pruned = graft.ops.PairBudget.capPrune(
       sel, sizes, "_df", Seq("_gram"), cap)

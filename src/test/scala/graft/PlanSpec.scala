@@ -3,6 +3,7 @@ package graft
 import graft.ops.Filters
 import graft.queries.Registry
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -354,6 +355,22 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastExchange"), p)
     // the guard is an aggregate over (band_idx, band_hash) counts
     assert(p.contains("_bn"), p)
+  }
+
+  test("under budget the bounded minhash join plans no prune and its clusters fold to an empty relation") {
+    import spark.implicits._
+    val sigs = graft.text.Dedup.minHashSignatures(
+      Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text"),
+      "doc_id", "text", numHashes = 16, shingleSize = 3)
+    val b = graft.text.Dedup.minHashCandidatePairsBounded(sigs, "doc_id", numHashes = 16, bands = 4)
+    val p = b.pairs.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(!p.contains("LeftAnti") && !p.contains("LeftSemi"), p)
+    assert(b.clusters.columns.toSeq == Seq("doc_id", "rep_id"))
+    b.clusters.queryExecution.optimizedPlan match {
+      case l: LocalRelation => assert(l.data.isEmpty, l)
+      case other            => fail(s"clusters plan is not an empty local relation: $other")
+    }
+    b.cleanup()
   }
 
   test("wordJaccard prunes the corpus with a semi-join before the word explode") {

@@ -1,11 +1,13 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.sim.Similarity
 import graft.text.{Dedup, DedupIndex}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.scalacheck.Gen
+import org.scalatest.Assertions.assert
 import org.scalacheck.rng.Seed
 
 /** Reference formulations of operators whose production plans were
@@ -111,6 +113,148 @@ object ReferenceFormulations {
       .join(broadcast(bSigs), Seq("batch_id"))
       .select(col("corpus_id"), col("batch_id"),
         (agree.cast("double") / numHashes).as("est_jaccard"))
+  }
+
+  /** Runs `body` at `partitions` shuffle partitions with partition
+    * coalescing off, restoring both settings afterwards. */
+  def withShufflePartitions[A](spark: SparkSession, partitions: Int)(body: => A): A = {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), partitions.toString)
+    spark.conf.set(keys(1), "false")
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** A bounded operator's (pairs, clusters, sizeCap), the frames as row
+    * sets, built and collected at `partitions` shuffle partitions. */
+  def boundedResult(spark: SparkSession, partitions: Int)(
+      op: => BoundedPairs): (Set[Row], Set[Row], Long) =
+    withShufflePartitions(spark, partitions) {
+      val b = op
+      try (b.pairs.collect().toSet, b.clusters.collect().toSet, b.sizeCap)
+      finally b.cleanup()
+    }
+
+  /** The two skew-cap edges of a bounded operator against its
+    * always-pruned reference, at 1 and 7 shuffle partitions: a skew cap
+    * at half the largest bucket (only it binds; the budget is open) and
+    * one equal to the largest bucket (nothing binds). Asserts equal
+    * (pairs, clusters, sizeCap) and returns the operator's clusters per
+    * skew cap, for the caller's own checks. */
+  def skewCapEdges(spark: SparkSession, largest: Long)(
+      op: Long => BoundedPairs, ref: Long => BoundedPairs): Map[Long, Set[Row]] =
+    (for (cap <- Seq(largest / 2, largest); p <- Seq(1, 7)) yield {
+      val got = boundedResult(spark, p)(op(cap))
+      assert(got == boundedResult(spark, p)(ref(cap)),
+        s"skew cap $cap, largest bucket $largest, $p partitions")
+      cap -> got._2
+    }).toMap
+
+  /** The pair-budget cap from an `orderBy`-sorted histogram of the
+    * non-singleton buckets, walked smallest-first. */
+  def pairBudgetCapSorted(bucketSizes: DataFrame, nCol: String, maxPairs: Long): Long = {
+    val hist = bucketSizes
+      .filter(col(nCol) > 1)
+      .groupBy(col(nCol).as("_size"))
+      .agg(sum((col(nCol).cast("decimal(38,0)") * (col(nCol) - 1).cast("decimal(38,0)")) / 2)
+        .as("_pairs"))
+      .orderBy(col("_size"))
+      .collect()
+    var spent = BigInt(0)
+    var cap = Long.MaxValue
+    var i = 0
+    while (i < hist.length && cap == Long.MaxValue) {
+      val p = BigInt(hist(i).getDecimal(1).toBigInteger)
+      if (spent + p > BigInt(maxPairs)) cap = math.max(hist(i).getLong(0) - 1, 1L)
+      else spent += p
+      i += 1
+    }
+    cap
+  }
+
+  // The five budgeted near-dup forms with no budget short-cut: the
+  // pair join is cap-pruned and the representative clusters planned
+  // whatever the bucket histogram shows.
+
+  /** The budgeted band join: always pruned, always representatives. */
+  private def alwaysPruned(
+      members: DataFrame, keys: Seq[String], idCol: String,
+      sizes: DataFrame, nCol: String, skewCap: Long, maxPairs: Long)(
+      pairJoin: Long => DataFrame): BoundedPairs = {
+    val cap = math.min(skewCap, pairBudgetCapSorted(sizes, nCol, maxPairs))
+    BoundedPairs(pairJoin(cap), PairBudget.representatives(members, keys, idCol, cap), cap)
+  }
+
+  def minHashPairsAlwaysPruned(
+      signatures: DataFrame, idCol: String, numHashes: Int = 32, bands: Int = 8,
+      maxBucketRows: Long = 100000L, maxPairs: Long = 10000000L): BoundedPairs = {
+    val banded = Dedup.bandedTriples(signatures, idCol, numHashes, bands)
+    alwaysPruned(banded, Seq("band_idx", "band_hash"), idCol,
+      Dedup.bucketCounts(banded), "_bn", maxBucketRows, maxPairs)(
+      Dedup.bandPairJoin(banded, idCol, _))
+  }
+
+  def simHashPairsAlwaysPruned(
+      sims: DataFrame, idCol: String, simhashCol: String,
+      maxHamming: Int = 3, blocks: Int = 4,
+      maxBucketRows: Long = 100000L, maxPairs: Long = 10000000L): BoundedPairs = {
+    val blocked = Dedup.simHashBlocked(sims, idCol, simhashCol, blocks)
+    val keys = Seq("block_idx", "block_val")
+    alwaysPruned(blocked, keys, idCol,
+      blocked.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_bn")), "_bn",
+      maxBucketRows, maxPairs)(
+      Dedup.simHashPairJoin(blocked, idCol, simhashCol, maxHamming, _))
+  }
+
+  /** The span form keeps its df cap: grams over `maxDocFreq` are
+    * dropped before the budget, and the representatives come from the
+    * histogram's over-cap gram set. */
+  def sharedSpanPairsAlwaysPruned(
+      df: DataFrame, idCol: String, textCol: String, k: Int, w: Int,
+      maxDocFreq: Long, minShared: Long, maxPairs: Long,
+      rollingHash: Boolean = Dedup.defaultRollingHash): BoundedPairs = {
+    val sel = Dedup.selectedGrams(df, idCol, textCol, k, w, rollingHash)
+    val sizes = Dedup.gramDocFreq(sel)
+    val informative = sel.join(
+      sizes.filter(col("_df") <= maxDocFreq).select(col("_gram")), Seq("_gram"), "left_semi")
+    val cap = math.min(maxDocFreq,
+      pairBudgetCapSorted(sizes.filter(col("_df") <= maxDocFreq), "_df", maxPairs))
+    BoundedPairs(
+      Dedup.spanPairJoin(informative, sizes, cap, minShared),
+      PairBudget.representativesWith(informative, Seq("_gram"), idCol,
+        sizes.filter(col("_df") <= maxDocFreq && col("_df") > cap).select(col("_gram"))),
+      cap)
+  }
+
+  def cosinePairsAlwaysPruned(
+      embeddings: DataFrame, idCol: String, vecCol: String, dim: Int, threshold: Double,
+      numPlanes: Int, numTables: Int, maxBucketRows: Long = 100000L,
+      maxPairs: Long = 10000000L): BoundedPairs = {
+    val unitVecs = Similarity.unitVecsOf(embeddings, idCol, vecCol)
+    val banded = Similarity.signLshTriples(unitVecs, idCol, dim, numPlanes, numTables)
+    val keys = Seq("_t", "_b")
+    val sizes = banded.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_bn"))
+    alwaysPruned(banded, keys, idCol, sizes, "_bn", maxBucketRows, maxPairs)(cap =>
+      Similarity.cosineVerify(
+        Similarity.bucketCandidates(banded, keys, idCol, sizes, "_bn", cap).distinct(),
+        unitVecs, idCol, threshold))
+  }
+
+  def semanticPairsAlwaysPruned(
+      embeddings: DataFrame, idCol: String, vecCol: String, threshold: Double,
+      centroids: Array[Array[Double]], maxCellRows: Long = 100000L,
+      maxPairs: Long = 10000000L): BoundedPairs = {
+    val cells = Similarity.assignCells(embeddings, vecCol, centroids)
+      .select(col(idCol), col("_cell"))
+    val sizes = cells.groupBy(col("_cell")).agg(count(lit(1)).as("_cn"))
+    alwaysPruned(cells, Seq("_cell"), idCol, sizes, "_cn", maxCellRows, maxPairs)(cap =>
+      Similarity.cosineVerify(
+        Similarity.bucketCandidates(cells, Seq("_cell"), idCol, sizes, "_cn", cap),
+        Similarity.unitVecsOf(embeddings, idCol, vecCol), idCol, threshold))
   }
 }
 

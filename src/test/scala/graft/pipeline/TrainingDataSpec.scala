@@ -12,19 +12,20 @@ class TrainingDataSpec extends SparkSpec {
   private val short = "the cat"
   private val german = "der hund und die katze ist hier und der vogel singt in der luft heute"
 
+  private val fixture = Seq(
+    (1L, good),
+    (2L, good), // exact dup of 1
+    (3L, good + " extra tail words here"), // near dup of 1
+    (4L, junk),
+    (5L, short),
+    (6L, german),
+    (7L, "completely different english text about query engines shuffles and the big table scans"))
+  private val fixtureConfig = TrainingData.CurationConfig(minQuality = 0.3, langs = Set("en"),
+    minTokens = 5, nearDupJaccard = 0.6)
+
   test("curate gates quality/lang/length, removes exact and near dups") {
-    val docs = Seq(
-      (1L, good),
-      (2L, good), // exact dup of 1
-      (3L, good + " extra tail words here"), // near dup of 1
-      (4L, junk),
-      (5L, short),
-      (6L, german),
-      (7L, "completely different english text about query engines shuffles and the big table scans")
-    ).toDF("doc_id", "text")
-    val (kept, reasons) = TrainingData.curate(docs, "doc_id", "text",
-      TrainingData.CurationConfig(minQuality = 0.3, langs = Set("en"),
-        minTokens = 5, nearDupJaccard = 0.6))
+    val docs = fixture.toDF("doc_id", "text")
+    val (kept, reasons) = TrainingData.curate(docs, "doc_id", "text", fixtureConfig)
     val ids = kept.select("doc_id").as[Long].collect().toSet
     assert(ids.contains(1L))
     assert(!ids.contains(2L), "exact dup survived")
@@ -38,6 +39,18 @@ class TrainingDataSpec extends SparkSpec {
     // "the cat" trips the quality gate before the length gate (reason
     // chain checks quality first); junk + short both land there
     assert(r.getOrElse("low_quality", 0L) >= 2L)
+  }
+
+  test("curating the spec fixture runs 20 Spark jobs") {
+    // ids shifted so that no earlier test's cached stages serve this
+    // curation. Under budget the band join is unpruned and the
+    // representative clusters plan nothing (PairBudget.bounded); with
+    // the prune and the representatives always planned it ran 28.
+    val docs = fixture.map { case (id, t) => (id + 100L, t) }.toDF("doc_id", "text")
+    val jobs = jobsOf {
+      TrainingData.curateFull(docs, "doc_id", "text", fixtureConfig).kept.count(): Unit
+    }
+    assert(jobs == 20, s"$jobs jobs")
   }
 
   test("stratifiedSample: content-hash subset at the target rate, partitioning-independent") {

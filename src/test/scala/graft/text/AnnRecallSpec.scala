@@ -150,12 +150,21 @@ class AnnRecallSpec extends SparkSpec {
 
   test("a 1000-query eval set completes through the chunked path with clustered-regime recall") {
     // 1000 struct literals in ONE projection would trip Janino's 64KB
-    // method limit (the round-12 caveat); the 256-query chunking keeps
-    // each generated method bounded while the recall semantics match
-    // the headline tests. One query per 5 ids spans all 200 clusters.
+    // method limit (the round-12 caveat); the chunking keeps each
+    // generated method bounded while the recall semantics match the
+    // headline tests. Codegen fallback is off, so a chunk too large to
+    // compile fails here instead of running interpreted. One query per
+    // 5 ids spans all 200 clusters.
     val qids = (0 until 1000).map(i => (i * 5).toLong)
-    val r = AnnRecall.measure(clustered10x, "vec_id", "embedding", dim,
+    val fallback = "spark.sql.codegen.fallback"
+    val saved = spark.conf.getOption(fallback)
+    spark.conf.set(fallback, "false")
+    val r = try AnnRecall.measure(clustered10x, "vec_id", "embedding", dim,
       qids, k = 10, AnnConfig())
+    finally saved match {
+      case Some(v) => spark.conf.set(fallback, v)
+      case None    => spark.conf.unset(fallback)
+    }
     assert(r.keySet == Set("lsh", "ivf", "pq", "ivfpq"))
     assert(r("lsh") >= 0.90, s"lsh recall ${r("lsh")}")
     assert(r("ivf") >= 0.90, s"ivf recall ${r("ivf")}")

@@ -1,7 +1,5 @@
 package graft.text
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -204,18 +202,6 @@ class DedupIndexSpec extends SparkSpec {
     (roots.map(edit), df)
   }
 
-  private def withPartitions[A](p: Int)(body: => A): A = {
-    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(keys(0), p.toString)
-    spark.conf.set(keys(1), "false")
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def tripleSet(df: DataFrame): Set[(Long, Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
@@ -238,7 +224,7 @@ class DedupIndexSpec extends SparkSpec {
       ("maxBroadcastCandidates = 0", DedupIndex.DefaultMaxBucketRows, 0L))
     val results = for {
       p <- Seq(1, 7); (bName, b) <- batches; (rName, cap, ceiling) <- regimes
-    } yield withPartitions(p) {
+    } yield ReferenceFormulations.withShufflePartitions(spark, p) {
       val got = tripleSet(DedupIndex.probePairs(spark, path, b, "doc_id", "text",
         maxBucketRows = cap, maxBroadcastCandidates = ceiling))
       val want = tripleSet(ReferenceFormulations.dedupIndexProbePairs(spark, path, b, "doc_id", "text",
@@ -273,23 +259,9 @@ class DedupIndexSpec extends SparkSpec {
     // stage that broadcasts it, the final stage).
     val path = tmp("jobs")
     DedupIndex.write(corpus, "doc_id", "text", path)
-    val group = "dedupindex-probe-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet(): Unit
+    val jobs = jobsOf {
+      DedupIndex.newDocs(spark, path, batch, "doc_id", "text", threshold = 0.5).collect(): Unit
     }
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "newDocs probe")
-    try DedupIndex.newDocs(spark, path, batch, "doc_id", "text", threshold = 0.5).collect()
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get == 12, s"${jobs.get} jobs")
+    assert(jobs == 12, s"$jobs jobs")
   }
 }

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.SparkSpec
+import graft.ops.ReferenceFormulations
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -290,10 +291,18 @@ class DedupSpec extends SparkSpec {
     // 10 buckets of 2 (10 pairs), 2 of 5 (20), 1 of 100 (4950), singletons ignored
     val sizes = ((1 to 10).map(_ => 2L) ++ Seq(5L, 5L, 100L) ++ (1 to 50).map(_ => 1L))
       .toDF("_bn")
-    assert(PairBudget.sizeCap(sizes, "_bn", 9L) == 1L) // even size-2s blow it
-    assert(PairBudget.sizeCap(sizes, "_bn", 10L) == 4L) // 2s fit, 5s don't
-    assert(PairBudget.sizeCap(sizes, "_bn", 30L) == 99L) // 2s+5s fit, 100 doesn't
-    assert(PairBudget.sizeCap(sizes, "_bn", 4980L) == Long.MaxValue) // all fit
+    val d9 = PairBudget.sizeCap(sizes, "_bn", 9L)
+    assert(d9.cap == 1L) // even size-2s blow it
+    assert(d9.largest == 100L)
+    val d10 = PairBudget.sizeCap(sizes, "_bn", 10L)
+    assert(d10.cap == 4L) // 2s fit, 5s don't
+    assert(d10.largest == 100L)
+    val d30 = PairBudget.sizeCap(sizes, "_bn", 30L)
+    assert(d30.cap == 99L) // 2s+5s fit, 100 doesn't
+    assert(d30.largest == 100L)
+    val dAll = PairBudget.sizeCap(sizes, "_bn", 4980L)
+    assert(dAll.cap == Long.MaxValue) // all fit
+    assert(dAll.largest == 100L)
   }
 
   test("minHashCandidatePairsBounded: under budget ≡ unbounded, clusters empty") {
@@ -305,6 +314,18 @@ class DedupSpec extends SparkSpec {
     // effective cap = min(default maxBucketRows, budget cap); the
     // budget itself does not bind on this corpus
     assert(bounded == full && b.clusters.count() == 0L && b.sizeCap == 100000L)
+    // the skew-cap edges on a 40-member clique
+    val clique = (docs.collect().map(r => (r.getLong(0), r.getString(1))) ++
+      (100L until 140L).map(i => (i, base + " boilerplate footer text")))
+      .toSeq.toDF("doc_id", "text")
+    val cSigs = Dedup.minHashSignatures(clique, "doc_id", "text", numHashes = 16, shingleSize = 3)
+    val largest = Dedup.bucketCounts(Dedup.bandedTriples(cSigs, "doc_id", 16, 4))
+      .agg(max(col("_bn"))).head().getLong(0)
+    assert(largest >= 40L, s"largest bucket $largest")
+    val clusters = ReferenceFormulations.skewCapEdges(spark, largest)(
+      cap => Dedup.minHashCandidatePairsBounded(cSigs, "doc_id", 16, 4, cap, 1000000000L),
+      cap => ReferenceFormulations.minHashPairsAlwaysPruned(cSigs, "doc_id", 16, 4, cap, 1000000000L))
+    assert(clusters(largest / 2).nonEmpty && clusters(largest).isEmpty)
   }
 
   test("minHashCandidatePairsBounded: binding budget degrades cliques to representatives") {
@@ -340,6 +361,16 @@ class DedupSpec extends SparkSpec {
       maxBucketRows = Long.MaxValue, maxPairs = 1000000000L)
     assert(under.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == full)
     assert(under.clusters.count() == 0L)
+    val largest = Dedup.simHashBlocked(sims, "doc_id", "simhash", 4)
+      .groupBy(col("block_idx"), col("block_val")).count()
+      .agg(max(col("count"))).head().getLong(0)
+    assert(largest >= 60L, s"largest block $largest")
+    val clusters = ReferenceFormulations.skewCapEdges(spark, largest)(
+      cap => Dedup.simHashNearDupPairsBounded(sims, "doc_id", "simhash",
+        maxBucketRows = cap, maxPairs = 1000000000L),
+      cap => ReferenceFormulations.simHashPairsAlwaysPruned(sims, "doc_id", "simhash",
+        maxBucketRows = cap, maxPairs = 1000000000L))
+    assert(clusters(largest / 2).nonEmpty && clusters(largest).isEmpty)
     // identical docs → identical simhashes → 60-member blocks; a tiny
     // budget degrades them but keeps blocks within the cap enumerated
     val bound = Dedup.simHashNearDupPairsBounded(sims, "doc_id", "simhash",
@@ -509,6 +540,17 @@ class DedupSpec extends SparkSpec {
     assert(rows(under.pairs) == full)
     assert(under.clusters.count() == 0L)
     assert(under.sizeCap == 64L)
+    // the span form's skew cap is the df cap: below the largest df it
+    // drops those grams, so neither edge binds and both stay empty
+    val largest = Dedup.gramDocFreq(Dedup.selectedGrams(corpus, "doc_id", "text", k, w,
+      Dedup.defaultRollingHash)).agg(max(col("_df"))).head().getLong(0)
+    assert(largest == 30L, s"largest df $largest")
+    val edgeClusters = ReferenceFormulations.skewCapEdges(spark, largest)(
+      cap => Dedup.sharedSpanPairsBounded(corpus, "doc_id", "text", k, w,
+        maxDocFreq = cap, minShared = 1L, maxPairs = 1000000000L),
+      cap => ReferenceFormulations.sharedSpanPairsAlwaysPruned(corpus, "doc_id", "text", k, w,
+        maxDocFreq = cap, minShared = 1L, maxPairs = 1000000000L))
+    assert(edgeClusters.values.forall(_.isEmpty))
     // a binding budget collapses the 30-doc gram groups to reps —
     // every clique member maps to the min id reachable through a
     // shared gram group (1 for the grams all 30 share)

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.SparkSpec
+import graft.ops.ReferenceFormulations
 import graft.sim.Similarity
 import org.apache.spark.sql.functions._
 
@@ -511,6 +512,21 @@ class TextSimSpec extends SparkSpec {
     assert(under.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == full)
     assert(under.clusters.count() == 0L && under.sizeCap == 100000L)
     c1()
+    val largest = Similarity.signLshTriples(
+        Similarity.unitVecsOf(vecs, "vec_id", "embedding"), "vec_id", 8, 4, 2)
+      .groupBy(col("_t"), col("_b")).count().agg(max(col("count"))).head().getLong(0)
+    assert(largest >= 25L, s"largest bucket $largest")
+    val clusters = ReferenceFormulations.skewCapEdges(spark, largest)(
+      cap => {
+        val (b, c) = Similarity.cosineNearDupPairsBounded(vecs, "vec_id", "embedding",
+          dim = 8, threshold = 0.9, numPlanes = 4, numTables = 2, maxBucketRows = cap,
+          minPlanes = 2, maxPairs = 1000000000L)
+        b.copy(cleanup = c)
+      },
+      cap => ReferenceFormulations.cosinePairsAlwaysPruned(vecs, "vec_id", "embedding",
+        dim = 8, threshold = 0.9, numPlanes = 4, numTables = 2, maxBucketRows = cap,
+        maxPairs = 1000000000L))
+    assert(clusters(largest / 2).nonEmpty && clusters(largest).isEmpty)
     // budget below the pile's C(25,2)=300 per table: pile degrades to
     // (id, rep_id), the small clean bucket still pair-enumerates
     val (bound, c2) = Similarity.cosineNearDupPairsBounded(vecs, "vec_id", "embedding",
@@ -539,6 +555,18 @@ class TextSimSpec extends SparkSpec {
     assert(under.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == full)
     assert(under.clusters.count() == 0L && under.sizeCap == 100000L)
     c1()
+    val largest = Similarity.assignCells(vecs, "embedding", cents)
+      .groupBy(col("_cell")).count().agg(max(col("count"))).head().getLong(0)
+    assert(largest >= 30L, s"largest cell $largest")
+    val clusters = ReferenceFormulations.skewCapEdges(spark, largest)(
+      cap => {
+        val (b, c) = Similarity.semanticNearDupPairsBounded(vecs, "vec_id", "embedding",
+          threshold = 0.9, cents, maxCellRows = cap, maxPairs = 1000000000L)
+        b.copy(cleanup = c)
+      },
+      cap => ReferenceFormulations.semanticPairsAlwaysPruned(vecs, "vec_id", "embedding",
+        threshold = 0.9, cents, maxCellRows = cap, maxPairs = 1000000000L))
+    assert(clusters(largest / 2).nonEmpty && clusters(largest).isEmpty)
     // budget 10 < C(30,2)=435: the pile cell degrades, the 2-cell pair survives
     val (bound, c2) = Similarity.semanticNearDupPairsBounded(vecs, "vec_id", "embedding",
       threshold = 0.9, cents, maxPairs = 10L)

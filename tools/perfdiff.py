@@ -24,6 +24,11 @@ per-layer metrics from traced runs) the tool prints one Markdown row:
 
 The direction of each metric ("better": "lower" or "higher") comes from
 BENCHMARK.json.
+
+For traced pairs a second table counts Spark jobs per span name, from
+the `jobs` field of every span of every traced pass: each side's count
+(or its distinct counts with their frequencies when they differ), and
+whether both sides' counts repeat exactly across passes and runs.
 """
 import argparse
 import glob
@@ -107,6 +112,53 @@ def compare(parent_runs, change_runs, directions):
     return rows
 
 
+def span_jobs(runs, keys):
+    """{span name: [jobs of each span instance]} over the traced passes of `keys`."""
+    out = {}
+    for k in keys:
+        for p in runs[k]["raw"]["passes"]:
+            if p.get("traced"):
+                for s in p["spans"]:
+                    out.setdefault(s["name"], []).append(s["jobs"])
+    return out
+
+
+def job_counts(parent_runs, change_runs):
+    """One dict per (workload, span name) over the traced pairs: each side's
+    job counts per span instance and whether both repeat exactly."""
+    rows = []
+    pairs = sorted(k for k in set(parent_runs) & set(change_runs) if k[2])
+    for workload in sorted({w for w, _, _ in pairs}):
+        keys = [k for k in pairs if k[0] == workload]
+        pj, cj = span_jobs(parent_runs, keys), span_jobs(change_runs, keys)
+        for name in sorted(set(pj) | set(cj)):
+            p, c = pj.get(name, []), cj.get(name, [])
+            rows.append({"workload": workload, "span": name, "runs": len(keys),
+                         "parent": p, "change": c,
+                         "exact": len(set(p)) <= 1 and len(set(c)) <= 1})
+    return rows
+
+
+def fmt_jobs(counts):
+    """`13` when every instance ran 13 jobs, else `11×3, 13×17`; `-` for none."""
+    if not counts:
+        return "-"
+    distinct = sorted(set(counts))
+    if len(distinct) == 1:
+        return str(distinct[0])
+    return ", ".join(f"{v}×{counts.count(v)}" for v in distinct)
+
+
+def render_jobs(rows):
+    lines = ["| workload | span | traced pairs | parent jobs | change jobs | repeats exactly |",
+             "|---|---|---|---|---|---|"]
+    for r in rows:
+        lines.append(
+            f"| {r['workload']} | {r['span']} | {r['runs']} | {fmt_jobs(r['parent'])} "
+            f"| {fmt_jobs(r['change'])} | {'yes' if r['exact'] else 'NO'} |")
+    return "\n".join(lines)
+
+
 def fmt(x):
     return f"{x:.4g}"
 
@@ -135,11 +187,16 @@ def main(argv=None):
     args = ap.parse_args(argv)
     with open(args.benchmark) as f:
         directions = metric_directions(json.load(f))
-    rows = compare(load_runs(args.parent_dir), load_runs(args.change_dir), directions)
+    parent_runs, change_runs = load_runs(args.parent_dir), load_runs(args.change_dir)
+    rows = compare(parent_runs, change_runs, directions)
     if not rows:
         print("perfdiff: no (workload, seed, trace) run present on both sides", file=sys.stderr)
         return 1
     print(render(rows))
+    jobs = job_counts(parent_runs, change_runs)
+    if jobs:
+        print()
+        print(render_jobs(jobs))
     return 0
 
 

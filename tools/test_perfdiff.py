@@ -26,11 +26,12 @@ BENCHMARK = {
 }
 
 
-def write(directory, workload, seed, trace, end_to_end, per_layer=None):
+def write(directory, workload, seed, trace, end_to_end, per_layer=None, passes=None):
     art = {
         "workload": workload, "seed": seed, "trace": trace,
         "end_to_end": {k: {"value": v, "unit": "s"} for k, v in end_to_end.items()},
         "per_layer": {k: {"value": v, "unit": "count"} for k, v in (per_layer or {}).items()},
+        "raw": {"passes": passes or []},
     }
     name = f"{workload}-seed{seed}-trace{int(trace)}.json"
     with open(os.path.join(directory, name), "w") as f:
@@ -57,8 +58,17 @@ class PerfDiffTest(unittest.TestCase):
                 "alloc_mb": 1300.0,
                 # a coin flip
                 "cpu_s": 10.0 + ((i + 1) % 2)})
-        write(self.parent, "lfq", 99, True, {"pass_s": 5.0}, {"spark.jobs": 15})
-        write(self.change, "lfq", 99, True, {"pass_s": 3.0}, {"spark.jobs": 11})
+        def traced_pass(jobs):
+            return {"traced": True, "spans": [{"name": n, "jobs": j} for n, j in jobs]}
+        untraced = {"traced": False, "spans": [{"name": "probe", "jobs": 99}]}
+        write(self.parent, "lfq", 99, True, {"pass_s": 5.0}, {"spark.jobs": 15}, [
+            untraced,
+            traced_pass([("curate", 11), ("probe", 20), ("probe", 20)]),
+            traced_pass([("curate", 11), ("probe", 20), ("probe", 20)])])
+        write(self.change, "lfq", 99, True, {"pass_s": 3.0}, {"spark.jobs": 11}, [
+            untraced,
+            traced_pass([("curate", 9), ("probe", 13), ("probe", 13)]),
+            traced_pass([("curate", 10), ("probe", 13), ("probe", 13), ("append", 2)])])
         # present on one side only: never paired
         write(self.change, "lfq", 50, False, {"pass_s": 0.1, "items_per_s": 1.0,
                                               "alloc_mb": 1.0, "cpu_s": 0.1})
@@ -96,6 +106,22 @@ class PerfDiffTest(unittest.TestCase):
         self.assertEqual((r["parent"][1], r["change"][1]), (15.0, 11.0))
         # one pair wins, but a gain needs ten pairs
         self.assertEqual(r["verdict"], "-")
+
+    def test_span_job_counts_per_side_flag_counts_that_do_not_repeat(self):
+        jobs = {r["span"]: r for r in perfdiff.job_counts(
+            perfdiff.load_runs(self.parent), perfdiff.load_runs(self.change))}
+        # traced passes only; every instance of a span name counts
+        self.assertEqual(jobs["probe"]["parent"], [20, 20, 20, 20])
+        self.assertEqual(jobs["probe"]["change"], [13, 13, 13, 13])
+        self.assertTrue(jobs["probe"]["exact"])
+        self.assertEqual(perfdiff.fmt_jobs(jobs["probe"]["change"]), "13")
+        self.assertFalse(jobs["curate"]["exact"])
+        self.assertEqual(perfdiff.fmt_jobs(jobs["curate"]["change"]), "9×1, 10×1")
+        # a span on one side only shows as absent on the other
+        self.assertEqual(perfdiff.fmt_jobs(jobs["append"]["parent"]), "-")
+        table = perfdiff.render_jobs(list(jobs.values()))
+        self.assertIn("| lfq | curate | 1 | 11 | 9×1, 10×1 | NO |", table)
+        self.assertIn("| lfq | probe | 1 | 20 | 13 | yes |", table)
 
     def test_render_has_one_row_per_metric(self):
         table = perfdiff.render(list(self.rows.values()))
