@@ -130,14 +130,7 @@ object PairBudget {
     *                unconditionally)
     * @param largest the largest bucket size (0 with no buckets)
     */
-  final case class Decision(cap: Long, largest: Long) {
-    /** The cap [[BoundedPairs.sizeCap]] records: the caller's skew
-      * cap or the budget cap, whichever is smaller. */
-    def effectiveCap(skewCap: Long): Long = math.min(skewCap, cap)
-    /** Whether any bucket exceeds the effective cap — only then does
-      * the prune drop anything or a representative exist. */
-    def binds(skewCap: Long): Boolean = largest > effectiveCap(skewCap)
-  }
+  final case class Decision(cap: Long, largest: Long)
 
   /** The budget decision for a bucket-size frame (see object doc).
     *
@@ -163,12 +156,13 @@ object PairBudget {
       hist.lastOption.fold(0L)(_._1))
   }
 
-  /** A bounded operator's output from its one budget decision. When
-    * the decision binds, `pairJoin` prunes at the effective cap and
-    * `clusters` builds the representatives; otherwise `pairJoin` runs
-    * with `Long.MaxValue` ([[capPrune]]'s no-prune branch) and the
-    * clusters are an empty (id, rep_id) frame over `members` —
-    * result-identical, since no bucket is over the cap.
+  /** A bounded operator's output from its one budget decision. The
+    * effective cap is the smaller of the caller's skew cap and the
+    * budget cap. When the largest bucket exceeds it, `pairJoin` prunes
+    * at it and `clusters` builds the representatives; otherwise
+    * `pairJoin` runs with `Long.MaxValue` ([[capPrune]]'s no-prune
+    * branch) and the clusters are an empty (id, rep_id) frame over
+    * `members` — result-identical, since no bucket is over the cap.
     *
     * @param members  bucket-membership rows carrying `idCol`
     * @param skewCap  the caller's per-bucket cap (`maxBucketRows`)
@@ -177,8 +171,8 @@ object PairBudget {
       members: DataFrame, idCol: String, decision: Decision, skewCap: Long,
       pairJoin: Long => DataFrame, clusters: Long => DataFrame,
       cleanup: () => Unit = () => ()): BoundedPairs = {
-    val cap = decision.effectiveCap(skewCap)
-    if (decision.binds(skewCap)) BoundedPairs(pairJoin(cap), clusters(cap), cap, cleanup)
+    val cap = math.min(skewCap, decision.cap)
+    if (decision.largest > cap) BoundedPairs(pairJoin(cap), clusters(cap), cap, cleanup)
     else BoundedPairs(pairJoin(Long.MaxValue),
       members.select(col(idCol), col(idCol).as("rep_id")).where(lit(false)), cap, cleanup)
   }

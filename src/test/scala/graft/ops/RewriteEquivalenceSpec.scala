@@ -180,7 +180,8 @@ object ReferenceFormulations {
   // pair join is cap-pruned and the representative clusters planned
   // whatever the bucket histogram shows.
 
-  /** The budgeted band join: always pruned, always representatives. */
+  /** Effective cap from the sorted histogram, pair join pruned at it,
+    * representatives built at it. */
   private def alwaysPruned(
       members: DataFrame, keys: Seq[String], idCol: String,
       sizes: DataFrame, nCol: String, skewCap: Long, maxPairs: Long)(
