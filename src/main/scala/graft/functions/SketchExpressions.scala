@@ -110,11 +110,11 @@ case class KmvAgg(
     copy(child = newChild)
 }
 
-/** Top-k-by-priority mergeable aggregate — the grouped/streaming face
-  * of priority sampling (Duffield-Lund-Thorup): the buffer holds the k
+/** Top-k-by-priority mergeable aggregate — the grouped face of
+  * priority sampling (Duffield-Lund-Thorup): the buffer holds the k
   * entries with the highest (priority, id)-order, merge is
   * union-then-trim, so the result is partitioning- and merge-order-
-  * independent — the same state-store contract as [[KmvAgg]]. Callers
+  * independent — the same contract as [[KmvAgg]]. Callers
   * pass k = sampleSize + 1 so the (k)th entry exposes the estimator
   * threshold τ. Entries are (priority, id, weight) structs, priority
   * DESC then id ASC; ids must be distinct per group (the dedup key).
@@ -500,90 +500,10 @@ object BottomKHashStrAgg {
     StructField("value", DoubleType, nullable = false))), containsNull = false)
 }
 
-/** HyperLogLog registers as a native mergeable aggregate — the
-  * single-aggregation / STREAMING face of
-  * [[graft.ops.Sketches.hllDistinctByKey]]'s two-level relational
-  * form. The buffer is the m-byte register array (max rho per bucket)
-  * over a 60-bit hash input; merge is elementwise max — commutative,
-  * associative, idempotent — so the result is partitioning- and
-  * merge-order-independent and safe as state-store state (the same
-  * contract as [[KmvAgg]]). eval returns the registers as array<int>;
-  * [[graft.ops.Sketches.hllEstimateFromRegisters]] turns them into the
-  * estimate with arithmetic bit-identical to the relational form
-  * (integer harmonic sum, same alpha/branches), so both faces
-  * hash-match the same oracle. Map tasks ship m bytes per group where
-  * the relational form ships ≤m (bucket, rho) rows — same bound,
-  * one shuffle instead of two. */
-case class HllRegistersAgg(
-    child: Expression,
-    b: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]]
-  with UnaryLike[Expression] {
-
-  require(b >= 4 && b <= 16, s"hll needs 4 <= b <= 16, got $b")
-  private val m = 1 << b
-  private val low = 60 - b
-  private val mask = (1L << low) - 1
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val h = v.asInstanceOf[Long]
-      val bkt = (h >>> low).toInt
-      val w = h & mask
-      // rho = leading-zero count within the low bits + 1
-      //     = (low + 1) - bitlength(w); w = 0 -> low + 1
-      val rho =
-        if (w == 0L) low + 1
-        else low + 1 - (64 - java.lang.Long.numberOfLeadingZeros(w))
-      if (rho > buf(bkt)) buf(bkt) = rho.toByte
-    }
-    buf
-  }
-
-  override def merge(buf: Array[Byte], other: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < m) { if (other(i) > buf(i)) buf(i) = other(i); i += 1 }
-    buf
-  }
-
-  override def eval(buf: Array[Byte]): Any = {
-    val out = new Array[Int](m)
-    var i = 0
-    while (i < m) { out(i) = buf(i).toInt; i += 1 }
-    new GenericArrayData(out)
-  }
-
-  // defensive copies: the buffer is mutated in place by update/merge,
-  // and the serialized image may be retained by the row it was written
-  // into — aliasing the two would corrupt spilled partials
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf.clone()
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes.clone()
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "hll_registers"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllRegistersAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllRegistersAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HllRegistersAgg =
-    copy(child = newChild)
-}
-
 object SketchFunctions {
   /** k smallest distinct values of a LongType hash column, ascending. */
   def kmvMins(h: Column, k: Int): Column =
     Bridge.column(KmvAgg(Bridge.expression(h), k).toAggregateExpression())
-
-  /** HLL register array (max rho per bucket) of a 60-bit hash column. */
-  def hllRegisters(h: Column, b: Int): Column =
-    Bridge.column(HllRegistersAgg(Bridge.expression(h), b).toAggregateExpression())
 
   /** k best (priority DESC, id) entries as an array of
     * (pri, id, weight) structs, best first. */

@@ -151,12 +151,8 @@ object Filters {
     df.select((meta ++ matched.filterNot(meta.contains)).map(col).toIndexedSeq: _*)
   }
 
-  def filterIntensityExact(df: DataFrame, label: String = "", withMultiplicity: Boolean = false): DataFrame =
-    refExactPrefixFilter(df, "Intensity", label, withMultiplicity, requireMultSuffix = true)
   def filterIntensityLfqExact(df: DataFrame, label: String = "", withMultiplicity: Boolean = false): DataFrame =
     refExactPrefixFilter(df, "LFQ Intensity", label, withMultiplicity, requireMultSuffix = true)
-  def filterRatioExact(df: DataFrame, label: String = "", withMultiplicity: Boolean = false): DataFrame =
-    refExactPrefixFilter(df, "Ratio", label, withMultiplicity, requireMultSuffix = false)
 
   /** `strip_index_labels` (ref process.py:178-195): remove a substring
     * from every column label. */

@@ -33,25 +33,6 @@ object Normalize {
       .drop("_median")
   }
 
-  /** Approximate variant for the 100 TB path: exact median is a
-    * sort-based aggregate per sample; percentile_approx (t-digest
-    * style sketch, mergeable/partial-aggregated) trades a bounded rank
-    * error (`accuracy` = 1/relative-error budget, Spark default 10000)
-    * for a single streaming pass. Use when the oracle-exactness
-    * contract doesn't apply. */
-  def subtractColumnMedianApprox(
-      df: DataFrame,
-      sampleCol: String = "sample",
-      valueCol: String = "value",
-      accuracy: Int = 10000): DataFrame = {
-    val medians = df
-      .groupBy(col(sampleCol))
-      .agg(percentile_approx(col(valueCol), lit(0.5), lit(accuracy)).as("_median"))
-    df.join(broadcast(medians), Seq(sampleCol), "left")
-      .withColumn(valueCol, col(valueCol) - col("_median"))
-      .drop("_median")
-  }
-
   /** Z-score within a partition key (ref visualize.py:1520-1525,
     * 1694-1699): `(x - mean) / stddev` per group; axis choice = key
     * choice (per-sample vs per-feature) on the long form. */

@@ -99,19 +99,4 @@ object Reshape {
     val combined = pairs.map { case (a, b, out) => ((col(a) + col(b)) / 2).as(out) }
     df.select(keep.toIndexedSeq ++ combined: _*)
   }
-
-  /** Long→wide at the presentation edge only: `groupBy(keys).pivot(name)`.
-    * Passing `distinctValues` avoids the extra distinct-collection job
-    * (at scale the pivot domain must be known/bounded anyway). */
-  def pivotWide(
-      df: DataFrame,
-      keyCols: Seq[String],
-      nameCol: String,
-      valueCol: String,
-      distinctValues: Seq[String] = Nil,
-      agg: Column => Column = first(_, ignoreNulls = true)): DataFrame = {
-    val g = df.groupBy(keyCols.map(col): _*)
-    val p = if (distinctValues.nonEmpty) g.pivot(nameCol, distinctValues) else g.pivot(nameCol)
-    p.agg(agg(col(valueCol)))
-  }
 }

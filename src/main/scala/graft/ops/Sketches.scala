@@ -61,19 +61,6 @@ object Sketches {
           .as("distinct_est")): _*)
   }
 
-  /** Global KMV distinct estimate: one row, `distinct_est`. */
-  def kmvDistinct(df: DataFrame, valueCol: String, k: Int, tag: String = "kmv"): DataFrame = {
-    val h = h60(concat_ws("|", lit(tag), col(valueCol).cast("string")))
-    df.filter(col(valueCol).isNotNull)
-      .agg(SketchFunctions.kmvMins(h, k).as("_mins"))
-      .select(
-        when(size(col("_mins")) < k, size(col("_mins")).cast("double"))
-          .otherwise(
-            lit((k - 1).toDouble) * lit(TwoPow60) /
-              element_at(col("_mins"), k).cast("double"))
-          .as("distinct_est"))
-  }
-
   /** Deterministic bottom-k uniform sample: the k rows with the
     * smallest h60(tag|id) — a fixed-size simple random sample that is
     * a pure function of the id set (same sample on any partitioning /
@@ -287,14 +274,6 @@ object Sketches {
     agg.select((keys.map(col) :+ hllEstimate(b).as("distinct_est")): _*)
   }
 
-  /** Global [[hllDistinctByKey]]: one row, `distinct_est`. */
-  def hllDistinct(df: DataFrame, valueCol: String, b: Int = 8, tag: String = "hll"): DataFrame =
-    hllRegisters(df, Nil, valueCol, b, tag)
-      .agg(
-        sum(expr(s"shiftleft(CAST(1 AS BIGINT), ${61 - b} - _M)")).as("_sp"),
-        count(lit(1)).as("_n"))
-      .select(hllEstimate(b).as("distinct_est"))
-
   /** (keys..., _bkt, _M): max-rho register per present bucket. */
   private def hllRegisters(
       df: DataFrame, keys: Seq[String], valueCol: String, b: Int, tag: String): DataFrame = {
@@ -313,59 +292,21 @@ object Sketches {
       .agg(max(col("_rho")).as("_M"))
   }
 
-  /** alpha_m · m² · 2^(61−b) / sumInt with absent-bucket terms folded
-    * in as integers, plus the standard small-range linear-counting
+  /** alpha_m · m² · 2^(61−b) / sumInt over (_sp = Σ_present
+    * 2^(maxRho−M), _n = #present), with absent-bucket terms folded in
+    * as integers, plus the standard small-range linear-counting
     * correction (the one transcendental, rounded at 9 digits). */
-  private def hllEstimate(b: Int): Column =
-    hllEstimateFrom(b, col("_sp"), col("_n"))
-
-  /** The shared estimator tree over (Σ_present 2^(maxRho−M), #present)
-    * — both HLL faces feed identical integers through this, so their
-    * outputs are bitwise equal and replay against one oracle. */
-  private def hllEstimateFrom(b: Int, sp: Column, n: Column): Column = {
+  private def hllEstimate(b: Int): Column = {
     val m = 1 << b
     val alpha = hllAlpha(m)
     val p2 = math.pow(2.0, 61 - b) // exact power of two
-    val sumInt = sp + (lit(m.toLong) - n) * lit(1L << (61 - b))
+    val n = col("_n")
+    val sumInt = col("_sp") + (lit(m.toLong) - n) * lit(1L << (61 - b))
     val e = lit(alpha) * lit(m.toDouble * m) * lit(p2) / sumInt.cast("double")
     val v = lit(m.toLong) - n
     when(e <= lit(2.5 * m) && v > 0,
       round(lit(m.toDouble) * log(lit(m.toDouble) / v.cast("double")), 9))
       .otherwise(e)
-  }
-
-  /** Single-aggregation [[hllDistinctByKey]] via the native mergeable
-    * [[graft.functions.HllRegistersAgg]] — ONE shuffle (m bytes per
-    * group per map task) instead of the relational form's two, and the
-    * same aggregate runs unchanged in a STREAMING groupBy (register
-    * max-merge is idempotent state). The estimate arithmetic is the
-    * integer harmonic sum of [[hllEstimate]] folded over the register
-    * array, so both faces are bit-identical (SketchSpec asserts it)
-    * and replay against the same oracle. */
-  def hllDistinctAggByKey(
-      df: DataFrame,
-      keys: Seq[String],
-      valueCol: String,
-      b: Int = 8,
-      tag: String = "hll"): DataFrame = {
-    val h = h60(concat_ws("|", lit(tag), col(valueCol).cast("string")))
-    df.filter(col(valueCol).isNotNull)
-      .groupBy(keys.map(col): _*)
-      .agg(graft.functions.SketchFunctions.hllRegisters(h, b).as("_regs"))
-      .select((keys.map(col) :+ hllEstimateFromRegisters(b).as("distinct_est")): _*)
-  }
-
-  /** [[hllEstimate]] over a `_regs` array<int> column (the agg face):
-    * the SAME _sp/_n inputs derived by integer HOF folds — identical
-    * integers, identical downstream expression tree. */
-  def hllEstimateFromRegisters(b: Int): Column = {
-    val maxRho = 61 - b
-    val present = expr("filter(_regs, x -> x > 0)")
-    val sp = expr(
-      s"aggregate(filter(_regs, x -> x > 0), CAST(0 AS BIGINT), " +
-        s"(a, x) -> a + shiftleft(CAST(1 AS BIGINT), $maxRho - x))")
-    val n = size(present).cast("long")
-    hllEstimateFrom(b, sp, n)
   }
 
   /** The standard HLL bias constant (m ≥ 128 branch is the closed

@@ -45,19 +45,13 @@ object TrainingData {
       // session (MEMORY_AND_DISK blocks are LRU-evictable; callers
       // owning a bounded session can unpersist after materializing).
       // At warehouse scale swap the persist for a materialized stage
-      // table (ops.Storage).
+      // table.
       persistStages: Boolean = true)
 
   /** Row-local annotation: quality, language, token counts,
     * fingerprints. */
   def annotate(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    annotateKeeping(docs.select(col(idCol), col(textCol)), textCol)
-
-  /** annotate, preserving EVERY input column — streaming frames carry
-    * their event-time column through the gates (graft.streaming
-    * .DocStream). */
-  def annotateKeeping(docs: DataFrame, textCol: String): DataFrame =
-    docs
+    docs.select(col(idCol), col(textCol))
       .withColumn("quality", TextAnalysis.qualityScore(col(textCol)))
       .withColumn("lang_pred", TextAnalysis.langId(col(textCol)))
       .withColumn("n_tokens", TextAnalysis.tokenCountWhitespace(col(textCol)))

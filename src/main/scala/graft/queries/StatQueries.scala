@@ -381,7 +381,7 @@ object StatQueries extends QueryProvider {
               1.0) AS q
       FROM r"""))
 
-  // ---- streaming-shape ops on events (batch forms; see graft.streaming) ----
+  // ---- windowed and sessionized ops on the events table ----
   // hourly tumbling window aggregation (ts = nanos-since-epoch long)
   private val qEventsWindow = Q(
     "q_events_window",

@@ -717,7 +717,7 @@ object AnnIndex {
 
   // ---- BATCHED multi-query serving (round 13): the recall harness's
   //      one-plan shape applied to the serving layout. A request batch
-  //      of nq queries probes the UNION of its cells/buckets in one
+  //      of nq queries probes the UNION of its cells in one
   //      partition-pruned scan; each scanned row explodes into its
   //      candidate (qid, score) entries — candidacy gated per query, so
   //      a row never pays a score for a query that didn't probe its
@@ -732,7 +732,7 @@ object AnnIndex {
   //      (zero-norm vector) never enters a batch top-k while the
   //      single-query LIMIT could admit one when candidates < k. ----
 
-  /** Shared explode → gated score → per-qid bounded top-k kernel.
+  /** The explode → gated score → per-qid bounded top-k kernel.
     * Output: one row per (qid, rank): (qid, id, score) with k rows per
     * qid in rank order; `idCol` is cast to long (the agg's id slot). */
   private def batchTopK(
@@ -782,36 +782,6 @@ object AnnIndex {
     }.reduce(_ unionByName _)
   }
 
-  /** Batched [[lshTopKIndexed]]: the batch's (table, bucket) union in
-    * one pruned scan. A row matching a query in several tables yields
-    * identical (pri, id) entries — the top-k agg's TreeSet dedups them,
-    * mirroring the single-query dropDuplicates. */
-  def lshTopKIndexedBatch(
-      indexed: DataFrame, idCol: String, vecCol: String,
-      queries: Seq[Array[Double]], k: Int,
-      numPlanes: Int = 8, numTables: Int = 4): DataFrame = {
-    require(queries.nonEmpty, "empty query batch")
-    val v = col(vecCol)
-    queries.zipWithIndex.grouped(AnnRecall.chunkSize(2 * numTables)).map { chunk =>
-      val entries = chunk.map { case (q, qid) =>
-        val inc = (0 until numTables).map { t =>
-          col("_t") === lit(t) &&
-            col("_b") === lit(Similarity.queryBucket(t, q, numPlanes))
-        }.reduce(_ || _)
-        val qCol = array(q.toIndexedSeq.map(lit): _*)
-        (qid, inc, Similarity.cosine(v, qCol))
-      }
-      // chunk-union (table, bucket) predicate: a plain partition-column
-      // filter the scan can prune on (the per-query gate can't)
-      val chunkPred = chunk.flatMap { case (q, _) =>
-        (0 until numTables).map(t => (t, Similarity.queryBucket(t, q, numPlanes)))
-      }.distinct.map { case (t, b) =>
-        col("_t") === lit(t) && col("_b") === lit(b)
-      }.reduce(_ || _)
-      batchTopK(indexed.filter(chunkPred), idCol, entries, k)
-    }.reduce(_ unionByName _)
-  }
-
   /** Batched [[ivfTopKServe]]: resolve the manifest ONCE, open the
     * union of every query's probed cell dirs, answer the whole batch
     * from that one read. */
@@ -825,20 +795,5 @@ object AnnIndex {
     val base = readPartitions(spark, path, dirs)
       .getOrElse(readIvfIndexed(spark, path).limit(0))
     ivfTopKIndexedBatch(base, centroids, idCol, vecCol, queries, k, nProbe)
-  }
-
-  /** Batched [[lshTopKServe]]: one manifest resolve + one read of the
-    * batch's (table, bucket) dir union. */
-  def lshTopKServeBatch(
-      spark: SparkSession, path: String, idCol: String, vecCol: String,
-      queries: Seq[Array[Double]], k: Int,
-      numPlanes: Int = 8, numTables: Int = 4): DataFrame = {
-    val dirs = queries.flatMap { q =>
-      (0 until numTables).map(t =>
-        s"_t=$t/_b=${Similarity.queryBucket(t, q, numPlanes)}")
-    }.distinct
-    val base = readPartitions(spark, path, dirs)
-      .getOrElse(readLshIndexed(spark, path).limit(0))
-    lshTopKIndexedBatch(base, idCol, vecCol, queries, k, numPlanes, numTables)
   }
 }

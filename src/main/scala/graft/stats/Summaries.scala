@@ -125,23 +125,6 @@ object Summaries {
       countDistinct(split(col(proteinsCol), ";").getItem(0)).as("proteins"))
   }
 
-  /** Approximate summary for the 100 TB path: exact countDistinct
-    * shuffles every distinct value; HyperLogLog++ sketches (±~2.3%
-    * at the default rsd 0.05) partial-aggregate instead. */
-  def sitesPeptidesProteinsApprox(
-      df: DataFrame,
-      probCol: String = "Localization prob",
-      seqCol: String = "Sequence window",
-      proteinsCol: String = "Proteins",
-      threshold: Double = 0.75,
-      rsd: Double = 0.05): DataFrame = {
-    val classI = df.filter(col(probCol) > threshold)
-    classI.agg(
-      count(lit(1)).as("sites"),
-      approx_count_distinct(col(seqCol), rsd).as("peptides"),
-      approx_count_distinct(split(col(proteinsCol), ";").getItem(0), rsd).as("proteins"))
-  }
-
   /** `enrichment_from_evidence` (ref analysis.py:232-258): flag rows by
     * substring in the Modifications column, sum values per experiment
     * and flag, modified/total ratio per experiment — one conditional
@@ -253,16 +236,13 @@ object Summaries {
 
   /** `plot_point_cov`/`plot_cov_ellipse` data (ref visualize.py:60-113):
     * 2×2 covariance of an (x, y) cloud + eigen decomposition →
-    * (center, width, height, angle) of the nσ ellipse. Covariance is
-    * one distributed aggregation; the 2×2 eigen is closed-form. */
-  final case class Ellipse(cx: Double, cy: Double, width: Double, height: Double, angleDeg: Double)
-
-  /** Distributed single-row form of [[covarianceEllipse]]: ONE exact
-    * moments aggregation (graft.stats.Moments — INVARIANTS.md §1;
-    * portable when x·y is exact at the wide scale 10), then the
-    * closed-form 2×2 symmetric eigen as a Column tree. Output columns
-    * (cx, cy, width, height, angle_deg); the atan2 angle is the one
-    * transcendental — oracled callers round it on both sides. */
+    * (center, width, height, angle) of the nσ ellipse, as one row.
+    * Covariance is ONE exact moments aggregation (graft.stats.Moments —
+    * INVARIANTS.md §1; portable when x·y is exact at the wide scale
+    * 10), then the closed-form 2×2 symmetric eigen as a Column tree.
+    * Output columns (cx, cy, width, height, angle_deg); the atan2
+    * angle is the one transcendental — oracled callers round it on
+    * both sides. */
   def covarianceEllipseDf(
       df: DataFrame, xCol: String, yCol: String, nstd: Double = 2.0): DataFrame = {
     val (x, y) = (col(xCol), col(yCol))
@@ -289,10 +269,5 @@ object Summaries {
         when(col("_cxy") === 0.0, when(col("_cxx") >= col("_cyy"), 0.0).otherwise(90.0))
           .otherwise(degrees(atan2(col("_l1") - col("_cxx"), col("_cxy")))))
       .select("cx", "cy", "width", "height", "angle_deg")
-  }
-
-  def covarianceEllipse(df: DataFrame, xCol: String, yCol: String, nstd: Double = 2.0): Ellipse = {
-    val r = covarianceEllipseDf(df, xCol, yCol, nstd).head()
-    Ellipse(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))
   }
 }

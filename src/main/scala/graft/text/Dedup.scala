@@ -70,10 +70,9 @@ object Dedup {
     * an aggregate-only pre-pass, no extra data shuffle of the banded
     * triples (they re-shuffle on the same key either way, and AQE
     * reuses the exchange). Members of a dropped bucket are near-
-    * identical by construction; the pruning is NOT silent: route
-    * [[minHashOversizedBuckets]] (the exact dropped set, with member
-    * counts) to exact dedup on the band hash instead of pair
-    * enumeration. */
+    * identical by construction; [[minHashCandidatePairsBounded]]
+    * returns them as representative clusters instead of dropping them
+    * silently. */
   def minHashCandidatePairs(
       signatures: DataFrame, idCol: String,
       numHashes: Int = 32, bands: Int = 8,
@@ -88,8 +87,8 @@ object Dedup {
     * a dup-saturated corpus (every doc in a 100-copy clique → ~50·N
     * candidate pairs). Buckets are enumerated smallest-first up to
     * `maxPairs` total candidates; larger buckets degrade to
-    * representative clusters (min id per bucket — the
-    * [[minHashOversizedBuckets]] playbook applied as output). On an
+    * representative clusters (min id per bucket: the members of an
+    * oversized bucket are near-identical). On an
     * under-budget corpus this is EXACTLY [[minHashCandidatePairs]]
     * with empty clusters. The prune and the representatives run only
     * when the one budget decision binds ([[PairBudget.bounded]]): with
@@ -134,22 +133,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
       .distinct()
   }
-
-  /** SIDE OUTPUT of [[minHashCandidatePairs]]' hot-bucket guard: the
-    * (band_idx, band_hash) buckets the SAME config would drop, with
-    * their member counts — so callers can observe that pruning
-    * happened (`.isEmpty` / count it into a metric) and route the
-    * members to the exact-dedup-on-band-hash path the cap's scaladoc
-    * recommends. Deterministic: a pure function of (signatures,
-    * config), so it reconstructs the dropped set exactly without the
-    * pair query having to carry it. */
-  def minHashOversizedBuckets(
-      signatures: DataFrame, idCol: String,
-      numHashes: Int = 32, bands: Int = 8,
-      maxBucketRows: Long = 100000L): DataFrame =
-    bucketCounts(bandedTriples(signatures, idCol, numHashes, bands))
-      .filter(col("_bn") > maxBucketRows)
-      .select(col("band_idx"), col("band_hash"), col("_bn").as("n_members"))
 
   /** The LSH band keys of a signature row, one per band: band b is the
     * xxhash64 of minhash slots [b·rows, (b+1)·rows). */

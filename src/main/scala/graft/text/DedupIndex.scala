@@ -53,10 +53,16 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   *  - skew: a batch band-hash that hits an oversized corpus bucket
   *    (boilerplate clusters — the LSH mega-bucket mode) is dropped by
   *    the `maxBucketRows` cap BEFORE the join fans out, decided on the
-  *    driver from the collected histogram; the dropped buckets are the
-  *    standard [[Dedup.minHashOversizedBuckets]] playbook (their
-  *    members are near-identical — route to exact dedup on the band
-  *    hash).
+  *    driver from the collected histogram (the members of such a
+  *    bucket are near-identical to one another).
+  *
+  * Replay: a caller that appends a batch and then records that it did
+  * (an epoch marker, a committed offset) can crash between the two and
+  * probe the same batch again against an index that already holds it.
+  * [[newDocs]] ignores a batch document's match with its own id, so the
+  * replay keeps the same documents as the first run. Appending them
+  * again leaves duplicate index rows; probes tolerate them (candidates
+  * are distinct'd, decisions are set-based) and only scan more.
   */
 object DedupIndex {
 
@@ -120,118 +126,6 @@ object DedupIndex {
       Dedup.bandedTriples(sigs, idCol, numHashes, bands)
         .write.mode(mode).parquet(s"$path/bands")
     } finally { sigs.unpersist(); () }
-  }
-
-  /** Rewrite the index WITHOUT duplicate rows into `newPath` and
-    * return the (docs, bandRows) counts after compaction. Duplicate
-    * rows accumulate only from replayed ingest epochs whose append
-    * committed but whose marker write was lost
-    * ([[graft.streaming.DocStream.ingestBatch]]) — they are benign for
-    * probe correctness (candidates are distinct'd, newDocs decisions
-    * are set-based) but pay scan cost forever. Compaction keeps one
-    * sigs row per doc_id and one bands row per (doc_id, band_idx,
-    * band_hash); signatures are deterministic functions of the text,
-    * so "any row per doc" is THE row. Writes to a NEW path — the swap
-    * is the caller's pointer flip (same contract as the ANN index's
-    * versioned layouts); compacting in place would expose readers to
-    * a half-rewritten index. */
-  def compact(spark: SparkSession, path: String, newPath: String): (Long, Long) = {
-    require(newPath != path, "compact writes to a NEW path (atomic pointer swap is the caller's)")
-    val sigs = spark.read.parquet(s"$path/sigs").dropDuplicates("doc_id")
-    sigs.write.mode("overwrite").parquet(s"$newPath/sigs")
-    val bands = spark.read.parquet(s"$path/bands").distinct()
-    bands.write.mode("overwrite").parquet(s"$newPath/bands")
-    (spark.read.parquet(s"$newPath/sigs").count(),
-      spark.read.parquet(s"$newPath/bands").count())
-  }
-
-  // ---- versioned index ROOT: `root/v<N>` dirs + an atomically-swapped
-  //      `_graft_current` pointer, so [[compact]]'s "the swap is the
-  //      caller's pointer flip" contract has a first-class caller —
-  //      the same protocol as the ANN serving index
-  //      ([[graft.sim.AnnIndex.publishCurrent]]), minus the centroid
-  //      payload (an LSH signature index has no probe-side constants).
-  //      A reader resolves (version) ONCE and scans only that
-  //      version's sigs/ + bands/, so a concurrent compact+repoint
-  //      never tears its view; superseded versions are first-class GC
-  //      targets for [[sweepVersions]]. ----
-  private val CurrentPointer = "_graft_current"
-  private val VersionDirRe = """v(\d+)""".r
-
-  /** Atomically repoint `root`'s live index version (tmp + rename). */
-  def publishCurrent(spark: SparkSession, root: String, version: String): Unit = {
-    val base = new org.apache.hadoop.fs.Path(root)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(base, CurrentPointer + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(version.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(base, CurrentPointer)
-    if (!fs.rename(tmp, dst)) { // HDFS refuses rename-onto; replace explicitly
-      fs.delete(dst, false)
-      require(fs.rename(tmp, dst), s"could not publish current pointer at $dst")
-    }
-  }
-
-  /** The live version dir name, if published. Empty/torn pointers read
-    * as unpublished. */
-  def resolveCurrent(spark: SparkSession, root: String): Option[String] =
-    try {
-      val base = new org.apache.hadoop.fs.Path(root)
-      val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-      val p = new org.apache.hadoop.fs.Path(base, CurrentPointer)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val body =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        if (body.isEmpty) None else Some(body)
-      }
-    } catch { case _: java.io.FileNotFoundException => None }
-
-  /** Resolve the live version, initializing (and publishing) `v1` when
-    * the root is unversioned — the ingest loop's entry point. */
-  def resolveOrInit(spark: SparkSession, root: String): String =
-    resolveCurrent(spark, root).getOrElse {
-      publishCurrent(spark, root, "v1"); "v1"
-    }
-
-  /** [[compact]] under the versioned-root convention: rewrite the live
-    * version without duplicate rows into `root/v<N+1>` and repoint.
-    * Returns (new version dir, (docs, bandRows)). Single-writer like
-    * all maintenance ops — version transitions are the ingest
-    * pipeline's serialized job; concurrent READERS are safe (they hold
-    * a resolved version whose files [[sweepVersions]]' retention
-    * window protects). */
-  def compactCurrent(spark: SparkSession, root: String): (String, (Long, Long)) = {
-    val live = resolveCurrent(spark, root).getOrElse(
-      throw new IllegalStateException(s"no current pointer under $root"))
-    val n = live match { case VersionDirRe(v) => v.toLong; case _ => 0L }
-    val next = s"v${n + 1}"
-    val counts = compact(spark, s"$root/$live", s"$root/$next")
-    publishCurrent(spark, root, next)
-    (next, counts)
-  }
-
-  /** Retention sweep for superseded versions: delete `root/v<N>` dirs
-    * that are neither the live version nor among the `keep` highest.
-    * Size `keep` to exceed the longest probe's lifetime in versions —
-    * an in-flight reader of the just-superseded version needs its
-    * grace window (same rule as AnnIndex.sweepIndexVersions). */
-  def sweepVersions(spark: SparkSession, root: String, keep: Int = 2): Unit = {
-    require(keep >= 1, "must keep at least the live version")
-    val base = new org.apache.hadoop.fs.Path(root)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val live = resolveCurrent(spark, root)
-    val versions = fs.listStatus(base).iterator
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .collect { case name @ VersionDirRe(n) => (n.toLong, name) }
-      .toSeq.sortBy(_._1)
-    val retained = versions.takeRight(keep).map(_._2).toSet ++ live
-    versions.map(_._2).filterNot(retained).foreach { name =>
-      fs.delete(new org.apache.hadoop.fs.Path(base, name), true): Unit
-    }
   }
 
   /** Cross near-dup candidates (corpus_id, batch_id, est_jaccard) of a
@@ -346,11 +240,10 @@ object DedupIndex {
       spark, path, batch, idCol, textCol, numHashes, bands, maxBucketRows,
       maxBroadcastCandidates)
       // self-matches excluded: ids are globally unique in normal use
-      // (nothing matches), and after a CRASHED ingest epoch whose
-      // index append committed but whose marker did not, the replayed
-      // batch finds ITSELF in the index — without this guard every
-      // replayed document would score est=1.0 against its own prior
-      // append and be dropped (DocStream.ingestBatch idempotence)
+      // (nothing matches), and a replayed batch finds ITSELF in the
+      // index — without this guard every replayed document would
+      // score est=1.0 against its own prior append and be dropped
+      // (the replay contract in the object scaladoc)
       .filter(col("corpus_id") =!= col("batch_id"))
       .filter(col("est_jaccard") >= threshold)
       .select(col("batch_id").as(idCol))

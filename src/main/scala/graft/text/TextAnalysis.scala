@@ -271,7 +271,7 @@ object TextAnalysis {
     * The DF branch re-derives the (doc, term) counts (Catalyst plans a
     * second scan — the two aggregations key differently, so the
     * exchange is not reusable). At warehouse scale, materialize the
-    * term-count stage once (ops.Storage) and feed both branches from
+    * term-count stage once and feed both branches from
     * it instead of re-scanning the corpus; here the corpus scan is the
     * cheap part and a persist would cache the widest intermediate.
     */

@@ -27,7 +27,6 @@ object TestSpark {
     .config(CodegenCacheKey, Sessions.productionConfs(4).toMap.apply(CodegenCacheKey))
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .withExtensions(new GraftExtensions)
     .getOrCreate()
 }
 

@@ -34,10 +34,10 @@ class SketchSpec extends SparkSpec {
 
   test("KMV sketch is partitioning-invariant (merge-order independent)") {
     val k = 64
-    val a = Sketches.kmvDistinct(grouped, "v", k).head().getDouble(0)
-    val b = Sketches.kmvDistinct(grouped.repartition(13, col("id")), "v", k)
+    val a = Sketches.kmvDistinctByKey(grouped, Nil, "v", k).head().getDouble(0)
+    val b = Sketches.kmvDistinctByKey(grouped.repartition(13, col("id")), Nil, "v", k)
       .head().getDouble(0)
-    val c = Sketches.kmvDistinct(grouped.coalesce(1), "v", k).head().getDouble(0)
+    val c = Sketches.kmvDistinctByKey(grouped.coalesce(1), Nil, "v", k).head().getDouble(0)
     assert(a == b && b == c)
   }
 
@@ -280,46 +280,16 @@ class SketchSpec extends SparkSpec {
     // 40 distinct over m=256 registers: E <= 2.5m -> m*ln(m/V) branch,
     // which is near-exact when n << m (collision-corrected occupancy)
     val small = spark.range(1, 2001).select(col("id"), (col("id") % 40).as("v"))
-    val e = Sketches.hllDistinct(small, "v", b = 8).head().getDouble(0)
+    val e = Sketches.hllDistinctByKey(small, Nil, "v", b = 8).head().getDouble(0)
     assert(math.abs(e - 40.0) < 4.0, s"linear-counting estimate $e")
   }
 
   test("HLL sketch is partitioning-invariant (bitwise)") {
-    val a = Sketches.hllDistinct(grouped, "v", b = 8).head().getDouble(0)
-    val b = Sketches.hllDistinct(grouped.repartition(13, col("id")), "v", b = 8)
+    val a = Sketches.hllDistinctByKey(grouped, Nil, "v", b = 8).head().getDouble(0)
+    val b = Sketches.hllDistinctByKey(grouped.repartition(13, col("id")), Nil, "v", b = 8)
       .head().getDouble(0)
-    val c = Sketches.hllDistinct(grouped.coalesce(1), "v", b = 8).head().getDouble(0)
+    val c = Sketches.hllDistinctByKey(grouped.coalesce(1), Nil, "v", b = 8).head().getDouble(0)
     assert(a == b && b == c)
-  }
-
-  test("HLL agg face is bitwise identical to the relational face") {
-    // the native HllRegistersAgg (one shuffle, streaming-safe) and the
-    // two-level groupBy must produce the SAME double — identical
-    // integer harmonic sums through the shared estimator tree
-    val rel = Sketches.hllDistinctByKey(grouped, Seq("grp"), "v", b = 8)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val agg = Sketches.hllDistinctAggByKey(grouped, Seq("grp"), "v", b = 8)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(rel == agg)
-    // and under a different partitioning (merge path exercised)
-    val agg13 = Sketches.hllDistinctAggByKey(
-      grouped.repartition(13, col("id")), Seq("grp"), "v", b = 8)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(agg13 == rel)
-  }
-
-  test("HllRegistersAgg serde round-trips and merge is elementwise max") {
-    val a = graft.functions.HllRegistersAgg(
-      org.apache.spark.sql.catalyst.expressions.Literal(1L), b = 4)
-    val b1 = a.createAggregationBuffer()
-    b1(3) = 5; b1(7) = 2
-    val b2 = a.deserialize(a.serialize(b1))
-    assert(b2.toSeq == b1.toSeq)
-    assert(!(b2 eq b1)) // defensive copy, no aliasing
-    val other = a.createAggregationBuffer()
-    other(3) = 4; other(7) = 9; other(0) = 1
-    val merged = a.merge(b2, other)
-    assert(merged(3) == 5 && merged(7) == 9 && merged(0) == 1)
   }
 
   test("HLL register split matches the definition on a known hash") {
@@ -327,7 +297,7 @@ class SketchSpec extends SparkSpec {
     // rho=53-bitlen(low 52 bits); estimate then rides the
     // linear-counting branch with V=255 -> m*ln(m/255)
     val one = Seq(("x", 42L)).toDF("grp", "v")
-    val e = Sketches.hllDistinct(one, "v", b = 8).head().getDouble(0)
+    val e = Sketches.hllDistinctByKey(one, Nil, "v", b = 8).head().getDouble(0)
     val expected = BigDecimal(256.0 * math.log(256.0 / 255.0))
       .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(e == expected, s"$e vs $expected")

@@ -6,39 +6,6 @@ import org.apache.spark.sql.functions._
 class SkewSpec extends SparkSpec {
   import spark.implicits._
 
-  // 90% of rows share one hot key
-  private def skewed = (1 to 1000).map { i =>
-    (if (i <= 900) "hot" else s"k${i % 17}", i.toDouble)
-  }.toDF("key", "v")
-
-  test("saltedCount equals plain groupBy count") {
-    val plain = skewed.groupBy($"key").count()
-      .as[(String, Long)].collect().toMap
-    val salted = Skew.saltedCount(skewed, Seq("key"), saltBuckets = 8)
-      .as[(String, Long)].collect().toMap
-    assert(salted == plain)
-  }
-
-  test("saltedAgg sums decompose correctly") {
-    val plain = skewed.groupBy($"key").agg(sum($"v").as("s"))
-      .as[(String, Double)].collect().toMap
-    val salted = Skew.saltedAgg(skewed, Seq("key"), 8)(
-      Seq(sum($"v").as("_ps")), Seq(sum($"_ps").as("s")))
-      .as[(String, Double)].collect().toMap
-    assert(salted.keySet == plain.keySet)
-    salted.foreach { case (k, v) => assert(approx(v, plain(k), 1e-6)) }
-  }
-
-  test("saltedJoin equals plain join") {
-    val dim = Seq(("hot", "H"), ("k1", "A"), ("k2", "B")).toDF("key", "label")
-    val plain = skewed.join(dim, "key").groupBy($"label").count()
-      .as[(String, Long)].collect().toMap
-    val salted = Skew.saltedJoin(skewed, dim, "key", saltBuckets = 4)
-      .groupBy($"label").count()
-      .as[(String, Long)].collect().toMap
-    assert(salted == plain)
-  }
-
   test("AQE splits the skewed banded self-join partition without changing results") {
     // round-6 judge item 5: a (band,bucket) bucket NEAR the cap
     // concentrates its n² join work in one shuffle partition; the
@@ -62,18 +29,6 @@ class SkewSpec extends SparkSpec {
     assert(demo.sumFiltered == demo.sumPlain,
       s"runtime filter changed results: ${demo.sumFiltered} vs ${demo.sumPlain}")
     assert(demo.sumFiltered > 0)
-  }
-
-  test("writeBucketed persists a catalog table joinable without shuffle of that side") {
-    // warehouse dir is a temp dir set at session build (SparkSpec)
-    Skew.writeBucketed(skewed, "bucketed_skewed", "key", 4)
-    val back = spark.table("bucketed_skewed")
-    assert(back.count() == 1000)
-    val agg = back.groupBy($"key").agg(sum($"v"))
-    // bucketed-by-key table: the groupBy plan has no Exchange
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
-    spark.sql("DROP TABLE bucketed_skewed")
   }
 
   test("Tables.clustered: layout-invariant results, fewer exchanges, cached re-register") {

@@ -109,11 +109,11 @@ class PipelineSpec extends SparkSpec {
       val x = rng.nextGaussian() * 3
       (x, x * 0.5 + rng.nextGaussian() * 0.1)
     }
-    val e = Summaries.covarianceEllipse(pts.toDF("x", "y"), "x", "y")
-    assert(math.abs(e.cx) < 0.3 && math.abs(e.cy) < 0.2)
+    val e = Summaries.covarianceEllipseDf(pts.toDF("x", "y"), "x", "y").head()
+    assert(math.abs(e.getAs[Double]("cx")) < 0.3 && math.abs(e.getAs[Double]("cy")) < 0.2)
     // dominant axis along y≈x/2 → angle ≈ atan(0.5) ≈ 26.57°
-    assert(math.abs(e.angleDeg - 26.57) < 3.0)
-    assert(e.width > e.height)
+    assert(math.abs(e.getAs[Double]("angle_deg") - 26.57) < 3.0)
+    assert(e.getAs[Double]("width") > e.getAs[Double]("height"))
   }
 
   test("filterIntensity label variants and stripColumnLabels") {
@@ -136,14 +136,14 @@ class PipelineSpec extends SparkSpec {
     assert(lfq.columns.toSet == df.columns.toSet)
     assert(lfq.columns.last == "LFQ Intensity B1___1") // ref concat order
     // intensity template requires the __\d tail: plain `Intensity A1` drops
-    val i = Filters.filterIntensityExact(df, "A1")
+    val i = Filters.refExactPrefixFilter(df, "Intensity", "A1")
     assert(i.columns.contains("Intensity A1___1") && !i.columns.contains("Intensity A1"))
     // withMultiplicity DOUBLES the __\d requirement (filters.py:182) —
     // matches zero real columns
-    val im = Filters.filterIntensityExact(df, "A1", withMultiplicity = true)
+    val im = Filters.refExactPrefixFilter(df, "Intensity", "A1", withMultiplicity = true)
     assert(!im.columns.exists(_.startsWith("Intensity")))
     // ratio template has no __\d tail
-    val r = Filters.filterRatioExact(df)
+    val r = Filters.refExactPrefixFilter(df, "Ratio", requireMultSuffix = false)
     assert(r.columns.contains("Ratio H/L X"))
   }
 

@@ -499,7 +499,7 @@ class AnnIndexSpec extends SparkSpec {
         .select(transform($"embedding", _.cast("double")).as("q"))
         .head().getSeq[Double](0).toArray
     }
-    // IVF: batch vs single, per query, rows AND rank order
+    // batch vs single, per query, rows AND rank order
     val (assigned, cents) = Similarity.ivfIndex(emb, "vec_id", "embedding", nCells = 8)
     val ivfDir = java.nio.file.Files.createTempDirectory("annivfb").toString + "/idx"
     AnnIndex.writeIvfIndexed(assigned, ivfDir)
@@ -512,21 +512,6 @@ class AnnIndexSpec extends SparkSpec {
       val batch = ivfBatch(qid).sortBy(_.getInt(3))
         .map(r => (r.getLong(1), r.getDouble(2))).toSeq
       assert(batch == single, s"ivf qid=$qid: $batch != $single")
-    }
-    // LSH likewise
-    val lshDir = java.nio.file.Files.createTempDirectory("annlshb").toString + "/idx"
-    AnnIndex.writeLshIndexed(emb, "vec_id", "embedding", lshDir,
-      dim = 8, numPlanes = 4, numTables = 2)
-    val lshBatch = AnnIndex.lshTopKServeBatch(spark, lshDir,
-      "vec_id", "embedding", queries, k = 10, numPlanes = 4, numTables = 2)
-      .collect().groupBy(_.getInt(0))
-    queries.zipWithIndex.foreach { case (q, qid) =>
-      val single = AnnIndex.lshTopKServe(spark, lshDir, "vec_id", "embedding",
-        q, k = 10, numPlanes = 4, numTables = 2)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val batch = lshBatch.getOrElse(qid, Array.empty).sortBy(_.getInt(3))
-        .map(r => (r.getLong(1), r.getDouble(2))).toSeq
-      assert(batch == single, s"lsh qid=$qid: $batch != $single")
     }
     // the non-serve batched form still prunes: the chunk-union probe
     // predicate reaches the scan as a PartitionFilter

@@ -83,6 +83,13 @@ class DedupIndexSpec extends SparkSpec {
     assert(!kept.contains(13L))
     assert(kept.contains(15L) && kept.contains(17L))
     assert(kept.contains(11L) == est11.forall(_ < 0.5))
+    // replay: the kept docs were appended, then the caller crashed
+    // before recording it; the same batch probed again finds each kept
+    // doc's own prior append and must ignore it
+    DedupIndex.append(batch.filter($"doc_id".isin(kept.toSeq: _*)), "doc_id", "text", path)
+    val replayed = DedupIndex.newDocs(spark, path, batch, "doc_id", "text", threshold = 0.5)
+      .collect().map(_.getLong(0)).toSet
+    assert(replayed == kept)
   }
 
   test("oversized probed buckets are dropped, not exploded") {
@@ -101,58 +108,12 @@ class DedupIndexSpec extends SparkSpec {
     assert(open.count() == 60L)
   }
 
-  test("compact removes replay-duplicated rows without changing probe results") {
-    val path = tmp("compactsrc"); val path2 = tmp("compactdst")
-    DedupIndex.write(corpus, "doc_id", "text", path)
-    // simulate a replayed epoch whose append committed twice
-    DedupIndex.append(corpus, "doc_id", "text", path)
-    val before = spark.read.parquet(s"$path/sigs").count()
-    val (docs, bandRows) = DedupIndex.compact(spark, path, path2)
-    assert(before == 2 * docs) // duplicates existed and are gone
-    assert(docs == 3L)         // 3 corpus docs carry signatures (doc 7 has none)
-    assert(bandRows == 3L * 8)
-    def probe(p: String) = DedupIndex.probePairs(spark, p, batch, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(probe(path2) == probe(path))
-    intercept[IllegalArgumentException] { DedupIndex.compact(spark, path, path) }
-  }
-
   test("the candidate join broadcasts the batch side (corpus never shuffles)") {
     val path = tmp("plan")
     DedupIndex.write(corpus, "doc_id", "text", path)
     val plan = DedupIndex.probePairs(spark, path, batch, "doc_id", "text")
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
-  }
-
-  test("versioned root: reader during compact+repoint+sweep sees a stable view") {
-    val root = tmp("vroot")
-    // live version v1 via the versioned entry points
-    assert(DedupIndex.resolveCurrent(spark, root).isEmpty)
-    assert(DedupIndex.resolveOrInit(spark, root) == "v1")
-    DedupIndex.write(corpus, "doc_id", "text", s"$root/v1")
-    // a reader resolves ONCE and builds its probe against that version
-    val readerVersion = DedupIndex.resolveCurrent(spark, root).get
-    val probe = DedupIndex.probePairs(
-      spark, s"$root/$readerVersion", batch, "doc_id", "text")
-    // concurrent maintenance: compact → v2, repoint, sweep (keep=2
-    // retains v1 — the reader's grace window)
-    val (next, (docs, _)) = DedupIndex.compactCurrent(spark, root)
-    assert(next == "v2" && docs == 3L) // 3 indexed docs (7 has no shingles)
-    DedupIndex.sweepVersions(spark, root, keep = 2)
-    assert(DedupIndex.resolveCurrent(spark, root).contains("v2"))
-    // the in-flight reader's materialization AFTER the swap still works
-    // and matches a fresh probe of the new version exactly
-    def pairsOf(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val stale = pairsOf(probe)
-    val fresh = pairsOf(DedupIndex.probePairs(spark, s"$root/v2", batch, "doc_id", "text"))
-    assert(stale == fresh && stale.nonEmpty)
-    // one more cycle: v3 published, and NOW v1 leaves the retention set
-    DedupIndex.compactCurrent(spark, root)
-    DedupIndex.sweepVersions(spark, root, keep = 2)
-    val dirs = new java.io.File(root).listFiles().filter(_.isDirectory).map(_.getName).toSet
-    assert(dirs == Set("v2", "v3"), dirs.toString)
   }
 
   test("above the candidate ceiling the probe degrades to shuffle joins, same pairs") {

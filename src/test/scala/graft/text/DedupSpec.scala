@@ -56,30 +56,6 @@ class DedupSpec extends SparkSpec {
       .combinations(2).take(5).forall(p => uncapped.contains((p(0), p(1)))))
   }
 
-  test("minHashOversizedBuckets reports exactly what the cap drops — pruning is observable") {
-    val cluster = (100L until 300L).map(i => (i, base + " boilerplate footer text"))
-    val skewed = (docs.collect().map(r => (r.getLong(0), r.getString(1))) ++ cluster)
-      .toSeq.toDF("doc_id", "text")
-    val sigs = Dedup.minHashSignatures(skewed, "doc_id", "text", numHashes = 16, shingleSize = 3)
-    // same config as the capped candidate query: the side output names
-    // the dropped buckets + member counts (the 200-doc cluster)
-    val dropped = Dedup.minHashOversizedBuckets(sigs, "doc_id", numHashes = 16,
-        bands = 4, maxBucketRows = 50)
-      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(dropped.nonEmpty && dropped.values.forall(_ == 200L),
-      s"every oversized bucket is the 200-member cluster: $dropped")
-    // with the cap not binding, the side output is empty — no false alarms
-    assert(Dedup.minHashOversizedBuckets(sigs, "doc_id", numHashes = 16,
-      bands = 4, maxBucketRows = 100000L).count() == 0L)
-    // the side output covers the members the pair query lost: routing
-    // each dropped bucket to exact dedup on the band hash recovers them
-    val banded = Dedup.minHashCandidatePairs(sigs, "doc_id", numHashes = 16,
-      bands = 4, maxBucketRows = 50)
-    val pairIds = banded.select($"id_a").union(banded.select($"id_b"))
-      .collect().map(_.getLong(0)).toSet
-    assert((100L until 300L).forall(i => !pairIds.contains(i)))
-  }
-
   test("wordJaccard with sparse candidates: prune keeps results exact at <1% coverage") {
     // 500 docs, candidates touch only 4 of them (0.8%) — the semi-join
     // prune must not change any value vs the dense formulation

@@ -10,7 +10,10 @@ every workload and every metric (end-to-end metrics from untraced runs,
 per-layer metrics from traced runs) the tool prints one Markdown row:
 
 - each side's median and quartiles over its runs;
-- the change's median relative to the parent's;
+- the change's median relative to the parent's, and the absolute
+  difference of the medians (change − parent, in the metric's unit) —
+  the ratio is meaningless for a metric whose parent median sits near
+  zero, such as the traced-minus-untraced `trace.overhead_s`;
 - the change's wins over pairs (ties count for neither side);
 - a verdict by the paired rule: `gain` when there are at least ten
   pairs, the change wins at least nine tenths of them and the medians
@@ -107,7 +110,7 @@ def compare(parent_runs, change_runs, directions):
                 "workload": workload, "metric": metric, "section": section,
                 "pairs": len(pv), "wins": wins,
                 "parent": (pq1, pmed, pq3), "change": (cq1, cmed, cq3),
-                "rel": rel, "verdict": verdict,
+                "rel": rel, "delta": cmed - pmed, "verdict": verdict,
             })
     return rows
 
@@ -165,8 +168,8 @@ def fmt(x):
 
 def render(rows):
     lines = ["| workload | metric | pairs | parent median [q1, q3] | change median [q1, q3] "
-             "| change / parent | change wins | verdict |",
-             "|---|---|---|---|---|---|---|---|"]
+             "| change − parent | change / parent | change wins | verdict |",
+             "|---|---|---|---|---|---|---|---|---|"]
     for r in rows:
         p, c = r["parent"], r["change"]
         rel = "n/a" if r["rel"] is None else f"{r['rel'] * 100:+.1f}%"
@@ -174,7 +177,7 @@ def render(rows):
             f"| {r['workload']} | {r['metric']} | {r['pairs']} "
             f"| {fmt(p[1])} [{fmt(p[0])}, {fmt(p[2])}] "
             f"| {fmt(c[1])} [{fmt(c[0])}, {fmt(c[2])}] "
-            f"| {rel} | {r['wins']}/{r['pairs']} | {r['verdict']} |")
+            f"| {r['delta']:+.4g} | {rel} | {r['wins']}/{r['pairs']} | {r['verdict']} |")
     return "\n".join(lines)
 
 

@@ -22,6 +22,7 @@ BENCHMARK = {
     ],
     "per_layer": [
         {"name": "spark.jobs", "unit": "count", "better": "lower"},
+        {"name": "trace.overhead_s", "unit": "s", "better": "lower"},
     ],
 }
 
@@ -61,11 +62,13 @@ class PerfDiffTest(unittest.TestCase):
         def traced_pass(jobs):
             return {"traced": True, "spans": [{"name": n, "jobs": j} for n, j in jobs]}
         untraced = {"traced": False, "spans": [{"name": "probe", "jobs": 99}]}
-        write(self.parent, "lfq", 99, True, {"pass_s": 5.0}, {"spark.jobs": 15}, [
+        write(self.parent, "lfq", 99, True, {"pass_s": 5.0},
+              {"spark.jobs": 15, "trace.overhead_s": 0.018}, [
             untraced,
             traced_pass([("curate", 11), ("probe", 20), ("probe", 20)]),
             traced_pass([("curate", 11), ("probe", 20), ("probe", 20)])])
-        write(self.change, "lfq", 99, True, {"pass_s": 3.0}, {"spark.jobs": 11}, [
+        write(self.change, "lfq", 99, True, {"pass_s": 3.0},
+              {"spark.jobs": 11, "trace.overhead_s": -0.465}, [
             untraced,
             traced_pass([("curate", 9), ("probe", 13), ("probe", 13)]),
             traced_pass([("curate", 10), ("probe", 13), ("probe", 13), ("append", 2)])])
@@ -122,6 +125,15 @@ class PerfDiffTest(unittest.TestCase):
         table = perfdiff.render_jobs(list(jobs.values()))
         self.assertIn("| lfq | curate | 1 | 11 | 9×1, 10×1 | NO |", table)
         self.assertIn("| lfq | probe | 1 | 20 | 13 | yes |", table)
+
+    def test_median_difference_stays_readable_when_the_parent_median_is_near_zero(self):
+        r = self.rows["trace.overhead_s"]
+        self.assertAlmostEqual(r["delta"], -0.483)
+        self.assertLess(r["rel"], -26.0)  # the ratio reads about -2683 %
+        self.assertAlmostEqual(self.rows["pass_s"]["delta"], -1.5)
+        table = perfdiff.render(list(self.rows.values()))
+        self.assertIn("| -0.483 | -2683.3% |", table)
+        self.assertIn("| -1.5 | -37.4% |", table)
 
     def test_render_has_one_row_per_metric(self):
         table = perfdiff.render(list(self.rows.values()))
