@@ -50,6 +50,16 @@ class ReshapeSpec extends SparkSpec {
     assert(out.count() == 2)
   }
 
+  test("pivotWide round-trips unpivot") {
+    // unpivot is lossless: pivoting its (sample, value) rows back to
+    // wide with Spark's native pivot restores every cell
+    val df = Seq((1, 2.0, 3.0), (2, 4.0, 5.0)).toDF("k", "a", "b")
+    val long = Reshape.unpivot(df, Seq("k"), Seq("a", "b"))
+    val wide = long.groupBy("k").pivot("sample", Seq("a", "b")).agg(first("value"))
+    val m = wide.collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    assert(m(1) == (2.0, 3.0) && m(2) == (4.0, 5.0))
+  }
+
   test("combineExpressionColumns means pairs and drops originals") {
     val df = Seq((1, 2.0, 4.0, 9.0)).toDF("k", "a", "b", "c")
     val out = Reshape.combineExpressionColumns(df, Seq(("a", "b", "ab")))

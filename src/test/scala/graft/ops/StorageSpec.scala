@@ -3,95 +3,13 @@ package graft.ops
 import graft.SparkSpec
 import graft.stats.Summaries
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.ExplainMode
 
+/** The approximate sketches against their exact counterparts on the
+  * same data: the bottom-k sample median ([[Sketches.sampleQuantiles]])
+  * against the exact median the column centring uses, and the KMV
+  * distinct estimate against `Summaries.sitesPeptidesProteins`. */
 class StorageSpec extends SparkSpec {
   import spark.implicits._
-
-  test("partitioned write -> read filter becomes partition pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("partstore").toString + "/obs"
-    val long = (1 to 300).map(i => (i, s"s${i % 3}", i * 1.0)).toDF("id", "sample", "value")
-    Storage.writePartitioned(long, dir, Seq("sample"))
-    val back = Storage.readPartitioned(spark, dir).filter($"sample" === "s1")
-    val plan = back.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(plan.contains("PartitionFilters: [isnotnull(sample"), plan)
-    assert(back.count() == 100)
-    // data predicate on value additionally pushes to the scan
-    val both = Storage.readPartitioned(spark, dir)
-      .filter($"sample" === "s1" && $"value" > 100.0)
-    val p2 = both.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(p2.contains("PushedFilters: [IsNotNull(value), GreaterThan(value,100.0)"), p2)
-  }
-
-  test("range-sorted write produces disjoint per-file key ranges (row-group skipping)") {
-    val dir = java.nio.file.Files.createTempDirectory("rangestore").toString + "/ev"
-    val rng = new scala.util.Random(3)
-    val df = (1 to 5000).map(i => (i.toLong, rng.nextLong() % 1000000L))
-      .toDF("event_id", "ts")
-    Storage.writeRangeSorted(df, dir, "ts", numFiles = 4)
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath)
-    assert(files.length == 4)
-    // each file covers a disjoint ts range -> min/max footer stats can
-    // eliminate whole files for a ts-range predicate
-    val ranges = files.map { f =>
-      val r = spark.read.parquet(f).agg(min($"ts"), max($"ts")).head()
-      (r.getLong(0), r.getLong(1))
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach { case Array((_, hi), (lo, _)) => assert(hi <= lo) }
-    // and nothing was lost
-    assert(spark.read.parquet(dir).count() == 5000)
-  }
-
-  test("z-ordered write shrinks BOTH dims' per-file ranges (multi-dim skipping)") {
-    val rng = new scala.util.Random(7)
-    val df = (1 to 40000)
-      .map(i => (rng.nextDouble() * 1000.0, rng.nextDouble() * 1000.0, i))
-      .toDF("x", "y", "id")
-
-    def perFileSpans(dir: String): Array[(Double, Double)] =
-      new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getPath)
-        .map { f =>
-          val r = spark.read.parquet(f)
-            .agg(min($"x"), max($"x"), min($"y"), max($"y")).head()
-          (r.getDouble(1) - r.getDouble(0), r.getDouble(3) - r.getDouble(2))
-        }
-
-    val zDir = java.nio.file.Files.createTempDirectory("zstore").toString + "/t"
-    Storage.writeZOrdered(df, zDir, Seq("x", "y"), numFiles = 16)
-    val zSpans = perFileSpans(zDir)
-    assert(zSpans.length == 16)
-    val zX = zSpans.map(_._1).sum / zSpans.length
-    val zY = zSpans.map(_._2).sum / zSpans.length
-    // 16 files over 2 dims ≈ a 4×4 tiling: each dim's per-file span
-    // ~ span/4, so footer stats prune for predicates on EITHER dim
-    assert(zX < 600.0, s"avg x-span $zX")
-    assert(zY < 600.0, s"avg y-span $zY")
-    assert(spark.read.parquet(zDir).count() == 40000)
-
-    // single-dim sorted baseline: x-spans collapse but y-spans stay
-    // ~the whole domain — no pruning for y predicates
-    val sDir = java.nio.file.Files.createTempDirectory("sstore").toString + "/t"
-    Storage.writeRangeSorted(df, sDir, "x", numFiles = 16)
-    val sSpans = perFileSpans(sDir)
-    val sY = sSpans.map(_._2).sum / sSpans.length
-    assert(sY > 800.0, s"single-dim y-span $sY")
-    assert(zY < 0.6 * sY)
-  }
-
-  test("z-ordered write survives NaN/±Inf in a clustered dim (ANSI mode)") {
-    // floor of ±Inf overflows the LONG cast and floor of NaN fails
-    // under ANSI — the clamp must run BEFORE floor. NaN also poisons
-    // max(): span falls back to 1.0 and rows still land in a bucket.
-    val df = Seq(
-      (Double.NaN, 1.0, 1), (Double.PositiveInfinity, 2.0, 2),
-      (Double.NegativeInfinity, 3.0, 3), (5.0, 4.0, 4), (6.0, 5.0, 5),
-      (7.0, 6.0, 6), (8.0, 7.0, 7)).toDF("x", "y", "id")
-    val dir = java.nio.file.Files.createTempDirectory("znf").toString + "/t"
-    Storage.writeZOrdered(df, dir, Seq("x", "y"), numFiles = 2)
-    assert(spark.read.parquet(dir).count() == 7)
-  }
 
   test("approx median within tolerance of exact; approx distinct near exact") {
     val rng = new scala.util.Random(13)
@@ -99,16 +17,24 @@ class StorageSpec extends SparkSpec {
       .toDF("id", "sample", "value")
     val exact = Normalize.subtractColumnMedian(long)
       .agg(expr("median(value)")).head().getDouble(0)
-    val approxq = Normalize.subtractColumnMedianApprox(long)
-      .agg(expr("median(value)")).head().getDouble(0)
     assert(math.abs(exact) < 1e-9)
-    assert(math.abs(approxq) < 0.1) // approx-centered median near 0
+    // the sample median's rank error is O(1/sqrt(k)) in quantile space
+    // (Sketches.sampleQuantiles): its exact rank in the full column
+    // sits within 2/sqrt(k) of one half
+    val k = 4096
+    val approxq = Sketches.sampleQuantiles(long, "value", "id", k, Seq(0.5))
+      .head().getDouble(1)
+    val rank = long.filter($"value" <= approxq).count().toDouble / 20000
+    assert(math.abs(rank - 0.5) < 2.0 / math.sqrt(k), s"rank $rank of $approxq")
 
     val docs = (1 to 5000).map(i => (0.99, s"W${i % 1000}", s"P${i % 700};X"))
       .toDF("Localization prob", "Sequence window", "Proteins")
     val ex = Summaries.sitesPeptidesProteins(docs).head()
-    val ap = Summaries.sitesPeptidesProteinsApprox(docs).head()
-    assert(math.abs(ap.getLong(1) - ex.getLong(1)).toDouble / ex.getLong(1) < 0.1)
-    assert(math.abs(ap.getLong(2) - ex.getLong(2)).toDouble / ex.getLong(2) < 0.1)
+    // KMV standard error ~ 1/sqrt(k-2) = 4.4% at k = 512
+    def kmv(c: String) = Sketches.kmvDistinctByKey(
+      docs.withColumn("protein", split($"Proteins", ";").getItem(0)), Nil, c, k = 512)
+      .head().getDouble(0)
+    assert(math.abs(kmv("Sequence window") - ex.getLong(1)) / ex.getLong(1) < 0.1)
+    assert(math.abs(kmv("protein") - ex.getLong(2)) / ex.getLong(2) < 0.1)
   }
 }

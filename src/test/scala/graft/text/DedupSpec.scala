@@ -56,6 +56,33 @@ class DedupSpec extends SparkSpec {
       .combinations(2).take(5).forall(p => uncapped.contains((p(0), p(1)))))
   }
 
+  test("minHashOversizedBuckets reports exactly what the cap drops — pruning is observable") {
+    val cluster = (100L until 300L).map(i => (i, base + " boilerplate footer text"))
+    val skewed = (docs.collect().map(r => (r.getLong(0), r.getString(1))) ++ cluster)
+      .toSeq.toDF("doc_id", "text")
+    val sigs = Dedup.minHashSignatures(skewed, "doc_id", "text", numHashes = 16, shingleSize = 3)
+    // the bounded form under the same cap (and no binding pair budget)
+    // reports the members of every dropped bucket as representative
+    // clusters: exactly the 200-doc cluster, represented by its min id
+    val bounded = Dedup.minHashCandidatePairsBounded(sigs, "doc_id", numHashes = 16,
+      bands = 4, maxBucketRows = 50, maxPairs = Long.MaxValue)
+    val reps = bounded.clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(reps.keySet == (100L until 300L).toSet && reps.values.forall(_ == 100L),
+      s"every oversized-bucket member is in the 200-member cluster: $reps")
+    // its pairs are the capped pair query's: the report adds, drops nothing
+    val capped = Dedup.minHashCandidatePairs(sigs, "doc_id", numHashes = 16,
+      bands = 4, maxBucketRows = 50)
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairSet(bounded.pairs) == pairSet(capped))
+    // with the cap not binding, the report is empty — no false alarms
+    assert(Dedup.minHashCandidatePairsBounded(sigs, "doc_id", numHashes = 16,
+      bands = 4, maxBucketRows = 100000L, maxPairs = Long.MaxValue).clusters.count() == 0L)
+    // the report covers the members the pair query lost
+    val pairIds = pairSet(capped).flatMap { case (a, b) => Seq(a, b) }
+    assert((100L until 300L).forall(i => !pairIds.contains(i)))
+  }
+
   test("wordJaccard with sparse candidates: prune keeps results exact at <1% coverage") {
     // 500 docs, candidates touch only 4 of them (0.8%) — the semi-join
     // prune must not change any value vs the dense formulation
