@@ -11,8 +11,10 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   * against these frames push down as `PushedFilters`.
   */
 object Tables {
+  /** `sfDir/name.parquet`, its schema memoised ([[graft.io.SchemaMemo]]):
+    * a re-open of the unchanged table runs no footer-read job. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.io.SchemaMemo.read(spark, s"$sfDir/$name.parquet", "parquet", Map.empty)
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")

@@ -8,15 +8,14 @@ import org.apache.spark.sql.types._
 object MaxQuant {
 
   /** `read_maxquant` (ref io.py:6-18): TSV scan with header row;
-    * schema inferred; `id` stays a regular column (Spark has no row
-    * index — SURVEY §1.4). Distributed CSV scan: header parsing is
-    * per-file, splits parallelize. */
+    * `id` stays a regular column (Spark has no row index — SURVEY
+    * §1.4). Distributed CSV scan: header parsing is per-file, splits
+    * parallelize. The schema is inferred on the first read of a file
+    * and memoised ([[SchemaMemo]]): a re-read of the unchanged file
+    * under the same SQL confs runs no inference job. */
   def readMaxQuant(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .csv(path)
+    SchemaMemo.read(spark, path, "csv",
+      Map("sep" -> "\t", "header" -> "true", "inferSchema" -> "true"))
 
   /** Perseus type codes (ref io.py:44-65 FIELD_TYPE_MAP): C
     * categorical, N numeric, T text, E expression (default). */

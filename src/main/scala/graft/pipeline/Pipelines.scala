@@ -2,16 +2,21 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.ml.Ward
 import graft.ops.{Caches, Design, Filters, Normalize, Reshape}
 import graft.stats.{Moments, StatTests, Summaries, Volcano}
 
 /** The reference's canonical end-to-end workflows (SURVEY §3) as
-  * composable lazy stages. One Catalyst lineage end-to-end. For
-  * [[phosphoLfq]]: scan → narrow filters/projections → side-table
-  * expand (one `Generate`) → unpivot (`Expand`) → per-sample median
-  * centering (the quantile engine, which references its input three
-  * times) → broadcast design join → min-valid windows → replicate
+  * composable lazy stages. [[phosphoLfq]] runs as two plans. The
+  * first is scan → narrow filters/projections → side-table expand (one
+  * `Generate`) → unpivot (`Expand`) → log2, pruned to (id, sample,
+  * value) and staged behind an RDD leaf (`Bridge.stage`): the site
+  * table is parsed once per action, and nothing downstream carries the
+  * wide subtree through analysis or AQE re-planning. The second reads
+  * that leaf: per-sample median centering (the quantile engine, which
+  * references its input three times — all three read the staged
+  * blocks) → broadcast design join → min-valid windows → replicate
   * collapse → volcano aggregate. The min-valid windows pay the one
   * full-data exchange, `hashpartitioning(id)`; the collapse and
   * volcano aggregates are keyed by the id and reuse it.
@@ -50,10 +55,13 @@ object Pipelines {
     val long0 = Reshape.unpivot(expanded,
       expanded.columns.filterNot(intensityCols.contains).toSeq,
       intensityCols.toSeq, nameCol = "sample", valueCol = "value")
-    // log2 with ±inf→null, median-center per sample
-    val long = Normalize.subtractColumnMedian(
-      long0.withColumn("value", Reshape.infToNull(log2(col("value")))),
-      "sample", "value")
+    // log2 with ±inf→null, staged; downstream reads only these columns
+    val staged = Bridge.stage(
+      long0.select(col("id"), col("sample"),
+        Reshape.infToNull(log2(col("value"))).as("value")),
+      Caches.memoLevel(sites.sparkSession))
+    // median-center per sample
+    val long = Normalize.subtractColumnMedian(staged, "sample", "value")
     // design annotation (broadcast) + group-validity gate
     val annotated = Design.buildIndexFromDesign(
       long, design, removePrefixes = Seq(intensityPrefix), keepUnmatched = false)

@@ -1,13 +1,17 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Column ⇄ Expression bridge. Spark 4 made the constructors
-  * `private[sql]`; a library shipping custom Catalyst expressions
-  * needs this one-file shim inside the sql namespace (standard
-  * extension-library pattern — no Spark internals are modified). */
+/** Column ⇄ Expression bridge, and frames staged behind an RDD leaf.
+  * Spark 4 made the constructors `private[sql]`; a library shipping
+  * custom Catalyst expressions needs this one-file shim inside the sql
+  * namespace (standard extension-library pattern — no Spark internals
+  * are modified). */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -23,8 +27,29 @@ object Bridge {
     * No-op for plans without a LogicalRDD leaf. */
   def unpersistLocalCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      case lr: LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ =>
     }
+
+  /** `df` behind a leaf: its rows as an RDD persisted at `level`,
+    * read back through a `LogicalRDD`. Plans built on the result are
+    * analysed, optimised and AQE-re-planned over that one leaf instead
+    * of `df`'s whole subtree, and however often they reference it, the
+    * rows are computed once per partition (by the first job that reads
+    * them) and read from the block manager after that.
+    *
+    * Lazy when `df`'s plan has no exchange (building an adaptive
+    * plan's RDD runs its shuffle stages). The caller prunes `df` to the
+    * columns downstream needs first — nothing is pushed through the
+    * leaf.
+    * Unlike `localCheckpoint` the RDD keeps its lineage, so a lost or
+    * evicted block is recomputed, never a failed job. The blocks live
+    * until the RDD is unreachable; ContextCleaner then removes them. */
+  def stage(df: DataFrame, level: StorageLevel): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val rows = ds.queryExecution.toRdd.map(_.copy()).persist(level)
+    classic.Dataset.ofRows(ds.sparkSession,
+      LogicalRDD.fromDataset(rows, ds, isStreaming = false))
+  }
 }

@@ -4,7 +4,9 @@ import graft.ops.Filters
 import graft.queries.Registry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SparkPlan}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.FileScanRDD
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
@@ -85,7 +87,7 @@ class PlanSpec extends SparkSpec {
       clustered.queryExecution.explainString(ExplainMode.fromString("formatted")))
   }
 
-  test("phosphoLfq: at most 3 site-table scans, no exchange from min-valid to volcano") {
+  test("phosphoLfq: one site scan in a staged leaf, no exchange from min-valid to volcano") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-sites").toString + "/sites"
     // 40 sites × 3 multiplicities × 6 samples, two groups of three
@@ -101,17 +103,33 @@ class PlanSpec extends SparkSpec {
       .coalesce(1).write.option("sep", "\t").option("header", "true").csv(dir)
     val design = samples.map(s => (s, if (s.startsWith("A")) "Control" else "Treat", s.last - '0', 1))
       .toDF("Label", "Group", "Replicate", "Technical")
-    val out = graft.pipeline.Pipelines.phosphoLfq(
-      graft.io.MaxQuant.readMaxQuant(spark, dir), design)
-    assert(out.count() > 0)
+    // bytes read through the local Hadoop file system. Task input
+    // metrics would not do: they count reads of cached blocks too.
+    def bytesRead(body: => Unit): Long = {
+      import scala.jdk.CollectionConverters._
+      def read = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+        .filter(_.getScheme == "file").map(_.getBytesRead).sum
+      val before = read
+      body
+      read - before
+    }
+    val sites = graft.io.MaxQuant.readMaxQuant(spark, dir) // infers, outside the counts
+    val oneRead = bytesRead(sites.foreach(_ => ()))
+    val out = graft.pipeline.Pipelines.phosphoLfq(sites, design)
+    // the three references of the median engine and every later
+    // operator read the staged blocks: one collect parses the file once
+    // (the unstaged chain read it three times)
+    assert(oneRead > 0 && bytesRead(out.collect()) == oneRead)
     val root = out.queryExecution.executedPlan
     val p = root.toString
-    // the median engine references the expanded long frame three times
-    // (histogram, target-bucket ranks, the centering join); every other
-    // operator in the chain rides one of those references. The
-    // per-multiplicity union expand and the semi-join min-valid read
-    // the site table 12 times in this final plan.
-    assert(nodes(root).count(_.isInstanceOf[FileSourceScanExec]) <= 3, p)
+    // the consuming plan scans no file; its data leaves are one RDD
+    assert(!nodes(root).exists(_.isInstanceOf[FileSourceScanExec]), p)
+    val staged = nodes(root).collect { case r: RDDScanExec => r.rdd }.distinct
+    assert(staged.size == 1, p)
+    // the staged RDD's own plan holds exactly one scan of the site table
+    def lineage(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    assert(lineage(staged.head).count(_.isInstanceOf[FileScanRDD]) == 1,
+      staged.head.toDebugString)
     // from the volcano aggregate down to the min-valid count window:
     // no exchange — both windows, the replicate collapse and the
     // volcano aggregate reuse the windows' hashpartitioning(id)

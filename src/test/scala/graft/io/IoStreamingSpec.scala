@@ -20,6 +20,61 @@ class IoStreamingSpec extends SparkSpec {
     assert(df.filter($"Reverse" === "+").count() == 1)
   }
 
+  private def writeSites(path: java.nio.file.Path, values: String*): Unit =
+    Files.writeString(path, ("id\tScore\n" +: values.zipWithIndex.map { case (v, i) =>
+      s"${i + 1}\t$v\n" }).mkString)
+
+  private def scoreType(df: org.apache.spark.sql.DataFrame) = df.schema("Score").dataType.typeName
+
+  test("readMaxQuant memoises the inferred schema: an unchanged file re-reads with no job") {
+    val f = Files.createTempDirectory("mqmemo").resolve("sites.txt")
+    writeSites(f, "1", "2")
+    assert(jobsOf(MaxQuant.readMaxQuant(spark, f.toString)) > 0)
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { df = MaxQuant.readMaxQuant(spark, f.toString) } == 0)
+    assert(scoreType(df) == "integer" && df.count() == 2)
+  }
+
+  test("readMaxQuant re-infers a rewritten file: new length, or same length and new mtime") {
+    val f = Files.createTempDirectory("mqmemo").resolve("sites.txt")
+    writeSites(f, "1", "2")
+    assert(scoreType(MaxQuant.readMaxQuant(spark, f.toString)) == "integer")
+    writeSites(f, "1.5", "2")
+    assert(scoreType(MaxQuant.readMaxQuant(spark, f.toString)) == "double")
+    // same bytes count, new content: only the modification time differs
+    val mtime = Files.getLastModifiedTime(f).toMillis
+    writeSites(f, "x.5", "2")
+    Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime.fromMillis(mtime + 2000))
+    assert(scoreType(MaxQuant.readMaxQuant(spark, f.toString)) == "string")
+  }
+
+  test("readMaxQuant re-infers under a changed SQL conf") {
+    val f = Files.createTempDirectory("mqmemo").resolve("sites.txt")
+    writeSites(f, "1", "2")
+    MaxQuant.readMaxQuant(spark, f.toString)
+    val conf = "spark.sql.caseSensitive"
+    val saved = spark.conf.getAll.get(conf)
+    spark.conf.set(conf, (!spark.sessionState.conf.caseSensitiveAnalysis).toString)
+    try assert(jobsOf(MaxQuant.readMaxQuant(spark, f.toString)) > 0)
+    finally saved.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+    assert(jobsOf(MaxQuant.readMaxQuant(spark, f.toString)) == 0)
+  }
+
+  test("readMaxQuant: a glob infers on every read; a directory keys on its children") {
+    val dir = Files.createTempDirectory("mqmemo")
+    writeSites(dir.resolve("a.txt"), "1", "2")
+    val glob = s"$dir/*.txt"
+    assert(scoreType(MaxQuant.readMaxQuant(spark, glob)) == "integer")
+    assert(jobsOf(MaxQuant.readMaxQuant(spark, glob)) > 0)
+    val plain = spark.read.option("sep", "\t").option("header", "true")
+      .option("inferSchema", "true").csv(dir.toString).schema
+    assert(MaxQuant.readMaxQuant(spark, dir.toString).schema == plain)
+    assert(jobsOf(MaxQuant.readMaxQuant(spark, dir.toString)) == 0)
+    // a new part file is a miss: its values widen the column
+    writeSites(dir.resolve("b.txt"), "2.5")
+    assert(scoreType(MaxQuant.readMaxQuant(spark, dir.toString)) == "double")
+  }
+
   test("readPerseus keeps label row only, types from #!{Type} row, malformed numerics -> null") {
     val tmp = Files.createTempDirectory("pers").toString
     Files.writeString(java.nio.file.Paths.get(tmp, "p.txt"),

@@ -1,8 +1,8 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import graft.stats.Summaries
-import graft.ops.Filters
+import graft.stats.{Summaries, Volcano}
+import graft.ops.{Design, Filters, Normalize, Reshape}
 import graft.functions.ScalarFuncs
 import graft.text.DedupIndex
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -63,6 +63,53 @@ class PipelineSpec extends SparkSpec {
     // groups equally so the ratio is preserved
     val r1 = out.filter(col("id") === "1___1").head()
     assert(math.abs(r1.getAs[Double]("ratio") - 4.0) < 0.2)
+  }
+
+  /** The phosphoLfq body with no stage: one lineage from the sites
+    * frame to the volcano table. */
+  private def unstagedLfq = {
+    val filtered = Filters.filterLocalizationProbability(
+      Filters.removeContaminants(Filters.removeReverse(sites)), threshold = 0.75)
+    val expanded = Reshape.expandSideTable(filtered)
+    val intensityCols = expanded.columns.filter(_.startsWith("Intensity "))
+    val long0 = Reshape.unpivot(expanded,
+      expanded.columns.filterNot(intensityCols.contains).toSeq,
+      intensityCols.toSeq, nameCol = "sample", valueCol = "value")
+    val long = Normalize.subtractColumnMedian(
+      long0.withColumn("value", Reshape.infToNull(log2(col("value")))), "sample", "value")
+    val annotated = Design.buildIndexFromDesign(
+      long, design, removePrefixes = Seq("Intensity "), keepUnmatched = false)
+    val valid = Filters.minimumValidValuesInAnyGroup(annotated, Seq("id"), Seq("Group"), "value", 2L)
+    val collapsed = Summaries.collapseTechnicalReplicates(
+      valid, Seq("id"), Seq("Group", "Replicate"), "value")
+    Volcano.twoSample(collapsed, Seq("id"), "Group", "value", "Control", "Treat",
+      minValidN = 2, s0 = 0.5, minRatio = 0.5, minP = 0.05)
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq.mkString("\u0001")).sorted.toSeq
+
+  test("phosphoLfq: the staged chain returns exactly the rows of the unstaged one") {
+    val staged = Pipelines.phosphoLfq(sites, design, control = "Control", comparison = "Treat")
+    val expected = unstagedLfq
+    assert(staged.columns.toSeq == expected.columns.toSeq)
+    val rows = sortedRows(staged)
+    assert(rows.nonEmpty && rows == sortedRows(expected))
+  }
+
+  test("phosphoLfq: a staged block that is gone is recomputed from lineage") {
+    val out = Pipelines.phosphoLfq(sites, design, control = "Control", comparison = "Treat")
+    val first = sortedRows(out)
+    val staged = out.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.distinct
+    assert(staged.size == 1)
+    assert(staged.head.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    staged.head.unpersist(blocking = true)
+    // a fresh plan over the same frame reads the leaf again (a second
+    // collect of `out` itself would reuse its shuffle files); a local
+    // checkpoint has no lineage, and its lost blocks fail the job
+    assert(sortedRows(out.select(out.columns.map(col).toSeq: _*)) == first)
   }
 
   test("silacRatio one-sample volcano flags shifted ratios") {

@@ -32,6 +32,14 @@ For traced pairs a second table counts Spark jobs per span name, from
 the `jobs` field of every span of every traced pass: each side's count
 (or its distinct counts with their frequencies when they differ), and
 whether both sides' counts repeat exactly across passes and runs.
+
+A third table shows artifact-only fields of the untraced pairs, which
+no BENCHMARK.json metric carries: the JVM's peak heap and peak resident
+set (`raw.peak_heap_mb`, `raw.peak_rss_mb` — what a run keeps, where
+`alloc_mb` counts what it allocates) and the 90th-percentile op time
+(`op_p90_s`). Each row gives both sides' medians and the change's wins
+(lower is better for all three); a field missing on either side of a
+pair leaves that pair out.
 """
 import argparse
 import glob
@@ -142,6 +150,47 @@ def job_counts(parent_runs, change_runs):
     return rows
 
 
+ARTIFACT_FIELDS = ("raw.peak_heap_mb", "raw.peak_rss_mb", "op_p90_s")
+
+
+def artifact_field(art, dotted):
+    """The value at a dotted path of an artifact, or None."""
+    value = art
+    for part in dotted.split("."):
+        value = value.get(part) if isinstance(value, dict) else None
+    return value
+
+
+def artifact_fields(parent_runs, change_runs):
+    """One dict per (workload, artifact field) over the untraced pairs:
+    both sides' medians and the change's wins (lower is better)."""
+    rows = []
+    pairs = sorted(k for k in set(parent_runs) & set(change_runs) if not k[2])
+    for workload in sorted({w for w, _, _ in pairs}):
+        keys = [k for k in pairs if k[0] == workload]
+        for field in ARTIFACT_FIELDS:
+            values = [(artifact_field(parent_runs[k], field), artifact_field(change_runs[k], field))
+                      for k in keys]
+            values = [(float(p), float(c)) for p, c in values if p is not None and c is not None]
+            if not values:
+                continue
+            rows.append({"workload": workload, "field": field, "pairs": len(values),
+                         "parent": statistics.median(p for p, _ in values),
+                         "change": statistics.median(c for _, c in values),
+                         "wins": sum(1 for p, c in values if c < p)})
+    return rows
+
+
+def render_fields(rows):
+    lines = ["| workload | artifact field | pairs | parent median | change median | change wins |",
+             "|---|---|---|---|---|---|"]
+    for r in rows:
+        lines.append(
+            f"| {r['workload']} | {r['field']} | {r['pairs']} | {fmt(r['parent'])} "
+            f"| {fmt(r['change'])} | {r['wins']}/{r['pairs']} |")
+    return "\n".join(lines)
+
+
 def fmt_jobs(counts):
     """`13` when every instance ran 13 jobs, else `11×3, 13×17`; `-` for none."""
     if not counts:
@@ -200,6 +249,10 @@ def main(argv=None):
     if jobs:
         print()
         print(render_jobs(jobs))
+    fields = artifact_fields(parent_runs, change_runs)
+    if fields:
+        print()
+        print(render_fields(fields))
     return 0
 
 

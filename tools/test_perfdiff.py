@@ -27,12 +27,13 @@ BENCHMARK = {
 }
 
 
-def write(directory, workload, seed, trace, end_to_end, per_layer=None, passes=None):
+def write(directory, workload, seed, trace, end_to_end, per_layer=None, passes=None,
+          raw=None, op_p90_s=None):
     art = {
-        "workload": workload, "seed": seed, "trace": trace,
+        "workload": workload, "seed": seed, "trace": trace, "op_p90_s": op_p90_s,
         "end_to_end": {k: {"value": v, "unit": "s"} for k, v in end_to_end.items()},
         "per_layer": {k: {"value": v, "unit": "count"} for k, v in (per_layer or {}).items()},
-        "raw": {"passes": passes or []},
+        "raw": dict(raw or {}, passes=passes or []),
     }
     name = f"{workload}-seed{seed}-trace{int(trace)}.json"
     with open(os.path.join(directory, name), "w") as f:
@@ -51,14 +52,19 @@ class PerfDiffTest(unittest.TestCase):
             jitter = 0.01 * (i % 3)
             write(self.parent, "lfq", seed, False, {
                 "pass_s": 4.0 + jitter, "items_per_s": 100.0 + i,
-                "alloc_mb": 1000.0, "cpu_s": 10.0 + (i % 2)})
+                "alloc_mb": 1000.0, "cpu_s": 10.0 + (i % 2)},
+                raw={"peak_heap_mb": 800.0 + i, "peak_rss_mb": 1300.0},
+                op_p90_s=None if i == 0 else 4.2)
             write(self.change, "lfq", seed, False, {
                 # a clear gain; throughput up on every pair
                 "pass_s": 2.5 + jitter, "items_per_s": 160.0 + i,
                 # 30 % more memory against a 0.15 bound
                 "alloc_mb": 1300.0,
                 # a coin flip
-                "cpu_s": 10.0 + ((i + 1) % 2)})
+                "cpu_s": 10.0 + ((i + 1) % 2)},
+                # the heap peaks higher on every pair but one
+                raw={"peak_heap_mb": 900.0 + i if i else 700.0, "peak_rss_mb": 1300.0},
+                op_p90_s=2.7)
         def traced_pass(jobs):
             return {"traced": True, "spans": [{"name": n, "jobs": j} for n, j in jobs]}
         untraced = {"traced": False, "spans": [{"name": "probe", "jobs": 99}]}
@@ -134,6 +140,23 @@ class PerfDiffTest(unittest.TestCase):
         table = perfdiff.render(list(self.rows.values()))
         self.assertIn("| -0.483 | -2683.3% |", table)
         self.assertIn("| -1.5 | -37.4% |", table)
+
+    def test_artifact_fields_compare_untraced_pairs_by_median_and_wins(self):
+        fields = {r["field"]: r for r in perfdiff.artifact_fields(
+            perfdiff.load_runs(self.parent), perfdiff.load_runs(self.change))}
+        heap = fields["raw.peak_heap_mb"]
+        # ten untraced pairs; the traced seed-99 pair and the unpaired run stay out
+        self.assertEqual((heap["pairs"], heap["wins"]), (10, 1))
+        self.assertAlmostEqual(heap["parent"], 804.5)
+        self.assertAlmostEqual(heap["change"], 904.5)
+        # equal values win for neither side
+        self.assertEqual(fields["raw.peak_rss_mb"]["wins"], 0)
+        # a pair missing the field on one side is left out
+        p90 = fields["op_p90_s"]
+        self.assertEqual((p90["pairs"], p90["wins"], p90["change"]), (9, 9, 2.7))
+        table = perfdiff.render_fields(list(fields.values()))
+        self.assertIn("| lfq | raw.peak_heap_mb | 10 | 804.5 | 904.5 | 1/10 |", table)
+        self.assertIn("| lfq | op_p90_s | 9 | 4.2 | 2.7 | 9/9 |", table)
 
     def test_render_has_one_row_per_metric(self):
         table = perfdiff.render(list(self.rows.values()))
