@@ -96,55 +96,19 @@ object Tables {
       sys.props("graft.layout") = "plain"
 
   /** Whether a completed clustered build for this (source, key) is
-    * on disk AND still whole: its [[LayoutManifest]] verifies against
-    * the directory (a partial/failed build, or one a tmp reaper has
-    * thinned, is never routed). */
+    * on disk AND still whole: its [[graft.io.BuildManifest]] verifies
+    * against the directory (a partial/failed build, or one a tmp
+    * reaper has thinned, is never routed). A source mtime of 0 (source
+    * not visible) is never a valid cache key; the mtime itself is part
+    * of the build's path. */
   def clusteredBuildExists(sfDir: String, name: String, key: String,
       numBuckets: Int = ClusterBuckets): Boolean = {
     val (_, path, mtime) = layoutAddress(sfDir, name, key, numBuckets)
-    LayoutManifest.verifies(path, mtime)
+    buildVerifies(path, mtime)
   }
 
-  /** Completion record of a clustered build, written beside `_SUCCESS`
-    * once the bucketed write has committed: the part-file count, their
-    * total bytes, the rows read back from them, and the source mtime
-    * the build was made from. `_SUCCESS` alone is not enough: a tmp
-    * reaper can delete part files and leave the marker behind, and
-    * every keyed query would then silently lose rows. Verification is
-    * a directory listing (no Spark job): the source mtime, the part
-    * count and the byte total must all match — a deleted or truncated
-    * part file changes the count or the bytes. A mismatch, a missing
-    * manifest, or a source mtime of 0 (source not visible: never a
-    * valid cache key) means "not built". */
-  private[graft] object LayoutManifest {
-    private val FileName = "_graft_manifest"
-
-    private def parts(path: String): Seq[java.io.File] =
-      Option(new java.io.File(path).listFiles()).toSeq.flatten
-        .filter(f => f.isFile && f.getName.startsWith("part-"))
-
-    private def render(files: Int, bytes: Long, rows: Long, mtime: Long): String =
-      s"files=$files\nbytes=$bytes\nrows=$rows\nsource_mtime=$mtime\n"
-
-    def write(spark: SparkSession, path: String, mtime: Long): Unit = {
-      val ps = parts(path)
-      val rows = spark.read.parquet(path).count()
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(path, FileName),
-        render(ps.size, ps.map(_.length).sum, rows, mtime))
-    }
-
-    def verifies(path: String, mtime: Long): Boolean = mtime != 0L && {
-      val f = java.nio.file.Paths.get(path, FileName)
-      java.nio.file.Files.isRegularFile(f) && {
-        val kv = java.nio.file.Files.readString(f).linesIterator
-          .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
-        val ps = parts(path)
-        kv.get("source_mtime").contains(mtime.toString) &&
-          kv.get("files").contains(ps.size.toString) &&
-          kv.get("bytes").contains(ps.map(_.length).sum.toString)
-      }
-    }
-  }
+  private def buildVerifies(path: String, mtime: Long): Boolean =
+    mtime != 0L && graft.io.BuildManifest.verifies(path)
 
   /** Deterministic (catalog table, scratch path, source mtime) address
     * of a clustered layout — ONE definition shared by the builder and
@@ -205,7 +169,7 @@ object Tables {
     * completed builds are reused across sessions; a catalog-only miss
     * re-registers the existing files with the same bucket DDL instead
     * of rewriting). Every call first verifies the build's
-    * [[LayoutManifest]]; a build that fails it (absent, partial, or
+    * [[graft.io.BuildManifest]]; a build that fails it (absent, partial, or
     * thinned on disk since) is dropped from the catalog and rewritten.
     * Spark reads bucket metadata from the catalog, so later
     * equi-joins/groupBys on `key` skip their shuffles entirely. */
@@ -213,7 +177,7 @@ object Tables {
       spark: SparkSession, sfDir: String, name: String,
       key: String, numBuckets: Int): DataFrame = synchronized {
     val (tbl, path, mtime) = layoutAddress(sfDir, name, key, numBuckets)
-    val whole = LayoutManifest.verifies(path, mtime)
+    val whole = buildVerifies(path, mtime)
     if (!whole) spark.sql(s"DROP TABLE IF EXISTS $tbl") // external: drops the entry only
     if (!spark.catalog.tableExists(tbl)) {
       val src = table(spark, sfDir, name)
@@ -226,7 +190,7 @@ object Tables {
         src.write.mode("overwrite")
           .bucketBy(numBuckets, key).sortBy(key)
           .option("path", path).format("parquet").saveAsTable(tbl)
-        LayoutManifest.write(spark, path, mtime)
+        graft.io.BuildManifest.write(path)
       }
     }
     spark.table(tbl)

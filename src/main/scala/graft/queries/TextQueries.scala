@@ -729,15 +729,16 @@ object TextQueries extends QueryProvider {
       sfDir.replaceAll("[^A-Za-z0-9]", "_") + s"_${sourceMtime(sfDir)}"
 
   /** Serving indexes are built ONCE and queried many times — skip the
-    * rebuild when a completed write for the same source already exists
-    * (parquet's _SUCCESS marker; the path key above guarantees
+    * rebuild when a finished build for the same source already exists:
+    * its [[graft.io.BuildManifest]], which `write` must publish last,
+    * verifies against the directory (the path key above guarantees
     * freshness). mtime == 0 means lastModified() could not see the
     * source file at all — never a valid cache key, so that path
     * rebuilds unconditionally. Completed builds sweep same-key
     * siblings from older source mtimes, so tmp holds at most one
     * index per (kind, layout, sf dir). */
-  private def ensureIndex(sfDir: String, path: String)(write: => Unit): Unit = {
-    if (sourceMtime(sfDir) == 0L || !new java.io.File(s"$path/_SUCCESS").exists()) write
+  private[graft] def ensureIndex(sfDir: String, path: String)(write: => Unit): Unit = {
+    if (sourceMtime(sfDir) == 0L || !graft.io.BuildManifest.verifies(path)) write
     sweepStaleSiblings(sfDir, path)
   }
 
@@ -769,27 +770,22 @@ object TextQueries extends QueryProvider {
 
   /** Build-or-load a cell-partitioned IVF serving index at
     * `indexPath(d, "ivf", layout)`. Centroids are part of the stored
-    * index (`_centroids.txt`): a cache hit skips the fit too
+    * index and of its manifest: a cache hit skips the fit too
     * (Double.toString/parseDouble roundtrips exactly, so replayed
     * probes/assignments are bit-identical to a refit). `fit` is only
-    * forced on a cold cache. */
-  private def ensureIvfServing(d: String, layout: String)(
+    * forced when no finished build verifies. */
+  private[graft] def ensureIvfServing(
+      s: org.apache.spark.sql.SparkSession, d: String, layout: String)(
       fit: => (org.apache.spark.sql.DataFrame, Array[Array[Double]]))
       : (String, Array[Array[Double]]) = {
     val path = indexPath(d, "ivf", layout)
-    val centFile = new java.io.File(s"$path/_centroids.txt")
-    val centroids =
-      if (sourceMtime(d) != 0L &&
-          new java.io.File(s"$path/_SUCCESS").exists() && centFile.exists()) {
-        val src = scala.io.Source.fromFile(centFile)
-        try src.getLines().map(_.split(" ").map(_.toDouble)).toArray finally src.close()
-      } else {
-        val (assigned, c) = fit
-        graft.sim.AnnIndex.writeIvfIndexed(assigned, path)
-        val w = new java.io.PrintWriter(centFile)
-        try c.foreach(row => w.println(row.mkString(" "))) finally w.close()
-        c
-      }
+    val stored =
+      if (sourceMtime(d) == 0L) None else graft.sim.AnnIndex.storedCentroids(s, path)
+    val centroids = stored.getOrElse {
+      val (assigned, c) = fit
+      graft.sim.AnnIndex.writeIvfIndexed(assigned, c, path)
+      c
+    }
     sweepStaleSiblings(d, path)
     (path, centroids)
   }
@@ -810,7 +806,7 @@ object TextQueries extends QueryProvider {
       val q = emb.filter(col("vec_id") === 0)
         .select(transform(col("embedding"), _.cast("double")).as("q"))
         .head().getSeq[Double](0).toArray
-      val (path, centroids) = ensureIvfServing(d, "c16")(
+      val (path, centroids) = ensureIvfServing(s, d, "c16")(
         Similarity.ivfIndex(emb, "vec_id", "embedding", nCells = 16))
       val qNorm = math.sqrt(q.foldLeft(0.0)((acc, x) => acc + x * x))
       lastIvfPruned.set((centroids, Similarity.probeCells(centroids, q, nProbe = 4), qNorm))
@@ -1149,7 +1145,7 @@ object TextQueries extends QueryProvider {
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
       val queries = qids.map(byId)
       val nCells = Similarity.suggestCells(emb.count())
-      val (path, cents) = ensureIvfServing(d, s"c${nCells}s") {
+      val (path, cents) = ensureIvfServing(s, d, s"c${nCells}s") {
         val c = Similarity.fitCoarseCells(emb, "embedding", nCells)
         // widen BEFORE assigning: the argmin's cost is nCells × dim per
         // row and the fixture is one parquet file (~4 row-group splits)
@@ -1611,10 +1607,8 @@ object TextQueries extends QueryProvider {
       ensureIndex(d, path) {
         graft.text.DedupIndex.write(
           docs.filter(col("doc_id") % 10 =!= 9), "doc_id", "text", path)
-        // the index writes land in sigs/ and bands/ subdirs; surface
-        // the completion marker where ensureIndex looks for it (only
-        // after BOTH subtable writes committed)
-        new java.io.File(path, "_SUCCESS").createNewFile()
+        // published only after BOTH subtable writes (sigs/, bands/)
+        graft.io.BuildManifest.write(path)
       }
       // the cap is passed EXPLICITLY (not left to the default) and the
       // SQL below interpolates the same named constant: the two sides

@@ -1,7 +1,12 @@
 package graft.sim
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.io.BuildManifest
 
 /** The ANN SERVING layout: index structures (IVF cells, LSH buckets)
   * materialized as PARTITION COLUMNS of the stored embedding table, so
@@ -16,544 +21,59 @@ import org.apache.spark.sql.functions._
   * dot products per row (more than brute force's 2) and the IVF cell
   * filter costs nCells distance evaluations per row. Partitioned
   * storage moves that work to ingest (once) and turns every query's
-  * probe into file listing. PlanSpec asserts the pruned plans'
-  * PartitionFilters carry the probe predicate.
+  * probe into a lookup of committed files. PlanSpec asserts the pruned
+  * plans' PartitionFilters carry the probe predicate.
+  *
+  * Build contract: an index is written once, by one writer, and then
+  * only read. Each writer here ends with [[graft.io.BuildManifest]]'s
+  * publish, after every data and side file (the IVF centroids) is on
+  * disk, so an index without a manifest is an unfinished build. The
+  * serving reads open exactly the files the manifest names and never
+  * list the tree. An index is changed only by writing it again, which
+  * deletes the old files: a rewrite must not run under its readers.
   */
 object AnnIndex {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Serving-consistency manifest (round-6 judge item 7). A
-    * partitioned parquet append is not an atomic commit: task commits
-    * surface part files one rename at a time, so a reader listing the
-    * directories mid-append can catch HALF an append batch — a "torn"
-    * index no committed version ever equaled. (Object stores make this
-    * worse: no atomic directory rename at all.) The standard fix, used
-    * here: every maintenance operation finishes by atomically
-    * publishing a MANIFEST of the index's committed data files; the
-    * serving reads ([[ivfTopKServe]]/[[lshTopKServe]]) resolve the
-    * manifest once per query and scan exactly the files it names —
-    * every query sees a committed version, pre- or post-append, never
-    * a partial batch. APPENDS are concurrent-safe (staged writes +
-    * CAS-claimed chained manifest commits — see [[publishCommit]]);
-    * overwrite-style ops (initial build, rebuild) remain single-writer
-    * per index version, serialized by the ingest pipeline — the usual
-    * warehouse contract. Readers are unlimited. AnnIndexSpec drives
-    * readers concurrent with appends (and appenders concurrent with
-    * each other) and asserts every served top-k equals a committed
-    * version's answer. */
-  private val ManifestFile = "_graft_manifest"
-  private val ManifestVersionRe = ("""\Q""" + ManifestFile + """\E\.v(\d+)""").r
-  private val ClaimRe = ("""\Q""" + ManifestFile + """\E\.claim\.(\d+)""").r
-
-  /** Atomically publish `path`'s current recursive parquet listing as
-    * the next VERSIONED serving manifest `_graft_manifest.v<N>`.
-    *
-    * Concurrent-writer safety (round-8 judge item 3) is a CAS on the
-    * version number: the writer (1) reads the highest existing
-    * manifest/claim version, (2) claims N+1 by CREATE-EXCLUSIVE of
-    * `_graft_manifest.claim.<N+1>` (`FileSystem.create(path,
-    * overwrite=false)` is atomic on POSIX/HDFS — exactly one of two
-    * racing writers wins; the loser re-reads and claims a higher
-    * number), (3) only THEN lists the data files, (4) writes the
-    * manifest body to a tmp file and renames it to its claimed —
-    * therefore unclaimable-by-anyone-else — versioned name.
-    *
-    * Listing AFTER claiming is what makes the last manifest complete
-    * under racing appends: every writer publishes only after its own
-    * append job committed, so claim order ≥ commit order, and the
-    * highest claimant's listing sees every earlier claimant's files.
-    * The old read-list-rename-over-one-name scheme lost that — the
-    * last rename could carry a listing taken before the other
-    * writer's files landed, silently dropping them from serving.
-    * Claim files persist until [[sweepManifests]] (deleting one early
-    * would let a slow writer re-claim a published version number).
-    *
-    * Readers resolve the HIGHEST version once per query; paths are
-    * stored relative to the index root so the directory is
-    * relocatable. */
-  def publishManifest(spark: SparkSession, path: String): Unit =
-    publishCommit(spark, path, None)
-
-  /** The manifest commit protocol. `additions = None` is a FULL
-    * publish (initial write / rebuild: the committed set is the
-    * current recursive listing); `additions = Some(files)` is an
-    * APPEND commit: the committed set is the PREDECESSOR manifest's
-    * set plus exactly these files — never a listing, so a concurrent
-    * appender's half-moved batch can't leak into this writer's
-    * manifest. The claimant of version N+1 waits for manifest vN to
-    * appear (its claimant published or crashed); on timeout it falls
-    * back to the recursive listing, which self-heals a crashed
-    * predecessor at the cost of exposing whatever prefix of that
-    * writer's moves completed (per-file renames are atomic — every
-    * listed file is a readable, committed parquet). */
-  private def publishCommit(
-      spark: SparkSession, path: String, additions: Option[Seq[String]]): Unit = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(hconf)
-    // CAS loop: claim the next version number exclusively
-    var claimed = -1L
-    var attempts = 0
-    while (claimed < 0) {
-      attempts += 1
-      require(attempts <= 64, s"could not claim a manifest version under $base")
-      val next = highestVersion(fs, base) + 1
-      if (createExclusive(fs,
-          new org.apache.hadoop.fs.Path(base, s"$ManifestFile.claim.$next")))
-        claimed = next
-      // else: lost the race; re-read and claim a higher number
-    }
-    val files = additions match {
-      case Some(add) =>
-        predecessorManifest(fs, base, claimed - 1) match {
-          case Some(prev) => (prev ++ add).distinct
-          case None =>
-            // timeout / legacy: self-heal via the recursive listing.
-            // Logged loudly because this path can bake a crashed
-            // predecessor's partial batch prefix into the committed
-            // chain (documented trade) — if it fires spuriously the
-            // operator should see it and check for clock skew or a
-            // predecessor slower than ClaimAbandonMs.
-            if (claimed > 1)
-              log.warn(
-                s"append commit v$claimed under $base: predecessor manifest " +
-                s"v${claimed - 1} never appeared (claimant crashed or slower " +
-                s"than ${ClaimAbandonMs / 1000}s); falling back to recursive " +
-                "listing — a crashed writer's partial batch may be committed")
-            listDataFiles(fs, base)
-        }
-      case None => listDataFiles(fs, base)
-    }
-    val tmp = new org.apache.hadoop.fs.Path(base, s"$ManifestFile.v$claimed.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(files.sorted.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(base, s"$ManifestFile.v$claimed")
-    require(fs.rename(tmp, dst), s"could not publish manifest at $dst")
-  }
-
-  /** Wait (bounded) for manifest version `n` to be published and read
-    * it.
-    *
-    * n ≤ 0 means this append is the FIRST versioned commit: the
-    * baseline is the LEGACY un-suffixed manifest if one exists (a
-    * pre-versioning index being upgraded — returning the empty
-    * baseline here made v1 contain only the appended batch, silently
-    * dropping every base vector from serving; round-9 advisory), and
-    * None otherwise (caller self-heals via the recursive listing,
-    * which on a fresh dir is exactly the appended files).
-    *
-    * None on timeout/abandonment: the claimant of n crashed between
-    * claim and publish. Abandonment is detected from the claim file's
-    * mtime — a live writer publishes within ms of claiming (append
-    * bodies are precomputed) or within seconds (full publish lists
-    * first), so a claim older than [[ClaimAbandonMs]] with no
-    * manifest is a crashed writer and we stop burning driver time on
-    * it; a missing claim file (swept) likewise returns immediately
-    * instead of stalling the full window.
-    *
-    * [[ClaimAbandonMs]] must be comfortably LARGER than the 30 s
-    * predecessor-wait cap below: a live claimant of vN can itself be
-    * blocked the full cap waiting on v(N-1), so its claim legitimately
-    * ages ~30 s before it publishes — a threshold at or under the cap
-    * would false-positive on exactly that chained wait and silently
-    * downgrade the append commit to the listing fallback (round-10
-    * advisory). 2× the cap also absorbs ordinary driver-clock vs
-    * store-mtime skew; larger skew only delays the fallback to the
-    * bounded 30 s timeout, never corrupts.
-    *
-    * Transient getFileStatus failures on the claim (object-store
-    * hiccups) are treated as "keep waiting": aborting mid-protocol
-    * here would strand the already-moved batch files as
-    * committed-looking data no manifest names (round-10 advisory). */
-  private val ClaimAbandonMs = 60000L
-  private def predecessorManifest(
-      fs: org.apache.hadoop.fs.FileSystem, base: org.apache.hadoop.fs.Path,
-      n: Long): Option[Seq[String]] = {
-    def readManifest(p: org.apache.hadoop.fs.Path): Seq[String] = {
-      val in = fs.open(p)
-      val content =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      content.split("\n").toSeq.filter(_.nonEmpty)
-    }
-    if (n <= 0L) {
-      val legacy = new org.apache.hadoop.fs.Path(base, ManifestFile)
-      return if (fs.exists(legacy)) Some(readManifest(legacy)) else None
-    }
-    val p = new org.apache.hadoop.fs.Path(base, s"$ManifestFile.v$n")
-    val claim = new org.apache.hadoop.fs.Path(base, s"$ManifestFile.claim.$n")
-    var waited = 0
-    while (waited < 300) { // hard cap ≤30 s; abandonment usually exits sooner
-      if (fs.exists(p)) return Some(readManifest(p))
-      try {
-        val age = System.currentTimeMillis() - fs.getFileStatus(claim).getModificationTime
-        if (age > ClaimAbandonMs) return None // claimant crashed post-claim
-      } catch {
-        case _: java.io.FileNotFoundException => return None // claim swept
-        case e: java.io.IOException =>
-          // transient store error probing the claim: keep waiting (the
-          // bounded loop still caps total wait) rather than aborting a
-          // commit whose batch files are already in the live tree
-          log.warn(s"transient error probing claim $claim; continuing to wait", e)
-      }
-      Thread.sleep(100)
-      waited += 1
-    }
-    None
-  }
-
-  /** Recursive data-file listing relative to the index root, skipping
-    * staging/metadata trees: any path SEGMENT starting with '.' (the
-    * append staging dirs) or with '_' without '=' (committer temp
-    * dirs; `_cell=3`-style partition dirs pass) — the same hidden-path
-    * rule Spark's own file index applies. */
-  private def listDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path): Seq[String] = {
-    val qualified = fs.makeQualified(base).toString
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(base, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      val rel = f.toString.stripPrefix(qualified).stripPrefix("/")
-      val segs = rel.split("/")
-      val hidden = segs.exists(s =>
-        s.startsWith(".") || (s.startsWith("_") && !s.contains("=")))
-      if (!hidden && rel.endsWith(".parquet")) files += rel
-    }
-    files.toSeq
-  }
-
-  /** Atomic create-exclusive — the CAS primitive behind the version
-    * claim. Hadoop's LOCAL filesystem implements `create(path,
-    * overwrite=false)` as a non-atomic exists-then-create (two racing
-    * claimants can both "win"), so local paths go through
-    * java.nio's O_EXCL createFile; HDFS/object-store schemes keep
-    * `fs.create(p, false)`, which IS atomic there (namenode-arbitrated
-    * / conditional put). */
-  private def createExclusive(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Boolean = fs match {
-    case _: org.apache.hadoop.fs.LocalFileSystem |
-         _: org.apache.hadoop.fs.RawLocalFileSystem =>
-      try {
-        java.nio.file.Files.createFile(java.nio.file.Paths.get(p.toUri.getPath))
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    case _ =>
-      try { fs.create(p, false).close(); true }
-      catch { case _: java.io.IOException => false }
-  }
-
-  /** Highest version number among published manifests AND outstanding
-    * claims (a claim without a manifest is an in-flight or crashed
-    * writer — its number is burned, never reused). */
-  private def highestVersion(
-      fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path): Long =
-    try {
-      fs.listStatus(base).iterator.map(_.getPath.getName).collect {
-        case ManifestVersionRe(n) => n.toLong
-        case ClaimRe(n)           => n.toLong
-      }.foldLeft(0L)(math.max)
-    } catch { case _: java.io.FileNotFoundException => 0L }
-
-  /** Retention sweep for the manifest version chain: keep the `keep`
-    * highest published manifests (and their claim markers), delete
-    * older ones. Readers pin the highest version at resolve time, so
-    * sweeping older versions never touches a live query's file set;
-    * a reader that loses the (resolve, open) race to a sweep falls
-    * back to the dir listing — same committed files. */
-  def sweepManifests(spark: SparkSession, path: String, keep: Int = 5): Unit = {
-    require(keep >= 1, "must keep at least the current manifest")
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val published = fs.listStatus(base).iterator.map(_.getPath.getName).collect {
-      case ManifestVersionRe(n) => n.toLong
-    }.toSeq.sorted
-    val cut = published.takeRight(keep).headOption.getOrElse(return)
-    published.filter(_ < cut).foreach { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(base, s"$ManifestFile.v$n"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(base, s"$ManifestFile.claim.$n"), false)
-    }
-  }
-
-  /** The committed file set, if a manifest has been published: resolve
-    * the highest version + read it once (one small file). A concurrent
-    * publish only ADDS a higher version, so the read sees a committed
-    * version either way; the open-after-list race (that version swept
-    * between calls) falls back to None = the dir-listing route. The
-    * un-suffixed legacy name is honored for pre-versioning indexes. */
-  private def manifestFiles(
-      spark: SparkSession, base: org.apache.hadoop.fs.Path,
-      fs: org.apache.hadoop.fs.FileSystem): Option[Seq[String]] =
-    try {
-      val names = fs.listStatus(base).iterator.map(_.getPath.getName).toSeq
-      val versions = names.collect { case ManifestVersionRe(n) => n.toLong }
-      val chosen =
-        if (versions.nonEmpty) Some(s"$ManifestFile.v${versions.max}")
-        else if (names.contains(ManifestFile)) Some(ManifestFile)
-        else None
-      chosen.map { name =>
-        val in = fs.open(new org.apache.hadoop.fs.Path(base, name))
-        val content =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        content.split("\n").toSeq.filter(_.nonEmpty)
-      }
-    } catch { case _: java.io.FileNotFoundException => None }
-
-  /** Concurrent-safe partitioned APPEND: write the batch to a private
-    * dot-prefixed staging dir (its own Spark job, its own `_temporary`
-    * — two plain `mode("append")` jobs into one directory share the
-    * committer's `_temporary/0` and clobber each other's task
-    * attempts), then MOVE each data file into its partition dir under
-    * the live root (per-file rename: atomic), then commit the moved
-    * file list through the chained manifest protocol. Readers resolve
-    * manifests, and hidden-path rules keep the staging tree out of
-    * listings, so a batch is invisible until its manifest commit —
-    * all-or-nothing per append even under concurrent writers.
-    * Returns the moved files' root-relative paths. */
-  private def appendViaStaging(
-      df: DataFrame, path: String, partitionCols: Seq[String]): Seq[String] = {
-    val spark = df.sparkSession
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val staging = new org.apache.hadoop.fs.Path(base,
-      s".graft-staging-${java.util.UUID.randomUUID}")
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(staging.toString)
-    val stagingQ = fs.makeQualified(staging).toString
-    val moved = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(staging, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      val name = f.getName
-      if (name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")) {
-        val rel = f.toString.stripPrefix(stagingQ).stripPrefix("/")
-        val dst = new org.apache.hadoop.fs.Path(base, rel)
-        fs.mkdirs(dst.getParent)
-        require(fs.rename(f, dst), s"could not move staged file $f -> $dst")
-        moved += rel
-      }
-    }
-    fs.delete(staging, true)
-    moved.toSeq
-  }
+  /** The IVF probe-side constants, stored beside the cells so a reused
+    * index skips the fit. One row per centroid, `Double.toString`
+    * values space-separated (round-trips exactly). */
+  private val CentroidsFile = "_centroids.txt"
 
   /** Write the IVF-assigned embedding table partitioned by coarse cell
-    * (from [[Similarity.assignCells]]). nCells is bounded (a coarse
-    * quantizer — 2^10..2^14 in practice), so the directory fan-out is
-    * safe; within a cell, files stay row-grouped for columnar reads. */
-  def writeIvfIndexed(assigned: DataFrame, path: String, cellCol: String = "_cell"): Unit = {
+    * (from [[Similarity.assignCells]]), plus the `centroids` it was
+    * assigned with. nCells is bounded (a coarse quantizer — 2^10..2^14
+    * in practice), so the directory fan-out is safe; within a cell,
+    * files stay row-grouped for columnar reads. */
+  def writeIvfIndexed(
+      assigned: DataFrame, centroids: Array[Array[Double]], path: String,
+      cellCol: String = "_cell"): Unit = {
     // repartition on the partition column first: each cell's rows land
     // in one task → one file per directory (otherwise every write task
     // opens a file in every cell it sees — small-file explosion).
     // File size within a cell is governed by maxRecordsPerFile.
     assigned.repartition(col(cellCol))
       .write.mode("overwrite").partitionBy(cellCol).parquet(path)
-    publishManifest(assigned.sparkSession, path)
+    val p = new Path(path, CentroidsFile)
+    val out = p.getFileSystem(assigned.sparkSession.sessionState.newHadoopConf()).create(p, true)
+    try out.write(centroids.map(_.mkString(" ") + "\n").mkString.getBytes(UTF_8))
+    finally out.close()
+    BuildManifest.write(path)
   }
+
+  /** The centroids of a finished IVF index at `path`: None when its
+    * manifest is absent or does not verify (the centroids included),
+    * or when the index holds no centroids. */
+  def storedCentroids(spark: SparkSession, path: String): Option[Array[Array[Double]]] =
+    if (!BuildManifest.verifies(path)) None
+    else try {
+      val p = new Path(path, CentroidsFile)
+      val in = p.getFileSystem(spark.sessionState.newHadoopConf()).open(p)
+      val body = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      Some(body.split("\n").filter(_.nonEmpty).map(_.split(" ").map(_.toDouble)))
+    } catch { case _: java.io.FileNotFoundException => None }
 
   def readIvfIndexed(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
-
-  /** Incremental index maintenance: assign a NEW batch of vectors with
-    * the STORED centroids and append it into the existing cell
-    * directories — the growing-corpus path that avoids rebuilding the
-    * whole index per ingest. Results are byte-identical to a full
-    * rebuild with the same centroids (assignment is a pure function of
-    * (vector, centroids); which FILE inside a cell dir holds a row is
-    * invisible to the probe). The centroids do NOT move — over many
-    * appends the partitioning drifts away from the data's true
-    * clustering, degrading the (nProbe/nCells) recall contract;
-    * monitor [[ivfStaleness]] and rebuild past a threshold. */
-  def appendIvfIndexed(
-      newVectors: DataFrame, centroids: Array[Array[Double]],
-      path: String, vecCol: String = "embedding",
-      cellCol: String = "_cell"): Unit = {
-    val moved = appendViaStaging(
-      Similarity.assignCells(newVectors, vecCol, centroids, cellCol)
-        .repartition(col(cellCol)),
-      path, Seq(cellCol))
-    // chained manifest commit (predecessor set + exactly this batch's
-    // files) only after every file is moved: concurrent serves keep
-    // answering from a committed pre-append version, and concurrent
-    // APPENDERS can't lose each other's batches (CAS version claim)
-    publishCommit(newVectors.sparkSession, path, Some(moved))
-  }
-
-  /** Staleness of a stored IVF index: run ONE Lloyd update step on the
-    * current contents (per-cell mean = the updated centroid estimate;
-    * empty cells keep their stored centroid) and return the fraction
-    * of indexed vectors whose nearest updated centroid differs from
-    * their stored cell. 0 means the stored partitioning is still the
-    * fixpoint of the current data; rising values mean appended batches
-    * have drifted the distribution and queries are paying recall for
-    * it — rebuild when it crosses the operator's tolerance (a few
-    * percent in practice). Cost: one scan for the means (nCells·dim
-    * rows collected — coarse-quantizer bounded) + one scan for the
-    * reassignment fraction. */
-  def ivfStaleness(
-      spark: SparkSession, path: String, centroids: Array[Array[Double]],
-      vecCol: String = "embedding", cellCol: String = "_cell"): Double = {
-    val idx = readIvfIndexed(spark, path)
-    val meanRows = idx
-      .select(col(cellCol).cast("int").as("_c"),
-        posexplode(col(vecCol)).as(Seq("_p", "_x")))
-      .groupBy(col("_c"), col("_p"))
-      .agg(avg(col("_x").cast("double")).as("_m"))
-      .collect()
-    if (meanRows.isEmpty) return 0.0
-    val byCell = meanRows.groupBy(_.getInt(0))
-    val updated = centroids.indices.map { c =>
-      byCell.get(c) match {
-        case Some(rows) =>
-          val m = centroids(c).clone()
-          rows.foreach(r => m(r.getInt(1)) = r.getDouble(2))
-          m
-        case None => centroids(c)
-      }
-    }.toArray
-    idx.select(col(cellCol).cast("int").as("_stored"), col(vecCol))
-      .transform(df => Similarity.assignCells(df, vecCol, updated, "_re"))
-      .agg(avg(when(col("_re") =!= col("_stored"), 1.0).otherwise(0.0)))
-      .head().getDouble(0)
-  }
-
-  /** The REBUILD step of the append → staleness → rebuild maintenance
-    * loop: re-fit `nCells` coarse centroids on the index's CURRENT
-    * contents (sample-fit, one job — [[Similarity.fitCoarseCells]]),
-    * re-assign every vector, and write a fresh cell-partitioned index
-    * to `newPath`. Returns the re-fit centroids — the new probe-side
-    * constants; serve traffic swaps (path, centroids) together.
-    *
-    * `newPath` must be a NEW versioned directory, never the live
-    * path: the fit/assign scans stream from the old index while the
-    * new one writes, and serving keeps reading the old version until
-    * the swap — the standard versioned-index-dir pattern (an
-    * in-place overwrite would race both).
-    *
-    * Rebuild-threshold guidance: [[ivfStaleness]] measures the
-    * fraction of indexed vectors whose cell assignment one Lloyd step
-    * would change. At 0 the stored partitioning is still the data's
-    * fixpoint. Probe recall degrades roughly in proportion (a drifted
-    * vector sits in a cell the query's nProbe nearest-centroid probe
-    * may no longer select), so set the threshold at the recall slack
-    * the application tolerates — a few percent in practice (e.g.
-    * rebuild at 0.05); batch-append pipelines typically check after
-    * each append (two scans, coarse-quantizer cheap — see
-    * [[ivfStaleness]]). AnnIndexSpec's maintenance-loop test drives
-    * exactly this policy end-to-end. */
-  def rebuildIvfIndexed(
-      spark: SparkSession, path: String, newPath: String,
-      idCol: String, vecCol: String = "embedding", nCells: Int = 16,
-      cellCol: String = "_cell", seed: Long = 42L): Array[Array[Double]] = {
-    val current = readIvfIndexed(spark, path).select(col(idCol), col(vecCol))
-    val cents = Similarity.fitCoarseCells(current, vecCol, nCells, seed)
-    writeIvfIndexed(
-      Similarity.assignCells(current, vecCol, cents, cellCol), newPath, cellCol)
-    cents
-  }
-
-  // ---- versioned index ROOT: `root/v<N>` dirs + an atomically-swapped
-  //      `_graft_current` pointer carrying (live version, centroids),
-  //      so the serve-side (path, centroids) swap is ONE atomic unit
-  //      and superseded versions are first-class GC targets. ----
-  private val CurrentPointer = "_graft_current"
-  private val VersionDirRe = """v(\d+)""".r
-
-  /** Atomically repoint `root`'s live index version: write a tmp
-    * pointer naming `version` (+ its probe-side centroid constants,
-    * full `Double.toString` reprs — lossless round-trip), rename over
-    * [[CurrentPointer]]. Readers resolve the pointer ONCE per query
-    * ([[resolveCurrent]]), so a concurrent repoint gives them the old
-    * or the new (version, centroids) pair, never a mix. */
-  def publishCurrent(
-      spark: SparkSession, root: String, version: String,
-      centroids: Array[Array[Double]]): Unit = {
-    val base = new org.apache.hadoop.fs.Path(root)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val body = (version +: centroids.toSeq.map(_.map(_.toString).mkString(",")))
-      .mkString("\n")
-    val tmp = new org.apache.hadoop.fs.Path(base, CurrentPointer + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(base, CurrentPointer)
-    if (!fs.rename(tmp, dst)) { // HDFS refuses rename-onto; replace explicitly
-      fs.delete(dst, false)
-      require(fs.rename(tmp, dst), s"could not publish current pointer at $dst")
-    }
-  }
-
-  /** The live (version dir name, centroids) pair, if published. */
-  def resolveCurrent(
-      spark: SparkSession, root: String): Option[(String, Array[Array[Double]])] =
-    try {
-      val base = new org.apache.hadoop.fs.Path(root)
-      val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-      val p = new org.apache.hadoop.fs.Path(base, CurrentPointer)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toArray
-          finally in.close()
-        if (lines.isEmpty) None // torn/empty pointer: treat as unpublished
-        else Some((lines.head,
-          lines.tail.map(_.split(",").map(java.lang.Double.parseDouble))))
-      }
-    } catch { case _: java.io.FileNotFoundException => None }
-
-  /** [[rebuildIvfIndexed]] under the versioned-root convention: read
-    * the live version from the pointer, rebuild into `root/v<N+1>`,
-    * repoint. Returns the new (version dir, centroids). Single-writer
-    * like all maintenance ops (the CAS-manifested appends protect the
-    * files WITHIN a version; version transitions are the ingest
-    * pipeline's serialized job). */
-  def rebuildCurrentIvf(
-      spark: SparkSession, root: String,
-      idCol: String, vecCol: String = "embedding", nCells: Int = 16,
-      cellCol: String = "_cell", seed: Long = 42L): (String, Array[Array[Double]]) = {
-    val (live, _) = resolveCurrent(spark, root).getOrElse(
-      throw new IllegalStateException(s"no current pointer under $root"))
-    val n = live match { case VersionDirRe(v) => v.toLong; case _ => 0L }
-    val next = s"v${n + 1}"
-    val cents = rebuildIvfIndexed(
-      spark, s"$root/$live", s"$root/$next", idCol, vecCol, nCells, cellCol, seed)
-    publishCurrent(spark, root, next, cents)
-    (next, cents)
-  }
-
-  /** Retention sweep for superseded index versions (round-8 judge
-    * item 4): delete `root/v<N>` dirs that are (a) NOT the live
-    * version and (b) older than the `keep` highest. The pointer
-    * indirection is what makes this safe for readers: a query
-    * resolves (version, centroids) once and scans only that version's
-    * directory, so sweeping an OLDER version never touches its file
-    * set — AnnIndexSpec proves a reader mid-scan of the live version
-    * across a concurrent sweep. Retention (rather than
-    * delete-on-repoint) gives in-flight readers of the JUST-superseded
-    * version their grace window — size `keep` to exceed the longest
-    * query's lifetime in versions. */
-  def sweepIndexVersions(spark: SparkSession, root: String, keep: Int = 2): Unit = {
-    require(keep >= 1, "must keep at least the live version")
-    val base = new org.apache.hadoop.fs.Path(root)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val live = resolveCurrent(spark, root).map(_._1)
-    val versions = fs.listStatus(base).iterator
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .collect { case name @ VersionDirRe(n) => (n.toLong, name) }
-      .toSeq.sortBy(_._1)
-    val retained = versions.takeRight(keep).map(_._2).toSet ++ live
-    versions.map(_._2).filterNot(retained).foreach { name =>
-      fs.delete(new org.apache.hadoop.fs.Path(base, name), true)
-    }
-  }
 
   /** IVF top-k over the cell-partitioned table: same probe + scoring
     * expressions as [[Similarity.ivfTopK]] (bitwise-identical results),
@@ -583,83 +103,33 @@ object AnnIndex {
         col("_tb.t").as("_t"), col("_tb.b").as("_b"))
       .repartition(col("_t"), col("_b")) // one writer per bucket dir
       .write.mode("overwrite").partitionBy("_t", "_b").parquet(path)
-    publishManifest(embeddings.sparkSession, path)
-  }
-
-  /** Incremental LSH maintenance, the partner of [[appendIvfIndexed]].
-    * Unlike IVF there is NO drift: bucket assignment is a pure
-    * function of (vector, table, plane index) — the hyperplanes are
-    * replayable constants, never fitted — so an append-grown index is
-    * semantically identical to a rebuild forever. The only thing that
-    * grows is per-bucket row count (probe cost scales with E[bucket
-    * size] = N/2^numPlanes); re-layout with more planes when buckets
-    * outgrow the serving budget. Must be called with the SAME
-    * (dim, numPlanes, numTables) the index was built with — the
-    * layout-keyed path convention (see TextQueries.indexPath) makes a
-    * mismatch structurally impossible for the registered queries. */
-  def appendLshIndexed(
-      newVectors: DataFrame, idCol: String, vecCol: String, path: String,
-      dim: Int, numPlanes: Int = 8, numTables: Int = 4): Unit = {
-    val tb = (0 until numTables).map { t =>
-      struct(lit(t).as("t"),
-        Similarity.signLshTableBucket(col(vecCol), dim, numPlanes, t).as("b"))
-    }
-    val moved = appendViaStaging(
-      newVectors
-        .select(col(idCol), col(vecCol), explode(array(tb: _*)).as("_tb"))
-        .select(col(idCol), col(vecCol),
-          col("_tb.t").as("_t"), col("_tb.b").as("_b"))
-        .repartition(col("_t"), col("_b")),
-      path, Seq("_t", "_b"))
-    publishCommit(newVectors.sparkSession, path, Some(moved))
+    BuildManifest.write(path)
   }
 
   def readLshIndexed(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
   /** Open ONLY the named partition directories of a partitioned table
-    * (basePath keeps the partition columns in the schema). Directory
-    * listing — the hidden cost of a many-partition index at query
-    * time — touches just the probed dirs instead of the whole tree;
-    * missing dirs (empty buckets) are skipped. Returns None when every
-    * probed dir is empty.
-    *
-    * When a serving manifest exists (every writer in this object
-    * publishes one) the probe resolves against the manifest's
-    * committed file set instead of live directory listings — a query
-    * concurrent with an append sees the pre- or post-append version,
-    * never a torn half-batch. The dir-listing route remains as the
-    * fallback for externally-built indexes without a manifest.
-    *
-    * Existence is probed through Hadoop's FileSystem resolved from the
-    * session conf, not java.io.File — the index lives on whatever
-    * filesystem the path's scheme names (file:/, hdfs://, s3a://...),
-    * and a local-only probe would see every remote dir as missing and
-    * silently serve an empty top-k. */
+    * (basePath keeps the partition columns in the schema): the probe
+    * resolves against the manifest's committed files, so serving never
+    * lists the index tree. Returns None when no committed file lies in
+    * a probed dir (every probed bucket is empty). An index without a
+    * manifest is an unfinished build and is refused. Paths go through
+    * Hadoop's `Path`, so any scheme the session can read (file:/,
+    * hdfs://, s3a://...) serves. */
   private def readPartitions(
       spark: SparkSession, base: String, subDirs: Seq[String]): Option[DataFrame] = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    val fs = basePath.getFileSystem(hconf)
-    manifestFiles(spark, basePath, fs) match {
-      case Some(committed) =>
-        val hit = committed
-          .filter(f => subDirs.exists(d => f.startsWith(d + "/")))
-          .map(f => new org.apache.hadoop.fs.Path(basePath, f).toString)
-        if (hit.isEmpty) None
-        else Some(spark.read.option("basePath", base).parquet(hit: _*))
-      case None =>
-        val existing = subDirs
-          .map(d => new org.apache.hadoop.fs.Path(basePath, d))
-          .filter(fs.exists)
-          .map(_.toString)
-        if (existing.isEmpty) None
-        else Some(spark.read.option("basePath", base).parquet(existing: _*))
-    }
+    val committed = BuildManifest.files(base).getOrElse(
+      throw new IllegalStateException(s"no build manifest under $base: unfinished index"))
+    val hit = committed
+      .filter(f => subDirs.exists(d => f.startsWith(d + "/")))
+      .map(f => new Path(base, f).toString)
+    if (hit.isEmpty) None
+    else Some(spark.read.option("basePath", base).parquet(hit: _*))
   }
 
   /** The LSH SERVING read: the probe buckets are driver-side constants,
-    * so only numTables directories are listed and scanned. Same
+    * so only the committed files of numTables directories are scanned. Same
     * scoring as [[lshTopKIndexed]]. */
   def lshTopKServe(
       spark: SparkSession, path: String, idCol: String, vecCol: String,
@@ -675,7 +145,7 @@ object AnnIndex {
     }
   }
 
-  /** The IVF SERVING read: list + scan only the probed cell dirs. */
+  /** The IVF SERVING read: scan only the probed cells' committed files. */
   def ivfTopKServe(
       spark: SparkSession, path: String, centroids: Array[Array[Double]],
       idCol: String, vecCol: String,
@@ -782,7 +252,7 @@ object AnnIndex {
     }.reduce(_ unionByName _)
   }
 
-  /** Batched [[ivfTopKServe]]: resolve the manifest ONCE, open the
+  /** Batched [[ivfTopKServe]]: read the manifest ONCE, open the
     * union of every query's probed cell dirs, answer the whole batch
     * from that one read. */
   def ivfTopKServeBatch(

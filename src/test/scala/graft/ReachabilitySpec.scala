@@ -32,16 +32,7 @@ class ReachabilitySpec extends AnyFunSuite {
       "TextSimSpec's reference for semanticNearDupPairsBounded",
     "AnnRecall.bruteForceL2TopK" -> "TextSimSpec's exact L2 reference for Pq's top-k",
     "AnnRecall.measure" ->
-      "AnnRecallSpec's reference: LSH, IVF and PQ recall against exact search",
-    // deferred: the index append, rebuild and version lifecycle; without
-    // appends the CAS manifest protocol could shrink to a single-writer
-    // publish, a redesign of its own
-    "AnnIndex.appendIvfIndexed" -> "deferred AnnIndex lifecycle",
-    "AnnIndex.appendLshIndexed" -> "deferred AnnIndex lifecycle",
-    "AnnIndex.ivfStaleness" -> "deferred AnnIndex lifecycle",
-    "AnnIndex.rebuildCurrentIvf" -> "deferred AnnIndex lifecycle",
-    "AnnIndex.sweepManifests" -> "deferred AnnIndex lifecycle",
-    "AnnIndex.sweepIndexVersions" -> "deferred AnnIndex lifecycle")
+      "AnnRecallSpec's reference: LSH, IVF and PQ recall against exact search")
 
   // string literals are kept (tools name mains inside strings) and
   // comments dropped; `shape` also blanks strings, so braces and

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.SparkSpec
+import graft.io.BuildManifest
 import graft.sim.{AnnIndex, Similarity}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
@@ -24,7 +25,7 @@ class AnnIndexSpec extends SparkSpec {
       .head().getSeq[Double](0).toArray
     val (assigned, cents) = Similarity.ivfIndex(emb, "vec_id", "embedding", nCells = 8)
     val dir = java.nio.file.Files.createTempDirectory("annivf").toString + "/idx"
-    AnnIndex.writeIvfIndexed(assigned, dir)
+    AnnIndex.writeIvfIndexed(assigned, cents, dir)
     val indexed = AnnIndex.readIvfIndexed(spark, dir)
     val pruned = AnnIndex.ivfTopKIndexed(indexed, cents, "vec_id", "embedding", q,
       k = 10, nProbe = 3)
@@ -72,7 +73,7 @@ class AnnIndexSpec extends SparkSpec {
       .head().getSeq[Double](0).toArray
     val ivfDir = java.nio.file.Files.createTempDirectory("annivfsrv").toString + "/idx"
     val (assigned, cents) = Similarity.ivfIndex(emb, "vec_id", "embedding", nCells = 8)
-    AnnIndex.writeIvfIndexed(assigned, ivfDir)
+    AnnIndex.writeIvfIndexed(assigned, cents, ivfDir)
     val servedIvf = AnnIndex.ivfTopKServe(spark, ivfDir, cents, "vec_id", "embedding",
       q, k = 10, nProbe = 3)
     val fullIvf = AnnIndex.ivfTopKIndexed(AnnIndex.readIvfIndexed(spark, ivfDir), cents,
@@ -86,367 +87,125 @@ class AnnIndexSpec extends SparkSpec {
     val fullLsh = AnnIndex.lshTopKIndexed(AnnIndex.readLshIndexed(spark, lshDir),
       "vec_id", "embedding", q, k = 10, numPlanes = 4, numTables = 2)
     assert(servedLsh.collect().toSeq == fullLsh.collect().toSeq)
-    // a query probing only empty/missing buckets returns an empty frame
-    val off = Array.fill(8)(1e9) // bucket almost surely absent at 300 rows? not guaranteed —
-    // use a missing-dir probe directly instead: delete one probed dir and ensure no throw
-    assert(AnnIndex.lshTopKServe(spark, lshDir, "vec_id", "embedding",
-      off, k = 10, numPlanes = 4, numTables = 2).collect() != null)
+    // a probe that matches no file the manifest names serves an empty
+    // top-k with the serving schema. LSH: every vector of this index
+    // sits in one bucket per table, and the opposite vector hashes to
+    // the complement bucket
+    val same = (0L until 20L).map(i => (i, Array.fill(8)(0.4f))).toDF("vec_id", "embedding")
+    val oneDir = java.nio.file.Files.createTempDirectory("annlshone").toString + "/idx"
+    AnnIndex.writeLshIndexed(same, "vec_id", "embedding", oneDir,
+      dim = 8, numPlanes = 4, numTables = 2)
+    val away = Array.fill(8)(-0.4)
+    val probed = (0 until 2).map(t => s"_t=$t/_b=${Similarity.queryBucket(t, away, 4)}/")
+    assert(!BuildManifest.files(oneDir).get.exists(f => probed.exists(f.startsWith)))
+    val emptyLsh = AnnIndex.lshTopKServe(spark, oneDir, "vec_id", "embedding",
+      away, k = 10, numPlanes = 4, numTables = 2)
+    assert(emptyLsh.schema == servedLsh.schema)
+    assert(emptyLsh.collect().isEmpty)
+    // IVF: the probe's only cell is one no vector was assigned to
+    val far = Array.fill(8)(1e3)
+    assert(!BuildManifest.files(ivfDir).get.exists(_.startsWith(s"_cell=${cents.length}/")))
+    val emptyIvf = AnnIndex.ivfTopKServe(spark, ivfDir, cents :+ far, "vec_id", "embedding",
+      far, k = 10, nProbe = 1)
+    assert(emptyIvf.schema == servedIvf.schema)
+    assert(emptyIvf.collect().isEmpty)
   }
 
-  test("appendIvfIndexed: pruned read of the appended index == full rebuild for the probed cells") {
-    val base = vecs(300, 8)
-    val batch = (300 until 400).map { i =>
-      (i.toLong, Array.tabulate(8)(j => math.sin(i * 1.9 + j * 0.7).toFloat))
-    }.toDF("vec_id", "embedding")
-    val q = base.filter($"vec_id" === 0)
-      .select(transform($"embedding", _.cast("double")).as("q"))
-      .head().getSeq[Double](0).toArray
-    val (assigned, cents) = Similarity.ivfIndex(base, "vec_id", "embedding", nCells = 8)
-    val appendDir = java.nio.file.Files.createTempDirectory("annappend").toString + "/idx"
-    AnnIndex.writeIvfIndexed(assigned, appendDir)
-    AnnIndex.appendIvfIndexed(batch, cents, appendDir)
-    // full rebuild over the union, same stored centroids
-    val rebuildDir = java.nio.file.Files.createTempDirectory("annrebuild").toString + "/idx"
-    AnnIndex.writeIvfIndexed(
-      Similarity.assignCells(base.unionByName(batch), "embedding", cents), rebuildDir)
-    val servedAppend = AnnIndex.ivfTopKServe(spark, appendDir, cents,
-      "vec_id", "embedding", q, k = 15, nProbe = 3).collect().toSeq
-    val servedRebuild = AnnIndex.ivfTopKServe(spark, rebuildDir, cents,
-      "vec_id", "embedding", q, k = 15, nProbe = 3).collect().toSeq
-    assert(servedAppend == servedRebuild)
-    // the appended batch is actually visible to the serve path
-    val all = AnnIndex.readIvfIndexed(spark, appendDir)
-    assert(all.count() == 400)
-    assert(all.filter($"vec_id" >= 300).count() == 100)
+  /** A scratch source dir: the serving-index paths key on the mtime of
+    * its embeddings file, whose content the ensure helpers never read. */
+  private def scratchSource(): String = {
+    val sf = java.nio.file.Files.createTempDirectory("annsrc")
+    java.nio.file.Files.createFile(sf.resolve("embeddings.parquet"))
+    sf.toString
   }
 
-  test("append onto a LEGACY (pre-versioning) manifest index keeps the base vectors in v1") {
-    // round-9 advisory (high): the first versioned append against an
-    // index carrying only the un-suffixed _graft_manifest used the
-    // EMPTY baseline, so manifest v1 held just the appended batch and
-    // readers (who prefer v1 over legacy) silently lost every base
-    // vector. The baseline must be the legacy manifest's content.
-    val base = vecs(300, 8)
-    val batch = (300 until 400).map { i =>
-      (i.toLong, Array.tabulate(8)(j => math.sin(i * 1.9 + j * 0.7).toFloat))
-    }.toDF("vec_id", "embedding")
-    val (assigned, cents) = Similarity.ivfIndex(base, "vec_id", "embedding", nCells = 8)
-    val dir = java.nio.file.Files.createTempDirectory("annlegacy").toString + "/idx"
-    AnnIndex.writeIvfIndexed(assigned, dir)
-    // downgrade to the pre-versioning layout: sole un-suffixed manifest
-    val d = new java.io.File(dir)
-    val v1 = new java.io.File(d, "_graft_manifest.v1")
-    assert(v1.exists(), d.listFiles().mkString(","))
-    assert(v1.renameTo(new java.io.File(d, "_graft_manifest")))
-    new java.io.File(d, "_graft_manifest.claim.1").delete()
-    val baseFiles = java.nio.file.Files.readString(
-      new java.io.File(d, "_graft_manifest").toPath).split("\n").filter(_.nonEmpty).toSet
-    assert(baseFiles.nonEmpty)
-    // first versioned commit on the upgraded index
-    AnnIndex.appendIvfIndexed(batch, cents, dir)
-    // the NEW v1 manifest (which readers prefer over legacy) must
-    // carry the legacy baseline, not just the appended batch
-    val v1Files = java.nio.file.Files.readString(
-      new java.io.File(d, "_graft_manifest.v1").toPath).split("\n").filter(_.nonEmpty).toSet
-    assert(baseFiles.subsetOf(v1Files),
-      s"base files dropped from upgraded manifest: ${(baseFiles -- v1Files).mkString(",")}")
-    assert(v1Files.size > baseFiles.size, "appended batch missing from v1")
-    val all = AnnIndex.readIvfIndexed(spark, dir)
-    assert(all.count() == 400)
-    // and the serve path (manifest-resolved) sees the base vectors too
-    val q = base.filter($"vec_id" === 0)
-      .select(transform($"embedding", _.cast("double")).as("q"))
-      .head().getSeq[Double](0).toArray
-    val served = AnnIndex.ivfTopKServe(spark, dir, cents,
-      "vec_id", "embedding", q, k = 15, nProbe = 8).collect()
-    assert(served.exists(_.getLong(0) == 0L), served.mkString(","))
-  }
+  private def deleteTree(path: String): Unit =
+    scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
 
-  test("appendLshIndexed: append-grown index serves identically to a full rebuild") {
-    val base = vecs(300, 8)
-    val batch = (300 until 400).map { i =>
-      (i.toLong, Array.tabulate(8)(j => math.sin(i * 1.9 + j * 0.7).toFloat))
-    }.toDF("vec_id", "embedding")
-    val q = base.filter($"vec_id" === 0)
-      .select(transform($"embedding", _.cast("double")).as("q"))
-      .head().getSeq[Double](0).toArray
-    val appendDir = java.nio.file.Files.createTempDirectory("lshappend").toString + "/idx"
-    AnnIndex.writeLshIndexed(base, "vec_id", "embedding", appendDir, dim = 8)
-    AnnIndex.appendLshIndexed(batch, "vec_id", "embedding", appendDir, dim = 8)
-    val rebuildDir = java.nio.file.Files.createTempDirectory("lshrebuild").toString + "/idx"
-    AnnIndex.writeLshIndexed(base.unionByName(batch), "vec_id", "embedding",
-      rebuildDir, dim = 8)
-    val servedAppend = AnnIndex.lshTopKServe(spark, appendDir,
-      "vec_id", "embedding", q, k = 15).collect().toSeq
-    val servedRebuild = AnnIndex.lshTopKServe(spark, rebuildDir,
-      "vec_id", "embedding", q, k = 15).collect().toSeq
-    assert(servedAppend == servedRebuild)
-    assert(servedAppend.nonEmpty)
-    // batch rows landed in their (table, bucket) dirs: every id appears
-    // once per table across the merged index
-    val all = AnnIndex.readLshIndexed(spark, appendDir)
-    assert(all.count() == 400L * 4)
-    assert(all.filter($"vec_id" >= 300).count() == 100L * 4)
-  }
-
-  test("ivfStaleness: 0-ish on assignment-consistent contents, grows when the data drifts") {
-    val base = vecs(300, 8)
-    val (assigned, cents) = Similarity.ivfIndex(base, "vec_id", "embedding", nCells = 4)
-    val dir = java.nio.file.Files.createTempDirectory("annstale").toString + "/idx"
-    AnnIndex.writeIvfIndexed(assigned, dir)
-    val fresh = AnnIndex.ivfStaleness(spark, dir, cents)
-    assert(fresh >= 0.0 && fresh <= 1.0)
-    // append a far-away cluster: every appended vector lands in ONE
-    // stored cell, dragging that cell's mean off — reassignment
-    // fraction must not decrease, and the metric stays in [0, 1]
-    val drift = (300 until 500).map { i =>
-      (i.toLong, Array.tabulate(8)(j => (50.0 + i % 3 + j).toFloat))
-    }.toDF("vec_id", "embedding")
-    AnnIndex.appendIvfIndexed(drift, cents, dir)
-    val stale = AnnIndex.ivfStaleness(spark, dir, cents)
-    assert(stale >= 0.0 && stale <= 1.0)
-    assert(stale >= fresh - 1e-9, s"staleness fell after drift: $fresh -> $stale")
-  }
-
-  test("maintenance loop end-to-end: append drifted batches → staleness crosses threshold → rebuild re-fits and serves like a from-scratch build") {
-    // the whole policy in one story: appends accumulate on stored
-    // centroids, ivfStaleness is polled after each batch, and once it
-    // crosses the operator threshold the index is rebuilt with
-    // re-fitted centroids into a fresh versioned dir
-    val threshold = 0.05
-    val base = vecs(300, 8)
-    val root = java.nio.file.Files.createTempDirectory("annloop").toString
-    val v1 = s"$root/v1"
-    val (assigned, cents0) = Similarity.ivfIndex(base, "vec_id", "embedding", nCells = 4)
-    AnnIndex.writeIvfIndexed(assigned, v1)
-    // drifted ingest: each batch is a cluster far from the base corpus
-    def batch(b: Int) = (1000 + b * 100 until 1100 + b * 100).map { i =>
-      (i.toLong, Array.tabulate(8)(j => (30.0 * (b + 1) + i % 3 + j).toFloat))
-    }.toDF("vec_id", "embedding")
-    var staleness = AnnIndex.ivfStaleness(spark, v1, cents0)
-    var appended = 0
-    while (staleness <= threshold && appended < 5) {
-      AnnIndex.appendIvfIndexed(batch(appended), cents0, v1)
-      appended += 1
-      staleness = AnnIndex.ivfStaleness(spark, v1, cents0)
+  test("ensureIvfServing refits unless the manifest verifies and names the centroids") {
+    val emb = vecs(300, 8)
+    val sf = scratchSource()
+    var fits = 0
+    def ensure() = graft.queries.TextQueries.ensureIvfServing(spark, sf, "c8") {
+      fits += 1
+      Similarity.ivfIndex(emb, "vec_id", "embedding", nCells = 8)
     }
-    assert(staleness > threshold,
-      s"drifted appends must eventually trip the rebuild threshold (staleness=$staleness after $appended batches)")
-    // rebuild: re-fit on current contents into a fresh versioned dir
-    val v2 = s"$root/v2"
-    val cents1 = AnnIndex.rebuildIvfIndexed(spark, v1, v2, "vec_id", "embedding", nCells = 4)
-    // the rebuilt index serves exactly like a from-scratch build over
-    // the same corpus (same deterministic sample-fit → same centroids,
-    // same assignment, same probes)
-    val corpus = base.unionByName((0 until appended).map(batch).reduce(_ unionByName _))
-    val scratch = s"$root/scratch"
-    val centsScratch = Similarity.fitCoarseCells(corpus, "embedding", nCells = 4)
-    AnnIndex.writeIvfIndexed(
-      Similarity.assignCells(corpus, "embedding", centsScratch), scratch)
-    assert(cents1.map(_.toSeq).toSeq == centsScratch.map(_.toSeq).toSeq,
-      "re-fit on index contents must equal the from-scratch fit (deterministic sample)")
-    val q = Array.tabulate(8)(j => 30.0 + j) // lands near the drifted mass
-    val servedRebuilt = AnnIndex.ivfTopKServe(spark, v2, cents1,
-      "vec_id", "embedding", q, k = 12, nProbe = 2).collect().toSeq
-    val servedScratch = AnnIndex.ivfTopKServe(spark, scratch, centsScratch,
-      "vec_id", "embedding", q, k = 12, nProbe = 2).collect().toSeq
-    assert(servedRebuilt == servedScratch && servedRebuilt.nonEmpty)
-    // and the rebuild actually paid off: the fresh fixpoint is tighter
-    val after = AnnIndex.ivfStaleness(spark, v2, cents1)
-    assert(after < staleness,
-      s"rebuild must reduce staleness ($staleness -> $after)")
+    val (path, cents) = ensure()
+    try {
+      assert(fits == 1)
+      val manifest = new java.io.File(path, "_graft_manifest").toPath
+      val centFile = new java.io.File(path, "_centroids.txt").toPath
+      assert(BuildManifest.files(path).get.contains("_centroids.txt"))
+      // a finished build is reused: same centroids, no refit
+      assert(ensure()._2.map(_.toSeq).toSeq == cents.map(_.toSeq).toSeq)
+      assert(fits == 1)
+      // torn centroids: the file no longer has the length the manifest names
+      val body = java.nio.file.Files.readAllBytes(centFile)
+      java.nio.file.Files.write(centFile, body.take(body.length / 2))
+      ensure()
+      assert(fits == 2)
+      // centroids written after the manifest: the manifest does not name them
+      java.nio.file.Files.writeString(manifest, java.nio.file.Files.readString(manifest)
+        .linesIterator.filterNot(_.startsWith("_centroids.txt\t")).map(_ + "\n").mkString)
+      ensure()
+      assert(fits == 3)
+      // no manifest: an unfinished build
+      java.nio.file.Files.delete(manifest)
+      ensure()
+      assert(fits == 4)
+      assert(ensure()._2.map(_.toSeq).toSeq == cents.map(_.toSeq).toSeq)
+      assert(fits == 4)
+    } finally deleteTree(path)
   }
 
-  test("concurrent serving during appends: every result is a committed version, never a torn half-batch") {
-    // round-6 judge item 7: a partitioned append surfaces part files
-    // one task-commit at a time; a reader listing directories
-    // mid-append could see HALF an append batch. The writers publish
-    // an atomically-swapped manifest after each committed job and the
-    // serve path pins its scan to it — so a query concurrent with an
-    // append must return exactly the pre- or post-append corpus.
-    //
-    // Each append batch lands TWO vectors in DIFFERENT cells (two
-    // separate part files): a torn listing would show one without the
-    // other. Readers assert all-or-nothing per batch, and that visible
-    // batches form a prefix of the append order.
-    val cents = Array(
-      Array(1.0, 0.0, 0.0, 0.0), Array(0.0, 1.0, 0.0, 0.0),
-      Array(0.0, 0.0, 1.0, 0.0), Array(0.0, 0.0, 0.0, 1.0))
-    val base = (0L until 10L).map { i =>
-      (i, Array(0.9f, 0.3f + 0.01f * i, 0.0f, 0.0f))
-    }.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("annconc").toString + "/idx"
-    AnnIndex.writeIvfIndexed(Similarity.assignCells(base, "embedding", cents), dir)
-
-    val nBatches = 4
-    // batch b: one vector near cell 2, one near cell 3 — two files
-    val batches = (1 to nBatches).map { b =>
-      Seq(
-        (100L + b, Array(0.1f, 0.0f, 0.9f + 0.01f * b, 0.0f)),
-        (200L + b, Array(0.1f, 0.0f, 0.0f, 0.9f + 0.01f * b))
-      ).toDF("vec_id", "embedding")
+  test("an index in the earlier versioned-manifest state is rebuilt, never served") {
+    // the earlier on-disk state: the data files, the committer's marker,
+    // `_graft_manifest.v1` (a bare path list) and its claim file, and no
+    // `_graft_manifest`; the IVF index also holds its centroids
+    def toEarlierState(dir: String): Unit = {
+      val d = new java.io.File(dir)
+      val parquet = BuildManifest.files(dir).get.filter(_.endsWith(".parquet"))
+      assert(new java.io.File(d, "_graft_manifest").delete())
+      java.nio.file.Files.writeString(
+        new java.io.File(d, "_graft_manifest.v1").toPath, parquet.mkString("\n"))
+      assert(new java.io.File(d, "_graft_manifest.claim.1").createNewFile())
+      assert(!BuildManifest.verifies(dir) && BuildManifest.files(dir).isEmpty)
     }
-    val writer = new Thread(() => batches.foreach { b =>
-      AnnIndex.appendIvfIndexed(b, cents, dir)
-      Thread.sleep(30)
-    })
-    val q = Array(0.5, 0.5, 0.5, 0.5) // probes reach every cell
-    val violations = new java.util.concurrent.atomic.AtomicReference[String](null)
-    def checkOnce(): Unit = {
-      val ids = AnnIndex.ivfTopKServe(spark, dir, cents,
-        "vec_id", "embedding", q, k = 100, nProbe = 4)
-        .select($"vec_id").collect().map(_.getLong(0)).toSet
-      val seen = (1 to nBatches).map(b =>
-        (ids.contains(100L + b), ids.contains(200L + b)))
-      seen.zipWithIndex.foreach { case ((a, bb), i) =>
-        if (a != bb) violations.compareAndSet(null,
-          s"torn batch ${i + 1}: first-half=$a second-half=$bb ids=$ids")
-      }
-      val visible = seen.map(_._1)
-      if (visible.zip(visible.tail).exists { case (earlier, later) => !earlier && later })
-        violations.compareAndSet(null,
-          s"non-prefix visibility $visible — append order broken ids=$ids")
+    val emb = vecs(300, 8)
+    val q = Array.tabulate(8)(j => math.sin(j * 0.7))
+    val sf = scratchSource()
+    val lshDir = java.nio.file.Files.createTempDirectory("annlshold").toString + "/idx"
+    def serveLsh() = AnnIndex.lshTopKServe(spark, lshDir, "vec_id", "embedding",
+      q, k = 10, numPlanes = 4, numTables = 2).collect().toSeq
+    var builds = 0
+    def ensureLsh() = graft.queries.TextQueries.ensureIndex(sf, lshDir) {
+      builds += 1
+      AnnIndex.writeLshIndexed(emb, "vec_id", "embedding", lshDir,
+        dim = 8, numPlanes = 4, numTables = 2)
     }
-    writer.start()
-    var reads = 0
-    while (writer.isAlive && violations.get() == null) { checkOnce(); reads += 1 }
-    writer.join(30000)
-    assert(!writer.isAlive, "append thread did not finish")
-    assert(violations.get() == null, String.valueOf(violations.get()))
-    assert(reads >= 2, s"expected several concurrent reads, got $reads")
-    // quiesced: the final version serves every batch
-    checkOnce()
-    assert(violations.get() == null, String.valueOf(violations.get()))
-    val finalIds = AnnIndex.ivfTopKServe(spark, dir, cents,
-      "vec_id", "embedding", q, k = 100, nProbe = 4)
-      .select($"vec_id").collect().map(_.getLong(0)).toSet
-    assert((1 to nBatches).forall(b =>
-      finalIds.contains(100L + b) && finalIds.contains(200L + b)), finalIds)
-  }
+    ensureLsh()
+    val expected = serveLsh()
+    toEarlierState(lshDir)
+    intercept[IllegalStateException](serveLsh())
+    ensureLsh()
+    assert(builds == 2 && BuildManifest.verifies(lshDir))
+    assert(serveLsh() == expected && expected.nonEmpty)
+    ensureLsh()
+    assert(builds == 2)
 
-  test("two CONCURRENT appenders: the final manifest carries both batches (CAS version claim)") {
-    // round-8 judge item 3: with one rename-over manifest, the last
-    // publisher could carry a listing taken BEFORE the other writer's
-    // files landed — silently dropping them from serving. The CAS
-    // claim (create-exclusive version number, list AFTER claiming)
-    // makes the highest manifest complete. Repeat the race a few
-    // times — a single interleaving can get lucky.
-    val cents = Array(
-      Array(1.0, 0.0, 0.0, 0.0), Array(0.0, 1.0, 0.0, 0.0),
-      Array(0.0, 0.0, 1.0, 0.0), Array(0.0, 0.0, 0.0, 1.0))
-    val q = Array(0.5, 0.5, 0.5, 0.5)
-    (1 to 3).foreach { round =>
-      val base = (0L until 4L).map(i => (i, Array(0.9f, 0.1f * i, 0.0f, 0.0f)))
-        .toDF("vec_id", "embedding")
-      val dir = java.nio.file.Files.createTempDirectory(s"annrace$round").toString + "/idx"
-      AnnIndex.writeIvfIndexed(Similarity.assignCells(base, "embedding", cents), dir)
-      val batchA = Seq((100L, Array(0.1f, 0.0f, 0.9f, 0.0f))).toDF("vec_id", "embedding")
-      val batchB = Seq((200L, Array(0.1f, 0.0f, 0.0f, 0.9f))).toDF("vec_id", "embedding")
-      val gate = new java.util.concurrent.CountDownLatch(1)
-      val errs = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
-      def appender(b: org.apache.spark.sql.DataFrame) = new Thread(() =>
-        try { gate.await(); AnnIndex.appendIvfIndexed(b, cents, dir) }
-        catch { case t: Throwable => errs.compareAndSet(null, t) })
-      val ta = appender(batchA); val tb = appender(batchB)
-      ta.start(); tb.start(); gate.countDown()
-      ta.join(60000); tb.join(60000)
-      assert(errs.get() == null, String.valueOf(errs.get()))
-      val ids = AnnIndex.ivfTopKServe(spark, dir, cents,
-        "vec_id", "embedding", q, k = 100, nProbe = 4)
-        .select($"vec_id").collect().map(_.getLong(0)).toSet
-      assert(ids.contains(100L) && ids.contains(200L),
-        s"round $round: a concurrent appender's batch was dropped from serving: $ids")
+    var fits = 0
+    def ensureIvf() = graft.queries.TextQueries.ensureIvfServing(spark, sf, "c8") {
+      fits += 1
+      Similarity.ivfIndex(emb, "vec_id", "embedding", nCells = 8)
     }
-  }
-
-  test("manifest version claim is atomic: 8 simultaneous publishers get 8 distinct versions") {
-    // the CAS primitive must be O_EXCL-atomic — Hadoop's local
-    // create(path, overwrite=false) is exists-then-create and lets two
-    // racers both 'win' a version, whose renames then silently drop
-    // one writer's manifest content
-    val cents = Array(Array(1.0, 0.0), Array(0.0, 1.0))
-    val base = (0L until 4L).map(i => (i, Array(0.9f, 0.1f * i))).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("annclaim").toString + "/idx"
-    AnnIndex.writeIvfIndexed(Similarity.assignCells(base, "embedding", cents), dir)
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val errs = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
-    val threads = (1 to 8).map(_ => new Thread(() =>
-      try { gate.await(); AnnIndex.publishManifest(spark, dir) }
-      catch { case t: Throwable => errs.compareAndSet(null, t) }))
-    threads.foreach(_.start()); gate.countDown(); threads.foreach(_.join(30000))
-    assert(errs.get() == null, String.valueOf(errs.get()))
-    val versions = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(_.matches("_graft_manifest\\.v\\d+")).sorted.toSeq
-    // initial write published v1; 8 racers must have claimed 8 MORE
-    // distinct versions (no overwrites, no losses)
-    assert(versions.size == 9, s"expected 9 distinct manifests, got $versions")
-  }
-
-  test("sweepManifests: retention keeps serving intact, older versions + claims deleted") {
-    val cents = Array(Array(1.0, 0.0), Array(0.0, 1.0))
-    val base = (0L until 6L).map(i => (i, Array(0.9f, 0.05f * i))).toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("annmsweep").toString + "/idx"
-    AnnIndex.writeIvfIndexed(Similarity.assignCells(base, "embedding", cents), dir)
-    (1 to 4).foreach { b =>
-      AnnIndex.appendIvfIndexed(
-        Seq((100L + b, Array(0.1f, 0.9f))).toDF("vec_id", "embedding"), cents, dir)
-    }
-    def manifests() = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.matches("_graft_manifest\\.v\\d+")).sorted.toSeq
-    assert(manifests().size == 5, manifests())
-    AnnIndex.sweepManifests(spark, dir, keep = 2)
-    val left = manifests()
-    assert(left.size == 2, left)
-    val claims = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.matches("_graft_manifest\\.claim\\.\\d+")).toSeq
-    assert(claims.size == 2, s"old claim markers must be swept with their manifests: $claims")
-    val ids = AnnIndex.ivfTopKServe(spark, dir, cents,
-      "vec_id", "embedding", Array(0.5, 0.5), k = 100, nProbe = 2)
-      .select($"vec_id").collect().map(_.getLong(0)).toSet
-    assert((1 to 4).forall(b => ids.contains(100L + b)), ids)
-    // a fresh publish after the sweep continues the version chain upward
-    AnnIndex.publishManifest(spark, dir)
-    assert(manifests().last > left.last, manifests())
-  }
-
-  test("versioned root: rebuildCurrentIvf repoints atomically; sweep deletes superseded dirs under a live reader") {
-    // round-8 judge item 4: rebuilds accumulate version dirs forever.
-    // The _graft_current pointer makes (version, centroids) one atomic
-    // swap; sweepIndexVersions deletes non-live versions beyond the
-    // retention window — and a reader that resolved the pointer ONCE
-    // finishes its scan untouched because it only reads its version's
-    // directory.
-    val base = vecs(200, 8)
-    val root = java.nio.file.Files.createTempDirectory("annvroot").toString
-    val (assigned, cents0) = Similarity.ivfIndex(base, "vec_id", "embedding", nCells = 4)
-    AnnIndex.writeIvfIndexed(assigned, s"$root/v1")
-    AnnIndex.publishCurrent(spark, root, "v1", cents0)
-    val resolved0 = AnnIndex.resolveCurrent(spark, root)
-    assert(resolved0.map(_._1).contains("v1"))
-    // centroids round-trip losslessly through the pointer file
-    assert(resolved0.get._2.map(_.toSeq).toSeq == cents0.map(_.toSeq).toSeq)
-    // drift + rebuild under the versioned convention
-    AnnIndex.appendIvfIndexed(
-      (500 until 600).map(i => (i.toLong, Array.tabulate(8)(j => (40.0 + i % 3 + j).toFloat)))
-        .toDF("vec_id", "embedding"), cents0, s"$root/v1")
-    val (v2, cents1) = AnnIndex.rebuildCurrentIvf(spark, root, "vec_id", "embedding", nCells = 4)
-    assert(v2 == "v2")
-    assert(AnnIndex.resolveCurrent(spark, root).map(_._1).contains("v2"))
-    // a reader resolves the live version ONCE, builds its scan...
-    val (liveV, liveCents) = AnnIndex.resolveCurrent(spark, root).get
-    val q = Array.tabulate(8)(j => 40.0 + j)
-    val pinned = AnnIndex.ivfTopKServe(spark, s"$root/$liveV", liveCents,
-      "vec_id", "embedding", q, k = 10, nProbe = 2)
-    val expect = pinned.collect().toSeq // pre-sweep answer
-    // ...then the sweep removes v1 (not live, beyond keep=1)
-    AnnIndex.sweepIndexVersions(spark, root, keep = 1)
-    assert(!new java.io.File(s"$root/v1").exists(), "superseded v1 must be deleted")
-    assert(new java.io.File(s"$root/v2").exists(), "live v2 must survive keep=1")
-    // the reader's scan still answers identically — its version is intact
-    assert(pinned.collect().toSeq == expect && expect.nonEmpty)
-    // sweeping again (only the live version left) is a no-op
-    AnnIndex.sweepIndexVersions(spark, root, keep = 1)
-    assert(new java.io.File(s"$root/v2").exists())
+    val (ivfDir, cents) = ensureIvf()
+    try {
+      toEarlierState(ivfDir)
+      intercept[IllegalStateException](AnnIndex.ivfTopKServe(spark, ivfDir, cents,
+        "vec_id", "embedding", q, k = 10, nProbe = 3).collect())
+      ensureIvf()
+      assert(fits == 2 && BuildManifest.verifies(ivfDir))
+    } finally deleteTree(ivfDir)
   }
 
   test("serve-path probes work through URI-schemed paths (file:/)") {
@@ -459,7 +218,7 @@ class AnnIndexSpec extends SparkSpec {
       .head().getSeq[Double](0).toArray
     val rawDir = java.nio.file.Files.createTempDirectory("annuri").toString + "/idx"
     val (assigned, cents) = Similarity.ivfIndex(emb, "vec_id", "embedding", nCells = 8)
-    AnnIndex.writeIvfIndexed(assigned, rawDir)
+    AnnIndex.writeIvfIndexed(assigned, cents, rawDir)
     val uriDir = "file:" + rawDir
     val servedUri = AnnIndex.ivfTopKServe(spark, uriDir, cents, "vec_id", "embedding",
       q, k = 10, nProbe = 3).collect().toSeq
@@ -502,7 +261,7 @@ class AnnIndexSpec extends SparkSpec {
     // batch vs single, per query, rows AND rank order
     val (assigned, cents) = Similarity.ivfIndex(emb, "vec_id", "embedding", nCells = 8)
     val ivfDir = java.nio.file.Files.createTempDirectory("annivfb").toString + "/idx"
-    AnnIndex.writeIvfIndexed(assigned, ivfDir)
+    AnnIndex.writeIvfIndexed(assigned, cents, ivfDir)
     val ivfBatch = AnnIndex.ivfTopKServeBatch(spark, ivfDir, cents,
       "vec_id", "embedding", queries, k = 10, nProbe = 3)
       .collect().groupBy(_.getInt(0))
