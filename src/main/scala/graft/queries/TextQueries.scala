@@ -1592,9 +1592,10 @@ object TextQueries extends QueryProvider {
   //      signatures only the batch — a 50/50 split would misrepresent
   //      the probe as costing ≈ the full self-join (sf10: 45.6 s vs
   //      q_jaccard_pairs 42.1 s, BENCH_NOTES round-14).
-  //      The corpus never shuffles: one bands/ scan joined against the
-  //      broadcast batch triples, one sigs/ scan against the broadcast
-  //      candidates. The oracle replays both sides' minhash chains
+  //      The corpus never shuffles: the probe collects the probed
+  //      buckets' histogram, the capped buckets' bands/ rows and the
+  //      candidates' sigs/ rows, and joins them with the batch side on
+  //      the driver. The oracle replays both sides' minhash chains
   //      (shared CTE generator), band-tuple equality, the corpus-side
   //      bucket cap, and the slot-agreement estimate. ----
   private val qDedupIncremental = Q(

@@ -2,9 +2,13 @@ package graft.text
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Incremental near-dup deduplication: a PERSISTED MinHash-LSH
   * signature index over the corpus, probed by each new ingest batch —
@@ -21,40 +25,47 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * deterministic — INVARIANTS.md §1), so [[append]] is just additional
   * parquet files: append-then-probe ≡ rebuild-then-probe exactly
   * (DedupIndexSpec asserts it), with no compaction or merge step.
+  * Probes read both tables with their known schema (the id typed as
+  * the batch's id), so no probe infers a parquet schema.
   *
   * Probe scale contract (the asymmetry is the point — `batch` is the
   * small side, the corpus is unbounded):
   *  - the batch side is materialised ONCE, on the driver: one job
-  *    computes the batch's signatures and band keys and collects them,
-  *    and every batch-side frame of the probe is a local relation of
-  *    encoded rows built from that collect; the batch text is never
-  *    re-shingled per reference. Any plan that broadcasts the batch
-  *    signatures holds them on the driver; the collect adds a boxed
-  *    copy while the probe is built. Measured on a 200k-document
-  *    batch against a 200k-document index (local mode, 4 cores, 4 GiB
-  *    heap): the built probe holds 147 MB of live heap (~0.75 KB per
-  *    batch document), and the largest live heap after a GC over build
-  *    and run was 1.51-1.72 GB (median 1.57, 5 runs), against
-  *    1.17-1.51 GB (median 1.26) when the batch side is computed on
-  *    executors (the test-side reference
-  *    `ReferenceFormulations.dedupIndexProbePairs`);
-  *  - the corpus never shuffles in the NORMAL regime: one
+  *    computes the batch's signatures and band keys and collects them;
+  *    the batch text is never re-shingled per reference;
+  *  - the corpus never shuffles its membership rows: one
   *    aggregate-only histogram pass over `bands/`, restricted to the
-  *    probed buckets, is collected (at most one row per batch triple);
-  *    the candidate join broadcasts the batch's capped triples against
-  *    one scan of `bands/`, and the signature joins broadcast the
-  *    candidates against one scan of `sigs/` (same shape as
-  *    [[Dedup.contaminationScores]]'s broadcast probe). Worst case the
-  *    bucket cap alone permits is |batchTriples| × maxBucketRows
-  *    candidates — NOT batch-sized — so the driver computes the exact
-  *    candidate-count bound from the two collects and falls back to
-  *    shuffle joins above [[DefaultMaxBroadcastCandidates]] (identical
-  *    pairs, degraded cost, the candidates never broadcast);
+  *    probed band hashes, is collected (at most one row per probed
+  *    bucket), and the driver decides the bucket cap and the exact
+  *    pre-distinct candidate count from it;
+  *  - NORMAL regime (count ≤ [[DefaultMaxLocalCandidates]]): the probe
+  *    is finished on the driver. One `bands/` scan collects the rows
+  *    of the capped probed buckets (at most the candidate count), the
+  *    driver forms the distinct (corpus_id, batch_id) pairs, one
+  *    `sigs/` scan collects the candidates' signatures, and the driver
+  *    computes each estimate with the SQL join's expression. The scans
+  *    filter against sorted primitive key arrays (band hashes, and the
+  *    `xxhash64` of candidate ids) — a superset test; exact matching
+  *    is on the driver. The driver then holds the batch side, the
+  *    candidate rows and the pairs, and the result is a local
+  *    relation: no exchange, broadcast or schema job;
+  *  - ABOVE the ceiling the same pairs come from a planned shuffle
+  *    join of `bands/` and `sigs/` against the batch's capped triples,
+  *    so the candidate rows never reach the driver (results identical,
+  *    the corpus pays one shuffle — the degraded mode, still never a
+  *    rescan of the text). The ceiling therefore bounds what the
+  *    driver holds beyond the batch side: at most that many candidate
+  *    rows and pairs;
   *  - skew: a batch band-hash that hits an oversized corpus bucket
   *    (boilerplate clusters — the LSH mega-bucket mode) is dropped by
-  *    the `maxBucketRows` cap BEFORE the join fans out, decided on the
-  *    driver from the collected histogram (the members of such a
-  *    bucket are near-identical to one another).
+  *    the `maxBucketRows` cap before any candidate is formed, decided
+  *    on the driver from the collected histogram (the members of such
+  *    a bucket are near-identical to one another).
+  * Measured on a 200k-document batch against a 200k-document index
+  * (local mode, 4 cores, 4 GiB heap, half the batch one-word edits of
+  * index documents; the normal regime): the largest live heap after a
+  * GC over the probe's build and run was 0.85-1.23 GB (median 1.13,
+  * 5 JVMs).
   *
   * Replay: a caller that appends a batch and then records that it did
   * (an epoch marker, a committed offset) can crash between the two and
@@ -72,32 +83,34 @@ object DedupIndex {
     * change can then never diverge the two sides. */
   val DefaultMaxBucketRows: Long = 100000L
 
-  /** Candidate-pair ceiling for the BROADCAST probe plan. The bucket
-    * cap alone bounds candidates only to |batchTriples| × maxBucketRows
-    * — a dup-heavy batch whose every band lands in a near-cap corpus
-    * bucket can legitimately produce candidate sets far beyond
-    * "batch-sized", and broadcasting those would OOM the driver, not
-    * degrade gracefully. probePairs therefore computes the exact
-    * pre-distinct candidate count on the driver, from the bucket
-    * histogram it collects (aggregate-only — never the membership
-    * rows) and the batch's own band keys, and above this ceiling
-    * drops the broadcast hints: the SAME pairs via shuffle joins
-    * (results identical; the corpus pays one shuffle — the documented
-    * degraded mode, still never a rescan of the text).
-    * 2M pairs ≈ tens of MB broadcast at typical id widths. */
-  val DefaultMaxBroadcastCandidates: Long = 2000000L
+  /** Candidate ceiling of the driver-side probe. The bucket cap alone
+    * bounds candidates only to |batchTriples| × maxBucketRows — a
+    * dup-heavy batch whose every band lands in a near-cap corpus bucket
+    * can legitimately produce candidate sets far beyond "batch-sized",
+    * and collecting those would OOM the driver, not degrade gracefully.
+    * The probe therefore computes the exact pre-distinct candidate
+    * count from the bucket histogram it collects (aggregate-only —
+    * never the membership rows) and the batch's own band keys, and
+    * above this ceiling plans shuffle joins instead (the SAME pairs).
+    * 2M candidates ≈ tens of MB of collected rows at typical id widths. */
+  val DefaultMaxLocalCandidates: Long = 2000000L
 
-  /** Write (or overwrite) the index for `docs`. Documents with no
-    * shingles (< shingleSize words) have null signatures and are not
-    * indexed — they cannot be near-dup candidates. */
+  /** Write (or overwrite) the index for `docs`. The root is deleted
+    * first, so nothing of an earlier build survives the rewrite.
+    * Documents with no shingles (< shingleSize words) have null
+    * signatures and are not indexed — they cannot be near-dup
+    * candidates. */
   def write(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       path: String,
       numHashes: Int = 32,
-      bands: Int = 8): Unit =
+      bands: Int = 8): Unit = {
+    val root = new Path(path)
+    root.getFileSystem(docs.sparkSession.sessionState.newHadoopConf()).delete(root, true)
     writeMode(docs, idCol, textCol, path, numHashes, bands, "overwrite")
+  }
 
   /** Incrementally add a new shard to an existing index (row-local
     * computation, parquet file append — no read-modify-write of the
@@ -133,10 +146,10 @@ object DedupIndex {
     * fraction of agreeing minhash slots ([[Dedup.minHashJaccard]]);
     * filter it against the caller's threshold. Within-batch pairs are
     * NOT included — run the batch through the standard
-    * [[Dedup.minHashCandidatePairsBounded]] self-join for those. The
-    * batch side and the bucket histogram are collected when the probe
-    * is built (two jobs); the candidate and signature scans run when
-    * the returned frame is acted on. */
+    * [[Dedup.minHashCandidatePairsBounded]] self-join for those. In
+    * the normal regime the pairs are computed when the probe is built
+    * and returned as a local relation; above the candidate ceiling the
+    * returned frame is the shuffle-join plan. Null ids match nothing. */
   def probePairs(
       spark: SparkSession,
       path: String,
@@ -146,85 +159,18 @@ object DedupIndex {
       numHashes: Int = 32,
       bands: Int = 8,
       maxBucketRows: Long = DefaultMaxBucketRows,
-      maxBroadcastCandidates: Long = DefaultMaxBroadcastCandidates): DataFrame = {
-    // the batch side in one job: signatures and band keys together, to
-    // the driver (every batch-side frame below is broadcast anyway), so
-    // the plans below read local relations instead of recomputing it
-    val batchSide = Dedup.minHashSignatures(batch, idCol, textCol, numHashes)
-      .filter(col("mh_0").isNotNull)
-      .withColumn("_bh", array(Dedup.bandHashes(numHashes, bands): _*))
-    val batchRows = batchSide.collect()
-    // local relations of encoded (UnsafeRow) copies: about half the
-    // live heap of createDataFrame's boxed rows (147 vs 305 MB measured
-    // for a 200k-document batch)
-    def local(rows: Seq[Row], schema: StructType) =
-      spark.createDataset(rows)(Encoders.row(schema)).toDF()
-    val batchLocal = local(batchRows.toSeq, batchSide.schema)
-    def bandKeys(r: Row) = r.getSeq[Long](numHashes + 1).iterator.zipWithIndex
-    val corpusBands = spark.read.parquet(s"$path/bands")
-
-    // hot-bucket cap: one aggregate-only histogram over the index
-    // (map-side partials — one row per bucket per task, never the
-    // membership rows), restricted to the probed buckets and capped,
-    // so at most one row per batch triple reaches the driver
-    val okBuckets = Array.fill(bands)(mutable.LongMap.empty[Long])
-    corpusBands
-      .join(broadcast(batchLocal.select(posexplode(col("_bh")).as(Seq("band_idx", "band_hash")))),
-        Seq("band_idx", "band_hash"), "left_semi")
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("_bn"))
-      .filter(col("_bn") <= maxBucketRows)
-      .collect()
-      .foreach(r => okBuckets(r.getInt(0))(r.getLong(1)) = r.getLong(2))
-
-    // broadcast-safety gate: the bucket cap bounds candidates only to
-    // |batchTriples| × maxBucketRows, so pick the plan from the EXACT
-    // pre-distinct candidate count — Σ over capped probed buckets of
-    // corpusRows × batchRows, i.e. Σ over batch triples in them of
-    // corpusRows
-    val candUpperBound = batchRows.foldLeft(0L) { (acc, r) =>
-      bandKeys(r).foldLeft(acc) { case (a, (h, b)) => Math.addExact(a, okBuckets(b).getOrElse(h, 0L)) }
+      maxLocalCandidates: Long = DefaultMaxLocalCandidates): DataFrame =
+    probe(spark, path, batch, idCol, textCol, numHashes, bands, maxBucketRows,
+      maxLocalCandidates) match {
+      case Left(p)     => spark.createDataset(p.rows.toSeq)(Encoders.row(p.schema)).toDF()
+      case Right(plan) => plan
     }
-    // above the ceiling the SAME joins run unhinted (shuffle): results
-    // identical, the corpus pays a bands/+sigs/ shuffle instead of an
-    // impossible broadcast
-    val bcast: DataFrame => DataFrame =
-      if (candUpperBound <= maxBroadcastCandidates) broadcast else identity
-    val batchOk = local(
-      batchRows.toSeq.flatMap(r => bandKeys(r).collect {
-        case (h, b) if okBuckets(b).contains(h) => Row(r.get(0), b, h)
-      }),
-      StructType(Seq(batchSide.schema(idCol).copy(name = "batch_id"),
-        StructField("band_idx", IntegerType, nullable = false),
-        StructField("band_hash", LongType, nullable = false))))
-
-    // candidate join: ONE scan of bands/, batch side broadcast — the
-    // corpus membership rows never shuffle (broadcast regime)
-    val cand = corpusBands
-      .join(bcast(batchOk), Seq("band_idx", "band_hash"))
-      .select(col(idCol).as("corpus_id"), col("batch_id"))
-      .distinct()
-
-    // jaccard estimate: corpus sigs scanned once, candidates broadcast
-    val sigsRaw = spark.read.parquet(s"$path/sigs")
-    val corpusSigs = sigsRaw.toDF(sigsRaw.columns.map(c =>
-      if (c == idCol) "corpus_id" else s"a_$c").toIndexedSeq: _*)
-    val batchSigs = batchLocal.drop("_bh")
-    val bSigs = batchSigs.toDF(batchSigs.columns.map(c =>
-      if (c == idCol) "batch_id" else s"b_$c").toIndexedSeq: _*)
-    val agree = (0 until numHashes)
-      .map(i => when(col(s"a_mh_$i") === col(s"b_mh_$i"), 1).otherwise(0))
-      .reduce(_ + _)
-    corpusSigs
-      .join(bcast(cand), Seq("corpus_id"))
-      .join(broadcast(bSigs), Seq("batch_id"))
-      .select(col("corpus_id"), col("batch_id"),
-        (agree.cast("double") / numHashes).as("est_jaccard"))
-  }
 
   /** The ingest decision: batch documents with NO corpus near-dup at
     * `threshold` (the rows to keep). Null-signature batch docs (< 3
-    * words) have no candidates and are kept. */
+    * words) have no candidates and are kept. In the normal regime the
+    * result is `batch` filtered by the duplicate ids decided on the
+    * driver. */
   def newDocs(
       spark: SparkSession,
       path: String,
@@ -235,19 +181,204 @@ object DedupIndex {
       numHashes: Int = 32,
       bands: Int = 8,
       maxBucketRows: Long = DefaultMaxBucketRows,
-      maxBroadcastCandidates: Long = DefaultMaxBroadcastCandidates): DataFrame = {
-    val dups = probePairs(
-      spark, path, batch, idCol, textCol, numHashes, bands, maxBucketRows,
-      maxBroadcastCandidates)
-      // self-matches excluded: ids are globally unique in normal use
-      // (nothing matches), and a replayed batch finds ITSELF in the
-      // index — without this guard every replayed document would
-      // score est=1.0 against its own prior append and be dropped
-      // (the replay contract in the object scaladoc)
-      .filter(col("corpus_id") =!= col("batch_id"))
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("batch_id").as(idCol))
-      .distinct()
-    batch.join(broadcast(dups), Seq(idCol), "left_anti")
+      maxLocalCandidates: Long = DefaultMaxLocalCandidates): DataFrame =
+    // self-matches excluded: ids are globally unique in normal use
+    // (nothing matches), and a replayed batch finds ITSELF in the
+    // index — without this guard every replayed document would score
+    // est=1.0 against its own prior append and be dropped (the replay
+    // contract in the object scaladoc)
+    probe(spark, path, batch, idCol, textCol, numHashes, bands, maxBucketRows,
+      maxLocalCandidates) match {
+      case Left(p) =>
+        val dups = p.rows.iterator
+          .filter(r => r.get(0) != r.get(1) && r.getDouble(2) >= threshold)
+          .map(_.get(1)).toSet
+        if (dups.isEmpty) batch
+        else batch.filter(col(idCol).isNull || !isIn(col(idCol), p.schema(1).dataType, dups))
+      case Right(plan) =>
+        val dups = plan
+          .filter(col("corpus_id") =!= col("batch_id"))
+          .filter(col("est_jaccard") >= threshold)
+          .select(col("batch_id").as(idCol))
+          .distinct()
+        batch.join(dups, Seq(idCol), "left_anti")
+    }
+
+  /** Exact membership of `c` (of type `dt`) in `keys`: integral ids
+    * against a sorted long[], other types as an `IN` set. */
+  private def isIn(c: Column, dt: DataType, keys: Set[Any]): Column = dt match {
+    case LongType | IntegerType | ShortType | ByteType =>
+      inSorted(c.cast(LongType), keys.iterator.map(_.asInstanceOf[Number].longValue).toArray)
+    case _ => c.isInCollection(keys)
   }
+
+  /** `c` in `keys`, which this sorts in place. */
+  private def inSorted(c: Column, keys: Array[Long]): Column = {
+    java.util.Arrays.sort(keys)
+    Bridge.column(SortedLongIn(Bridge.expression(c), keys))
+  }
+
+  /** Pairs decided on the driver: rows of (corpus_id, batch_id,
+    * est_jaccard). */
+  private final case class LocalPairs(schema: StructType, rows: Array[Row])
+
+  private def probe(
+      spark: SparkSession, path: String, batch: DataFrame, idCol: String, textCol: String,
+      numHashes: Int, bands: Int, maxBucketRows: Long,
+      maxLocalCandidates: Long): Either[LocalPairs, DataFrame] = {
+    // the batch side in one job: signatures and band keys together, to
+    // the driver
+    val batchSide = Dedup.minHashSignatures(batch, idCol, textCol, numHashes)
+      .filter(col("mh_0").isNotNull)
+      .withColumn("_bh", array(Dedup.bandHashes(numHashes, bands): _*))
+    val batchRows = batchSide.collect()
+    def bandKeys(r: Row) = r.getSeq[Long](numHashes + 1).iterator.zipWithIndex
+    val idField = batchSide.schema(idCol)
+    val mh = (0 until numHashes).map(i => StructField(s"mh_$i", LongType))
+    val corpusBands = spark.read
+      .schema(StructType(Seq(idField.copy(nullable = true),
+        StructField("band_idx", IntegerType), StructField("band_hash", LongType))))
+      .parquet(s"$path/bands")
+    val corpusSigs = spark.read
+      .schema(StructType(idField.copy(nullable = true) +: mh))
+      .parquet(s"$path/sigs")
+
+    // hot-bucket cap: one aggregate-only histogram over the index
+    // (map-side partials — one row per bucket per task, never the
+    // membership rows), restricted to the probed band hashes and
+    // capped, so at most one row per probed bucket reaches the driver
+    val okBuckets = Array.fill(bands)(mutable.LongMap.empty[Long])
+    val probedHashes = batchRows.iterator.flatMap(r => bandKeys(r).map(_._1)).toArray.distinct
+    if (probedHashes.nonEmpty)
+      corpusBands
+        .filter(inSorted(col("band_hash"), probedHashes))
+        .groupBy(col("band_idx"), col("band_hash"))
+        .agg(count(lit(1)).as("_bn"))
+        .filter(col("_bn") <= maxBucketRows)
+        .collect()
+        .foreach(r => okBuckets(r.getInt(0))(r.getLong(1)) = r.getLong(2))
+
+    // the exact pre-distinct candidate count — Σ over capped probed
+    // buckets of corpusRows × batchRows, i.e. Σ over batch triples in
+    // them of corpusRows — picks the regime
+    val candUpperBound = batchRows.foldLeft(0L) { (acc, r) =>
+      bandKeys(r).foldLeft(acc) { case (a, (h, b)) => Math.addExact(a, okBuckets(b).getOrElse(h, 0L)) }
+    }
+    val pairSchema = StructType(Seq(idField.copy(name = "corpus_id", nullable = true),
+      idField.copy(name = "batch_id"), StructField("est_jaccard", DoubleType)))
+    if (candUpperBound <= maxLocalCandidates)
+      Left(LocalPairs(pairSchema,
+        localPairs(batchRows, okBuckets, corpusBands, corpusSigs, idCol, numHashes, bandKeys)))
+    else
+      Right(shufflePairs(spark, batchSide.schema, batchRows, okBuckets, corpusBands, corpusSigs,
+        idCol, numHashes, bandKeys))
+  }
+
+  /** The normal regime: the capped probed buckets' `bands/` rows and
+    * the candidates' `sigs/` rows are collected, and the driver joins
+    * them with the batch side — the same multiset of rows the shuffle
+    * joins emit (one per matching `sigs/` row and batch row). */
+  private def localPairs(
+      batchRows: Array[Row], okBuckets: Array[mutable.LongMap[Long]], corpusBands: DataFrame,
+      corpusSigs: DataFrame, idCol: String, numHashes: Int,
+      bandKeys: Row => Iterator[(Long, Int)]): Array[Row] = {
+    // batch ids per capped probed bucket (null ids join nothing)
+    val batchIdsAt = Array.fill(okBuckets.length)(mutable.LongMap.empty[List[Any]])
+    for (r <- batchRows if !r.isNullAt(0); (h, b) <- bandKeys(r) if okBuckets(b).contains(h))
+      batchIdsAt(b)(h) = r.get(0) :: batchIdsAt(b).getOrElse(h, Nil)
+    val okHashes = batchIdsAt.iterator.flatMap(_.keysIterator).toArray.distinct
+    if (okHashes.isEmpty) return Array.empty
+
+    // candidates: distinct (corpus_id, batch_id), keyed by corpus id,
+    // and the xxhash64 of each candidate corpus id for the sigs/ scan
+    val cand = mutable.HashMap.empty[Any, mutable.HashSet[Any]]
+    val candHashes = mutable.ArrayBuilder.make[Long]
+    corpusBands
+      .filter(inSorted(col("band_hash"), okHashes))
+      .select(col(idCol), col("band_idx"), col("band_hash"), xxhash64(col(idCol)))
+      .collect()
+      .foreach { r =>
+        if (!r.isNullAt(0)) batchIdsAt(r.getInt(1)).get(r.getLong(2)).foreach { ids =>
+          cand.getOrElseUpdate(r.get(0), mutable.HashSet.empty) ++= ids
+          candHashes += r.getLong(3)
+        }
+      }
+    if (cand.isEmpty) return Array.empty
+
+    val candBatchIds = cand.valuesIterator.flatten.toSet
+    val batchById = batchRows.iterator.filter(r => candBatchIds.contains(r.get(0))).toSeq.groupBy(_.get(0))
+    // the SQL join's estimate, bit for bit: agreeing slots (a null
+    // never agrees) as a double over numHashes
+    def est(a: Row, b: Row): Double = {
+      var agree = 0
+      var i = 1
+      while (i <= numHashes) {
+        if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i)) agree += 1
+        i += 1
+      }
+      agree.toDouble / numHashes
+    }
+    val out = Array.newBuilder[Row]
+    corpusSigs
+      .filter(inSorted(xxhash64(col(idCol)), candHashes.result().distinct))
+      .collect()
+      .foreach { s =>
+        if (!s.isNullAt(0)) cand.get(s.get(0)).foreach(_.foreach { b =>
+          batchById(b).foreach(r => out += Row(s.get(0), b, est(s, r)))
+        })
+      }
+    out.result()
+  }
+
+  /** Above the candidate ceiling: the candidate and signature joins as
+    * one planned shuffle join over local relations of the batch side —
+    * the candidate rows never reach the driver. */
+  private def shufflePairs(
+      spark: SparkSession, batchSchema: StructType, batchRows: Array[Row],
+      okBuckets: Array[mutable.LongMap[Long]], corpusBands: DataFrame, corpusSigs: DataFrame,
+      idCol: String, numHashes: Int, bandKeys: Row => Iterator[(Long, Int)]): DataFrame = {
+    // local relations of encoded (UnsafeRow) copies: about half the
+    // live heap of createDataFrame's boxed rows (147 vs 305 MB measured
+    // for a 200k-document batch)
+    def local(rows: Seq[Row], schema: StructType) =
+      spark.createDataset(rows)(Encoders.row(schema)).toDF()
+    val batchOk = local(
+      batchRows.toSeq.flatMap(r => bandKeys(r).collect {
+        case (h, b) if okBuckets(b).contains(h) => Row(r.get(0), b, h)
+      }),
+      StructType(Seq(batchSchema(idCol).copy(name = "batch_id"),
+        StructField("band_idx", IntegerType, nullable = false),
+        StructField("band_hash", LongType, nullable = false))))
+    val cand = corpusBands
+      .join(batchOk, Seq("band_idx", "band_hash"))
+      .select(col(idCol).as("corpus_id"), col("batch_id"))
+      .distinct()
+    val aSigs = corpusSigs.toDF(corpusSigs.columns.map(c =>
+      if (c == idCol) "corpus_id" else s"a_$c").toIndexedSeq: _*)
+    val batchSigs = local(batchRows.toSeq, batchSchema).drop("_bh")
+    val bSigs = batchSigs.toDF(batchSigs.columns.map(c =>
+      if (c == idCol) "batch_id" else s"b_$c").toIndexedSeq: _*)
+    val agree = (0 until numHashes)
+      .map(i => when(col(s"a_mh_$i") === col(s"b_mh_$i"), 1).otherwise(0))
+      .reduce(_ + _)
+    aSigs
+      .join(cand, Seq("corpus_id"))
+      .join(bSigs, Seq("batch_id"))
+      .select(col("corpus_id"), col("batch_id"),
+        (agree.cast("double") / numHashes).as("est_jaccard"))
+  }
+}
+
+/** `child` in a sorted primitive `long[]`, by binary search: one
+  * codegen'd membership test whose plan string and task binary carry
+  * the array, not a literal per key. Null in, null out. */
+private[text] final case class SortedLongIn(child: Expression, keys: Array[Long])
+    extends UnaryExpression with Predicate {
+  override def nullSafeEval(v: Any): Any = java.util.Arrays.binarySearch(keys, v.asInstanceOf[Long]) >= 0
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ks = ctx.addReferenceObj("keys", keys, "long[]")
+    defineCodeGen(ctx, ev, c => s"java.util.Arrays.binarySearch($ks, $c) >= 0")
+  }
+  override def toString: String = s"$child IN (${keys.length} sorted keys)"
+  override protected def withNewChildInternal(c: Expression): SortedLongIn = copy(child = c)
 }

@@ -71,7 +71,7 @@ object ReferenceFormulations {
       numHashes: Int = 32,
       bands: Int = 8,
       maxBucketRows: Long = DedupIndex.DefaultMaxBucketRows,
-      maxBroadcastCandidates: Long = DedupIndex.DefaultMaxBroadcastCandidates): DataFrame = {
+      maxLocalCandidates: Long = DedupIndex.DefaultMaxLocalCandidates): DataFrame = {
     val batchSigs = Dedup.minHashSignatures(batch, idCol, textCol, numHashes)
       .filter(col("mh_0").isNotNull)
     val batchBanded = Dedup.bandedTriples(batchSigs, idCol, numHashes, bands)
@@ -95,7 +95,7 @@ object ReferenceFormulations {
       .agg(coalesce(sum(col("_bn") * col("_bb")), lit(0L)))
       .head().getLong(0)
     val bcast: DataFrame => DataFrame =
-      if (candUpperBound <= maxBroadcastCandidates) broadcast else identity
+      if (candUpperBound <= maxLocalCandidates) broadcast else identity
     val cand = corpusBands
       .join(bcast(batchOk), Seq("band_idx", "band_hash"))
       .select(col(idCol).as("corpus_id"), col("batch_id"))

@@ -108,36 +108,77 @@ class DedupIndexSpec extends SparkSpec {
     assert(open.count() == 60L)
   }
 
-  test("the candidate join broadcasts the batch side (corpus never shuffles)") {
-    val path = tmp("plan")
-    DedupIndex.write(corpus, "doc_id", "text", path)
-    val plan = DedupIndex.probePairs(spark, path, batch, "doc_id", "text")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
+  /** The executed plan of every SQL execution `body` runs, and the
+    * number of Spark jobs it starts. */
+  private def plansOf(body: => Unit): (Seq[String], Int) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString): Unit
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val jobs =
+      try jobsOf(body)
+      finally spark.listenerManager.unregister(listener)
+    (scala.jdk.CollectionConverters.CollectionHasAsScala(plans).asScala.toSeq, jobs)
   }
 
-  test("above the candidate ceiling the probe degrades to shuffle joins, same pairs") {
-    // maxBroadcastCandidates = 0 forces the fallback regime: the plan
-    // must stop broadcasting the candidate set, and the emitted pairs
-    // must be IDENTICAL to the broadcast plan's (the ceiling changes
-    // the physical join, never the result)
+  test("a normal-regime newDocs collect plans no Exchange or BroadcastExchange") {
+    // the probe is finished on the driver: the returned frame is the
+    // batch filtered by the duplicate ids (a parquet batch, so the
+    // collect runs a job)
+    val path = tmp("plan")
+    DedupIndex.write(corpus, "doc_id", "text", path)
+    val batchPath = tmp("planbatch")
+    batch.write.parquet(batchPath)
+    val kept = DedupIndex.newDocs(spark, path, spark.read.parquet(batchPath), "doc_id", "text",
+      threshold = 0.5)
+    val (plans, jobs) = plansOf(kept.collect(): Unit)
+    assert(jobs >= 1 && plans.nonEmpty, s"$jobs jobs, ${plans.size} plans")
+    plans.foreach(p => assert(!p.contains("Exchange"), p))
+  }
+
+  test("above the candidate ceiling the probe plans shuffle joins, same pairs") {
+    // maxLocalCandidates = 0 forces the fallback regime: the pairs are
+    // IDENTICAL to the driver-side probe's (the ceiling changes where
+    // the join runs, never the result), and with size-based broadcast
+    // off the plan joins by shuffle — no hint forces a broadcast
     val path = tmp("fallback")
     DedupIndex.write(corpus, "doc_id", "text", path)
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val bcast = DedupIndex.probePairs(spark, path, batch, "doc_id", "text")
-    val fallback = DedupIndex.probePairs(
-      spark, path, batch, "doc_id", "text", maxBroadcastCandidates = 0L)
-    assert(pairsOf(fallback) == pairsOf(bcast))
-    // the unbounded sets (batchOk triples, cand) lose their FORCED
-    // broadcast hints — AQE may still broadcast genuinely small sides
-    // at runtime (it does here, the fixture is tiny), which is exactly
-    // the stats-driven behavior the fallback hands the planner
-    def hints(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.analyzed.toString
-        .linesIterator.count(_.contains("ResolvedHint"))
-    assert(hints(fallback) == hints(bcast) - 2,
-      s"fallback ${hints(fallback)} vs bcast ${hints(bcast)}")
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val local = DedupIndex.probePairs(spark, path, batch, "doc_id", "text")
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, "-1")
+    try {
+      val fallback = DedupIndex.probePairs(
+        spark, path, batch, "doc_id", "text", maxLocalCandidates = 0L)
+      // the planned (not yet adaptive-final) physical plan
+      val plan = fallback.queryExecution.executedPlan.toString
+      assert(pairsOf(fallback) == pairsOf(local) && pairsOf(local).nonEmpty)
+      assert(!fallback.queryExecution.analyzed.toString.contains("ResolvedHint"))
+      assert(!plan.contains("BroadcastHashJoin"), plan)
+      assert("SortMergeJoin|ShuffledHashJoin".r.findAllIn(plan).size == 3, plan)
+    } finally saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+  }
+
+  test("a rewrite clears the root; the manifest names only sigs/ and bands/") {
+    val path = tmp("stray")
+    DedupIndex.write(corpus, "doc_id", "text", path)
+    val root = java.nio.file.Paths.get(path)
+    java.nio.file.Files.writeString(root.resolve("_SUCCESS"), "")
+    java.nio.file.Files.createDirectories(root.resolve("old"))
+    java.nio.file.Files.writeString(root.resolve("old/part-0.parquet"), "stale")
+    DedupIndex.write(corpus, "doc_id", "text", path)
+    assert(new java.io.File(path).list().toSet == Set("sigs", "bands"))
+    graft.io.BuildManifest.write(path)
+    val files = graft.io.BuildManifest.files(path).get
+    assert(files.nonEmpty && files.forall(f => f.startsWith("sigs/") || f.startsWith("bands/")),
+      files.toString)
+    assert(graft.io.BuildManifest.verifies(path))
   }
 
   // ---- the probe against its reference formulation ----
@@ -163,8 +204,10 @@ class DedupIndexSpec extends SparkSpec {
     (roots.map(edit), df)
   }
 
-  private def tripleSet(df: DataFrame): Set[(Long, Long, Double)] =
-    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+  /** Rows as a multiset: (corpus_id, batch_id, est_jaccard) → count. */
+  private def tripleBag(df: DataFrame): Map[(Any, Any, Double), Int] =
+    df.collect().toSeq.groupBy(r => (r.get(0), r.get(1), r.getDouble(2))).view
+      .mapValues(_.size).toMap
 
   test("probePairs equals the reference formulation across regimes, edge batches and partitions") {
     val (edited, corpusDf) = seededCorpus(7L)
@@ -173,56 +216,92 @@ class DedupIndexSpec extends SparkSpec {
     val mixed = (edited.take(12).zipWithIndex.map { case (t, i) => (1000L + i, t) } ++
       Seq((1100L, "fresh unseen material with many novel words inside it"),
         (1101L, "w1 w2"), (1102L, "xy"))).toDF("doc_id", "text")
-    val batches = Seq(
-      "mixed" -> mixed,
-      "empty" -> mixed.limit(0),
-      "no signatures" -> Seq((2001L, "w1 w2"), (2002L, "xy")).toDF("doc_id", "text"),
-      "ids in the index" -> corpusDf.filter($"doc_id" <= 20L))
+    def stringIds(df: DataFrame) = df.withColumn("doc_id", concat(lit("d"), $"doc_id"))
+    val strPath = tmp("refeqstr")
+    DedupIndex.write(stringIds(corpusDf), "doc_id", "text", strPath)
+    // a null id on each side: in the index a copy of doc 2 (root 1),
+    // in the batch an edit of root 1
+    val rootText = corpusDf.filter($"doc_id" === 2L).head().getString(1)
+    val nullRow = Seq((null: java.lang.Long, rootText)).toDF("doc_id", "text")
+    val nullPath = tmp("refeqnull")
+    DedupIndex.write(corpusDf.unionByName(nullRow), "doc_id", "text", nullPath)
+    // the index after a replayed append: docs 1-20 are in it twice
+    val replayPath = tmp("refeqreplay")
+    DedupIndex.write(corpusDf, "doc_id", "text", replayPath)
+    DedupIndex.append(corpusDf.filter($"doc_id" <= 20L), "doc_id", "text", replayPath)
+    val cases = Seq(
+      ("mixed", path, mixed),
+      ("empty", path, mixed.limit(0)),
+      ("no signatures", path, Seq((2001L, "w1 w2"), (2002L, "xy")).toDF("doc_id", "text")),
+      ("ids in the index", path, corpusDf.filter($"doc_id" <= 20L)),
+      ("string ids", strPath, stringIds(mixed.unionByName(corpusDf.filter($"doc_id" <= 5L)))),
+      ("null ids", nullPath, mixed.unionByName(
+        Seq((null: java.lang.Long, edited(1))).toDF("doc_id", "text"))),
+      ("repeated id", path, mixed.unionByName(Seq((1000L, edited(3))).toDF("doc_id", "text"))),
+      ("replayed append", replayPath, mixed.unionByName(corpusDf.filter($"doc_id" <= 5L))))
     val regimes: Seq[(String, Long, Long)] = Seq(
-      ("default", DedupIndex.DefaultMaxBucketRows, DedupIndex.DefaultMaxBroadcastCandidates),
-      ("maxBucketRows = 1", 1L, DedupIndex.DefaultMaxBroadcastCandidates),
-      ("maxBucketRows = 3", 3L, DedupIndex.DefaultMaxBroadcastCandidates),
-      ("maxBroadcastCandidates = 0", DedupIndex.DefaultMaxBucketRows, 0L))
+      ("default", DedupIndex.DefaultMaxBucketRows, DedupIndex.DefaultMaxLocalCandidates),
+      ("maxBucketRows = 1", 1L, DedupIndex.DefaultMaxLocalCandidates),
+      ("maxBucketRows = 3", 3L, DedupIndex.DefaultMaxLocalCandidates),
+      ("maxLocalCandidates = 0", DedupIndex.DefaultMaxBucketRows, 0L))
     val results = for {
-      p <- Seq(1, 7); (bName, b) <- batches; (rName, cap, ceiling) <- regimes
+      p <- Seq(1, 7); (bName, idx, b) <- cases; (rName, cap, ceiling) <- regimes
     } yield ReferenceFormulations.withShufflePartitions(spark, p) {
-      val got = tripleSet(DedupIndex.probePairs(spark, path, b, "doc_id", "text",
-        maxBucketRows = cap, maxBroadcastCandidates = ceiling))
-      val want = tripleSet(ReferenceFormulations.dedupIndexProbePairs(spark, path, b, "doc_id", "text",
-        maxBucketRows = cap, maxBroadcastCandidates = ceiling))
+      val got = tripleBag(DedupIndex.probePairs(spark, idx, b, "doc_id", "text",
+        maxBucketRows = cap, maxLocalCandidates = ceiling))
+      val want = tripleBag(ReferenceFormulations.dedupIndexProbePairs(spark, idx, b, "doc_id", "text",
+        maxBucketRows = cap, maxLocalCandidates = ceiling))
       assert(got == want, s"$bName, $rName, $p partitions")
       (p, bName, rName) -> got
     }
     val byCase = results.toMap
+    def set(k: (Int, String, String)) = byCase(k).keySet.map { case (c, b, e) =>
+      (c.asInstanceOf[Long], b.asInstanceOf[Long], e) }
     // the fixture exercises each regime: the cap of 3 drops some probed
     // buckets but not all, and the self-id batch finds itself
-    val open = byCase((1, "mixed", "default"))
-    val capped = byCase((1, "mixed", "maxBucketRows = 3"))
+    val open = set((1, "mixed", "default"))
+    val capped = set((1, "mixed", "maxBucketRows = 3"))
     assert(capped.nonEmpty && capped.size < open.size, s"capped ${capped.size} of ${open.size}")
-    assert(byCase((1, "mixed", "maxBucketRows = 1")).subsetOf(capped) && capped.subsetOf(open))
+    assert(set((1, "mixed", "maxBucketRows = 1")).subsetOf(capped) && capped.subsetOf(open))
     assert(byCase((1, "empty", "default")).isEmpty && byCase((1, "no signatures", "default")).isEmpty)
-    val self = byCase((1, "ids in the index", "default"))
+    val self = set((1, "ids in the index", "default"))
     assert((1L to 20L).forall(i => self.contains((i, i, 1.0))))
+    // each edge case reaches its edge: string ids match, the null ids
+    // match nothing, the repeated id yields rows for both of its
+    // texts, and the replayed rows double their documents' rows
+    assert(byCase((1, "string ids", "default")).keySet.exists(_._1 == "d1"))
+    val withNull = byCase((1, "null ids", "default"))
+    assert(withNull.nonEmpty && withNull.keySet.forall(t => t._1 != null && t._2 != null))
+    assert(byCase((1, "repeated id", "default")).size > byCase((1, "mixed", "default")).size)
+    assert(byCase((1, "replayed append", "default")).exists { case ((c, b, _), n) =>
+      c == b && c.asInstanceOf[Long] <= 5L && n == 2 })
     // newDocs drops exactly the docs with a near-dup other than themselves
     val selfBatch = corpusDf.filter($"doc_id" <= 20L)
     val kept = DedupIndex.newDocs(spark, path, selfBatch, "doc_id", "text", threshold = 0.5)
       .collect().map(_.getLong(0)).toSet
     val dropped = self.collect { case (c, b, est) if c != b && est >= 0.5 => b }
     assert(kept == (1L to 20L).toSet -- dropped && dropped.nonEmpty && kept.nonEmpty)
+    // and keeps the same rows in either regime, null ids included
+    for ((bName, idx, b) <- cases) {
+      def keep(ceiling: Long) = DedupIndex.newDocs(spark, idx, b, "doc_id", "text",
+        threshold = 0.5, maxLocalCandidates = ceiling).collect().map(r => (r.get(0), r.get(1)))
+        .toSeq.groupBy(identity).view.mapValues(_.size).toMap
+      assert(keep(DedupIndex.DefaultMaxLocalCandidates) == keep(0L), bName)
+    }
   }
 
-  test("one newDocs probe runs 12 Spark jobs") {
+  test("one newDocs probe runs 4 Spark jobs") {
     // the batch side is collected once (a local fixture batch needs no
-    // job for that) and the bucket histogram once; the 12 are two
-    // parquet schema reads, the histogram (probed-key broadcast, bands/
-    // map stage, result) and the caller's collect (two batch-side
-    // broadcasts, bands/ and sigs/ map stages each with the result
-    // stage that broadcasts it, the final stage).
+    // job for that); the 4 are the bucket histogram (bands/ map stage,
+    // result), the bands/ scan of the capped probed buckets and the
+    // sigs/ scan of the candidates. No schema is inferred, nothing is
+    // broadcast, and the returned frame filters the local batch
+    // without a job.
     val path = tmp("jobs")
     DedupIndex.write(corpus, "doc_id", "text", path)
     val jobs = jobsOf {
       DedupIndex.newDocs(spark, path, batch, "doc_id", "text", threshold = 0.5).collect(): Unit
     }
-    assert(jobs == 12, s"$jobs jobs")
+    assert(jobs == 4, s"$jobs jobs")
   }
 }
