@@ -4,11 +4,12 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType, ShortType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Incremental near-dup deduplication: a PERSISTED MinHash-LSH
   * signature index over the corpus, probed by each new ingest batch —
@@ -26,7 +27,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, 
   * parquet files: append-then-probe ≡ rebuild-then-probe exactly
   * (DedupIndexSpec asserts it), with no compaction or merge step.
   * Probes read both tables with their known schema (the id typed as
-  * the batch's id), so no probe infers a parquet schema.
+  * the batch's id), so no probe infers a parquet schema; a batch's id
+  * column must therefore have the type the index was written with.
   *
   * Probe scale contract (the asymmetry is the point — `batch` is the
   * small side, the corpus is unbounded):
@@ -39,23 +41,27 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, 
   *    bucket), and the driver decides the bucket cap and the exact
   *    pre-distinct candidate count from it;
   *  - NORMAL regime (count ≤ [[DefaultMaxLocalCandidates]]): the probe
-  *    is finished on the driver. One `bands/` scan collects the rows
-  *    of the capped probed buckets (at most the candidate count), the
+  *    is finished on the driver. One `bands/` scan returns the rows of
+  *    the capped probed buckets (at most the candidate count), the
   *    driver forms the distinct (corpus_id, batch_id) pairs, one
-  *    `sigs/` scan collects the candidates' signatures, and the driver
+  *    `sigs/` scan returns the candidates' signatures, and the driver
   *    computes each estimate with the SQL join's expression. The scans
   *    filter against sorted primitive key arrays (band hashes, and the
   *    `xxhash64` of candidate ids) — a superset test; exact matching
-  *    is on the driver. The driver then holds the batch side, the
-  *    candidate rows and the pairs, and the result is a local
-  *    relation: no exchange, broadcast or schema job;
+  *    is on the driver. Both scans come back as compressed blocks of
+  *    encoded rows, decoded one row at a time, so beyond the batch side
+  *    the driver holds, per candidate: its id in a map to the batch ids
+  *    of its buckets, its `sigs/` row (k+1 longs, about 0.3 KB at k =
+  *    32) while that scan is read, and its output row (`probePairs`;
+  *    `newDocs` keeps only the duplicate batch ids). The result is a
+  *    local relation: no exchange, broadcast or schema job;
   *  - ABOVE the ceiling the same pairs come from a planned shuffle
   *    join of `bands/` and `sigs/` against the batch's capped triples,
-  *    so the candidate rows never reach the driver (results identical,
-  *    the corpus pays one shuffle — the degraded mode, still never a
+  *    so no candidate row reaches the driver (results identical, the
+  *    corpus pays one shuffle — the degraded mode, still never a
   *    rescan of the text). The ceiling therefore bounds what the
   *    driver holds beyond the batch side: at most that many candidate
-  *    rows and pairs;
+  *    ids, `sigs/` rows and pairs;
   *  - skew: a batch band-hash that hits an oversized corpus bucket
   *    (boilerplate clusters — the LSH mega-bucket mode) is dropped by
   *    the `maxBucketRows` cap before any candidate is formed, decided
@@ -63,9 +69,12 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, 
   *    a bucket are near-identical to one another).
   * Measured on a 200k-document batch against a 200k-document index
   * (local mode, 4 cores, 4 GiB heap, half the batch one-word edits of
-  * index documents; the normal regime): the largest live heap after a
-  * GC over the probe's build and run was 0.85-1.23 GB (median 1.13,
-  * 5 JVMs).
+  * index documents; 424,726 candidates, so the shuffle regime): the
+  * largest heap used after a GC over the probe's build and run was
+  * 1.25-1.66 GB (median 1.30, 5 JVMs; the broadcast-joined probe this
+  * replaced: 1.37-1.80, median 1.50). The normal regime's worst case is
+  * at the ceiling with every candidate a distinct corpus id and pair:
+  * 250k such candidates took 0.37-0.64 GB (4 JVMs).
   *
   * Replay: a caller that appends a batch and then records that it did
   * (an epoch marker, a committed offset) can crash between the two and
@@ -92,8 +101,13 @@ object DedupIndex {
     * count from the bucket histogram it collects (aggregate-only —
     * never the membership rows) and the batch's own band keys, and
     * above this ceiling plans shuffle joins instead (the SAME pairs).
-    * 2M candidates ≈ tens of MB of collected rows at typical id widths. */
-  val DefaultMaxLocalCandidates: Long = 2000000L
+    * A candidate costs the driver about 1-2 KB at worst (k = 32: its
+    * `sigs/` row arrives in task-result blocks that are briefly held
+    * more than once): 250k distinct candidates measured 0.37-0.64 GB
+    * after GC, 1M 2.0 GB, 2M 3.4 GB. The shuffle joins took about the
+    * same time as the broadcast plan they replaced, and 0.69-0.78 GB
+    * at 2M (that plan: 0.70-0.85, 3 JVMs each). */
+  val DefaultMaxLocalCandidates: Long = 250000L
 
   /** Write (or overwrite) the index for `docs`. The root is deleted
     * first, so nothing of an earlier build survives the rewrite.
@@ -149,7 +163,9 @@ object DedupIndex {
     * [[Dedup.minHashCandidatePairsBounded]] self-join for those. In
     * the normal regime the pairs are computed when the probe is built
     * and returned as a local relation; above the candidate ceiling the
-    * returned frame is the shuffle-join plan. Null ids match nothing. */
+    * returned frame is the shuffle-join plan. Null ids match nothing.
+    * The index is read with the batch's id type, so `batch`'s id
+    * column must have the type the index was written with. */
   def probePairs(
       spark: SparkSession,
       path: String,
@@ -162,7 +178,10 @@ object DedupIndex {
       maxLocalCandidates: Long = DefaultMaxLocalCandidates): DataFrame =
     probe(spark, path, batch, idCol, textCol, numHashes, bands, maxBucketRows,
       maxLocalCandidates) match {
-      case Left(p)     => spark.createDataset(p.rows.toSeq)(Encoders.row(p.schema)).toDF()
+      case Left(p) =>
+        val rows = Array.newBuilder[Row]
+        p.run((c, b, est) => rows += Row(c, b, est))
+        spark.createDataset(rows.result().toSeq)(Encoders.row(p.schema)).toDF()
       case Right(plan) => plan
     }
 
@@ -170,7 +189,8 @@ object DedupIndex {
     * `threshold` (the rows to keep). Null-signature batch docs (< 3
     * words) have no candidates and are kept. In the normal regime the
     * result is `batch` filtered by the duplicate ids decided on the
-    * driver. */
+    * driver. As for [[probePairs]], `batch`'s id type must be the
+    * index's. */
   def newDocs(
       spark: SparkSession,
       path: String,
@@ -190,11 +210,10 @@ object DedupIndex {
     probe(spark, path, batch, idCol, textCol, numHashes, bands, maxBucketRows,
       maxLocalCandidates) match {
       case Left(p) =>
-        val dups = p.rows.iterator
-          .filter(r => r.get(0) != r.get(1) && r.getDouble(2) >= threshold)
-          .map(_.get(1)).toSet
+        val dups = mutable.HashSet.empty[Any]
+        p.run((c, b, est) => if (c != b && est >= threshold) dups += b)
         if (dups.isEmpty) batch
-        else batch.filter(col(idCol).isNull || !isIn(col(idCol), p.schema(1).dataType, dups))
+        else batch.filter(col(idCol).isNull || !col(idCol).isInCollection(dups))
       case Right(plan) =>
         val dups = plan
           .filter(col("corpus_id") =!= col("batch_id"))
@@ -204,23 +223,16 @@ object DedupIndex {
         batch.join(dups, Seq(idCol), "left_anti")
     }
 
-  /** Exact membership of `c` (of type `dt`) in `keys`: integral ids
-    * against a sorted long[], other types as an `IN` set. */
-  private def isIn(c: Column, dt: DataType, keys: Set[Any]): Column = dt match {
-    case LongType | IntegerType | ShortType | ByteType =>
-      inSorted(c.cast(LongType), keys.iterator.map(_.asInstanceOf[Number].longValue).toArray)
-    case _ => c.isInCollection(keys)
-  }
-
   /** `c` in `keys`, which this sorts in place. */
   private def inSorted(c: Column, keys: Array[Long]): Column = {
     java.util.Arrays.sort(keys)
     Bridge.column(SortedLongIn(Bridge.expression(c), keys))
   }
 
-  /** Pairs decided on the driver: rows of (corpus_id, batch_id,
-    * est_jaccard). */
-  private final case class LocalPairs(schema: StructType, rows: Array[Row])
+  /** Pairs decided on the driver: `run(emit)` calls `emit` once per
+    * (corpus_id, batch_id, est_jaccard) row of `schema`. */
+  private final case class LocalPairs(
+      schema: StructType, run: ((Any, Any, Double) => Unit) => Unit)
 
   private def probe(
       spark: SparkSession, path: String, batch: DataFrame, idCol: String, textCol: String,
@@ -277,39 +289,47 @@ object DedupIndex {
   /** The normal regime: the capped probed buckets' `bands/` rows and
     * the candidates' `sigs/` rows are collected, and the driver joins
     * them with the batch side — the same multiset of rows the shuffle
-    * joins emit (one per matching `sigs/` row and batch row). */
+    * joins emit (one per matching `sigs/` row and batch row). Both
+    * scans are read as encoded rows, one at a time, without boxing. */
   private def localPairs(
       batchRows: Array[Row], okBuckets: Array[mutable.LongMap[Long]], corpusBands: DataFrame,
       corpusSigs: DataFrame, idCol: String, numHashes: Int,
-      bandKeys: Row => Iterator[(Long, Int)]): Array[Row] = {
+      bandKeys: Row => Iterator[(Long, Int)])(emit: (Any, Any, Double) => Unit): Unit = {
     // batch ids per capped probed bucket (null ids join nothing)
     val batchIdsAt = Array.fill(okBuckets.length)(mutable.LongMap.empty[List[Any]])
     for (r <- batchRows if !r.isNullAt(0); (h, b) <- bandKeys(r) if okBuckets(b).contains(h))
       batchIdsAt(b)(h) = r.get(0) :: batchIdsAt(b).getOrElse(h, Nil)
     val okHashes = batchIdsAt.iterator.flatMap(_.keysIterator).toArray.distinct
-    if (okHashes.isEmpty) return Array.empty
+    if (okHashes.isEmpty) return
 
-    // candidates: distinct (corpus_id, batch_id), keyed by corpus id,
-    // and the xxhash64 of each candidate corpus id for the sigs/ scan
-    val cand = mutable.HashMap.empty[Any, mutable.HashSet[Any]]
+    // candidates: each corpus id → the batch ids of the capped probed
+    // buckets it is in (shared lists; one corpus id in several buckets
+    // is distinct'd below), and the xxhash64 of each candidate corpus
+    // id for the sigs/ scan
+    val idType = corpusBands.schema(idCol).dataType
+    val toId = CatalystTypeConverters.createToScalaConverter(idType)
+    val cand = mutable.HashMap.empty[Any, List[Any]]
     val candHashes = mutable.ArrayBuilder.make[Long]
-    corpusBands
+    Bridge.collectEncoded(corpusBands
       .filter(inSorted(col("band_hash"), okHashes))
-      .select(col(idCol), col("band_idx"), col("band_hash"), xxhash64(col(idCol)))
-      .collect()
+      .select(col(idCol), col("band_idx"), col("band_hash"), xxhash64(col(idCol))))
       .foreach { r =>
         if (!r.isNullAt(0)) batchIdsAt(r.getInt(1)).get(r.getLong(2)).foreach { ids =>
-          cand.getOrElseUpdate(r.get(0), mutable.HashSet.empty) ++= ids
-          candHashes += r.getLong(3)
+          val c = toId(r.get(0, idType))
+          cand.get(c) match {
+            case Some(seen) => cand(c) = ids ::: seen
+            case None =>
+              cand(c) = ids
+              candHashes += r.getLong(3)
+          }
         }
       }
-    if (cand.isEmpty) return Array.empty
+    if (cand.isEmpty) return
 
-    val candBatchIds = cand.valuesIterator.flatten.toSet
-    val batchById = batchRows.iterator.filter(r => candBatchIds.contains(r.get(0))).toSeq.groupBy(_.get(0))
+    val batchById = batchRows.iterator.filter(!_.isNullAt(0)).toSeq.groupBy(_.get(0))
     // the SQL join's estimate, bit for bit: agreeing slots (a null
     // never agrees) as a double over numHashes
-    def est(a: Row, b: Row): Double = {
+    def est(a: InternalRow, b: Row): Double = {
       var agree = 0
       var i = 1
       while (i <= numHashes) {
@@ -318,16 +338,13 @@ object DedupIndex {
       }
       agree.toDouble / numHashes
     }
-    val out = Array.newBuilder[Row]
-    corpusSigs
-      .filter(inSorted(xxhash64(col(idCol)), candHashes.result().distinct))
-      .collect()
+    Bridge.collectEncoded(corpusSigs.filter(inSorted(xxhash64(col(idCol)), candHashes.result())))
       .foreach { s =>
-        if (!s.isNullAt(0)) cand.get(s.get(0)).foreach(_.foreach { b =>
-          batchById(b).foreach(r => out += Row(s.get(0), b, est(s, r)))
-        })
+        if (!s.isNullAt(0)) {
+          val c = toId(s.get(0, idType))
+          cand.get(c).foreach(_.distinct.foreach(b => batchById(b).foreach(r => emit(c, b, est(s, r)))))
+        }
       }
-    out.result()
   }
 
   /** Above the candidate ceiling: the candidate and signature joins as

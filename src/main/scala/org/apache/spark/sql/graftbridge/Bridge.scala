@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.storage.StorageLevel
 
 /** Column ⇄ Expression bridge, and frames staged behind an RDD leaf.
@@ -15,6 +16,15 @@ import org.apache.spark.storage.StorageLevel
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `df`'s rows, collected in one SQL execution as `collect()` runs
+    * them, as encoded rows decoded one at a time by the iterator: the
+    * driver holds the compressed result blocks, never a boxed `Row` or
+    * a decoded copy of every row. */
+  def collectEncoded(df: DataFrame): Iterator[InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollectIterator()._2)
+  }
 
   /** Free the block-manager storage behind a `localCheckpoint`ed
     * frame. `df.unpersist()` only reaches CacheManager entries; a

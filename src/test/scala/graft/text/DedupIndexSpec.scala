@@ -125,19 +125,28 @@ class DedupIndexSpec extends SparkSpec {
     (scala.jdk.CollectionConverters.CollectionHasAsScala(plans).asScala.toSeq, jobs)
   }
 
-  test("a normal-regime newDocs collect plans no Exchange or BroadcastExchange") {
-    // the probe is finished on the driver: the returned frame is the
+  test("a normal-regime newDocs plans one Exchange (the histogram's) and no BroadcastExchange") {
+    // the probe is finished on the driver: its only shuffle is the
+    // bucket histogram's partial counts, and the returned frame is the
     // batch filtered by the duplicate ids (a parquet batch, so the
     // collect runs a job)
     val path = tmp("plan")
     DedupIndex.write(corpus, "doc_id", "text", path)
     val batchPath = tmp("planbatch")
     batch.write.parquet(batchPath)
-    val kept = DedupIndex.newDocs(spark, path, spark.read.parquet(batchPath), "doc_id", "text",
-      threshold = 0.5)
+    var kept: DataFrame = null
+    val (probePlans, _) = plansOf {
+      kept = DedupIndex.newDocs(spark, path, spark.read.parquet(batchPath), "doc_id", "text",
+        threshold = 0.5)
+    }
     val (plans, jobs) = plansOf(kept.collect(): Unit)
     assert(jobs >= 1 && plans.nonEmpty, s"$jobs jobs, ${plans.size} plans")
     plans.foreach(p => assert(!p.contains("Exchange"), p))
+    // the batch side, the histogram, the bands/ and the sigs/ scan
+    assert(probePlans.size == 4, probePlans.mkString("\n"))
+    (probePlans ++ plans).foreach(p => assert(!p.contains("BroadcastExchange"), p))
+    val shuffles = probePlans.filter(_.contains("Exchange"))
+    assert(shuffles.size == 1 && shuffles.head.contains("band_idx"), probePlans.mkString("\n"))
   }
 
   test("above the candidate ceiling the probe plans shuffle joins, same pairs") {

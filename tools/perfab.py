@@ -12,9 +12,11 @@ this repo's BENCHMARK.json. Which side runs first alternates by seed
 drifts over the session weighs on both sides alike. Each run's artifact
 (`.bench_build/results/W-seedN-traceT.json` in its checkout) is copied
 into DIR/parent or DIR/change, and `tools/perfdiff.py` over those two
-directories is printed at the end. A run that exits non-zero (an
-incorrect output fails the run) keeps its artifact; the tool names it
-and exits 1.
+directories is printed at the end. An artifact left by an earlier
+run under the same name is deleted before each run, so a run that
+writes none copies none. A run that exits non-zero (an incorrect output
+fails the run) keeps the artifact it wrote; the tool names it, and
+every run that left no artifact, and exits 1.
 """
 import argparse
 import json
@@ -60,10 +62,12 @@ def ab(checkouts, workload, seeds, seconds, trace, out, runner=run_perfbench):
         for side in order(seed):
             print(f"perfab: {workload} seed {seed} trace {trace}: {side}", file=sys.stderr,
                   flush=True)
-            if runner(checkouts[side], workload, seed, seconds, trace) != 0:
-                failed.append((seed, side))
             name = f"{workload}-seed{seed}-trace{trace}.json"
             src = os.path.join(checkouts[side], ".bench_build", "results", name)
+            if os.path.exists(src):
+                os.remove(src)
+            if runner(checkouts[side], workload, seed, seconds, trace) != 0:
+                failed.append((seed, side))
             if os.path.exists(src):
                 shutil.copy(src, os.path.join(out, side, name))
             elif (seed, side) not in failed:

@@ -17,14 +17,17 @@ import perfab  # noqa: E402
 class StubRunner:
     """Records each call and writes the artifact perfbench would, tagged
     with the checkout it ran in; `fail` names (seed, checkout) calls
-    that exit 1."""
+    that exit 1, `silent` those that exit 1 without an artifact."""
 
-    def __init__(self, fail=()):
+    def __init__(self, fail=(), silent=()):
         self.calls = []
         self.fail = set(fail)
+        self.silent = set(silent)
 
     def __call__(self, checkout, workload, seed, seconds, trace):
         self.calls.append((seed, checkout, seconds, trace))
+        if (seed, checkout) in self.silent:
+            return 1
         results = os.path.join(checkout, ".bench_build", "results")
         os.makedirs(results, exist_ok=True)
         with open(os.path.join(results, f"{workload}-seed{seed}-trace{trace}.json"), "w") as f:
@@ -72,6 +75,21 @@ class PerfAbTest(unittest.TestCase):
         self.assertEqual(failed, [(5, "change")])
         self.assertTrue(os.path.exists(
             os.path.join(self.out, "change", "corpus_ingest-seed5-trace0.json")))
+
+    def test_stale_artifact_of_a_run_that_writes_none_is_not_copied(self):
+        change = self.checkouts["change"]
+        results = os.path.join(change, ".bench_build", "results")
+        os.makedirs(results)
+        stale = os.path.join(results, "corpus_ingest-seed6-trace0.json")
+        with open(stale, "w") as f:
+            json.dump({"stale": True}, f)
+        runner = StubRunner(silent={(6, change)})
+        failed = perfab.ab(self.checkouts, "corpus_ingest", [6], 10, 0, self.out, runner)
+        self.assertEqual(failed, [(6, "change")])
+        self.assertFalse(os.path.exists(stale))
+        self.assertEqual(os.listdir(os.path.join(self.out, "change")), [])
+        self.assertEqual(os.listdir(os.path.join(self.out, "parent")),
+                         ["corpus_ingest-seed6-trace0.json"])
 
 
 if __name__ == "__main__":
