@@ -54,7 +54,8 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
   *    of its buckets, its `sigs/` row (k+1 longs, about 0.3 KB at k =
   *    32) while that scan is read, and its output row (`probePairs`;
   *    `newDocs` keeps only the duplicate batch ids). The result is a
-  *    local relation: no exchange, broadcast or schema job;
+  *    local relation; the histogram's partial counts are the probe's
+  *    only exchange, and it runs no broadcast or schema job;
   *  - ABOVE the ceiling the same pairs come from a planned shuffle
   *    join of `bands/` and `sigs/` against the batch's capped triples,
   *    so no candidate row reaches the driver (results identical, the
@@ -71,8 +72,7 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
   * (local mode, 4 cores, 4 GiB heap, half the batch one-word edits of
   * index documents; 424,726 candidates, so the shuffle regime): the
   * largest heap used after a GC over the probe's build and run was
-  * 1.25-1.66 GB (median 1.30, 5 JVMs; the broadcast-joined probe this
-  * replaced: 1.37-1.80, median 1.50). The normal regime's worst case is
+  * 1.25-1.66 GB (median 1.30, 5 JVMs). The normal regime's worst case is
   * at the ceiling with every candidate a distinct corpus id and pair:
   * 250k such candidates took 0.37-0.64 GB (4 JVMs).
   *
@@ -104,9 +104,8 @@ object DedupIndex {
     * A candidate costs the driver about 1-2 KB at worst (k = 32: its
     * `sigs/` row arrives in task-result blocks that are briefly held
     * more than once): 250k distinct candidates measured 0.37-0.64 GB
-    * after GC, 1M 2.0 GB, 2M 3.4 GB. The shuffle joins took about the
-    * same time as the broadcast plan they replaced, and 0.69-0.78 GB
-    * at 2M (that plan: 0.70-0.85, 3 JVMs each). */
+    * after GC, 1M 2.0 GB, 2M 3.4 GB; the shuffle joins took 0.69-0.78
+    * GB at 2M. */
   val DefaultMaxLocalCandidates: Long = 250000L
 
   /** Write (or overwrite) the index for `docs`. The root is deleted

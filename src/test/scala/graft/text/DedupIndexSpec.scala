@@ -125,7 +125,7 @@ class DedupIndexSpec extends SparkSpec {
     (scala.jdk.CollectionConverters.CollectionHasAsScala(plans).asScala.toSeq, jobs)
   }
 
-  test("a normal-regime newDocs plans one Exchange (the histogram's) and no BroadcastExchange") {
+  test("a normal-regime newDocs plans one Exchange and no BroadcastExchange") {
     // the probe is finished on the driver: its only shuffle is the
     // bucket histogram's partial counts, and the returned frame is the
     // batch filtered by the duplicate ids (a parquet batch, so the
