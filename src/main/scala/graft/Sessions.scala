@@ -34,6 +34,13 @@ import org.apache.spark.sql.SparkSession
   *    stages in the order it creates them, and the number is in the
   *    class name). 1024 is the smallest power of two ≥ 4 × 150. A
   *    static conf: the cache is sized when the JVM first generates code.
+  *  - `codegen.useIdInClassName false`: AQE numbers whole-stage codegen
+  *    stages in the order it creates them, which differs between runs
+  *    of one query, and the number was part of each generated class's
+  *    name, so a warm re-run recompiled classes identical but for it.
+  *    Warm corpus_ingest passes (4-core host) compiled 0-4 classes each
+  *    with the id in the name (16 over 9 passes) and none without it
+  *    (10 passes).
   *
   * "Constrained heap" = under [[graft.ops.Caches.MinHeapPerCoreMb]]
   * per core — the same floor that degrades memo caches to DISK_ONLY.
@@ -106,7 +113,8 @@ object Sessions {
     // q_median_collapse 108.3 -> 81.6 s, same window, clean:true,
     // oracle-checked results; q_volcano solo-flat (49.3 vs 48.8).
     "spark.sql.join.preferSortMergeJoin" -> "false",
-    "spark.sql.codegen.cache.maxEntries" -> "1024")
+    "spark.sql.codegen.cache.maxEntries" -> "1024",
+    "spark.sql.codegen.useIdInClassName" -> "false")
 
   /** Executor memory to REQUEST under a `local-cluster[n,c,m]` master.
     *

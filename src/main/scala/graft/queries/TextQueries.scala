@@ -126,8 +126,8 @@ object TextQueries extends QueryProvider {
     "q_jaccard_pairs",
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val sigs = Dedup.minHashSignatures(docs, "doc_id", "text")
-        .filter(col("mh_0").isNotNull)
+      val sigs = Dedup.minHashSignatures(docs.filter(Dedup.hasShingles(col("text"))),
+        "doc_id", "text")
       val b = Dedup.minHashCandidatePairsBounded(sigs, "doc_id",
         maxPairs = NearDupPairBudget)
       lastJaccardCap.set(b.sizeCap)
@@ -734,11 +734,13 @@ object TextQueries extends QueryProvider {
     * verifies against the directory (the path key above guarantees
     * freshness). mtime == 0 means lastModified() could not see the
     * source file at all — never a valid cache key, so that path
-    * rebuilds unconditionally. Completed builds sweep same-key
-    * siblings from older source mtimes, so tmp holds at most one
-    * index per (kind, layout, sf dir). */
-  private[graft] def ensureIndex(sfDir: String, path: String)(write: => Unit): Unit = {
-    if (sourceMtime(sfDir) == 0L || !graft.io.BuildManifest.verifies(path)) write
+    * rebuilds unconditionally, and so does a verified build that
+    * `current` says its reader would refuse. Completed builds sweep
+    * same-key siblings from older source mtimes, so tmp holds at most
+    * one index per (kind, layout, sf dir). */
+  private[graft] def ensureIndex(sfDir: String, path: String, current: => Boolean = true)(
+      write: => Unit): Unit = {
+    if (sourceMtime(sfDir) == 0L || !graft.io.BuildManifest.verifies(path) || !current) write
     sweepStaleSiblings(sfDir, path)
   }
 
@@ -1593,22 +1595,23 @@ object TextQueries extends QueryProvider {
   //      the probe as costing ≈ the full self-join (sf10: 45.6 s vs
   //      q_jaccard_pairs 42.1 s, BENCH_NOTES round-14).
   //      The corpus never shuffles: the probe collects the probed
-  //      buckets' histogram, the capped buckets' bands/ rows and the
-  //      candidates' sigs/ rows, and joins them with the batch side on
-  //      the driver. The oracle replays both sides' minhash chains
+  //      buckets' histogram and the index rows in the capped buckets
+  //      (each carries its band keys beside its signature), and joins
+  //      them with the batch side on the driver. The oracle replays both sides' minhash chains
   //      (shared CTE generator), band-tuple equality, the corpus-side
   //      bucket cap, and the slot-agreement estimate. ----
   private val qDedupIncremental = Q(
     "q_dedup_incremental",
     (s, d) => {
       val docs = Tables.documents(s, d)
-      // layout key carries the corpus split (c90): an index cached for
-      // a different split must never be reused
-      val path = indexPath(d, "dedup", "k32b8c90")
-      ensureIndex(d, path) {
+      // layout key carries the corpus split (c90) and the one-table
+      // layout (t1): an index cached for a different split or layout
+      // must never be reused
+      val path = indexPath(d, "dedup", "k32b8c90t1")
+      ensureIndex(d, path, !graft.text.DedupIndex.earlierLayout(s, path)) {
         graft.text.DedupIndex.write(
           docs.filter(col("doc_id") % 10 =!= 9), "doc_id", "text", path)
-        // published only after BOTH subtable writes (sigs/, bands/)
+        // published only after the index write
         graft.io.BuildManifest.write(path)
       }
       // the cap is passed EXPLICITLY (not left to the default) and the

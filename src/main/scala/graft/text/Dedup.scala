@@ -53,6 +53,14 @@ object Dedup {
         (0 until numHashes).map(i => col("_sig").getItem(i).as(s"mh_$i"))): _*)
   }
 
+  /** Exactly the texts whose [[minHashSignatures]] are non-null: at
+    * least `shingleSize` words under the shingler's own split. Filter
+    * the documents with it instead of the signatures on `mh_0`: the
+    * optimizer pushes an `mh_0` filter beneath the projection, where
+    * it evaluates the minhash kernel a second time per row. */
+  def hasShingles(text: Column, shingleSize: Int = 3): Column =
+    text.isNotNull && size(split(text, " ")) >= shingleSize
+
   /** LSH banding over minhash signatures → candidate near-dup pairs.
     * Signatures are split into `bands` bands of `rows` hashes; docs
     * sharing any band-hash become candidates (classic MinHash-LSH:

@@ -18,51 +18,55 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
   * full 100 TB corpus for every arriving shard.
   *
   * Index layout under `path` (plain parquet — readable by any engine):
-  *  - `bands/`  (doc_id, band_idx, band_hash): the LSH membership
-  *    triples, ~20 B × bands per document;
-  *  - `sigs/`   (doc_id, mh_0..mh_{k-1}): the signatures, for the
-  *    jaccard estimate on candidates.
-  * Both are pure row-local functions of each document (signatures are
-  * deterministic — INVARIANTS.md §1), so [[append]] is just additional
-  * parquet files: append-then-probe ≡ rebuild-then-probe exactly
-  * (DedupIndexSpec asserts it), with no compaction or merge step.
-  * Probes read both tables with their known schema (the id typed as
-  * the batch's id), so no probe infers a parquet schema; a batch's id
-  * column must therefore have the type the index was written with.
+  * one table, `sigs/` (doc_id, mh_0..mh_{k-1}, bh_0..bh_{b-1}): each
+  * indexed document's signature and, beside it, its LSH band keys
+  * (bh_i is band i's [[Dedup.bandHashes]] key of the mh_* columns).
+  * Each row is a pure row-local function of its document (signatures
+  * are deterministic — INVARIANTS.md §1), so [[write]] and [[append]]
+  * are one Spark job each that computes the minhash kernel once per
+  * document, and an append is just additional parquet files:
+  * append-then-probe ≡ rebuild-then-probe exactly (DedupIndexSpec
+  * asserts it), with no compaction or merge step. Probes read `sigs/`
+  * with its known schema (the id typed as the batch's id), so no probe
+  * infers a parquet schema; a batch's id column must therefore have
+  * the type the index was written with. An index in the earlier
+  * two-table layout (band membership triples in a `bands/` table, no
+  * band keys in `sigs/`) is refused by the probes and by [[append]]
+  * ([[earlierLayout]]); [[write]] rebuilds it.
   *
   * Probe scale contract (the asymmetry is the point — `batch` is the
   * small side, the corpus is unbounded):
   *  - the batch side is materialised ONCE, on the driver: one job
   *    computes the batch's signatures and band keys and collects them;
   *    the batch text is never re-shingled per reference;
-  *  - the corpus never shuffles its membership rows: one
-  *    aggregate-only histogram pass over `bands/`, restricted to the
-  *    probed band hashes, is collected (at most one row per probed
-  *    bucket), and the driver decides the bucket cap and the exact
-  *    pre-distinct candidate count from it;
+  *  - the corpus never shuffles its rows: one aggregate-only histogram
+  *    pass over the bh_* columns, restricted to the probed band
+  *    hashes, is collected (at most one row per probed bucket), and the
+  *    driver decides the bucket cap and the exact pre-distinct
+  *    candidate count from it;
   *  - NORMAL regime (count ≤ [[DefaultMaxLocalCandidates]]): the probe
-  *    is finished on the driver. One `bands/` scan returns the rows of
-  *    the capped probed buckets (at most the candidate count), the
-  *    driver forms the distinct (corpus_id, batch_id) pairs, one
-  *    `sigs/` scan returns the candidates' signatures, and the driver
-  *    computes each estimate with the SQL join's expression. The scans
-  *    filter against sorted primitive key arrays (band hashes, and the
-  *    `xxhash64` of candidate ids) — a superset test; exact matching
-  *    is on the driver. Both scans come back as compressed blocks of
-  *    encoded rows, decoded one row at a time, so beyond the batch side
-  *    the driver holds, per candidate: its id in a map to the batch ids
-  *    of its buckets, its `sigs/` row (k+1 longs, about 0.3 KB at k =
-  *    32) while that scan is read, and its output row (`probePairs`;
-  *    `newDocs` keeps only the duplicate batch ids). The result is a
-  *    local relation; the histogram's partial counts are the probe's
-  *    only exchange, and it runs no broadcast or schema job;
+  *    is finished on the driver. One `sigs/` scan returns the index
+  *    rows in a capped probed bucket of their band (a test of each
+  *    bh_b against band b's sorted key array), and each returned row
+  *    carries both its band keys and its signature, so the driver forms
+  *    that row's pairs and computes their estimates with the SQL
+  *    join's expression from the row alone. The scan comes back as
+  *    compressed blocks of encoded rows, decoded one row at a time, so
+  *    beyond the batch side the driver holds, per candidate: its
+  *    `sigs/` row (k+b+1 longs, about 0.33 KB at k = 32, b = 8) while
+  *    the scan is read, and its output row (`probePairs`; `newDocs`
+  *    keeps only the duplicate batch ids). The result is a local
+  *    relation; the histogram's partial counts are the probe's only
+  *    exchange, and it runs no broadcast or schema job — 3 jobs on a
+  *    local batch (histogram map stage and result, the candidate
+  *    scan), 4 on one that must be computed;
   *  - ABOVE the ceiling the same pairs come from a planned shuffle
-  *    join of `bands/` and `sigs/` against the batch's capped triples,
-  *    so no candidate row reaches the driver (results identical, the
-  *    corpus pays one shuffle — the degraded mode, still never a
-  *    rescan of the text). The ceiling therefore bounds what the
-  *    driver holds beyond the batch side: at most that many candidate
-  *    ids, `sigs/` rows and pairs;
+  *    join of the exploded bh_* keys and the mh_* columns against the
+  *    batch's capped triples, so no candidate row reaches the driver
+  *    (results identical, the corpus pays one shuffle — the degraded
+  *    mode, still never a rescan of the text). The ceiling therefore
+  *    bounds what the driver holds beyond the batch side: at most that
+  *    many candidate `sigs/` rows and pairs;
   *  - skew: a batch band-hash that hits an oversized corpus bucket
   *    (boilerplate clusters — the LSH mega-bucket mode) is dropped by
   *    the `maxBucketRows` cap before any candidate is formed, decided
@@ -74,15 +78,16 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
   * largest heap used after a GC over the probe's build and run was
   * 1.25-1.66 GB (median 1.30, 5 JVMs). The normal regime's worst case is
   * at the ceiling with every candidate a distinct corpus id and pair:
-  * 250k such candidates took 0.37-0.64 GB (4 JVMs).
+  * 250k such candidates took 0.80-0.86 GB (4 JVMs; the earlier
+  * two-table probe 0.78-0.80 GB in the same window).
   *
   * Replay: a caller that appends a batch and then records that it did
   * (an epoch marker, a committed offset) can crash between the two and
   * probe the same batch again against an index that already holds it.
   * [[newDocs]] ignores a batch document's match with its own id, so the
   * replay keeps the same documents as the first run. Appending them
-  * again leaves duplicate index rows; probes tolerate them (candidates
-  * are distinct'd, decisions are set-based) and only scan more.
+  * again leaves duplicate index rows; probes tolerate them (each row
+  * emits its own pairs, decisions are set-based) and only scan more.
   */
 object DedupIndex {
 
@@ -99,18 +104,18 @@ object DedupIndex {
     * and collecting those would OOM the driver, not degrade gracefully.
     * The probe therefore computes the exact pre-distinct candidate
     * count from the bucket histogram it collects (aggregate-only —
-    * never the membership rows) and the batch's own band keys, and
-    * above this ceiling plans shuffle joins instead (the SAME pairs).
-    * A candidate costs the driver about 1-2 KB at worst (k = 32: its
-    * `sigs/` row arrives in task-result blocks that are briefly held
-    * more than once): 250k distinct candidates measured 0.37-0.64 GB
-    * after GC, 1M 2.0 GB, 2M 3.4 GB; the shuffle joins took 0.69-0.78
-    * GB at 2M. */
+    * never the index rows) and the batch's own band keys, and above
+    * this ceiling plans shuffle joins instead (the SAME pairs).
+    * A candidate costs the driver about 3 KB at worst (k = 32, b = 8:
+    * its 41-long `sigs/` row arrives in task-result blocks that are
+    * briefly held more than once): 250k distinct candidates measured
+    * 0.80-0.86 GB after GC, 500k 1.47-1.67 GB; the shuffle joins took
+    * 0.69-0.78 GB at 2M. */
   val DefaultMaxLocalCandidates: Long = 250000L
 
-  /** Write (or overwrite) the index for `docs`. The root is deleted
-    * first, so nothing of an earlier build survives the rewrite.
-    * Documents with no shingles (< shingleSize words) have null
+  /** Write (or overwrite) the index for `docs`, in one Spark job. The
+    * root is deleted first, so nothing of an earlier build survives
+    * the rewrite. Documents with no shingles (< 3 words) have null
     * signatures and are not indexed — they cannot be near-dup
     * candidates. */
   def write(
@@ -122,36 +127,48 @@ object DedupIndex {
       bands: Int = 8): Unit = {
     val root = new Path(path)
     root.getFileSystem(docs.sparkSession.sessionState.newHadoopConf()).delete(root, true)
-    writeMode(docs, idCol, textCol, path, numHashes, bands, "overwrite")
+    indexRows(docs, idCol, textCol, numHashes, bands).write.parquet(s"$path/sigs")
   }
 
-  /** Incrementally add a new shard to an existing index (row-local
-    * computation, parquet file append — no read-modify-write of the
-    * existing index). Caller contract: ids must be new; appending an
-    * id twice yields self-candidate pairs on later probes. */
+  /** Incrementally add a new shard to an existing index, in one Spark
+    * job (row-local computation, parquet file append — no
+    * read-modify-write of the existing index). Caller contract: ids
+    * must be new; appending an id twice yields self-candidate pairs on
+    * later probes. */
   def append(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       path: String,
       numHashes: Int = 32,
-      bands: Int = 8): Unit =
-    writeMode(docs, idCol, textCol, path, numHashes, bands, "append")
+      bands: Int = 8): Unit = {
+    refuseEarlierLayout(docs.sparkSession, path)
+    indexRows(docs, idCol, textCol, numHashes, bands).write.mode("append").parquet(s"$path/sigs")
+  }
 
-  private def writeMode(
-      docs: DataFrame, idCol: String, textCol: String, path: String,
-      numHashes: Int, bands: Int, mode: String): Unit = {
-    val sigs = Dedup.minHashSignatures(docs, idCol, textCol, numHashes)
-      .filter(col("mh_0").isNotNull)
-      // one signature computation feeds both tables (the two writes
-      // are separate jobs; without the pin the shingle+minhash pass —
-      // the expensive part — would run twice)
-      .persist(graft.ops.Caches.memoLevel(docs.sparkSession))
-    try {
-      sigs.write.mode(mode).parquet(s"$path/sigs")
-      Dedup.bandedTriples(sigs, idCol, numHashes, bands)
-        .write.mode(mode).parquet(s"$path/bands")
-    } finally { sigs.unpersist(); () }
+  /** Whether `path` holds an index in the earlier two-table layout (a
+    * `bands/` table beside `sigs/`). Its `sigs/` has no band keys, so a
+    * probe would read them as nulls and find nothing; a caller that
+    * reuses built indexes rebuilds such a one with [[write]]. */
+  def earlierLayout(spark: SparkSession, path: String): Boolean = {
+    val bands = new Path(path, "bands")
+    bands.getFileSystem(spark.sessionState.newHadoopConf()).exists(bands)
+  }
+
+  private def refuseEarlierLayout(spark: SparkSession, path: String): Unit =
+    if (earlierLayout(spark, path))
+      throw new IllegalStateException(s"$path is a near-dup index in the earlier two-table " +
+        "layout (bands/ beside sigs/); rebuild it with DedupIndex.write")
+
+  /** The index rows of `docs`: (id, mh_*, bh_*) of each document with
+    * shingles. The documents are filtered on their text, ahead of the
+    * minhash kernel, so the kernel runs once per row. */
+  private def indexRows(
+      docs: DataFrame, idCol: String, textCol: String, numHashes: Int, bands: Int): DataFrame = {
+    val sigs = Dedup.minHashSignatures(docs.filter(Dedup.hasShingles(col(textCol))),
+      idCol, textCol, numHashes)
+    sigs.select(sigs.columns.map(col).toIndexedSeq ++
+      Dedup.bandHashes(numHashes, bands).zipWithIndex.map { case (h, b) => h.as(s"bh_$b") }: _*)
   }
 
   /** Cross near-dup candidates (corpus_id, batch_id, est_jaccard) of a
@@ -237,27 +254,22 @@ object DedupIndex {
       spark: SparkSession, path: String, batch: DataFrame, idCol: String, textCol: String,
       numHashes: Int, bands: Int, maxBucketRows: Long,
       maxLocalCandidates: Long): Either[LocalPairs, DataFrame] = {
+    refuseEarlierLayout(spark, path)
     // the batch side in one job: signatures and band keys together, to
-    // the driver
-    val batchSide = Dedup.minHashSignatures(batch, idCol, textCol, numHashes)
-      .filter(col("mh_0").isNotNull)
-      .withColumn("_bh", array(Dedup.bandHashes(numHashes, bands): _*))
+    // the driver — the index's own row layout
+    val batchSide = indexRows(batch, idCol, textCol, numHashes, bands)
     val batchRows = batchSide.collect()
-    def bandKeys(r: Row) = r.getSeq[Long](numHashes + 1).iterator.zipWithIndex
-    val idField = batchSide.schema(idCol)
-    val mh = (0 until numHashes).map(i => StructField(s"mh_$i", LongType))
-    val corpusBands = spark.read
-      .schema(StructType(Seq(idField.copy(nullable = true),
-        StructField("band_idx", IntegerType), StructField("band_hash", LongType))))
-      .parquet(s"$path/bands")
-    val corpusSigs = spark.read
-      .schema(StructType(idField.copy(nullable = true) +: mh))
+    def bandKeys(r: Row) = Iterator.tabulate(bands)(b => (r.getLong(1 + numHashes + b), b))
+    val corpus = spark.read
+      .schema(StructType(batchSide.schema.fields.map(_.copy(nullable = true))))
       .parquet(s"$path/sigs")
+    val corpusBands = corpus.select(col(idCol),
+      posexplode(array((0 until bands).map(b => col(s"bh_$b")): _*)).as(Seq("band_idx", "band_hash")))
 
-    // hot-bucket cap: one aggregate-only histogram over the index
+    // hot-bucket cap: one aggregate-only histogram over the band keys
     // (map-side partials — one row per bucket per task, never the
-    // membership rows), restricted to the probed band hashes and
-    // capped, so at most one row per probed bucket reaches the driver
+    // index rows), restricted to the probed band hashes and capped, so
+    // at most one row per probed bucket reaches the driver
     val okBuckets = Array.fill(bands)(mutable.LongMap.empty[Long])
     val probedHashes = batchRows.iterator.flatMap(r => bandKeys(r).map(_._1)).toArray.distinct
     if (probedHashes.nonEmpty)
@@ -275,56 +287,36 @@ object DedupIndex {
     val candUpperBound = batchRows.foldLeft(0L) { (acc, r) =>
       bandKeys(r).foldLeft(acc) { case (a, (h, b)) => Math.addExact(a, okBuckets(b).getOrElse(h, 0L)) }
     }
+    val idField = batchSide.schema(idCol)
     val pairSchema = StructType(Seq(idField.copy(name = "corpus_id", nullable = true),
       idField.copy(name = "batch_id"), StructField("est_jaccard", DoubleType)))
     if (candUpperBound <= maxLocalCandidates)
-      Left(LocalPairs(pairSchema,
-        localPairs(batchRows, okBuckets, corpusBands, corpusSigs, idCol, numHashes, bandKeys)))
+      Left(LocalPairs(pairSchema, localPairs(batchRows, okBuckets, corpus, idCol, numHashes, bandKeys)))
     else
-      Right(shufflePairs(spark, batchSide.schema, batchRows, okBuckets, corpusBands, corpusSigs,
+      Right(shufflePairs(spark, batchSide.schema, batchRows, okBuckets, corpusBands, corpus,
         idCol, numHashes, bandKeys))
   }
 
-  /** The normal regime: the capped probed buckets' `bands/` rows and
-    * the candidates' `sigs/` rows are collected, and the driver joins
-    * them with the batch side — the same multiset of rows the shuffle
-    * joins emit (one per matching `sigs/` row and batch row). Both
-    * scans are read as encoded rows, one at a time, without boxing. */
+  /** The normal regime: the index rows in the capped probed buckets
+    * are collected, and the driver joins each with the batch side — the
+    * same multiset of rows the shuffle joins emit (one per matching
+    * index row and batch row) whenever an id's index rows are copies
+    * of one document, as the append contract has them. The scan is
+    * read as encoded rows, one at a time, without boxing. */
   private def localPairs(
-      batchRows: Array[Row], okBuckets: Array[mutable.LongMap[Long]], corpusBands: DataFrame,
-      corpusSigs: DataFrame, idCol: String, numHashes: Int,
+      batchRows: Array[Row], okBuckets: Array[mutable.LongMap[Long]], corpus: DataFrame,
+      idCol: String, numHashes: Int,
       bandKeys: Row => Iterator[(Long, Int)])(emit: (Any, Any, Double) => Unit): Unit = {
     // batch ids per capped probed bucket (null ids join nothing)
-    val batchIdsAt = Array.fill(okBuckets.length)(mutable.LongMap.empty[List[Any]])
+    val bands = okBuckets.length
+    val batchIdsAt = Array.fill(bands)(mutable.LongMap.empty[List[Any]])
     for (r <- batchRows if !r.isNullAt(0); (h, b) <- bandKeys(r) if okBuckets(b).contains(h))
       batchIdsAt(b)(h) = r.get(0) :: batchIdsAt(b).getOrElse(h, Nil)
-    val okHashes = batchIdsAt.iterator.flatMap(_.keysIterator).toArray.distinct
-    if (okHashes.isEmpty) return
+    val probed = (0 until bands).filter(batchIdsAt(_).nonEmpty)
+    if (probed.isEmpty) return
 
-    // candidates: each corpus id → the batch ids of the capped probed
-    // buckets it is in (shared lists; one corpus id in several buckets
-    // is distinct'd below), and the xxhash64 of each candidate corpus
-    // id for the sigs/ scan
-    val idType = corpusBands.schema(idCol).dataType
+    val idType = corpus.schema(idCol).dataType
     val toId = CatalystTypeConverters.createToScalaConverter(idType)
-    val cand = mutable.HashMap.empty[Any, List[Any]]
-    val candHashes = mutable.ArrayBuilder.make[Long]
-    Bridge.collectEncoded(corpusBands
-      .filter(inSorted(col("band_hash"), okHashes))
-      .select(col(idCol), col("band_idx"), col("band_hash"), xxhash64(col(idCol))))
-      .foreach { r =>
-        if (!r.isNullAt(0)) batchIdsAt(r.getInt(1)).get(r.getLong(2)).foreach { ids =>
-          val c = toId(r.get(0, idType))
-          cand.get(c) match {
-            case Some(seen) => cand(c) = ids ::: seen
-            case None =>
-              cand(c) = ids
-              candHashes += r.getLong(3)
-          }
-        }
-      }
-    if (cand.isEmpty) return
-
     val batchById = batchRows.iterator.filter(!_.isNullAt(0)).toSeq.groupBy(_.get(0))
     // the SQL join's estimate, bit for bit: agreeing slots (a null
     // never agrees) as a double over numHashes
@@ -337,11 +329,18 @@ object DedupIndex {
       }
       agree.toDouble / numHashes
     }
-    Bridge.collectEncoded(corpusSigs.filter(inSorted(xxhash64(col(idCol)), candHashes.result())))
+    // each returned row pairs with the batch ids of its own capped
+    // probed buckets (one batch id in several of them is distinct'd)
+    Bridge.collectEncoded(corpus.filter(probed
+      .map(b => inSorted(col(s"bh_$b"), batchIdsAt(b).keysIterator.toArray)).reduce(_ || _)))
       .foreach { s =>
         if (!s.isNullAt(0)) {
-          val c = toId(s.get(0, idType))
-          cand.get(c).foreach(_.distinct.foreach(b => batchById(b).foreach(r => emit(c, b, est(s, r)))))
+          val ids = Iterator.range(0, bands)
+            .flatMap(b => batchIdsAt(b).getOrElse(s.getLong(1 + numHashes + b), Nil)).distinct
+          if (ids.hasNext) {
+            val c = toId(s.get(0, idType))
+            ids.foreach(b => batchById(b).foreach(r => emit(c, b, est(s, r))))
+          }
         }
       }
   }
@@ -351,7 +350,7 @@ object DedupIndex {
     * the candidate rows never reach the driver. */
   private def shufflePairs(
       spark: SparkSession, batchSchema: StructType, batchRows: Array[Row],
-      okBuckets: Array[mutable.LongMap[Long]], corpusBands: DataFrame, corpusSigs: DataFrame,
+      okBuckets: Array[mutable.LongMap[Long]], corpusBands: DataFrame, corpus: DataFrame,
       idCol: String, numHashes: Int, bandKeys: Row => Iterator[(Long, Int)]): DataFrame = {
     // local relations of encoded (UnsafeRow) copies: about half the
     // live heap of createDataFrame's boxed rows (147 vs 305 MB measured
@@ -369,13 +368,12 @@ object DedupIndex {
       .join(batchOk, Seq("band_idx", "band_hash"))
       .select(col(idCol).as("corpus_id"), col("batch_id"))
       .distinct()
-    val aSigs = corpusSigs.toDF(corpusSigs.columns.map(c =>
-      if (c == idCol) "corpus_id" else s"a_$c").toIndexedSeq: _*)
-    val batchSigs = local(batchRows.toSeq, batchSchema).drop("_bh")
-    val bSigs = batchSigs.toDF(batchSigs.columns.map(c =>
-      if (c == idCol) "batch_id" else s"b_$c").toIndexedSeq: _*)
-    val agree = (0 until numHashes)
-      .map(i => when(col(s"a_mh_$i") === col(s"b_mh_$i"), 1).otherwise(0))
+    val mh = (0 until numHashes).map(i => s"mh_$i")
+    val aSigs = corpus.select(col(idCol).as("corpus_id") +: mh.map(c => col(c).as(s"a_$c")): _*)
+    val bSigs = local(batchRows.toSeq, batchSchema)
+      .select(col(idCol).as("batch_id") +: mh.map(c => col(c).as(s"b_$c")): _*)
+    val agree = mh
+      .map(c => when(col(s"a_$c") === col(s"b_$c"), 1).otherwise(0))
       .reduce(_ + _)
     aSigs
       .join(cand, Seq("corpus_id"))

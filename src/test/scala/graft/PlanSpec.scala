@@ -403,6 +403,14 @@ class PlanSpec extends SparkSpec {
     assert(gi >= 0 && p.indexOf("LeftSemi", gi) >= 0, p)
   }
 
+  test("q_jaccard_pairs computes the minhash kernel once per row") {
+    // its signatures are filtered on the text, not on mh_0 (a filter
+    // the optimizer pushes beneath the kernel's projection, where it
+    // evaluates the kernel a second time)
+    val kernels = kernelsPerExecution(Registry.queries("q_jaccard_pairs")(spark, sf).collect(): Unit)
+    assert(kernels.contains(1) && kernels.forall(_ <= 1), kernels)
+  }
+
   test("shared-span pairs: equi-join on gram after a semi-join df prune, text never rides the pair join") {
     val p = plan("q_shared_span_pairs")
     // stop-gram guard: the pair self-join's inputs must be left_semi

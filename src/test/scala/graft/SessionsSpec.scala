@@ -23,6 +23,7 @@ class SessionsSpec extends AnyFunSuite {
     assert(provisioned("spark.cleaner.periodicGC.interval") == "2min")
     assert(provisioned("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "64")
     assert(provisioned("spark.sql.codegen.cache.maxEntries") == "1024")
+    assert(provisioned("spark.sql.codegen.useIdInClassName") == "false")
     // 8 GiB / 32 cores = 256 MB/core < the 384 MB/core floor → wide
     val constrained = Sessions.productionConfs(32, 8 * gb).toMap
     assert(constrained("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "256")
@@ -70,8 +71,8 @@ class SessionsSpec extends AnyFunSuite {
   }
 
   test("the test session carries the profile's codegen cache size") {
-    val key = TestSpark.CodegenCacheKey
-    assert(TestSpark.spark.conf.get(key) == Sessions.productionConfs(4).toMap.apply(key))
+    for (key <- Seq(TestSpark.CodegenCacheKey, TestSpark.ClassNameIdKey))
+      assert(TestSpark.spark.conf.get(key) == Sessions.productionConfs(4).toMap.apply(key), key)
   }
 
   test("Sessions is the only file in src/main that builds a SparkSession") {

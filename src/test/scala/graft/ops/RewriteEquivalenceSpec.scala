@@ -60,8 +60,10 @@ object ReferenceFormulations {
 
   /** Near-dup index probe as Spark-side batch frames: the batch's
     * signatures and banded triples stay unmaterialised (each reference
-    * recomputes them), the broadcast gate is a `head()` over a second
-    * histogram pass, and the bucket cap is a semi-join. */
+    * recomputes them), the corpus's banded triples come from the
+    * stored mh_* columns through [[Dedup.bandedTriples]], the broadcast
+    * gate is a `head()` over a second histogram pass, and the bucket
+    * cap is a semi-join. */
   def dedupIndexProbePairs(
       spark: SparkSession,
       path: String,
@@ -76,7 +78,11 @@ object ReferenceFormulations {
       .filter(col("mh_0").isNotNull)
     val batchBanded = Dedup.bandedTriples(batchSigs, idCol, numHashes, bands)
       .withColumnRenamed(idCol, "batch_id")
-    val corpusBands = spark.read.parquet(s"$path/bands")
+    // the corpus side from the stored signatures alone: its triples are
+    // recomputed from mh_*, never read from the stored band keys
+    val sigsRaw = spark.read.parquet(s"$path/sigs")
+      .select(col(idCol) +: (0 until numHashes).map(i => col(s"mh_$i")): _*)
+    val corpusBands = Dedup.bandedTriples(sigsRaw, idCol, numHashes, bands)
     val probed = corpusBands
       .join(broadcast(batchBanded.select(col("band_idx"), col("band_hash")).distinct()),
         Seq("band_idx", "band_hash"), "left_semi")
@@ -100,7 +106,6 @@ object ReferenceFormulations {
       .join(bcast(batchOk), Seq("band_idx", "band_hash"))
       .select(col(idCol).as("corpus_id"), col("batch_id"))
       .distinct()
-    val sigsRaw = spark.read.parquet(s"$path/sigs")
     val corpusSigs = sigsRaw.toDF(sigsRaw.columns.map(c =>
       if (c == idCol) "corpus_id" else s"a_$c").toIndexedSeq: _*)
     val bSigs = batchSigs.toDF(batchSigs.columns.map(c =>

@@ -260,8 +260,8 @@ class PipelineSpec extends SparkSpec {
     // 4 segments), so at that size the second round recompiles what the
     // first evicted; the Sessions cache size holds the whole round.
     // AQE numbers whole-stage codegen stages in the order it creates
-    // them, which can differ between runs, and the number is part of
-    // the class name: with the name suffix off, a miss means eviction.
+    // them, which can differ between runs; the profile leaves the
+    // number out of the class name, so a miss means eviction.
     val path = java.nio.file.Files.createTempDirectory("warmrerun").toString + "/idx"
     val base = "the quick brown fox jumps over the lazy dog and runs far away today"
     DedupIndex.write(Seq((1L, base),
@@ -277,12 +277,10 @@ class PipelineSpec extends SparkSpec {
       DedupIndex.newDocs(spark, path, batch, "doc_id", "text", threshold = 0.5).collect()
       (c1 - c0, compiles - c1)
     }
-    val idInName = "spark.sql.codegen.useIdInClassName"
-    val saved = spark.conf.getOption(idInName)
-    spark.conf.set(idInName, "false")
-    val (first, (lfq, probe)) =
-      try (round(), round())
-      finally saved.fold(spark.conf.unset(idInName))(spark.conf.set(idInName, _))
+    val idInName = graft.TestSpark.ClassNameIdKey
+    assert(spark.conf.get(idInName) == graft.Sessions.productionConfs(4).toMap.apply(idInName))
+    val first = round()
+    val (lfq, probe) = round()
     assert(lfq == 0 && probe == 0, s"the second round compiled phosphoLfq $lfq and " +
       s"newDocs $probe new classes (first round: $first)")
   }

@@ -142,8 +142,8 @@ class DedupIndexSpec extends SparkSpec {
     val (plans, jobs) = plansOf(kept.collect(): Unit)
     assert(jobs >= 1 && plans.nonEmpty, s"$jobs jobs, ${plans.size} plans")
     plans.foreach(p => assert(!p.contains("Exchange"), p))
-    // the batch side, the histogram, the bands/ and the sigs/ scan
-    assert(probePlans.size == 4, probePlans.mkString("\n"))
+    // the batch side, the histogram and the candidate scan of sigs/
+    assert(probePlans.size == 3, probePlans.mkString("\n"))
     (probePlans ++ plans).foreach(p => assert(!p.contains("BroadcastExchange"), p))
     val shuffles = probePlans.filter(_.contains("Exchange"))
     assert(shuffles.size == 1 && shuffles.head.contains("band_idx"), probePlans.mkString("\n"))
@@ -174,7 +174,7 @@ class DedupIndexSpec extends SparkSpec {
     } finally saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
   }
 
-  test("a rewrite clears the root; the manifest names only sigs/ and bands/") {
+  test("a rewrite clears the root; the manifest names only sigs/") {
     val path = tmp("stray")
     DedupIndex.write(corpus, "doc_id", "text", path)
     val root = java.nio.file.Paths.get(path)
@@ -182,12 +182,45 @@ class DedupIndexSpec extends SparkSpec {
     java.nio.file.Files.createDirectories(root.resolve("old"))
     java.nio.file.Files.writeString(root.resolve("old/part-0.parquet"), "stale")
     DedupIndex.write(corpus, "doc_id", "text", path)
-    assert(new java.io.File(path).list().toSet == Set("sigs", "bands"))
+    assert(new java.io.File(path).list().toSet == Set("sigs"))
     graft.io.BuildManifest.write(path)
     val files = graft.io.BuildManifest.files(path).get
-    assert(files.nonEmpty && files.forall(f => f.startsWith("sigs/") || f.startsWith("bands/")),
-      files.toString)
+    assert(files.nonEmpty && files.forall(_.startsWith("sigs/")), files.toString)
     assert(graft.io.BuildManifest.verifies(path))
+  }
+
+  test("an index in the earlier two-table layout is refused, and ensureIndex rebuilds it") {
+    // the earlier layout: signatures alone in sigs/, the band
+    // membership triples in bands/, published by a manifest
+    val path = tmp("earlier")
+    val sigs = Dedup.minHashSignatures(corpus, "doc_id", "text").filter($"mh_0".isNotNull)
+    sigs.write.parquet(s"$path/sigs")
+    Dedup.bandedTriples(sigs, "doc_id", 32, 8).write.parquet(s"$path/bands")
+    graft.io.BuildManifest.write(path)
+    assert(DedupIndex.earlierLayout(spark, path))
+    intercept[IllegalStateException](DedupIndex.probePairs(spark, path, batch, "doc_id", "text"))
+    intercept[IllegalStateException](
+      DedupIndex.newDocs(spark, path, batch, "doc_id", "text", threshold = 0.5))
+    intercept[IllegalStateException](DedupIndex.append(batch, "doc_id", "text", path))
+    val sf = java.nio.file.Files.createTempDirectory("dedupsrc")
+    java.nio.file.Files.createFile(sf.resolve("embeddings.parquet"))
+    var builds = 0
+    def ensure() = graft.queries.TextQueries.ensureIndex(sf.toString, path,
+      !DedupIndex.earlierLayout(spark, path)) {
+      builds += 1
+      DedupIndex.write(corpus, "doc_id", "text", path)
+      graft.io.BuildManifest.write(path)
+    }
+    ensure()
+    assert(builds == 1 && !DedupIndex.earlierLayout(spark, path) &&
+      graft.io.BuildManifest.verifies(path))
+    ensure()
+    assert(builds == 1)
+    val fresh = tmp("earlierfresh")
+    DedupIndex.write(corpus, "doc_id", "text", fresh)
+    def pairs(p: String) = DedupIndex.probePairs(spark, p, batch, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(pairs(path) == pairs(fresh) && pairs(fresh).nonEmpty)
   }
 
   // ---- the probe against its reference formulation ----
@@ -299,11 +332,11 @@ class DedupIndexSpec extends SparkSpec {
     }
   }
 
-  test("one newDocs probe runs 4 Spark jobs") {
+  test("one newDocs probe runs 3 Spark jobs") {
     // the batch side is collected once (a local fixture batch needs no
-    // job for that); the 4 are the bucket histogram (bands/ map stage,
-    // result), the bands/ scan of the capped probed buckets and the
-    // sigs/ scan of the candidates. No schema is inferred, nothing is
+    // job for that); the 3 are the bucket histogram over the band keys
+    // (map stage, result) and the sigs/ scan of the index rows in the
+    // capped probed buckets. No schema is inferred, nothing is
     // broadcast, and the returned frame filters the local batch
     // without a job.
     val path = tmp("jobs")
@@ -311,6 +344,54 @@ class DedupIndexSpec extends SparkSpec {
     val jobs = jobsOf {
       DedupIndex.newDocs(spark, path, batch, "doc_id", "text", threshold = 0.5).collect(): Unit
     }
-    assert(jobs == 4, s"$jobs jobs")
+    assert(jobs == 3, s"$jobs jobs")
+  }
+
+  test("write and append each run one Spark job") {
+    val path = tmp("onejob")
+    assert(jobsOf(DedupIndex.write(corpus, "doc_id", "text", path)) == 1)
+    assert(jobsOf(DedupIndex.append(batch, "doc_id", "text", path)) == 1)
+  }
+
+  test("the stored band keys are Dedup.bandHashes of the stored signatures") {
+    val path = tmp("bandkeys")
+    DedupIndex.write(corpus, "doc_id", "text", path)
+    DedupIndex.append(batch, "doc_id", "text", path)
+    val stored = spark.read.parquet(s"$path/sigs")
+    assert(stored.columns.toSeq ==
+      "doc_id" +: ((0 until 32).map(i => s"mh_$i") ++ (0 until 8).map(b => s"bh_$b")))
+    val differ = Dedup.bandHashes(32, 8).zipWithIndex
+      .map { case (h, b) => !col(s"bh_$b").eqNullSafe(h) }.reduce(_ || _)
+    // 7 and 17 have no shingles, so 3 + 3 rows
+    assert(stored.count() == 6L && stored.filter(differ).count() == 0L)
+  }
+
+  test("hasShingles keeps exactly the texts with a minhash signature") {
+    val texts = Seq(null, "", " ", "a", "a b", "a  b", " a b", "a b ", "a b c", "a\tb c",
+      "x y z w", "  ", "a b  ")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    def ids(df: DataFrame) = df.collect().map(_.getLong(0)).toSet
+    val signed = ids(Dedup.minHashSignatures(docs, "doc_id", "text").filter($"mh_0".isNotNull))
+    assert(ids(docs.filter(Dedup.hasShingles($"text"))) == signed)
+    assert(signed.nonEmpty && signed.size < texts.size)
+  }
+
+  test("the minhash kernel runs once per row: write, append, the probe's batch side") {
+    // a null-signature filter on mh_0 is pushed beneath the projection
+    // that computes the kernel and evaluates it again; the documents
+    // are filtered on their text instead. Parquet inputs: the optimizer
+    // folds a local relation's kernel into the plan's constants.
+    val path = tmp("kernel")
+    val corpusPath = tmp("kernelcorpus")
+    val batchPath = tmp("kernelbatch")
+    corpus.write.parquet(corpusPath)
+    batch.write.parquet(batchPath)
+    def read(p: String) = spark.read.parquet(p)
+    assert(kernelsPerExecution(DedupIndex.write(read(corpusPath), "doc_id", "text", path)) == Seq(1))
+    assert(kernelsPerExecution(DedupIndex.append(read(batchPath), "doc_id", "text", path)) == Seq(1))
+    // the probe's executions: the batch side, then the index-only ones
+    val probe = kernelsPerExecution(DedupIndex.newDocs(spark, path,
+      read(batchPath), "doc_id", "text", threshold = 0.5): Unit)
+    assert(probe.sorted == Seq(0, 0, 1), probe)
   }
 }
